@@ -14,6 +14,8 @@ Endpoint parity:
 
 from __future__ import annotations
 
+from bisect import bisect_left
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,11 +43,82 @@ def get_pubmed_meta(results: list[dict], limit: int = 10,
     return fetcher(pmids)
 
 
+# answer cap of every autocomplete route (kg/autocomplete_blueprint.py:18),
+# the same cap queries.autocomplete applies
+AUTOCOMPLETE_CAP = 100
+# labels whose node filter is not `node_type == label` (queries.autocomplete)
+_GEOLOC_LABELS = ("geoloc_alerts", "geoloc_indicators")
+
+
+def _index_labels(node_type: str, curie: str) -> list[str]:
+    """The autocomplete labels whose queries.autocomplete node filter
+    admits a node of this type and curie."""
+    out = [] if node_type in _GEOLOC_LABELS else [node_type]
+    if node_type == "geoloc":
+        out.append("geoloc_indicators")
+        if curie.startswith("MESH"):
+            out.append("geoloc_alerts")
+    return out
+
+
+def prefix_index(node_rows, gaz_rows) -> dict[str, tuple[list, list]]:
+    """Per-label autocomplete index: label -> (keys, rows), rows sorted
+    (lower(matched), curie) and keys their first field, so a prefix's
+    answers are one contiguous run found by bisect.
+
+    The rows are exactly what queries.autocomplete ranks before its limit:
+    each node's name plus every gazetteer synonym of its curie, deduped
+    per (curie, lower(matched)) with the name row winning over synonyms,
+    then the smallest surface. ``node_rows`` are (curie, name, node_type,
+    lower(name)) and ``gaz_rows`` carry (ns, id, synonym, lower(synonym));
+    the lower-cased keys come from Spark's ``lower``, so the index matches
+    the Spark operator on every surface, not only where Python's
+    str.lower agrees with it. Python compares str by code point, which is
+    the UTF-8 binary order Spark sorts by. Rows of type 'alert' (corpus-
+    sized) are skipped: that label stays on queries.autocomplete."""
+    syns: dict[str, list] = {}
+    for r in gaz_rows:
+        if r["synonym"] is not None:
+            curie = ":".join(p for p in (r["ns"], r["id"]) if p is not None)
+            syns.setdefault(curie, []).append(
+                (r["synonym_lower"], 1, r["synonym"]))
+    # label -> {(curie, lower(matched)): (priority, matched, name)}
+    best: dict[str, dict] = {}
+    for curie, name, node_type, name_lower in node_rows:
+        if node_type is None or node_type == "alert":
+            continue
+        cands = syns.get(curie, [])
+        if name is not None:
+            cands = [(name_lower, 0, name), *cands]
+        for label in _index_labels(node_type, curie):
+            seen = best.setdefault(label, {})
+            for low, pri, matched in cands:
+                cur = seen.get((curie, low))
+                if cur is None or (pri, matched) < cur[:2]:
+                    seen[(curie, low)] = (pri, matched, name)
+    index = {}
+    for label, seen in best.items():
+        rows = sorted((low, curie, matched, name) for (curie, low),
+                      (_pri, matched, name) in seen.items())
+        index[label] = ([r[0] for r in rows], rows)
+    return index
+
+
 class KgApi:
     """Holds the at-rest KG DataFrames + driver-side lookup state (the
     reference builds the same things at import time: custom grounder
     kg/client.py:365, pair scores kg/realism_score.py:98-99, tries
-    kg/get_lookups.py:100-105)."""
+    kg/get_lookups.py:100-105).
+
+    Driver-side state, all dimension-sized (vocabulary, not corpus):
+      _trie          grounding trie compiled from the whole gazetteer
+                     (get_curie, text_relations)
+      _mesh_types    MeSH id -> node_type of every MESH node
+      _prefix_index  per-label sorted autocomplete rows (prefix_index):
+                     one row per (node, distinct lower-cased surface) over
+                     the non-alert nodes, the same size class as _trie
+    The corpus-sized tables (alert nodes, edges, pair scores) stay
+    DataFrames and are queried in-plan per request."""
 
     def __init__(self, spark: SparkSession, nodes: DataFrame, edges: DataFrame,
                  closure: DataFrame, gazetteer: DataFrame,
@@ -67,14 +140,23 @@ class KgApi:
         # table. In production this is a catalog table written once by the
         # build; here it is the same plan, persisted for request reuse.
         self._pair_score_df = queries.pair_score_table(edges).persist()
+        # one collect feeds _mesh_types and the prefix index: the
+        # vocabulary nodes, plus any MESH node typed 'alert' (_mesh_types
+        # covers every MESH node)
+        node_rows = nodes.filter(
+            ~F.col("node_type").eqNullSafe("alert")
+            | F.col("curie").startswith("MESH:")
+        ).select("curie", "name", "node_type",
+                 F.lower("name").alias("name_lower")).collect()
         self._mesh_types = {
             r.curie[5:]: r.node_type
-            for r in nodes.filter(F.col("curie").startswith("MESH:"))
-            .select("curie", "node_type").collect()
+            for r in node_rows if r.curie.startswith("MESH:")
         }
         rows = [r.asDict() for r in gazetteer.select(
-            "ns", "id", "entry_name", "synonym").collect()]
+            "ns", "id", "entry_name", "synonym",
+            F.lower("synonym").alias("synonym_lower")).collect()]
         self._trie = ground.compile_gazetteer(rows)
+        self._prefix_index = prefix_index(node_rows, rows)
 
     # -- name -> curie (kg/client.py:367-378) --------------------------------
     def get_curie(self, name: str) -> str | None:
@@ -181,7 +263,7 @@ class KgApi:
             return get_pubmed_meta(rows, limit=limit, fetcher=meta_fetcher)
         return rows
 
-    # -- /autocomplete/* --------------------------------------------------------
+    # -- cue-rule triples -------------------------------------------------------
     def get_triples(self, subj=None, pred=None, obj=None,
                     limit: int = 100) -> list[dict]:
         """Cue-rule triples (extension route, no reference analog): filter
@@ -204,12 +286,34 @@ class KgApi:
         )
         return [r.asDict() for r in rows]
 
+    # -- /autocomplete/* --------------------------------------------------------
     def autocomplete(self, label: str, prefix: str, top_n: int = 100) -> list:
-        res = queries.autocomplete(self.nodes, label, prefix, top_n,
-                                   gazetteer=self.gazetteer)
+        """Up to min(top_n, 100) case-insensitive prefix matches over node
+        names and synonyms, ordered (lower(matched), curie) — the answer
+        of queries.autocomplete. Vocabulary labels are answered from the
+        driver-side prefix index with no Spark job, as the reference
+        answers from its per-label tries; the corpus-sized 'alert' label
+        runs the Spark operator. An unknown label answers []."""
+        if top_n < 0:
+            raise ValueError(f"top_n must be >= 0, got {top_n}")
         # reference tuple shape (get_lookups.py:25-30,46-49):
         # (matched surface — the synonym, canonical name, curie, definition)
-        return [[r.matched, r.name, r.curie, ""] for r in res.collect()]
+        if label == "alert":
+            res = queries.autocomplete(self.nodes, label, prefix, top_n,
+                                       gazetteer=self.gazetteer)
+            return [[r.matched, r.name, r.curie, ""] for r in res.collect()]
+        if ":" in prefix:  # autocomplete_blueprint.py:16-17
+            return []
+        keys, rows = self._prefix_index.get(label, ((), ()))
+        p = prefix.lower()
+        i = bisect_left(keys, p)
+        out = []
+        n = min(top_n, AUTOCOMPLETE_CAP)
+        for key, curie, matched, name in rows[i:i + n]:
+            if not key.startswith(p):
+                break
+            out.append([matched, name, curie, ""])
+        return out
 
     # -- /v1/alerts/<id> ---------------------------------------------------------
     def get_alert_text(self, alert_id: str) -> str | None:

@@ -183,12 +183,17 @@ def connected_components(
     map-side); the jump is a self-equi-join on the label (labels are node
     ids, so the lookup always resolves). Two shuffles per round, log rounds.
     stats (optional dict) records {'rounds': n, 'mode': ..., 'edges': n} —
-    'edges' is exact on the driver path, min(true, cap) on the distributed
-    path, None when driver_max_edges<=0 (no size-probe job runs then).
+    'edges' counts symmetrized input edge rows, not distinct edges (a
+    repeated input edge counts each time): the full count on the driver
+    path, min(count, cap) on the distributed path, None when
+    driver_max_edges<=0 (no size-probe job runs then).
 
-    Small graphs (<= driver_max_edges distinct undirected edges — near-dup
-    clusters are typically dimension-sized next to the corpus) take a
-    driver union-find fast path instead: one collect + one createDataFrame
+    Small graphs (<= driver_max_edges symmetrized input edge rows —
+    near-dup clusters are typically dimension-sized next to the corpus)
+    take a driver union-find fast path instead. Routing is conservative
+    for multigraph inputs: many duplicate edges can send a graph whose
+    distinct form is small down the distributed loop, with identical
+    results. The fast path: one collect + one createDataFrame
     replaces O(log n) rounds x (two shuffles + an eager checkpoint + an
     emptiness probe) of fixed per-round latency. Same collect budget class
     as the gazetteer / k-means-centroid collects; pass driver_max_edges=0

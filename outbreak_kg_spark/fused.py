@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 
 from .ground import (
     DEFAULT_NS_PRIORITY,
+    TextMemo,
     _gaz_rows,
     compile_gazetteer,
     multi_token_heads,
@@ -78,10 +79,8 @@ def make_fused_udf(spark: SparkSession, gazetteer: DataFrame,
         # scanning each distinct field text once and unioning cached
         # frozensets turns the duplicate-heavy case into a dict probe.
         # The memo lives only for the task (iterator scope): nothing
-        # persists across tasks, jobs, or runs. Size-capped so a
+        # persists across tasks, jobs, or runs. Byte-capped so a
         # pathological all-unique partition cannot grow without bound.
-        scan_cache: dict[str, frozenset] = {}
-
         def scan_one(field_text: str) -> frozenset:
             if excl:
                 # surface-form exclusion needs the original-case
@@ -94,19 +93,15 @@ def make_fused_udf(spark: SparkSession, gazetteer: DataFrame,
                 )
             return frozenset(scan_distinct_terms(field_text, t, mheads))
 
+        memo = TextMemo(scan_one)
+
         def field_terms(field_text: str) -> frozenset:
             # short fields (section titles, one-line headers) are cheaper
             # to scan than to memoize — and they are frequently unique
             # (numbered titles), which would bloat the memo for zero hits
             if len(field_text) < 64:
                 return scan_one(field_text)
-            got = scan_cache.get(field_text)
-            if got is None:
-                got = scan_one(field_text)
-                if len(scan_cache) >= 200_000:
-                    scan_cache.clear()
-                scan_cache[field_text] = got
-            return got
+            return memo(field_text)
 
         for texts in batches:
             out = []

@@ -48,6 +48,38 @@ NER_EXCLUDE_TOKENS = {"J", "one", "news", "large", "go", "cut", "white", "Kelly"
 
 _TOKEN_RE = re.compile(r"\w+", re.UNICODE)
 
+# Per-task memo budget of the Arrow UDFs, in approximate bytes of cached
+# text keys (len(text)): past it the memo is dropped and refills.
+MEMO_MAX_BYTES = 64 << 20
+
+
+class TextMemo:
+    """Per-task text -> result memo for the Arrow UDFs, capped by the
+    approximate bytes of its keys (len(text)), not by entry count, which
+    bounds nothing when texts are long. Past MEMO_MAX_BYTES it is cleared
+    and refills; a text longer than the whole budget is computed but not
+    cached. ``fn`` must not return None."""
+
+    __slots__ = ("fn", "cache", "nbytes")
+
+    def __init__(self, fn):
+        self.fn = fn
+        self.cache: dict = {}
+        self.nbytes = 0
+
+    def __call__(self, text: str):
+        got = self.cache.get(text)
+        if got is None:
+            got = self.fn(text)
+            n = len(text)
+            if n <= MEMO_MAX_BYTES:
+                if self.nbytes + n > MEMO_MAX_BYTES:
+                    self.cache.clear()
+                    self.nbytes = 0
+                self.cache[text] = got
+                self.nbytes += n
+        return got
+
 # Greek unicode -> spelled-out names, the full reference chain
 # (kg/client.py:345-350: replace_greek_uni / replace_greek_latin /
 # replace_greek_spelled_out before normalize). Both directions are inserted
@@ -470,25 +502,19 @@ def make_distinct_terms_udf(spark: SparkSession, gazetteer: DataFrame,
         # per-TASK memo of text -> sorted distinct groundings (guide §4.5):
         # duplicate section texts (boilerplate, re-crawls, replicated
         # corpora) pay the tokenize+scan once per task instead of per row.
-        # Iterator scope — nothing survives the task. Size-capped.
-        cache: dict[str, list] = {}
+        # Iterator scope — nothing survives the task. Byte-capped.
+        def _terms(text):
+            best: dict = {}
+            for ns, id_, name in scan_distinct_terms(text, t, mheads):
+                k = (ns, id_)
+                if k not in best or name < best[k]:
+                    best[k] = name
+            return sorted((ns, id_, nm) for (ns, id_), nm in best.items())
+
+        memo = TextMemo(_terms)
 
         def _distinct(text):
-            if text is None:
-                return []
-            got = cache.get(text)
-            if got is None:
-                best: dict = {}
-                for ns, id_, name in scan_distinct_terms(text, t, mheads):
-                    k = (ns, id_)
-                    if k not in best or name < best[k]:
-                        best[k] = name
-                got = sorted(
-                    (ns, id_, nm) for (ns, id_), nm in best.items())
-                if len(cache) >= 200_000:
-                    cache.clear()
-                cache[text] = got
-            return got
+            return [] if text is None else memo(text)
 
         for texts in batches:
             yield texts.map(_distinct)

@@ -20,8 +20,10 @@ from __future__ import annotations
 import json
 from urllib.parse import parse_qs
 
-# /autocomplete/<path> -> queries.autocomplete label
-# (autocomplete_blueprint.py route table; symptoms share the disease trie)
+# /autocomplete/<path> -> KgApi.autocomplete label
+# (autocomplete_blueprint.py route table; symptoms share the disease trie).
+# Only `alerts` still runs queries.autocomplete (a Spark job); every other
+# label is answered from KgApi's driver-side prefix index.
 _AUTOCOMPLETE_LABELS = {
     "geolocation/alerts": "geoloc_alerts",
     "geolocation/indicators": "geoloc_indicators",

@@ -4,7 +4,7 @@ then drive every endpoint-shaped method (kg/api.py parity)."""
 import pytest
 from pyspark.sql import functions as F
 
-from outbreak_kg_spark import extract, ground, synth
+from outbreak_kg_spark import extract, ground, queries, synth
 from outbreak_kg_spark.api import KgApi
 from outbreak_kg_spark.pipeline import build_kg
 
@@ -69,6 +69,194 @@ def test_autocomplete_endpoint(app):
     hits = app.autocomplete("disease", "e")  # Ebolavirus Disease
     assert any(h[2] == "MESH:D0103" for h in hits)
     assert app.autocomplete("disease", "has:colon") == []
+
+
+def _spark_autocomplete(nodes, gaz, label, prefix, top_n):
+    """The Spark operator's answer in KgApi.autocomplete's row shape."""
+    res = queries.autocomplete(nodes, label, prefix, top_n, gazetteer=gaz)
+    return [[r.matched, r.name, r.curie, ""] for r in res.collect()]
+
+
+def _assert_index_matches_spark(api, nodes, gaz, labels, prefixes, top_ns):
+    """KgApi.autocomplete == queries.autocomplete over (nodes, gaz) for
+    every label x prefix x top_n. queries.autocomplete lower-cases the
+    prefix before anything else, so case variants of one prefix make the
+    same Spark call: each (label, prefix.lower(), top_n) is asked of Spark
+    once (four at a time — each is a small, latency-bound job), and every
+    variant of it is asked of the index."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    cases = [(label, prefix, top_n) for label in labels
+             for prefix in prefixes(label) for top_n in top_ns]
+    keys = sorted({(lab, p.lower(), n) for lab, p, n in cases})
+    with ThreadPoolExecutor(4) as pool:
+        want = dict(zip(keys, pool.map(
+            lambda k: _spark_autocomplete(nodes, gaz, *k), keys)))
+    for label, prefix, top_n in cases:
+        assert api.autocomplete(label, prefix, top_n) == \
+            want[(label, prefix.lower(), top_n)], (label, prefix, top_n)
+    return want
+
+
+def _prefixes_of(surfaces, extra=()):
+    out = {""} | set(extra)
+    for s in surfaces:
+        for k in (1, 2, 3):
+            out |= {s[:k], s[:k].upper(), s[:k].lower()}
+    return sorted(out)
+
+
+def test_autocomplete_index_matches_spark_operator(app):
+    """Every route label, the empty prefix, every 1-3-char prefix of the
+    label's names and synonyms (case variants included), a miss, a ':'
+    prefix and top_n 0 / 5 / 500 (over the 100 cap) answer exactly what
+    queries.autocomplete answers; an unknown label answers []."""
+    from outbreak_kg_spark.http_api import _AUTOCOMPLETE_LABELS
+
+    labels = sorted(set(_AUTOCOMPLETE_LABELS.values()))
+    # the oracle's inputs cached for its many small jobs (KgApi keeps
+    # reading the same plans, so the cache serves both sides)
+    nodes, gaz = app.nodes.persist(), app.gazetteer.persist()
+    # each vocabulary label's whole answer set (all under the cap), whose
+    # surfaces seed that label's prefixes
+    full = {lab: _spark_autocomplete(nodes, gaz, lab, "", 500)
+            for lab in labels if lab != "alert"}
+    assert all(0 < len(rows) < 100 for rows in full.values()), {
+        lab: len(rows) for lab, rows in full.items()}
+    misses = ("zzq", "Ebola:", "MESH:D0103")
+
+    def prefixes(label):
+        if label == "alert":  # the Spark path itself: a few shapes suffice
+            return ["", "p", "P", *misses]
+        return _prefixes_of([r[0] for r in full[label]], misses)
+
+    want = _assert_index_matches_spark(app, nodes, gaz, labels, prefixes,
+                                       (500,))
+    # top_n 0 and 5 on the empty prefix of every label (5 truncates all
+    # of them), and 1 wherever a non-empty prefix answers several rows
+    _assert_index_matches_spark(app, nodes, gaz, labels, lambda _lab: [""],
+                                (0, 5))
+    several = {lab: sorted(k[1] for k, v in want.items()
+                           if k[0] == lab and k[1] and len(v) > 1)
+               for lab in labels}
+    assert all(several[lab] for lab in full)
+    _assert_index_matches_spark(app, nodes, gaz, labels, several.get, (1,))
+    assert app.autocomplete("no_such_label", "") == []
+    assert app.autocomplete("no_such_label", "e") == []
+    nodes.unpersist()
+    gaz.unpersist()
+
+
+def test_autocomplete_index_unicode_case_and_order(spark):
+    """Non-ASCII and case-colliding surfaces: the index must agree with
+    Spark's lower() and UTF-8 binary sort, not with Python's idea of
+    them — dotted capital I, a final sigma, a cedilla/circumflex name, a
+    synonym equal to its node name up to case, names of different nodes
+    that collide case-insensitively, and U+A7CB, which Spark's ICU case
+    mapping lowers to U+0264 while Python 3.11's str.lower keeps it."""
+    from outbreak_kg_spark.schemas import CLOSURE, EDGES, GAZETTEER, NODES
+
+    nodes = spark.createDataFrame([
+        ("MESH:G1", "Côte d'Ivoire", ["geoloc"], "geoloc", None),
+        ("MESH:G2", "İstanbul", ["geoloc"], "geoloc", None),
+        ("geonames:3", "Istanbul", ["geoloc"], "geoloc", None),
+        ("geonames:4", "Zürich", ["geoloc"], "geoloc", None),
+        ("MESH:D1", "ΣΕΙΣΜΟΣ", ["disease"], "disease", None),
+        ("MESH:D2", "Influenza", ["disease"], "disease", None),
+        ("MESH:D3", "INFLUENZA", ["disease"], "disease", None),
+        ("MESH:D4", "Straße Fever", ["disease"], "disease", None),
+        ("MESH:D5", None, ["disease"], "disease", None),
+        ("MESH:D6", "\ua7cb Fever", ["disease"], "disease", None),
+        ("promed:1", "Cote report", ["alert"], "alert", "2020-01-01"),
+    ], NODES)
+    gaz = spark.createDataFrame([
+        ("MESH", "G1", "Côte d'Ivoire", "COTE D'IVOIRE", "geoloc"),
+        ("MESH", "G1", "Côte d'Ivoire", "Ivory Coast", "geoloc"),
+        ("geonames", "4", "Zürich", "Zurich", "geoloc"),
+        ("geonames", "4", "Zürich", "zürich", "geoloc"),
+        ("MESH", "D1", "ΣΕΙΣΜΟΣ", "σεισμός", "disease"),
+        ("MESH", "D2", "Influenza", "influenza", "disease"),
+        ("MESH", "D2", "Influenza", "FLU", "disease"),
+        ("MESH", "D2", "Influenza", "flu", "disease"),
+        ("MESH", "D3", "INFLUENZA", "Influenza", "disease"),
+        ("MESH", "D5", "Nameless", "Ghost Fever", "disease"),
+        ("MESH", "D9", "Not In Graph", "Influenza B", "disease"),
+    ], GAZETTEER)
+    nodes, gaz = nodes.persist(), gaz.persist()
+    api = KgApi(spark, nodes, spark.createDataFrame([], EDGES),
+                spark.createDataFrame([], CLOSURE), gaz)
+    surfaces = {"disease": [], "geoloc": []}
+    node_rows = nodes.collect()
+    types = {r.curie: r.node_type for r in node_rows}
+    for r in node_rows:
+        if r.name and r.node_type in surfaces:
+            surfaces[r.node_type].append(r.name)
+    for r in gaz.collect():
+        surfaces[types.get(f"{r.ns}:{r.id}", r.node_type)].append(r.synonym)
+
+    def prefixes(label):
+        own = surfaces["disease" if label == "disease" else "geoloc"]
+        whole = [v for s in own for v in (s, s.upper(), s.lower())]
+        return _prefixes_of(own, whole + ["zzq", "i", "I", "İ", "ß", "ɤ"])
+
+    _assert_index_matches_spark(
+        api, nodes, gaz, ["disease", "geoloc_alerts", "geoloc_indicators"],
+        prefixes, (500,))
+    _assert_index_matches_spark(
+        api, nodes, gaz, ["disease", "geoloc", "geoloc_alerts"],
+        lambda _lab: ["", "i"], (1,))
+    assert api._mesh_types == {"G1": "geoloc", "G2": "geoloc",
+                               "D1": "disease", "D2": "disease",
+                               "D3": "disease", "D4": "disease",
+                               "D5": "disease", "D6": "disease"}
+    nodes.unpersist()
+    gaz.unpersist()
+
+
+def _job_ids(sc, group, fn):
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_vocabulary_autocomplete_runs_no_spark_job(app, spark):
+    """Vocabulary-label autocomplete is served on the driver: no Spark job
+    runs. The alert label (corpus-sized) does run one — the positive
+    control that the job-group probe sees jobs at all. Building KgApi
+    runs no more jobs than its state costs without the index: the
+    symptom closure plus one collect each for the MESH node types and
+    the gazetteer."""
+    from outbreak_kg_spark.pipeline import symptom_closure
+
+    sc = spark.sparkContext
+
+    def vocab_requests():
+        for label in ("disease", "pathogen", "geoloc_alerts",
+                      "geoloc_indicators", "indicator", "no_such_label"):
+            for prefix in ("", "e", "Gu", "zzq", "a:b"):
+                app.autocomplete(label, prefix, 100)
+
+    assert _job_ids(sc, "autocomplete-vocab", vocab_requests) == []
+    assert _job_ids(sc, "autocomplete-alert",
+                    lambda: app.autocomplete("alert", "p", 5))
+
+    def construct():
+        KgApi(spark, app.nodes, app.edges, app.closure, app.gazetteer,
+              extracted=app.extracted, pattern_triples=app.pattern_triples)
+
+    def construct_without_index():
+        symptom_closure(app.edges, app.nodes)
+        queries.pair_score_table(app.edges).persist()
+        app.nodes.filter(F.col("curie").startswith("MESH:")).select(
+            "curie", "node_type").collect()
+        app.gazetteer.select("ns", "id", "entry_name", "synonym").collect()
+
+    assert len(_job_ids(sc, "kgapi-init", construct)) <= len(
+        _job_ids(sc, "kgapi-init-without-index", construct_without_index))
 
 
 def test_alert_text_endpoint(app, spark):

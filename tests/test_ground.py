@@ -358,3 +358,34 @@ def test_scan_text_ascii_fast_path_parity():
     (surface, s, e, *_rest) = ground.scan_text(text, trie)[0]
     assert (surface, s, e) == ("ebola", 4, 9)
     assert text[s:e] == "ebola"
+
+
+def test_text_memo_is_byte_bounded(monkeypatch):
+    """The per-task UDF memo caps the bytes of its cached text keys, not
+    its entry count: a stream of long unique texts keeps it under the
+    budget, every answer equals the unmemoized scan, a repeat inside the
+    budget is not rescanned, and a text over the whole budget is never
+    cached."""
+    monkeypatch.setattr(ground, "MEMO_MAX_BYTES", 10_000)
+    trie = ground.compile_gazetteer(GAZ, ("MESH", "geonames"))
+    mh = ground.multi_token_heads(trie)
+    calls = []
+
+    def scan(text):
+        calls.append(text)
+        return frozenset(ground.scan_distinct_terms(text, trie, mh))
+
+    memo = ground.TextMemo(scan)
+    places = ["guinea", "western africa", "nowhere"]
+    texts = [f"report {i}: ebola virus in {places[i % 3]} " + "x" * 1000
+             for i in range(100)]
+    for text in texts:
+        assert memo(text) == frozenset(
+            ground.scan_distinct_terms(text, trie, mh))
+        assert memo.nbytes == sum(map(len, memo.cache)) <= 10_000
+    assert len(calls) == len(texts)
+    memo(texts[-1])
+    assert len(calls) == len(texts)  # served from the memo
+    big = "ebola in guinea " * 1000
+    assert memo(big) == scan(big)
+    assert big not in memo.cache and memo.nbytes <= 10_000
