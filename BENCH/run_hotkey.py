@@ -37,7 +37,7 @@ def _force(df):
 
 
 def _pairs(m):
-    from outbreak_kg_spark.entry_queries import _mention_pairs
+    from outbreak_kg_spark.entry_fixtures import _mention_pairs
     from outbreak_kg_spark.skew import salted_count
 
     p = _mention_pairs(m.select("doc_id", "curie", "name"))
@@ -46,7 +46,7 @@ def _pairs(m):
 
 
 def _interesting(m):
-    from outbreak_kg_spark.entry_queries import _mention_pairs
+    from outbreak_kg_spark.entry_fixtures import _mention_pairs
     from outbreak_kg_spark.skew import salted_count
 
     pairs = _mention_pairs(m, with_types=True)
@@ -83,7 +83,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from outbreak_kg_spark.entry_queries import _docs, mentions_from_docs
+    from outbreak_kg_spark.entry_fixtures import _docs, mentions_from_docs
 
     repl = int(os.environ.get("SPARK_GRAFT_HOTKEY_REPL",
                               sys.argv[sys.argv.index("--repl") + 1]

@@ -7,7 +7,7 @@ query_graph through a closure table.
 
 queries()/oracle_sql(): one entry per implemented operator family from
 SURVEY.md §2 plus the training-data operators (dedup/similarity/text);
-definitions live in outbreak_kg_spark.entry_queries.
+rows live in the outbreak_kg_spark.entry_queries registry.
 """
 
 from __future__ import annotations
@@ -16,12 +16,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from outbreak_kg_spark import entry_queries
+from outbreak_kg_spark import entry_kg, entry_queries
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return entry_queries.q_kg_query_graph(spark, "/root/testdata/sf0.001")
+    return entry_kg.q_kg_query_graph(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

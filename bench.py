@@ -1,6 +1,6 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
+Runs the headline registry queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": <e2e wall sec>, "unit": "sec",
  "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ..., "n_docs": ...}
@@ -25,132 +25,6 @@ from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
-
-HEADLINE = [
-    "kg_extract_text",
-    "kg_ner_mentions",
-    "kg_mention_pairs",
-    "kg_query_graph",
-    "kg_isa_closure",
-    "kg_realism_logsumexp",
-    "agg_pricing_summary",
-    "join_star_topk",
-    "window_first_event",
-    # r3: registry consolidation renamed these legs — dedup_lsh_candidates
-    # computes the minhash signatures in-plan (superset of the old
-    # dedup_minhash_sigs leg); text_signals covers text_quality's scan
-    # plus lang-ID/tokens/fingerprints; text_filters covers
-    # text_repetition plus PII + surprisal.
-    "dedup_lsh_candidates",
-    "similarity_cosine_topk",
-    "text_signals",
-    "text_filters",
-    "corpus_curate",
-    "kg_edge_merge",
-    # r5: training-shard layout (two-phase prefix-sum packing) and
-    # crawl-URL canonicalization (pure codegen projection) — both from
-    # the extra_queries registry (driver window stays at 50)
-    "sample_pack_offsets",
-    "web_url_canonical",
-    "web_crawl_delta",
-    "web_html_extract",
-    "web_line_dedup",
-    "text_quality_classifier",
-    "web_link_graph",
-    # r5 second half: cross-document duplicate-passage coverage (the
-    # Lee-et-al exact-substring signal; semi-join mark-back, no pairs),
-    # BM25 + hybrid-fusion retrieval, stratum profiling, RAG chunking,
-    # temperature resampling, compact-forward triangles
-    "text_passage_dedup",
-    "retrieval_bm25_topk",
-    "retrieval_rrf_fuse",
-    "corpus_length_profile",
-    "sample_chunks",
-    "sample_temperature",
-    "graph_triangles",
-    # r5 final stretch: sentence-scoped pattern triples (driver window),
-    # incremental LSH against an at-rest index, synchronous LPA
-    # communities, JL random-projection ANN, quality-weighted
-    # representative election
-    "kg_pattern_triples",
-    "dedup_incremental_lsh",
-    "graph_labelprop",
-    "graph_kcore",
-    "similarity_rp_project",
-    "similarity_quantized_topk",
-    "curate_representatives",
-    "kg_triple_provenance",
-    "multimodal_audio_windows",
-    # r5 tail: DSIR targeted-data selection (two scans: bucket counts +
-    # Gumbel top-k scoring). dedup_semantic is deliberately NOT here:
-    # its gate pins k=1 (brute-force pairs + recursive components — the
-    # ORACLE twin); the clustered scale path is pytest-gated in
-    # test_dedup_similarity.
-    "sample_dsir_topk",
-    # exact-substring span cutting (shares passage_dedup's staging; adds
-    # the island-merge windows + per-doc span-list cut)
-    "dedup_substring_spans",
-    # CCNet head/middle/tail bucketing (surprisal model + histogram
-    # thresholds; the per-language window never sees raw docs)
-    "sample_ccnet_buckets",
-    # SCD-2 attribute history over the events change log (single
-    # exchange, two window passes sharing one sort)
-    "kg_scd2_history",
-    # batch twin of the stateful episode sessionizer (gaps-and-islands
-    # over the events log)
-    "kg_batch_episodes",
-    # Morton layout key over orders (pure codegen bit arithmetic)
-    "layout_zorder",
-    # DeepWalk corpus over the shared synthetic link graph (walk_len-1
-    # frontier joins against the degree-bounded adjacency), plus the
-    # skip-gram pair consumption side (nested-HOF window expansion)
-    "graph_walks",
-    "graph_skipgram",
-    # ontology rollup: mention mass per isa subtree (dimension-sized
-    # closure join after the mentions agg)
-    "kg_hierarchy_rollup",
-    # politeness-capped frontier (salted two-phase per-host top-k)
-    "web_crawl_frontier",
-    # point-in-time lookup over the SCD-2 history (asof composition)
-    "kg_attr_asof",
-    # one-scan column profile over orders
-    "table_profile",
-    # C4 line/page cleaning rules (zero-exchange codegen pass)
-    "text_c4_clean",
-    # Gopher A1 doc-level rules (zero-exchange, per-rule audit columns)
-    "text_gopher_rules",
-    # Luhn-verified credit-card audit (indexed HOF checksum fold)
-    "text_pii_luhn",
-    # trailing-window rate features (incremental RANGE frame)
-    "events_rolling_counts",
-    # equi-width histogram over orders.o_totalprice
-    "table_histogram",
-    # PMI collocations (one-pass union-encoded unigram+bigram counts)
-    "text_collocations",
-    # leakage-safe split keyed on exact-dedup canonical ids
-    "sample_leakage_safe",
-    # mojibake/control-char/U+FFFD triage (three regex length deltas)
-    "text_encoding_audit",
-    # degree histogram + power-law slope audit
-    "graph_degree_profile",
-    # edge snapshot diff between two residue-excluded builds
-    "kg_edge_diff",
-    # Bloom seen-set build + probe over doc urls
-    "web_bloom_seen",
-    # HyperLogLog registers + corrected estimate vs exact distinct
-    "web_hll_cardinality",
-    # Count-Min build + min-over-depth point queries vs truth
-    "web_cms_counts",
-    # join-key skew advisor over the NER mention stream
-    "kg_key_skew",
-    # KMV bottom-k overlap estimates between two URL sets
-    "web_kmv_overlap",
-    # Gini shard-balance audit of the 16-shard hash layout
-    "sample_shard_balance",
-    # seed-teleport personalized PageRank over the shared link graph
-    "graph_ppr",
-]
-
 
 def _force(df):
     df.write.mode("overwrite").format("noop").save()
@@ -203,7 +77,7 @@ def replicated_pages(spark, sf_dir: str, repl: int):
     documents table is broadcast — so page construction is parallel across
     all cores from the start (streaming the single-file parquet side would
     serialize the whole corpus build into one task)."""
-    from outbreak_kg_spark.entry_queries import _docs
+    from outbreak_kg_spark.entry_fixtures import _docs
 
     d = _docs(spark, sf_dir)
     n = d.count()
@@ -252,7 +126,7 @@ def pipeline_outputs(spark, pages, modular: bool = False):
     in tests/test_fused.py.
     """
     from outbreak_kg_spark import extract, fused, ground
-    from outbreak_kg_spark.entry_queries import entry_gazetteer_df
+    from outbreak_kg_spark.entry_fixtures import entry_gazetteer_df
     from outbreak_kg_spark.skew import (
         collect_group_sets,
         expand_pairs,
@@ -331,7 +205,7 @@ def e2e_pages_to_cue_triples(spark, sf_dir: str, repl: int) -> tuple[float, int]
     for sentence placement); the sentence-mention relation is persisted so
     the four cue legs share one annotation pass."""
     from outbreak_kg_spark import extract, ground, triples
-    from outbreak_kg_spark.entry_queries import entry_gazetteer_df
+    from outbreak_kg_spark.entry_fixtures import entry_gazetteer_df
 
     gaz = entry_gazetteer_df(spark)
     pages, n_docs = replicated_pages(spark, sf_dir, repl)
@@ -382,32 +256,37 @@ def main() -> None:
 
     qtimes: dict[str, float] = {}
     if not e2e_only:
-        from outbreak_kg_spark.entry_queries import all_queries, extra_queries
+        from outbreak_kg_spark.entry_queries import (
+            all_queries,
+            extra_queries,
+            headline,
+        )
 
         qs = {**all_queries(), **extra_queries()}
+        names = headline()
         # untimed warmup: spin up the Python worker pool, JIT the Arrow
         # serializers, and page in the parquet inputs once — otherwise the
         # FIRST timed query absorbs the whole JVM/worker cold start and
         # reads several seconds slow regardless of its own plan
-        _force(qs[HEADLINE[0]](spark, sf_dir))
+        _force(qs[names[0]](spark, sf_dir))
         # best-of-2 per query: this host's wall times are bimodal (see
         # host_calibration) — a single sample taken inside a degraded
         # window reads 3-7x slow and fabricates a per-query regression.
         # Two samples of the same warm plan make the min a stable reading
         # while still charging any real plan cost both times.
         # kg_ner_mentions is the query that MATERIALIZES the memoized
-        # mentions persist (entry_queries.entry_mentions) — without a
+        # mentions persist (entry_fixtures.entry_mentions) — without a
         # reset its second sample would time a cache scan, not the NER
         # pass. Resetting before each sample keeps both samples honest;
         # the final sample leaves the persist warm for the queries that
         # legitimately consume it at rest (same regime as round 2, where
         # every mentions consumer after the first ran against the memo).
-        from outbreak_kg_spark.entry_queries import reset_mentions_cache
+        from outbreak_kg_spark.entry_fixtures import reset_mentions_cache
 
         def _reset_mentions():
             reset_mentions_cache(spark)
 
-        for name in HEADLINE:
+        for name in names:
             best = None
             for _ in range(2):
                 if name == "kg_ner_mentions":

@@ -42,7 +42,7 @@ def main() -> None:
     explain_dir = _arg("--explain-dir", None)
     qlist = _arg("--queries", None)
 
-    from bench import HEADLINE, host_calibration
+    from bench import host_calibration
 
     effective_cores = host_calibration(min(cpus, 16))
 
@@ -54,14 +54,15 @@ def main() -> None:
                       shuffle_partitions=max(cpus, 32))
     spark.sparkContext.setLogLevel("ERROR")
 
+    from outbreak_kg_spark.entry_fixtures import reset_mentions_cache
     from outbreak_kg_spark.entry_queries import (
         all_queries,
         extra_queries,
-        reset_mentions_cache,
+        headline,
     )
 
     qs = {**all_queries(), **extra_queries()}
-    names = qlist.split(",") if qlist else list(HEADLINE)
+    names = qlist.split(",") if qlist else headline()
 
     # untimed warmup: same reasoning as bench.py
     spark.sparkContext.setJobDescription("warmup")

@@ -37,6 +37,10 @@ def transitive_closure(
     diamond-shaped DAGs terminate. include_self adds (node, node, 0) rows so
     `isa*0..` (kg/client.py:140 — the anchor matches itself) is one equi-join,
     for BOTH endpoint sets.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    each round) and truncates lineage: lost executor blocks fail later jobs
+    instead of recomputing.
     """
     # Keep the native key type when both endpoint columns already agree
     # (guide §2.3 "narrower types"): every round of the loop shuffles the
@@ -198,6 +202,10 @@ def connected_components(
     emptiness probe) of fixed per-round latency. Same collect budget class
     as the gazetteer / k-means-centroid collects; pass driver_max_edges=0
     to force the distributed loop.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    each round) and truncates lineage: lost executor blocks fail later jobs
+    instead of recomputing.
     """
     sym_raw = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))

@@ -94,7 +94,11 @@ def curate_corpus(
     straggler-making step of this chain. Oversized buckets contribute a
     candidate STAR that still passes the Jaccard verify (see
     dedup._bucket_pairs), so small-scale results are identical and a
-    false LSH collision never merges unverified."""
+    false LSH collision never merges unverified.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    the output) and truncates lineage: lost executor blocks fail later jobs
+    instead of recomputing."""
     if line_dedup_min_docs is not None:
         df = dedup.line_dedup(
             df, text_col, id_col, min_docs=line_dedup_min_docs

@@ -148,7 +148,11 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
                         max_bucket_size: int | None = None) -> DataFrame:
     """Band the signature, bucket docs whose band-slice agrees, emit
     candidate pairs (a < b). Equi-join on (band, bucket) — the LSH trick
-    turns all-pairs into per-bucket pairs."""
+    turns all-pairs into per-bucket pairs.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    the buckets) and truncates lineage: lost executor blocks fail later jobs
+    instead of recomputing."""
     banded = signatures.withColumn("band", F.col("hash_idx") % bands)
     buckets = banded.groupBy(id_col, "band").agg(
         F.md5(
@@ -280,7 +284,11 @@ def lsh_candidate_pairs_narrow(sig_arrays: DataFrame,
     is the blocking equi-join itself (banding is narrow). This is the
     scale path; the long-form lsh_candidate_pairs stays for pipelines that
     materialize per-hash signature rows. max_bucket_size bounds degenerate
-    buckets (see _bucket_pairs) — pass it on any real web corpus."""
+    buckets (see _bucket_pairs) — pass it on any real web corpus.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    the buckets) and truncates lineage: lost executor blocks fail later jobs
+    instead of recomputing."""
     return _bucket_pairs(lsh_band_buckets(sig_arrays, id_col, bands), id_col,
                          max_bucket_size)
 
@@ -818,7 +826,11 @@ def incremental_lsh_candidates(
     each new member links only to the bucket's min-id hub (the group is
     already connected at rest), so a boilerplate bucket with 10^7 stored
     members costs |new ∩ bucket| rows, not |new|x10^7. The increment's
-    own pairs reuse _bucket_pairs with the identical cap."""
+    own pairs reuse _bucket_pairs with the identical cap.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    the increment's buckets) and truncates lineage: lost executor blocks
+    fail later jobs instead of recomputing."""
     new_b = lsh_band_buckets(
         minhash_sig_array(new_docs, text_col, id_col,
                           num_hashes=num_hashes, shingle_n=shingle_n),

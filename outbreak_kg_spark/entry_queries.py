@@ -1,6537 +1,236 @@
-"""Driver-contract query suite: one entry per implemented operator family
-(SURVEY.md §2), each as a (spark, sf_dir) -> DataFrame callable plus an
-exact DuckDB oracle SQL over the same parquet tables.
+"""The query registry: one ``Query`` row per entry, in driver order.
+
+Each entry is a ``(spark, sf_dir) -> DataFrame`` callable plus an exact
+DuckDB oracle SQL over the same parquet tables. The callables and oracles
+live in per-family modules (``entry_kg``, ``entry_kg_maint``,
+``entry_text``, ``entry_dedup``, ``entry_web``, ``entry_graph``,
+``entry_sample``, ``entry_table``) over the shared ``entry_fixtures``.
+An entry's name is its function's name without the ``q_`` prefix.
 
 Cross-engine determinism rules used throughout:
 - hashing is md5-based (identical in Spark and DuckDB);
 - money math is integer-cents (exact) with one final double division;
 - float outputs that accumulate in engine-specific order are rounded;
 - every LIMIT has a total-order tie-break.
-
-The KG operators run over a deterministic page-ification of the driver's
-``documents`` table with a small embedded gazetteer (single-token terms, so
-greedy-longest-match == word-boundary containment, which SQL can express).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-
-from . import dedup, eidos, sampling, similarity, textstats, weburl
-from .closure import transitive_closure
-from .extract import extract_pages
-from .ground import make_annotate_udf
-from .skew import salted_count
-
-# ---- embedded gazetteer over the documents token vocabulary -----------------
-
-ENTRY_GAZ = [
-    # (curie, token, node_type)
-    ("MESH:D0001", "slow", "disease"),
-    ("MESH:D0002", "dup", "disease"),
-    ("MESH:D0003", "stream", "disease"),
-    ("MESH:D1001", "hash", "pathogen"),
-    ("MESH:D1002", "spark", "pathogen"),
-    ("MESH:D1003", "vector", "pathogen"),
-    ("MESH:D1004", "join", "pathogen"),  # hot key: ~16% of all tokens
-    ("MESH:D2001", "table", "geoloc"),
-    ("MESH:D2002", "window", "geoloc"),
-    ("MESH:D2003", "batch", "geoloc"),
-]
-ENTRY_ISA = [
-    ("MESH:D0001", "MESH:D0000"),
-    ("MESH:D0002", "MESH:D0000"),
-    ("MESH:D0003", "MESH:D0001"),
-    ("MESH:D1001", "MESH:D1000"),
-    ("MESH:D1002", "MESH:D1001"),
-    ("MESH:D1003", "MESH:D1001"),
-    ("MESH:D1004", "MESH:D1000"),
-    ("MESH:D2002", "MESH:D2001"),
-    ("MESH:D2003", "MESH:D2002"),
-]
-LIT_QUERY_TERMS = ["MESH:D0001", "MESH:D1001", "MESH:D2001"]  # slow, hash, table
-
-
-def _entry_closure_pairs() -> list[tuple[str, str]]:
-    """Reachability pairs (node, ancestor) of ENTRY_ISA incl. depth-0 self
-    rows — computed here once so the SQL literal and any test share it."""
-    parents: dict[str, set] = {}
-    nodes = set()
-    for c, p in ENTRY_ISA:
-        parents.setdefault(c, set()).add(p)
-        nodes |= {c, p}
-    out = {(n, n) for n in nodes}
-    for n in nodes:
-        seen, stack = set(), [n]
-        while stack:
-            for p in parents.get(stack.pop(), ()):
-                if p not in seen:
-                    seen.add(p)
-                    stack.append(p)
-        out |= {(n, a) for a in seen}
-    return sorted(out)
-
-
-def _sql_values_gaz() -> str:
-    return ", ".join(f"('{c}', '{t}', '{ty}')" for c, t, ty in ENTRY_GAZ)
-
-
-def _sql_values_closure() -> str:
-    return ", ".join(f"('{n}', '{a}')" for n, a in _entry_closure_pairs())
-
-
-def _spread_partitions(spark: SparkSession, path: str) -> int:
-    """Scale-adaptive scan parallelization decision (guide §2.5 "input
-    skew": one small/unsplittable file ⇒ one scan task).
-
-    The driver's test tables are single parquet files with ONE row group
-    (verified: documents/events/embeddings at every sf), and Spark can
-    only parallelize a parquet file across row groups — so every
-    expression/UDF chain above such a scan runs in ONE task regardless
-    of cluster size. Returns the partition count to spread the scan
-    over when the input is too small to occupy the cluster on its own,
-    else 0 (at 100 TB the scan splits naturally into thousands of
-    tasks and a repartition here would only add a full-data exchange).
-
-    The threshold is derived from the input size, not a local constant:
-    spread only when total bytes < defaultParallelism x 16 MB, i.e.
-    when even generously sized splits could not keep every core busy.
-    """
-    import os as _os
-
-    try:
-        if _os.path.isdir(path):
-            sizes = [
-                _os.path.getsize(_os.path.join(path, f))
-                for f in _os.listdir(path)
-                if not f.startswith((".", "_"))
-            ]
-        else:
-            sizes = [_os.path.getsize(path)]
-    except OSError:
-        return 0
-    par = spark.sparkContext.defaultParallelism
-    total = sum(sizes)
-    if len(sizes) >= par or total >= par * (16 << 20):
-        return 0
-    # scale the partition count with the input instead of always using
-    # every core: at tiny inputs (sf0.1's 0.6 MB documents) 32 near-empty
-    # partitions cost more in per-stage task scheduling than the
-    # parallelism buys (measured: web_line_dedup 0.46s -> 0.93s at
-    # sf0.1), while ~128 KB per partition keeps the Python-heavy chains
-    # saturated at every tested size
-    return max(4, min(par, total // (128 << 10)))
-
-
-def _read_spread(spark: SparkSession, path: str,
-                 spread: bool = True) -> DataFrame:
-    df = spark.read.parquet(path)
-    if not spread:
-        return df
-    n = _spread_partitions(spark, path)
-    return df.repartition(n) if n else df
-
-
-def _docs(spark: SparkSession, sf_dir: str,
-          spread: bool = True) -> DataFrame:
-    """documents scan. spread defaults ON: nearly every consumer runs
-    text-heavy per-row work (NER/Arrow UDFs, per-n-gram md5 chains,
-    regex extraction) where 32-way parallelism dominates the tiny
-    exchange. Consumers that only read doc_id arithmetic (synthetic
-    graph/sketch fixtures) pass spread=False — measured SLOWER with the
-    exchange (bench_extra r6: graph_triangles 1.5s -> 3.6s and friends),
-    because their per-row work is too cheap to amortize an extra stage."""
-    return _read_spread(spark, f"{sf_dir}/documents.parquet", spread)
-
-
-def _tbl(spark: SparkSession, sf_dir: str, name: str,
-         spread: bool = False) -> DataFrame:
-    """Star-schema scan. spread defaults OFF: lineitem/orders/events
-    consumers are cheap JVM scans + aggs where the repartition exchange
-    measurably regressed them (bench_extra r6: agg_pricing 1.4s -> 2.1s,
-    events windows ~2x). Opted IN per call site where per-row work is
-    heavy enough to win (embeddings vector math, the Expand-amplified
-    orders profile)."""
-    return _read_spread(spark, f"{sf_dir}/{name}.parquet", spread)
-
-
-# Ambiguous DECOY surfaces exercising the scored trie resolution
-# (ground.compile_gazetteer; gilda-style ranking — promed_ner.py:143-150).
-# Each decoy collides with an ENTRY_GAZ token and would WIN the old
-# (ns, id) lexicographic tie-break (A0xxx < D0003/D2003), but loses the
-# scored one — 'stream' by corpus prior, 'batch' by curated-name status.
-# The kg_ner_mentions oracle lists only ENTRY_GAZ winners, so a scoring
-# regression flips curies and fails the value-hash gate.
-ENTRY_GAZ_DECOYS = [
-    # (ns, id, entry_name, synonym, prior)
-    ("MESH", "A0001", "stream", "stream", 0.5),  # same name-status: prior decides
-    ("MESH", "A0002", "Batch Processing", "batch", None),
-]
-_ENTRY_GAZ_PRIORS = {"stream": 3.0}  # winner-side priors (default 0.0)
-
-
-def entry_gazetteer_df(spark: SparkSession) -> DataFrame:
-    rows = [
-        {"ns": c.split(":")[0], "id": c.split(":")[1], "entry_name": t,
-         "synonym": t, "node_type": ty,
-         "prior": _ENTRY_GAZ_PRIORS.get(t, 0.0)}
-        for c, t, ty in ENTRY_GAZ
-    ] + [
-        {"ns": ns, "id": i, "entry_name": en, "synonym": syn,
-         "node_type": "disease", "prior": pr}
-        for ns, i, en, syn, pr in ENTRY_GAZ_DECOYS
-    ]
-    from .schemas import GAZETTEER
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType(GAZETTEER.fields
-                        + [StructField("prior", DoubleType(), True)])
-    return spark.createDataFrame(rows, schema)
-
-
-import weakref
-
-_MENTIONS_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-# scratch dirs registered for atexit removal (q_streaming_episodes); the
-# set prevents stacking duplicate atexit handlers on repeated calls
-_EPISODE_SCRATCH_DIRS: set[str] = set()
-
-
-def reset_mentions_cache(spark: SparkSession) -> None:
-    """Unpersist and drop this session's memoized mentions frames.
-
-    Public seam for benchmarks/tests that need the NER pass to re-run
-    (bench.py times kg_ner_mentions; without a reset its second sample
-    would time a cache scan). Keeping callers off _MENTIONS_CACHE means a
-    cache refactor can't silently break them."""
-    per_session = _MENTIONS_CACHE.get(spark)
-    if per_session:
-        for cached in per_session.values():
-            cached.unpersist()
-        per_session.clear()
-
-
-def _utc(spark: SparkSession) -> None:
-    """Pin timestamp rendering to UTC for this session (entry contract).
-
-    The driver compares collected Spark rows against DuckDB reading the
-    same parquet as NAIVE timestamps, so every query that RETURNS
-    timestamps — or strings derived from them (date_format, window
-    buckets) — must render in UTC regardless of the caller session's
-    zone. Deliberately a session-level set (session.py and scripts/
-    already build UTC sessions); an app embedding these queries should
-    not share its session with zone-sensitive rendering elsewhere."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
-def entry_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, curie, name, node_type) distinct — documents annotated with
-    the broadcast entry trie (operator N1/N3).
-
-    Persisted + memoized per (session, sf_dir): most KG entries reference
-    the mentions relation several times (query_graph touches it SIX times
-    via nodes/edges/self-join), and without a cache boundary Catalyst
-    re-evaluates the NER UDF for every occurrence — six full corpus
-    annotation passes at 100 TB. One persist makes it one pass.
-
-    The cache is a WeakKeyDictionary keyed by the session OBJECT (never
-    id(): a GC'd session's id can be reused, handing a new session a
-    DataFrame bound to a dead one), with a per-session sf_dir map inside.
-    Concurrent live sessions each keep their own persisted copy — no
-    cross-session unpersist/thrash — and a garbage-collected session's
-    entry vanishes with it (its cached blocks die with its context)."""
-    per_session = _MENTIONS_CACHE.get(spark)
-    if per_session is None:
-        per_session = {}
-        _MENTIONS_CACHE[spark] = per_session
-    df = per_session.get(sf_dir)
-    if df is None:
-        df = _entry_mentions_plan(spark, sf_dir).persist()
-        per_session[sf_dir] = df
-    return df
-
-
-def _entry_mentions_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The un-cached mentions plan (plan-shape tests target this)."""
-    return mentions_from_docs(spark, _docs(spark, sf_dir))
-
-
-def mentions_from_docs(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """Entry-trie NER over an arbitrary (doc_id, text) frame — the same
-    plan _entry_mentions_plan builds from parquet; public so bench probes
-    (BENCH/run_hotkey.py) can feed transformed corpora (e.g. an injected
-    hot entity) without touching the test data on disk.
-
-    r6: the annotate(offsets)+explode+dropDuplicates chain became the
-    distinct-terms UDF (ground.make_distinct_terms_udf, guide §4): the
-    Python side runs the set fast-path scan and emits each doc's distinct
-    (ns, id, entry_name) set directly, so the Arrow channel never carries
-    surfaces/offsets and the per-(doc, curie) dedup EXCHANGE disappears —
-    per-doc distinctness is established inside the UDF, and doc_id rows
-    are unique in every corpus this seam sees (parquet doc_id key;
-    hotkey probes preserve ids). Same relation, property-tested."""
-    from .ground import make_distinct_terms_udf
-
-    udf = make_distinct_terms_udf(spark, entry_gazetteer_df(spark))
-    m = docs.select("doc_id", F.explode(udf(F.col("text"))).alias("a"))
-    return (
-        m.select(
-            "doc_id",
-            F.concat_ws(":", "a.ns", "a.id").alias("curie"),
-            F.col("a.entry_name").alias("name"),
-        )
-        .join(
-            F.broadcast(
-                spark.createDataFrame(
-                    [{"curie": c, "node_type": ty} for c, _t, ty in ENTRY_GAZ]
-                )
-            ),
-            "curie",
-        )
-        .select("doc_id", "curie", "name", "node_type")
-    )
-
-
-_SQL_MENTIONS = f"""
-    SELECT DISTINCT d.doc_id, g.curie, g.name, g.node_type
-    FROM documents d
-    JOIN (VALUES {_sql_values_gaz()}) g(curie, name, node_type)
-      ON list_contains(string_split(d.text, ' '), g.name)
-"""
-
-
-def _mention_pairs(m: DataFrame, with_types: bool = False,
-                   a_name: str = "a_curie", b_name: str = "b_curie",
-                   ordered: bool = True) -> DataFrame:
-    """Within-doc co-mention pairs — the ONE definition of the pair-forming
-    self-join (canonical `an < bn` NAME order, the reference's sorted-tuple
-    convention, kg/build.py:85-88). Six entry queries build on this;
-    changing the canonicalization here changes them all together with the
-    oracles' matching `a.name < b.name` condition. ordered=False returns
-    both orientations (for typed-direction rules applied downstream)."""
-    extra_a = [F.col("node_type").alias("at")] if with_types else []
-    extra_b = [F.col("node_type").alias("bt")] if with_types else []
-    a = m.select("doc_id", F.col("curie").alias(a_name),
-                 F.col("name").alias("an"), *extra_a)
-    b = m.select("doc_id", F.col("curie").alias(b_name),
-                 F.col("name").alias("bn"), *extra_b)
-    out = a.join(b, "doc_id")
-    return out.filter(F.col("an") < F.col("bn")) if ordered else out
-
-
-# ---- KG queries --------------------------------------------------------------
-
-def q_kg_extract_text(spark, sf_dir):
-    """T1-T4: page-ify documents, run the real extraction state machine UDF,
-    return the canonical text. Oracle computes the expected bytes directly."""
-    d = _docs(spark, sf_dir)
-    pages = d.select(
-        F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        F.lit(None).cast("binary").alias("html"),
-        F.concat(
-            F.lit("Published Date: 2024-03-01 12:00:00 EDT\nSubject: PRO> doc "),
-            F.col("doc_id").cast("string"),
-            F.lit("\nArchive Number: "),
-            F.format_string("%08d", (F.col("doc_id") + F.lit(20000000)).cast("int")),
-            F.lit("."),
-            F.col("doc_id").cast("string"),
-            F.lit("\n\nreport "),
-            F.col("doc_id").cast("string"),
-            F.lit("\n-----------------------------------------\n"),
-            F.col("text"),
-            F.lit("\n--"),
-        ).alias("text"),
-        F.col("lang"),
-    )
-    ex = extract_pages(pages)
-    return ex.filter("valid").select("url", "extracted_text")
-
-
-SQL_KG_EXTRACT_TEXT = """
-    SELECT 'doc://' || doc_id AS url,
-           'PRO> doc ' || doc_id || chr(10) || chr(10) ||
-           'report ' || doc_id || chr(10) || chr(10) ||
-           trim(text) || chr(10) || chr(10) AS extracted_text
-    FROM documents
-"""
-
-
-def q_kg_ner_mentions(spark, sf_dir):
-    return entry_mentions(spark, sf_dir)
-
-
-def q_kg_terms_per_doc(spark, sf_dir):
-    return (
-        entry_mentions(spark, sf_dir)
-        .groupBy("doc_id")
-        .agg(F.count_distinct("curie").alias("n_terms"))
-    )
-
-
-def q_kg_mention_pairs(spark, sf_dir):
-    """A1/A3/J5: within-doc canonical pairs + salted two-phase count."""
-    m = entry_mentions(spark, sf_dir).select("doc_id", "curie", "name")
-    pairs = _mention_pairs(m)
-    return salted_count(pairs, ["a_curie", "b_curie"], salt=16,
-                        count_col="n_docs", salt_from=F.col("doc_id"))
-
-
-SQL_KG_MENTION_PAIRS = f"""
-    WITH m AS ({_SQL_MENTIONS})
-    SELECT a.curie AS a_curie, b.curie AS b_curie, count(*) AS n_docs
-    FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.name < b.name
-    GROUP BY 1, 2
-"""
-
-
-def q_kg_mention_pairs_grouped(spark, sf_dir):
-    """A3 one-shuffle plan: per-doc distinct sets collected once, pairs
-    expanded JVM-side (skew.grouped_pair_counts). Same oracle as
-    kg_mention_pairs — the correctness gate proves the two physical plans
-    compute the same relation."""
-    from .skew import grouped_pair_counts
-
-    m = entry_mentions(spark, sf_dir).select("doc_id", "curie", "name")
-    out = grouped_pair_counts(
-        m, group_col="doc_id", struct_cols=["name", "curie"],
-        salt=16, count_col="n_docs",
-    )
-    return out.select(
-        F.col("a_curie").alias("a_curie"),
-        F.col("b_curie").alias("b_curie"),
-        "n_docs",
-    )
-
-
-def q_kg_interesting_pairs(spark, sf_dir):
-    """A4: typed-pair relation-extraction rule on the pair table."""
-    m = entry_mentions(spark, sf_dir)
-    pairs = _mention_pairs(m, with_types=True)
-    ok = pairs.filter(
-        ((F.col("at") == "geoloc") & (F.col("bt") == "pathogen"))
-        | ((F.col("bt") == "geoloc") & (F.col("at") == "pathogen"))
-        | ((F.col("at") == "disease") & (F.col("bt") == "pathogen"))
-        | ((F.col("bt") == "disease") & (F.col("at") == "pathogen"))
-        | ((F.col("at") == "geoloc") & (F.col("bt") == "disease"))
-        | ((F.col("bt") == "geoloc") & (F.col("at") == "disease"))
-    )
-    return salted_count(ok, ["a_curie", "b_curie"], salt=16,
-                        count_col="n_docs", salt_from=F.col("doc_id"))
-
-
-SQL_KG_INTERESTING_PAIRS = f"""
-    WITH m AS ({_SQL_MENTIONS})
-    SELECT a.curie AS a_curie, b.curie AS b_curie, count(*) AS n_docs
-    FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.name < b.name
-    WHERE (a.node_type, b.node_type) IN (
-        ('geoloc','pathogen'), ('pathogen','geoloc'),
-        ('disease','pathogen'), ('pathogen','disease'),
-        ('geoloc','disease'), ('disease','geoloc'))
-    GROUP BY 1, 2
-"""
-
-
-def q_kg_isa_closure(spark, sf_dir):
-    """J7: transitive closure over the part-key binary tree; oracle is a
-    recursive CTE.
-
-    r6 rewrite (guide §1.2/§8 — fix the algorithm before the plan): the
-    edge relation is the FUNCTION graph p -> floor(p/2), so each node has
-    exactly one parent chain and its depth-k ancestor is p >> k. The
-    closure is therefore a single codegen projection — explode the
-    filtered (p >> k, k) sequence — with zero joins and zero iterations,
-    replacing ~5 rounds of the generic filtered-doubling loop (each a
-    union + groupBy + eager checkpoint + stats action). Same relation:
-    chains reach 1 exactly while p >> k >= 1, every intermediate value is
-    itself a part key (partkeys are contiguous from 1), min-depth is
-    trivially unique on a single path. The 1..40 bound covers partkeys to
-    2^40 and is filter-trimmed per row; equivalence is held by the
-    unchanged recursive-CTE oracle (rows+schema+hash) at every sf. The
-    generic transitive_closure operator stays driver-gated through
-    kg_typed_subtree and kg_mixed_path."""
-    part = _tbl(spark, sf_dir, "part", spread=True)
-    ancs = F.expr(
-        "filter(transform(sequence(1, 40), k -> "
-        "struct(shiftright(cast(p_partkey as bigint), k) as ancestor, "
-        "k as depth)), s -> s.ancestor >= 1 "
-        "and s.ancestor != cast(p_partkey as bigint))"
-    )
-    return (
-        part.select(F.col("p_partkey").cast("long").alias("node"),
-                    F.explode(ancs).alias("a"))
-        .select(
-            "node",
-            F.col("a.ancestor").cast("long").alias("ancestor"),
-            F.col("a.depth").cast("int").alias("depth"),
-        )
-    )
-
-
-SQL_KG_ISA_CLOSURE = """
-    WITH RECURSIVE e AS (
-        SELECT p_partkey AS node, p_partkey // 2 AS parent FROM part
-        WHERE p_partkey // 2 >= 1 AND p_partkey // 2 <> p_partkey
-    ), c AS (
-        SELECT node, parent AS ancestor, 1 AS depth FROM e
-        UNION
-        SELECT c.node, e.parent, c.depth + 1 FROM c JOIN e ON c.ancestor = e.node
-    )
-    SELECT node::BIGINT AS node, ancestor::BIGINT AS ancestor,
-           min(depth)::INT AS depth
-    FROM c GROUP BY 1, 2
-"""
-
-
-def q_kg_query_graph(spark, sf_dir):
-    """J9 flagship: conjunctive alert query through the closure table —
-    docs mentioning a disease reaching MESH:D0000 AND a geoloc reaching
-    MESH:D2001, one row per matched entity combination."""
-    from .queries import query_graph
-
-    m = entry_mentions(spark, sf_dir)
-    nodes = (
-        m.select(
-            F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias("curie"),
-            F.col("doc_id").cast("string").alias("name"),
-            F.array(F.lit("alert")).alias("labels"),
-            F.lit("alert").alias("node_type"),
-            F.lit("").alias("timestamp"),
-        )
-        .dropDuplicates(["curie"])
-        .unionByName(
-            spark.createDataFrame(
-                [(c, t, [ty, "entity"], ty, None) for c, t, ty in ENTRY_GAZ],
-                "curie string, name string, labels array<string>, "
-                "node_type string, timestamp string",
-            )
-        )
-    )
-    edges = m.select(
-        F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias("subj"),
-        F.lit("mentions").alias("pred"),
-        F.col("curie").alias("obj"),
-    )
-    closure = spark.createDataFrame(
-        [{"node": n, "ancestor": a, "depth": 0} for n, a in _entry_closure_pairs()]
-    )
-    res = query_graph(
-        nodes, edges, closure,
-        disease_curie="MESH:D0000", geolocation_curie="MESH:D2001",
-    )
-    return res.select(
-        "alert_curie", "disease", "disease_isa", "geolocation", "geolocation_isa"
-    )
-
-
-SQL_KG_QUERY_GRAPH = f"""
-    WITH m AS ({_SQL_MENTIONS}),
-    cl(node, ancestor) AS (VALUES {_sql_values_closure()})
-    SELECT DISTINCT 'doc:' || m1.doc_id AS alert_curie,
-           m1.curie AS disease, 'MESH:D0000' AS disease_isa,
-           m2.curie AS geolocation, 'MESH:D2001' AS geolocation_isa
-    FROM m m1
-    JOIN cl c1 ON m1.curie = c1.node AND c1.ancestor = 'MESH:D0000'
-    JOIN m m2 ON m2.doc_id = m1.doc_id
-    JOIN cl c2 ON m2.curie = c2.node AND c2.ancestor = 'MESH:D2001'
-    WHERE m1.node_type = 'disease' AND m2.node_type = 'geoloc'
-"""
-
-
-def q_kg_predicate_rename(spark, sf_dir):
-    """North-rule vocabulary view (SURVEY.md §1.1; views.predicate_rename_view):
-    builds a graph from the entry mentions — isa hierarchy, occurs_with pair
-    counts, has_pathogen(disease -> pathogen) co-mentions, alert timestamps —
-    and emits the renamed edges (located_in / case_count_of / causes /
-    occurred_on)."""
-    _utc(spark)
-    from .views import predicate_rename_view
-
-    m = entry_mentions(spark, sf_dir)
-    alerts = (
-        m.select(
-            F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias("curie"),
-            F.lit("alert").alias("node_type"),
-            F.format_string(
-                "2024-%02d-01", (F.col("doc_id") % 12 + 1).cast("int")
-            ).alias("timestamp"),
-        )
-        .dropDuplicates(["curie"])
-    )
-    entities = spark.createDataFrame(
-        [(c, ty, None) for c, _t, ty in ENTRY_GAZ],
-        "curie string, node_type string, timestamp string",
-    )
-    nodes = alerts.unionByName(entities)
-
-    isa = spark.createDataFrame(
-        [(s, "isa", o, None) for s, o in ENTRY_ISA],
-        "subj string, pred string, obj string, count long",
-    )
-    co = _mention_pairs(m, with_types=True, ordered=False)
-    occurs = (
-        salted_count(co.filter(F.col("an") < F.col("bn")),
-                     ["a_curie", "b_curie"], salt=16, count_col="count",
-                     salt_from=F.col("doc_id"))
-        .select(F.col("a_curie").alias("subj"),
-                F.lit("occurs_with").alias("pred"),
-                F.col("b_curie").alias("obj"), "count")
-    )
-    has_pathogen = (
-        co.filter((F.col("at") == "disease") & (F.col("bt") == "pathogen"))
-        .select(F.col("a_curie").alias("subj"),
-                F.lit("has_pathogen").alias("pred"),
-                F.col("b_curie").alias("obj"))
-        .dropDuplicates()
-        .withColumn("count", F.lit(None).cast("long"))
-    )
-    edges = isa.unionByName(occurs).unionByName(has_pathogen)
-    return predicate_rename_view(nodes, edges).select(
-        "subj", "pred", "obj", "count"
-    )
-
-
-SQL_KG_PREDICATE_RENAME = f"""
-    WITH m AS ({_SQL_MENTIONS}),
-    isa(subj, obj) AS (VALUES {", ".join(f"('{s}', '{o}')" for s, o in ENTRY_ISA)}),
-    gaz(curie, name, node_type) AS (VALUES {_sql_values_gaz()}),
-    geo AS (SELECT curie FROM gaz WHERE node_type = 'geoloc')
-    SELECT subj, 'located_in' AS pred, obj, NULL::BIGINT AS count
-    FROM isa WHERE subj IN (SELECT curie FROM geo)
-               AND obj IN (SELECT curie FROM geo)
-    UNION ALL
-    SELECT DISTINCT b.curie AS subj, 'causes' AS pred, a.curie AS obj,
-           NULL::BIGINT AS count
-    FROM m a JOIN m b ON a.doc_id = b.doc_id
-    WHERE a.node_type = 'disease' AND b.node_type = 'pathogen'
-    UNION ALL
-    SELECT a.curie AS subj, 'case_count_of' AS pred, b.curie AS obj,
-           count(*) AS count
-    FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.name < b.name
-    GROUP BY 1, 3
-    UNION ALL
-    SELECT DISTINCT 'doc:' || doc_id AS subj, 'occurred_on' AS pred,
-           printf('2024-%02d-01', (doc_id % 12 + 1)::INT) AS obj,
-           NULL::BIGINT AS count
-    FROM m
-"""
-
-
-def q_kg_top_alerts(spark, sf_dir):
-    """A16/O4: docs ranked by distinct mentioned entities, deterministic
-    top-50 (TakeOrderedAndProject)."""
-    m = entry_mentions(spark, sf_dir)
-    return (
-        m.groupBy("doc_id")
-        .agg(F.count_distinct("curie").alias("n_entities"))
-        .orderBy(F.desc("n_entities"), F.asc("doc_id"))
-        .limit(50)
-    )
-
-
-SQL_KG_TOP_ALERTS = f"""
-    WITH m AS ({_SQL_MENTIONS})
-    SELECT doc_id, count(DISTINCT curie) AS n_entities
-    FROM m GROUP BY doc_id
-    ORDER BY n_entities DESC, doc_id ASC LIMIT 50
-"""
-
-
-def q_kg_first_timestamp_lookup(spark, sf_dir):
-    """P10: first matching timestamp else '' (alert timestamp semantics,
-    kg/build.py:165-170), over customer/orders."""
-    _utc(spark)
-    cust = _tbl(spark, sf_dir, "customer")
-    orders = _tbl(spark, sf_dir, "orders")
-    first = orders.groupBy("o_custkey").agg(
-        F.date_format(F.min("o_orderdate"), "yyyy-MM-dd HH:mm:ss").alias("ts")
-    )
-    return cust.join(
-        first, cust["c_custkey"] == first["o_custkey"], "left"
-    ).select(
-        "c_custkey", F.coalesce("ts", F.lit("")).alias("first_order_ts")
-    )
-
-
-SQL_KG_FIRST_TIMESTAMP = """
-    SELECT c.c_custkey,
-           coalesce(strftime(o.ts, '%Y-%m-%d %H:%M:%S'), '') AS first_order_ts
-    FROM customer c
-    LEFT JOIN (SELECT o_custkey, min(o_orderdate) AS ts FROM orders GROUP BY 1) o
-      ON c.c_custkey = o.o_custkey
-"""
-
-
-def q_kg_cooccur_scores(spark, sf_dir):
-    """A5: log-normalized co-occurrence scores (kg/realism_score.py:70-72),
-    rounded for cross-engine float stability. The doc total rides along as a
-    broadcast 1-row frame — one job, no driver-side count() re-running the
-    NER pass (round-1 flaw #4)."""
-    m = entry_mentions(spark, sf_dir)
-    n_docs = F.broadcast(m.agg(F.count_distinct("doc_id").alias("_nd")))
-    pairs = _mention_pairs(m)
-    return (
-        pairs.groupBy("a_curie", "b_curie")
-        .agg(F.count(F.lit(1)).alias("n_co"))
-        .crossJoin(n_docs)
-        .select(
-            "a_curie", "b_curie", "n_co",
-            F.round(F.log("n_co") - F.log(F.col("_nd").cast("double")), 6)
-            .alias("score_r"),
-        )
-    )
-
-
-SQL_KG_COOCCUR_SCORES = f"""
-    WITH m AS ({_SQL_MENTIONS}),
-    n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM m)
-    SELECT a.curie AS a_curie, b.curie AS b_curie, count(*) AS n_co,
-           round(ln(count(*)) - ln((SELECT n_docs FROM n)::DOUBLE), 6) AS score_r
-    FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.name < b.name
-    GROUP BY 1, 2
-"""
-
-
-def q_kg_realism_logsumexp(spark, sf_dir):
-    """A6+P11: stable logsumexp over all pair scores + threshold
-    classification (kg/client.py:269-281)."""
-    m = entry_mentions(spark, sf_dir)
-    n_docs = F.broadcast(m.agg(F.count_distinct("doc_id").alias("_nd")))
-    pair_scores = (
-        _mention_pairs(m)
-        .groupBy("a_curie", "b_curie")
-        .agg(F.count(F.lit(1)).alias("_nc"))
-        .crossJoin(n_docs)
-        .select((F.log("_nc") - F.log(F.col("_nd").cast("double"))).alias("s"))
-    )
-    mx = pair_scores.agg(F.max("s").alias("_m"))
-    lse = (
-        pair_scores.crossJoin(F.broadcast(mx))
-        .agg(
-            F.first("_m").alias("_m"),
-            F.sum(F.exp(F.col("s") - F.col("_m"))).alias("_sum"),
-            F.count(F.lit(1)).alias("n_pairs"),
-        )
-        .select(
-            F.round(F.col("_m") + F.log("_sum"), 4).alias("score_sum_r"),
-            "n_pairs",
-        )
-    )
-    return lse.select(
-        "score_sum_r", "n_pairs",
-        F.when(F.col("score_sum_r") > -4.5, "high")
-        .when(F.col("score_sum_r") > -7.0, "medium")
-        .otherwise("low")
-        .alias("classification"),
-    )
-
-
-SQL_KG_REALISM_LSE = f"""
-    WITH m AS ({_SQL_MENTIONS}),
-    n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM m),
-    ps AS (
-        SELECT a.curie ac, b.curie bc,
-               ln(count(*)) - ln((SELECT n_docs FROM n)::DOUBLE) AS s
-        FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.name < b.name
-        GROUP BY 1, 2
-    ),
-    agg AS (
-        SELECT round(max(s) + ln(sum(exp(s - mx))), 4) AS score_sum_r,
-               count(*) AS n_pairs
-        FROM ps, (SELECT max(s) AS mx FROM ps)
-    )
-    SELECT score_sum_r, n_pairs,
-           CASE WHEN score_sum_r > -4.5 THEN 'high'
-                WHEN score_sum_r > -7.0 THEN 'medium'
-                ELSE 'low' END AS classification
-    FROM agg
-"""
-
-
-def q_kg_literature_candidates(spark, sf_dir):
-    """A13: per-'pmid' query-term counting with threshold (mesh_pmids stand
-    -in = the mentions table)."""
-    from .queries import literature_candidates
-
-    m = entry_mentions(spark, sf_dir).select(
-        F.col("curie").alias("mesh_id"), F.col("doc_id").alias("pmid")
-    )
-    cand, _q = literature_candidates(m, LIT_QUERY_TERMS, exclude=set())
-    return cand.select("pmid", "n_query_terms")
-
-
-SQL_KG_LIT_CANDIDATES = f"""
-    WITH m AS ({_SQL_MENTIONS})
-    SELECT doc_id AS pmid, count(DISTINCT curie) AS n_query_terms
-    FROM m WHERE curie IN ('{LIT_QUERY_TERMS[0]}', '{LIT_QUERY_TERMS[1]}',
-                           '{LIT_QUERY_TERMS[2]}')
-    GROUP BY doc_id HAVING count(DISTINCT curie) >= 2
-"""
-
-
-def q_kg_literature_contingency(spark, sf_dir):
-    """A14's 2x2 contingency cells per candidate pmid (the Fisher p-value on
-    top of these is scipy inside applyInPandas — pytest-verified; the cells
-    are the SQL-checkable part)."""
-    from .queries import total_mesh_terms
-
-    m = entry_mentions(spark, sf_dir).select(
-        F.col("curie").alias("mesh_id"), F.col("doc_id").alias("pmid")
-    )
-    total = F.broadcast(total_mesh_terms(m))
-    nq = len(LIT_QUERY_TERMS)
-    cand = (
-        m.filter(F.col("mesh_id").isin(LIT_QUERY_TERMS))
-        .groupBy("pmid")
-        .agg(F.count_distinct("mesh_id").alias("n_overlap"))
-        .filter(F.col("n_overlap") >= 2)
-    )
-    tgt = m.groupBy("pmid").agg(F.count_distinct("mesh_id").alias("n_target"))
-    return cand.join(tgt, "pmid").crossJoin(total).select(
-        "pmid", "n_overlap", "n_target",
-        (F.lit(nq) - F.col("n_overlap")).alias("q_minus_t"),
-        (F.col("n_target") - F.col("n_overlap")).alias("t_minus_q"),
-        (F.col("total_terms") - (F.lit(nq) + F.col("n_target") - F.col("n_overlap")))
-        .alias("neither"),
-    )
-
-
-SQL_KG_LIT_CONTINGENCY = f"""
-    WITH m AS ({_SQL_MENTIONS}),
-    tot AS (SELECT count(DISTINCT curie) AS t FROM m),
-    cand AS (
-        SELECT doc_id AS pmid, count(DISTINCT curie) AS n_overlap
-        FROM m WHERE curie IN ('{LIT_QUERY_TERMS[0]}', '{LIT_QUERY_TERMS[1]}',
-                               '{LIT_QUERY_TERMS[2]}')
-        GROUP BY doc_id HAVING count(DISTINCT curie) >= 2
-    ),
-    tgt AS (SELECT doc_id AS pmid, count(DISTINCT curie) AS n_target FROM m GROUP BY 1)
-    SELECT c.pmid, c.n_overlap, t.n_target,
-           3 - c.n_overlap AS q_minus_t,
-           t.n_target - c.n_overlap AS t_minus_q,
-           (SELECT t FROM tot) - (3 + t.n_target - c.n_overlap) AS neither
-    FROM cand c JOIN tgt t USING (pmid)
-"""
-
-
-def q_kg_literature_pvalues(spark, sf_dir):
-    """A14 full: vectorized Fisher exact inside applyInPandas, now fully
-    oracle-gated: the overlap set is projected to a comma-joined string (the
-    driver's rows-only canonicalizer can't sort array cells — round-1 ERR)
-    and the p-value is rounded so the DuckDB lgamma tail sum matches."""
-    from .queries import literature_pvalues
-
-    m = entry_mentions(spark, sf_dir).select(
-        F.col("curie").alias("mesh_id"), F.col("doc_id").alias("pmid")
-    )
-    types = spark.createDataFrame(
-        [{"mesh_id": c, "node_type": ty} for c, _t, ty in ENTRY_GAZ]
-    )
-    out = literature_pvalues(m, types, LIT_QUERY_TERMS, exclude=set(), limit=20)
-    return out.select(
-        "pmid", "n_target", "n_overlap",
-        F.array_join("overlap", ",").alias("overlap_csv"),
-        "overlap_coverage", "overlap_coverage_relevant",
-        F.round("pval", 6).alias("pval_r"),
-    )
-
-
-def _sql_lit_pvalues() -> str:
-    """Fisher tail sum in SQL: P(X >= a) for X ~ Hypergeom(M=total, K=row1,
-    N=col1) via lgamma, summed over k = a..min(row1, col1) with a correlated
-    range subquery — exactly fisher_exact_greater's formula."""
-    types_vals = ", ".join(f"('{c}', '{ty}')" for c, _t, ty in ENTRY_GAZ)
-    q_in = ", ".join(f"'{t}'" for t in LIT_QUERY_TERMS)
-    nq = len(LIT_QUERY_TERMS)
-    return f"""
-    WITH m0 AS ({_SQL_MENTIONS}),
-    m AS (SELECT DISTINCT curie AS mesh_id, doc_id AS pmid FROM m0),
-    tot AS (SELECT count(DISTINCT mesh_id) AS total_terms FROM m),
-    cand AS (
-        SELECT pmid, count(DISTINCT mesh_id) AS n_overlap
-        FROM m WHERE mesh_id IN ({q_in})
-        GROUP BY pmid HAVING count(DISTINCT mesh_id) >= {nq - 1}),
-    typed AS (
-        SELECT m.pmid, m.mesh_id, t.node_type
-        FROM m JOIN cand USING (pmid)
-        LEFT JOIN (VALUES {types_vals}) t(mesh_id, node_type) USING (mesh_id)),
-    per AS (
-        SELECT pmid,
-               count(*) AS n_target,
-               count(DISTINCT CASE WHEN mesh_id IN ({q_in})
-                                   THEN mesh_id END) AS n_overlap,
-               string_agg(DISTINCT CASE WHEN mesh_id IN ({q_in})
-                                        THEN mesh_id END, ','
-                          ORDER BY CASE WHEN mesh_id IN ({q_in})
-                                        THEN mesh_id END) AS overlap_csv,
-               count(DISTINCT CASE WHEN mesh_id IN ({q_in})
-                                   THEN node_type END) AS overlap_coverage,
-               count(DISTINCT CASE WHEN mesh_id IN ({q_in})
-                         AND node_type IN ('geoloc', 'disease', 'pathogen')
-                                   THEN node_type END)
-                 AS overlap_coverage_relevant
-        FROM typed GROUP BY pmid),
-    cells AS (
-        SELECT per.*,
-               n_overlap AS a4,
-               {nq} AS row1,
-               n_target AS col1,
-               (SELECT total_terms FROM tot) AS m4
-        FROM per),
-    pv AS (
-        -- k <= row1 = n_query, so an uncorrelated 0..n_query range joined on
-        -- BETWEEN replaces the (unsupported) correlated generate_series
-        SELECT c.pmid, c.n_target, c.n_overlap, c.overlap_csv,
-               c.overlap_coverage, c.overlap_coverage_relevant,
-               least(1.0, sum(exp(
-                   (lgamma(c.row1 + 1) - lgamma(s.k + 1)
-                    - lgamma(c.row1 - s.k + 1))
-                   + (lgamma(c.m4 - c.row1 + 1) - lgamma(c.col1 - s.k + 1)
-                      - lgamma(c.m4 - c.row1 - c.col1 + s.k + 1))
-                   - (lgamma(c.m4 + 1) - lgamma(c.col1 + 1)
-                      - lgamma(c.m4 - c.col1 + 1))))) AS pval
-        FROM cells c
-        JOIN generate_series(0, {nq}) s(k)
-          ON s.k BETWEEN c.a4 AND least(c.row1, c.col1)
-        GROUP BY ALL)
-    SELECT pmid::VARCHAR AS pmid, n_target, n_overlap, overlap_csv,
-           overlap_coverage, overlap_coverage_relevant,
-           round(pval, 6) AS pval_r
-    FROM pv
-    ORDER BY overlap_coverage_relevant DESC, overlap_coverage DESC,
-             pval ASC, pmid::VARCHAR ASC
-    LIMIT 20
-"""
-
-
-def q_kg_autocomplete(spark, sf_dir):
-    """O5: capped case-insensitive prefix search (kg/nodes_trie.py:23-39)
-    over part names."""
-    part = _tbl(spark, sf_dir, "part")
-    return (
-        part.filter(F.lower("p_name").startswith("s"))
-        .select("p_partkey", "p_name")
-        .orderBy(F.lower("p_name"), "p_partkey")
-        .limit(100)
-    )
-
-
-SQL_KG_AUTOCOMPLETE = """
-    SELECT p_partkey, p_name FROM part
-    WHERE lower(p_name) LIKE 's%'
-    ORDER BY lower(p_name), p_partkey LIMIT 100
-"""
-
-
-# ---- relational operator coverage (TPC-H-ish) --------------------------------
-
-_PT_DIS = ["slow", "dup", "stream"]
-_PT_GEO = ["table", "window", "batch"]
-_PT_PAT = ["hash", "spark", "vector", "join"]
-
-
-def q_kg_pattern_triples(spark, sf_dir):
-    """Sentence-scoped pattern triple extraction (triples.py) — the north
-    rule's literal ask: outbreak relations asserted only where a lexical
-    cue connects grounded mentions inside ONE sentence. Each document gets
-    a deterministic two-sentence outbreak tail ("<n> cases of <disease> in
-    <geo> on <date>", "<pathogen> causes <disease>") appended so all four
-    predicates fire; the original text (dot-free, cue-free) forms sentence
-    0 and contributes mentions but no triples — cue gating, not bare
-    co-occurrence, is what the oracle checks."""
-    from .triples import (
-        make_sentence_groups_udf,
-        sentence_mention_groups,
-        triples_from_sentence_groups,
-    )
-
-    d = _docs(spark, sf_dir)
-    i = F.col("doc_id")
-    arr = lambda xs: F.array(*[F.lit(x) for x in xs])  # noqa: E731
-    pick = lambda xs, k: F.element_at(arr(xs), (k % len(xs)).cast("int") + 1)  # noqa: E731
-    tail = F.concat(
-        F.lit(" . update : "), (i % 900 + 10).cast("string"),
-        F.lit(" cases of "), pick(_PT_DIS, i),
-        F.lit(" in "), pick(_PT_GEO, i + 1),
-        F.lit(" on "),
-        F.date_format(
-            F.date_add(F.to_date(F.lit("2024-01-01")), (i % 365).cast("int")),
-            "yyyy-MM-dd"),
-        F.lit(" . "), pick(_PT_PAT, i),
-        F.lit(" causes "), pick(_PT_DIS, i + 1),
-        F.lit(" ."),
-    )
-    docs = d.select("doc_id", F.concat("text", tail).alias("text"))
-    # r6: ONE fused Arrow pass builds the per-(doc, sentence) mention
-    # groups directly (make_sentence_groups_udf) — replacing the
-    # per-mention substr/regexp_replace/split sentence math and the
-    # collect_list groupBy exchange of the declarative chain; the cue
-    # rules then run unchanged over the grouped relation. Equality with
-    # the declarative chain is pytest-asserted in test_triples.
-    gudf = make_sentence_groups_udf(
-        spark, entry_gazetteer_df(spark),
-        {c: ty for c, _t, ty in ENTRY_GAZ})
-    return triples_from_sentence_groups(sentence_mention_groups(docs, gudf))
-
-
-def _sql_pattern_triples() -> str:
-    def _pick(xs, off):
-        lst = "[" + ", ".join(f"'{x}'" for x in xs) + "]"
-        shift = f"(doc_id + {off})" if off else "doc_id"
-        return f"list_extract({lst}, ({shift} % {len(xs)})::INT + 1)"
-
-    return f"""
-    WITH gaz(curie, name, node_type) AS (VALUES {_sql_values_gaz()}),
-    p AS (
-        SELECT doc_id,
-               text || ' . update : ' || (doc_id % 900 + 10)::VARCHAR
-                    || ' cases of ' || {_pick(_PT_DIS, 0)}
-                    || ' in ' || {_pick(_PT_GEO, 1)}
-                    || ' on ' || strftime(DATE '2024-01-01'
-                                          + ((doc_id % 365)::INT), '%Y-%m-%d')
-                    || ' . ' || {_pick(_PT_PAT, 0)}
-                    || ' causes ' || {_pick(_PT_DIS, 1)} || ' .' AS text
-        FROM documents),
-    sent AS (
-        SELECT doc_id, l[u.i] AS sentence, u.i - 1 AS sent_idx
-        FROM (SELECT doc_id, string_split(text, '.') AS l FROM p),
-             unnest(range(1, len(l) + 1)) u(i)),
-    m AS (
-        SELECT DISTINCT doc_id, sent_idx, sentence, g.curie, g.name,
-                        g.node_type
-        FROM sent
-        JOIN gaz g ON list_contains(string_split(sentence, ' '), g.name)),
-    legs AS (
-        SELECT a.doc_id, a.curie AS subj, 'located_in' AS pred,
-               b.curie AS obj, NULL::BIGINT AS n_cases
-        FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.sent_idx = b.sent_idx
-        WHERE a.node_type = 'disease' AND b.node_type = 'geoloc'
-          AND contains(a.sentence, ' in ' || b.name)
-        UNION ALL
-        SELECT a.doc_id, a.curie, 'causes', b.curie, NULL::BIGINT
-        FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.sent_idx = b.sent_idx
-        WHERE a.node_type = 'pathogen' AND b.node_type = 'disease'
-          AND contains(a.sentence, a.name || ' causes ' || b.name)
-        UNION ALL
-        SELECT doc_id, curie, 'case_count_of', 'doc:' || doc_id,
-               regexp_extract(sentence, '([0-9]+) cases of ', 1)::BIGINT
-        FROM m WHERE node_type = 'disease'
-          AND contains(sentence, ' cases of ' || name)
-          AND regexp_extract(sentence, '([0-9]+) cases of ', 1) <> ''
-        UNION ALL
-        SELECT doc_id, curie, 'occurred_on',
-               regexp_extract(sentence,
-                              ' on ([0-9]{{4}}-[0-9]{{2}}-[0-9]{{2}})', 1),
-               NULL::BIGINT
-        FROM m WHERE node_type = 'disease'
-          AND regexp_matches(sentence,
-                             ' on [0-9]{{4}}-[0-9]{{2}}-[0-9]{{2}}'))
-    SELECT DISTINCT doc_id, subj, pred, obj, n_cases FROM legs
-    """
-
-
-def q_kg_triple_provenance(spark, sf_dir):
-    """Evidence table over the pattern-triple fixture (triples.
-    triple_provenance): per (subj, pred, obj) the exact supporting-doc
-    count plus a deterministic capped sample of doc ids — the audit hook a
-    KG reviewer needs. Rides the same corpus as kg_pattern_triples."""
-    from .triples import triple_provenance
-
-    return triple_provenance(q_kg_pattern_triples(spark, sf_dir),
-                             max_docs=5)
-
-
-def _sql_triple_provenance() -> str:
-    return f"""
-    WITH pt AS ({_sql_pattern_triples()})
-    SELECT subj, pred, obj, count(*)::BIGINT AS n_docs,
-           (list_sort(list(DISTINCT doc_id)))[1:5] AS sample_docs
-    FROM pt GROUP BY subj, pred, obj
-    """
-
-
-def q_agg_pricing_summary(spark, sf_dir):
-    """A1/A7-class partial+final hash agg; exact integer-cents money math."""
-    l = _tbl(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc = F.round(F.col("l_discount") * 100).cast("long")
-    return (
-        l.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-            (F.sum(cents) / 100.0).alias("sum_base_price"),
-            (F.sum(cents * (100 - disc)) / 10000.0).alias("sum_disc_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-SQL_AGG_PRICING = """
-    SELECT l_returnflag, l_linestatus,
-           sum(l_quantity::BIGINT)::BIGINT AS sum_qty,
-           sum(round(l_extendedprice * 100)::BIGINT) / 100.0 AS sum_base_price,
-           sum(round(l_extendedprice * 100)::BIGINT
-               * (100 - round(l_discount * 100)::BIGINT)) / 10000.0
-             AS sum_disc_price,
-           count(*) AS count_order
-    FROM lineitem GROUP BY 1, 2
-"""
-
-
-def q_join_star_topk(spark, sf_dir):
-    """J1-class broadcast-dim star join + top-k revenue by brand."""
-    l = _tbl(spark, sf_dir, "lineitem")
-    p = _tbl(spark, sf_dir, "part")
-    s = _tbl(spark, sf_dir, "supplier")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc = F.round(F.col("l_discount") * 100).cast("long")
-    return (
-        l.join(F.broadcast(p), l["l_partkey"] == p["p_partkey"])
-        .join(F.broadcast(s), l["l_suppkey"] == s["s_suppkey"])
-        .groupBy("p_brand")
-        .agg(
-            (F.sum(cents * (100 - disc)) / 10000.0).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy(F.desc("revenue"), F.asc("p_brand"))
-        .limit(10)
-    )
-
-
-SQL_JOIN_STAR_TOPK = """
-    SELECT p_brand,
-           sum(round(l_extendedprice * 100)::BIGINT
-               * (100 - round(l_discount * 100)::BIGINT)) / 10000.0 AS revenue,
-           count(*) AS n_items
-    FROM lineitem
-    JOIN part ON l_partkey = p_partkey
-    JOIN supplier ON l_suppkey = s_suppkey
-    GROUP BY 1 ORDER BY revenue DESC, p_brand ASC LIMIT 10
-"""
-
-
-def q_anti_join_customers(spark, sf_dir):
-    """U2/A10-class set difference as left_anti join."""
-    c = _tbl(spark, sf_dir, "customer")
-    o = _tbl(spark, sf_dir, "orders")
-    return c.join(
-        o, c["c_custkey"] == o["o_custkey"], "left_anti"
-    ).select("c_custkey", "c_name")
-
-
-SQL_ANTI_JOIN = """
-    SELECT c_custkey, c_name FROM customer
-    WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-"""
-
-
-def q_semi_join_parts(spark, sf_dir):
-    """P5/J6-class semi join: parts with any 2000+ shipment."""
-    p = _tbl(spark, sf_dir, "part")
-    l = _tbl(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") >= "2000-01-01"
-    )
-    return p.join(
-        l, p["p_partkey"] == l["l_partkey"], "left_semi"
-    ).select("p_partkey", "p_name")
-
-
-SQL_SEMI_JOIN = """
-    SELECT p_partkey, p_name FROM part
-    WHERE p_partkey IN (
-        SELECT l_partkey FROM lineitem WHERE l_shipdate >= '2000-01-01')
-"""
-
-
-def q_union_distinct_users(spark, sf_dir):
-    """U1: UNION-distinct of two filtered sets."""
-    e = _tbl(spark, sf_dir, "events")
-    a = e.filter(F.col("event_type") == "error").select("user_id")
-    b = e.filter(F.col("event_type") == "signup").select("user_id")
-    return a.union(b).dropDuplicates()
-
-
-SQL_UNION_DISTINCT = """
-    SELECT user_id FROM events WHERE event_type = 'error'
-    UNION
-    SELECT user_id FROM events WHERE event_type = 'signup'
-"""
-
-
-def q_window_first_event(spark, sf_dir):
-    """N2-class priority resolution: row_number over (user) ordered by
-    (ts, event_id), keep first."""
-    e = _tbl(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    return (
-        e.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("user_id", "event_id", "event_type")
-    )
-
-
-SQL_WINDOW_FIRST = """
-    SELECT user_id, event_id, event_type FROM (
-        SELECT user_id, event_id, event_type,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY ts ASC, event_id ASC) AS rn
-        FROM events) WHERE rn = 1
-"""
-
-
-def q_year_month_map(spark, sf_dir):
-    """A11/P9: pivot per-user month counts into a sorted JSON map string
-    (years_data semantics, kg/build.py:288-297)."""
-    _utc(spark)
-    e = _tbl(spark, sf_dir, "events")
-    per = e.groupBy(
-        "user_id", F.date_format("ts", "yyyy-MM").alias("month")
-    ).agg(F.count(F.lit(1)).alias("c"))
-    return per.groupBy("user_id").agg(
-        F.concat(
-            F.lit("{"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("month", "c"))),
-                    lambda x: F.concat(
-                        F.lit('"'), x["month"], F.lit('":'),
-                        x["c"].cast("string"),
-                    ),
-                ),
-                ",",
-            ),
-            F.lit("}"),
-        ).alias("years_data")
-    )
-
-
-SQL_YEAR_MONTH_MAP = """
-    WITH per AS (
-        SELECT user_id, strftime(ts, '%Y-%m') AS month, count(*) AS c
-        FROM events GROUP BY 1, 2)
-    SELECT user_id,
-           '{' || string_agg('"' || month || '":' || c, ',' ORDER BY month) || '}'
-             AS years_data
-    FROM per GROUP BY user_id
-"""
-
-
-def q_stats_token_counts(spark, sf_dir):
-    """A7/K4: corpus token frequency (count-ordered stats artifact)."""
-    return textstats.token_stats(_docs(spark, sf_dir)).select("token", "count")
-
-
-SQL_STATS_TOKENS = """
-    SELECT t AS token, count(*) AS count
-    FROM (SELECT unnest(string_split(lower(text), ' ')) AS t FROM documents)
-    WHERE t <> '' GROUP BY t
-"""
-
-
-def q_text_repetition(spark, sf_dir):
-    """Gopher-style repetition signals (textstats.repetition_stats) over a
-    corpus with injected repeated lines — the base word-soup docs are
-    single-line, so the line metrics would be vacuously zero; the injected
-    construction is identical in the DuckDB oracle."""
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 200)
-    lined = d.select(
-        "doc_id",
-        F.concat_ws(
-            "\n",
-            F.col("text"),
-            F.substring("text", 1, 40),
-            F.substring("text", 1, 40),
-            F.substring("text", 41, 60),
-        ).alias("text"),
-    )
-    out = textstats.repetition_stats(lined)
-    return out.select(
-        "doc_id", "n_lines",
-        F.round("dup_line_ratio", 6).alias("dup_line_ratio_r"),
-        F.round("dup_line_char_ratio", 6).alias("dup_line_char_ratio_r"),
-        F.round("dup_token_ratio", 6).alias("dup_token_ratio_r"),
-        F.round("top_bigram_ratio", 6).alias("top_bigram_ratio_r"),
-    )
-
-
-SQL_TEXT_REPETITION = """
-    WITH base AS (
-        SELECT doc_id,
-               text || chr(10) || substr(text, 1, 40) || chr(10)
-                    || substr(text, 1, 40) || chr(10)
-                    || substr(text, 41, 60) AS t
-        FROM documents WHERE doc_id < 200),
-    l AS (
-        SELECT doc_id,
-               list_filter(string_split(t, chr(10)), x -> x <> '') AS lines,
-               list_filter(
-                   string_split(lower(replace(t, chr(10), ' ')), ' '),
-                   x -> x <> '') AS toks
-        FROM base),
-    lu AS (SELECT doc_id, unnest(lines) AS line FROM l),
-    lc AS (SELECT doc_id, line, count(*) AS c FROM lu GROUP BY 1, 2),
-    cr AS (SELECT doc_id,
-                  sum((c - 1) * length(line)) AS dup,
-                  sum(c * length(line)) AS tot
-           FROM lc GROUP BY 1),
-    bg AS (SELECT doc_id, toks[i] || ' ' || toks[i+1] AS bigram
-           FROM l, unnest(range(1, len(toks))) u(i)),
-    bgc AS (SELECT doc_id, bigram, count(*) AS c FROM bg GROUP BY 1, 2),
-    bgr AS (SELECT doc_id, max(c) AS mx, sum(c) AS tot FROM bgc GROUP BY 1)
-    SELECT l.doc_id,
-           len(lines)::INT AS n_lines,
-           round((len(lines) - len(list_distinct(lines)))
-                 / greatest(len(lines), 1)::DOUBLE, 6) AS dup_line_ratio_r,
-           round(coalesce(cr.dup, 0)
-                 / greatest(coalesce(cr.tot, 0), 1)::DOUBLE, 6)
-             AS dup_line_char_ratio_r,
-           round((len(toks) - len(list_distinct(toks)))
-                 / greatest(len(toks), 1)::DOUBLE, 6) AS dup_token_ratio_r,
-           round(coalesce(bgr.mx, 0)
-                 / greatest(coalesce(bgr.tot, 0), 1)::DOUBLE, 6)
-             AS top_bigram_ratio_r
-    FROM l LEFT JOIN cr USING (doc_id) LEFT JOIN bgr USING (doc_id)
-"""
-
-
-def q_text_pii(spark, sf_dir):
-    """PII scrub (textstats.redact_pii) over a corpus with deterministic
-    injected PII (the word-soup base has none); identical construction and
-    RE2-compatible patterns in the DuckDB oracle."""
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 200)
-    seeded = d.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact u"), F.col("doc_id").cast("string"),
-            F.lit("@example.com from 10.1."),
-            F.pmod("doc_id", F.lit(256)).cast("string"),
-            F.lit(".7 call 555-123-4567"),
-        ).alias("text"),
-    )
-    return textstats.redact_pii(seeded).select(
-        "doc_id", "n_email", "n_phone", "n_ipv4", "redacted_text"
-    )
-
-
-SQL_TEXT_PII = """
-    WITH base AS (
-        SELECT doc_id,
-               text || ' contact u' || doc_id || '@example.com from 10.1.'
-                    || (doc_id % 256) || '.7 call 555-123-4567' AS t
-        FROM documents WHERE doc_id < 200)
-    SELECT doc_id,
-           len(regexp_extract_all(t,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))::INT
-             AS n_email,
-           len(regexp_extract_all(t, '\\+?\\d{3}[- ]\\d{3}[- ]\\d{4}'))::INT
-             AS n_phone,
-           len(regexp_extract_all(t,
-               '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b'))::INT
-             AS n_ipv4,
-           regexp_replace(
-               regexp_replace(
-                   regexp_replace(t,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
-                       '<EMAIL>', 'g'),
-                   '\\+?\\d{3}[- ]\\d{3}[- ]\\d{4}', '<PHONE>', 'g'),
-               '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b',
-               '<IP>', 'g') AS redacted_text
-    FROM base
-"""
-
-
-def q_text_surprisal(spark, sf_dir):
-    """CCNet-style unigram surprisal (textstats.unigram_surprisal): mean
-    and max -log2 p(token) per doc under the corpus's own unigram
-    distribution."""
-    out = textstats.unigram_surprisal(_docs(spark, sf_dir))
-    return out.select(
-        "doc_id", "n_tokens",
-        F.round("mean_surprisal", 6).alias("mean_surprisal_r"),
-        F.round("max_surprisal", 6).alias("max_surprisal_r"),
-    )
-
-
-SQL_TEXT_SURPRISAL = """
-    WITH toks AS (
-        SELECT doc_id,
-               unnest(list_filter(string_split(lower(text), ' '),
-                                  x -> x <> '')) AS token
-        FROM documents),
-    freq AS (SELECT token, count(*) AS tf FROM toks GROUP BY 1),
-    tot AS (SELECT sum(tf) AS t FROM freq)
-    SELECT doc_id, count(*)::INT AS n_tokens,
-           round(avg(-log2(tf / (SELECT t FROM tot))), 6)
-             AS mean_surprisal_r,
-           round(max(-log2(tf / (SELECT t FROM tot))), 6)
-             AS max_surprisal_r
-    FROM toks JOIN freq USING (token)
-    GROUP BY doc_id
-"""
-
-
-def q_dedup_contamination(spark, sf_dir):
-    """GPT-3-style benchmark decontamination (dedup.contamination_flags):
-    docs 0-4 act as the 'eval set'; every corpus doc is flagged with its
-    distinct trigram overlap count. n=3 instead of the protocol's 13
-    because the word-soup corpus needs plausible collision rates."""
-    d = _docs(spark, sf_dir)
-    bench = d.filter(F.col("doc_id") < 5).select("text")
-    return dedup.contamination_flags(d, bench, n=3)
-
-
-SQL_DEDUP_CONTAMINATION = """
-    WITH bt AS (
-        SELECT list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-        FROM documents WHERE doc_id < 5),
-    bsh AS (
-        SELECT DISTINCT t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM bt, unnest(range(1, len(t) - 1)) u(i)),
-    dt AS (
-        SELECT doc_id,
-               list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-        FROM documents),
-    dsh AS (
-        SELECT DISTINCT doc_id,
-               t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM dt, unnest(range(1, len(t) - 1)) u(i)),
-    hits AS (
-        SELECT doc_id, count(*) AS n
-        FROM dsh JOIN bsh USING (shingle) GROUP BY 1)
-    SELECT d.doc_id,
-           coalesce(h.n, 0)::BIGINT AS n_contaminated,
-           coalesce(h.n, 0) > 0 AS contaminated
-    FROM documents d LEFT JOIN hits h USING (doc_id)
-"""
-
-
-def q_json_extract_props(spark, sf_dir):
-    """P12/S4: nested-JSON field extraction with explicit schema."""
-    e = _tbl(spark, sf_dir, "events")
-    return e.select(
-        "event_id", F.get_json_object("props", "$.k").cast("long").alias("k")
-    )
-
-
-SQL_JSON_EXTRACT = """
-    SELECT event_id, json_extract_string(props, '$.k')::BIGINT AS k FROM events
-"""
-
-
-# ---- dedup / similarity / text analysis --------------------------------------
-
-def q_dedup_exact(spark, sf_dir):
-    return dedup.exact_dedup(_docs(spark, sf_dir)).select(
-        "doc_id", "canonical_id", "group_size"
-    )
-
-
-SQL_DEDUP_EXACT = """
-    WITH g AS (SELECT doc_id, md5(text) AS h FROM documents),
-    rep AS (SELECT h, min(doc_id) AS canonical_id, count(*) AS group_size
-            FROM g GROUP BY h)
-    SELECT g.doc_id, rep.canonical_id, rep.group_size FROM g JOIN rep USING (h)
-"""
-
-
-# ---- deterministic sampling / splitting / shuffling (sampling.py) ----------
-# Engine-portable randomness: md5-hex thresholds precomputed in Python and
-# injected into BOTH the Spark plan and the DuckDB oracle, so the split/
-# sample/shard assignment is reproducible bit-for-bit across engines.
-
-SPLIT_WEIGHTS = {"train": 0.9, "val": 0.05, "test": 0.05}
-
-
-def q_sample_split_counts(spark, sf_dir):
-    """Deterministic train/val/test assignment (hash_split: a pure
-    projection, zero exchanges) summarized per (split, lang). The count +
-    min-id evidence pins every row's assignment: moving any doc between
-    splits changes a group's n_docs, and the boundary rows are covered
-    because min(doc_id) must match per cell."""
-    d = sampling.hash_split(_docs(spark, sf_dir), "doc_id", SPLIT_WEIGHTS)
-    return d.groupBy("split", "lang").agg(
-        F.count("*").alias("n_docs"), F.min("doc_id").alias("first_doc"))
-
-
-def _sql_sample_split() -> str:
-    case = sampling.sql_hash_split("doc_id", SPLIT_WEIGHTS)
-    return f"""
-        WITH s AS (SELECT doc_id, lang, {case} AS split FROM documents)
-        SELECT split, lang, count(*) AS n_docs, min(doc_id) AS first_doc
-        FROM s GROUP BY 1, 2
-    """
-
-
-def q_sample_stratified(spark, sf_dir):
-    """Exactly min(k, |stratum|) docs per language, deterministically (the
-    k smallest salted hashes per stratum — a uniform without-replacement
-    draw both engines reproduce). The exact-k window path; the filter-only
-    scale paths (stratified_fraction/budget) are pytest-gated."""
-    return sampling.stratified_sample(
-        _docs(spark, sf_dir), ["lang"], 25, "doc_id").select("doc_id", "lang")
-
-
-def _sql_sample_stratified() -> str:
-    h = sampling.sql_hash_hex("doc_id", "strat-v1")
-    return f"""
-        SELECT doc_id, lang FROM (
-            SELECT doc_id, lang, row_number()
-                   OVER (PARTITION BY lang ORDER BY {h}, doc_id) AS rn
-            FROM documents) WHERE rn <= 25
-    """
-
-
-def q_sample_shards(spark, sf_dir):
-    """Deterministic global shuffle for training-shard writes: shard =
-    contiguous hash-range bucket, pos = rank within shard by (hash, id) —
-    shard+pos replay one global pseudo-random total order. One exchange."""
-    out = sampling.deterministic_shuffle(
-        _docs(spark, sf_dir).select("doc_id"), "doc_id", 8)
-    return out.select(
-        "doc_id", "shard", F.col("pos").cast("long").alias("pos"))
-
-
-def _sql_sample_shards() -> str:
-    h = sampling.sql_hash_hex("doc_id", "shuffle-v1")
-    cases = " ".join(f"WHEN hh < '{t}' THEN {i}"
-                     for i, t in enumerate(sampling.shard_thresholds(8)))
-    return f"""
-        WITH h AS (SELECT doc_id, {h} AS hh FROM documents),
-        s AS (SELECT doc_id, hh,
-                     (CASE {cases} ELSE 7 END)::INT AS shard FROM h)
-        SELECT doc_id, shard, row_number()
-               OVER (PARTITION BY shard ORDER BY hh, doc_id) AS pos
-        FROM s
-    """
-
-
-def q_sample_pack_offsets(spark, sf_dir):
-    """GPT-style sequence packing: whitespace token counts, one
-    deterministic pseudo-random global order, concat-and-chunk into
-    1024-token packs. Each doc's (pack_id, offset) start plus the
-    boundary-straddle flag; two-phase prefix-sum (per-shard window +
-    n_shards-row shard-prefix window), zero driver collects."""
-    toks = F.size(F.filter(F.split(F.col("text"), " "),
-                           lambda x: x != F.lit("")))
-    d = _docs(spark, sf_dir).select(
-        "doc_id", toks.cast("long").alias("n_tok"))
-    out = sampling.pack_offsets(d, "doc_id", "n_tok", 1024, n_shards=8)
-    return out.select("doc_id", "n_tok", "pack_id", "offset",
-                      "spans_packs")
-
-
-def _sql_sample_pack_offsets() -> str:
-    h = sampling.sql_hash_hex("doc_id", "pack-v1")
-    return f"""
-        WITH t AS (
-            SELECT doc_id,
-                   len(list_filter(string_split(text, ' '),
-                                   x -> x <> ''))::BIGINT AS n_tok,
-                   {h} AS hh
-            FROM documents
-        ), c AS (
-            SELECT doc_id, n_tok,
-                   COALESCE(sum(n_tok) OVER (
-                       ORDER BY hh, doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND 1 PRECEDING), 0)::BIGINT AS bef
-            FROM t
-        )
-        SELECT doc_id, n_tok,
-               (bef // 1024) AS pack_id,
-               (bef % 1024) AS offset,
-               (n_tok > 0 AND
-                ((bef + greatest(n_tok, 1) - 1) // 1024) > (bef // 1024))
-                   AS spans_packs
-        FROM c
-    """
-
-
-def q_sample_pack_spans(spark, sf_dir):
-    """Pack materialization plan: per-(pack, doc) token spans from the
-    packing layout — what a shard writer joins to the tokenized docs.
-    Same two-phase prefix-sum as sample_pack_offsets plus a narrow
-    sequence+explode; no extra exchange."""
-    toks = F.size(F.filter(F.split(F.col("text"), " "),
-                           lambda x: x != F.lit("")))
-    d = _docs(spark, sf_dir).select(
-        "doc_id", toks.cast("long").alias("n_tok"))
-    return sampling.pack_spans(d, "doc_id", "n_tok", 1024, n_shards=8)
-
-
-def _sql_sample_pack_spans() -> str:
-    h = sampling.sql_hash_hex("doc_id", "pack-v1")
-    return f"""
-        WITH t AS (
-            SELECT doc_id,
-                   len(list_filter(string_split(text, ' '),
-                                   x -> x <> ''))::BIGINT AS n_tok,
-                   {h} AS hh
-            FROM documents
-        ), c AS (
-            SELECT doc_id, n_tok,
-                   COALESCE(sum(n_tok) OVER (
-                       ORDER BY hh, doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND 1 PRECEDING), 0)::BIGINT AS bef
-            FROM t
-        ), spans AS (
-            SELECT doc_id, n_tok, bef,
-                   unnest(generate_series(bef // 1024,
-                                          (bef + n_tok - 1) // 1024)) AS p
-            FROM c
-            WHERE n_tok > 0
-        )
-        SELECT p AS pack_id, doc_id,
-               greatest(p * 1024 - bef, 0) AS doc_from,
-               least(n_tok, (p + 1) * 1024 - bef) AS doc_to,
-               greatest(bef - p * 1024, 0) AS pack_off
-        FROM spans
-    """
-
-
-# Deterministic crawl-URL synthesis shared between engines: one Python
-# source-of-truth table, rendered as a Spark array lookup and as a DuckDB
-# CASE, so both build byte-identical raw URLs from doc_id. The shapes
-# cover every canonicalization rule: www + default-port strip, kept
-# nonstandard port, multi-label public suffix, case folding, tracking
-# params, param reordering, fragments.
-_WEBURL_PREFIXES = [
-    "https://WWW.Example.COM:443",   # www + default https port -> example.com
-    "https://news.BBC.co.uk",        # multi-suffix -> bbc.co.uk
-    "http://shop.example.com:8080",  # nonstandard port kept
-    "http://example.org",
-    "https://Sub.Domain.Example.net",
-    "https://www.gov.uk",            # www strip; 2-label host passthrough
-    "http://blog.foo.com.au",        # multi-suffix -> foo.com.au
-    "http://CDN.example.com:80",     # default http port -> example.com
-]
-_WEBURL_QUERIES = [
-    "",
-    "?utm_source=feed&b=2&a=1",      # tracking dropped, survivors sorted
-    "?z=9&utm_campaign=x&gclid=abc",  # only z=9 survives
-    "?a=1",
-]
-
-
-def _weburl_raw(doc_id):
-    """Spark column: synthesized raw crawl URL for a doc_id column."""
-    pre = F.element_at(
-        F.array(*[F.lit(p) for p in _WEBURL_PREFIXES]),
-        (doc_id % 8 + 1).cast("int"))
-    q = F.element_at(
-        F.array(*[F.lit(s) for s in _WEBURL_QUERIES]),
-        (doc_id % 4 + 1).cast("int"))
-    frag = F.when(doc_id % 3 == 0, F.lit("#sec")).otherwise(F.lit(""))
-    return F.concat(pre, F.lit("/p/"), doc_id.cast("string"), q, frag)
-
-
-def _sql_weburl_raw() -> str:
-    """DuckDB expression: the same raw URL from the same table."""
-    pre = " ".join(f"WHEN {i} THEN '{p}'"
-                   for i, p in enumerate(_WEBURL_PREFIXES))
-    q = " ".join(f"WHEN {i} THEN '{s}'"
-                 for i, s in enumerate(_WEBURL_QUERIES))
-    return (f"(CASE doc_id % 8 {pre} END) || '/p/' || doc_id || "
-            f"(CASE doc_id % 4 {q} END) || "
-            f"(CASE WHEN doc_id % 3 = 0 THEN '#sec' ELSE '' END)")
-
-
-# the canonicalization pipeline re-expressed in DuckDB SQL (weburl.py's
-# exact rule set); u/host named-expression templates
-_SQL_WEBURL_CANON = """
-        WITH raw AS (
-            SELECT doc_id, {raw} AS url FROM documents
-        ), p1 AS (
-            SELECT doc_id, url,
-                   split_part(url, '#', 1) AS nofrag
-            FROM raw
-        ), p2 AS (
-            SELECT *, instr(nofrag, '?') AS qpos FROM p1
-        ), p3 AS (
-            SELECT doc_id, url,
-                   CASE WHEN qpos > 0
-                        THEN substring(nofrag, 1, qpos - 1)
-                        ELSE nofrag END AS base,
-                   CASE WHEN qpos > 0
-                        THEN substring(nofrag, qpos + 1)
-                        ELSE '' END AS rawq
-            FROM p2
-        ), p4 AS (
-            SELECT doc_id, url, base, rawq,
-                   lower(regexp_extract(base,
-                       '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS scheme,
-                   regexp_extract(base,
-                       '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1) AS hp
-            FROM p3
-        ), p5 AS (
-            SELECT doc_id, url, base, rawq, scheme,
-                   regexp_replace(lower(split_part(hp, ':', 1)),
-                                  '^www\\.', '') AS host,
-                   split_part(hp, ':', 2) AS port
-            FROM p4
-        ), p6 AS (
-            SELECT doc_id, url, rawq, scheme, host,
-                   CASE WHEN port = ''
-                             OR (scheme = 'http' AND port = '80')
-                             OR (scheme = 'https' AND port = '443')
-                        THEN '' ELSE ':' || port END AS portpart,
-                   CASE WHEN regexp_extract(base,
-                            '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*(/[^?#]*)',
-                            1) = ''
-                        THEN '/'
-                        ELSE regexp_extract(base,
-                            '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*(/[^?#]*)',
-                            1) END AS path
-            FROM p5
-        ), p7 AS (
-            SELECT *,
-                   -- array_to_string([]) is NULL in DuckDB, '' in Spark
-                   coalesce(array_to_string(list_sort(list_filter(
-                       string_split(rawq, '&'),
-                       x -> x <> '' AND NOT regexp_matches(x,
-                           '^(utm_[^=]*|gclid|fbclid|msclkid|igshid|mc_eid)=')
-                   )), '&'), '') AS q
-            FROM p6
-        ), canon AS (
-            SELECT doc_id, url, host,
-                   scheme || '://' || host || portpart || path ||
-                   (CASE WHEN q = '' THEN '' ELSE '?' || q END)
-                       AS canonical_url,
-                   string_split(host, '.') AS labels
-            FROM p7
-        )
-        SELECT doc_id, url, canonical_url, host,
-               CASE WHEN len(labels) >= 3
-                         AND labels[-2] || '.' || labels[-1] IN ({multi})
-                    THEN labels[-3] || '.' || labels[-2] || '.' || labels[-1]
-                    WHEN len(labels) >= 2
-                    THEN labels[-2] || '.' || labels[-1]
-                    ELSE host END AS domain
-        FROM canon
-"""
-
-
-def q_web_url_canonical(spark, sf_dir):
-    """Crawl-URL canonicalization + host + registered domain, all pure
-    Column expressions (weburl.py) over deterministically synthesized
-    raw URLs covering every normalization rule."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", _weburl_raw(F.col("doc_id")).alias("url"))
-    host = weburl.url_host(F.col("url"))
-    return d.select(
-        "doc_id", "url",
-        weburl.canonical_url(F.col("url")).alias("canonical_url"),
-        host.alias("host"),
-        weburl.registered_domain(host).alias("domain"))
-
-
-def _sql_web_url_canonical() -> str:
-    multi = ", ".join(f"'{s}'" for s in weburl.MULTI_SUFFIXES)
-    return _SQL_WEBURL_CANON.format(raw=_sql_weburl_raw(), multi=multi)
-
-
-def q_web_domain_mixture(spark, sf_dir):
-    """Per-registered-domain training-mixture weights: token share,
-    temperature-flattened (T=0.7) and renormalized. The only full-data
-    op is the domain groupBy; normalizations run on the domain-level
-    frame (weburl.domain_mixture)."""
-    toks = F.size(F.filter(F.split(F.col("text"), " "),
-                           lambda x: x != F.lit("")))
-    d = _docs(spark, sf_dir).select(
-        "doc_id", toks.cast("long").alias("n_tok"),
-        _weburl_raw(F.col("doc_id")).alias("url"))
-    d = d.withColumn(
-        "domain", weburl.registered_domain(weburl.url_host(F.col("url"))))
-    out = weburl.domain_mixture(d, "domain", "n_tok", temperature=0.7)
-    return out.select(
-        "domain", "toks", "docs",
-        F.round("share", 6).alias("share_r"),
-        F.round("weight", 6).alias("weight_r"))
-
-
-def _sql_web_domain_mixture() -> str:
-    multi = ", ".join(f"'{s}'" for s in weburl.MULTI_SUFFIXES)
-    canon = _SQL_WEBURL_CANON.format(raw=_sql_weburl_raw(), multi=multi)
-    return f"""
-        WITH canon_rows AS ({canon}),
-        d AS (
-            SELECT c.domain,
-                   len(list_filter(string_split(t.text, ' '),
-                                   x -> x <> ''))::BIGINT AS n_tok
-            FROM canon_rows c JOIN documents t USING (doc_id)
-        ), per AS (
-            SELECT domain, sum(n_tok)::BIGINT AS toks,
-                   count(*)::BIGINT AS docs
-            FROM d GROUP BY domain
-        ), x AS (
-            SELECT *, (SELECT sum(toks) FROM per)::BIGINT AS tot FROM per
-        ), y AS (
-            SELECT *, pow(toks::DOUBLE / tot, 0.7) AS w FROM x
-        )
-        SELECT domain, toks, docs,
-               round(toks::DOUBLE / tot, 6) AS share_r,
-               round(w / (SELECT sum(w) FROM y), 6) AS weight_r
-        FROM y
-    """
-
-
-def _crawl_snapshots(spark, sf_dir):
-    """Two deterministic crawl snapshots of the documents corpus, built to
-    exercise every crawl_delta path: urls missing from one side (added /
-    removed), content mutated between snapshots (changed), and stale extra
-    captures inside a snapshot that latest-capture dedup must discard."""
-    d = _docs(spark, sf_dir, spread=False).select("doc_id", "source", "text")
-    url = F.concat(F.lit("https://"), F.col("source"), F.lit("/d/"),
-                   F.col("doc_id").cast("string")).alias("url")
-    old_base = d.filter(F.col("doc_id") % 20 != 7).select(
-        url, (F.lit(1000) + F.col("doc_id") % 3).cast("long").alias("ts"),
-        F.col("text"))
-    old_stale = d.filter((F.col("doc_id") % 13 == 2)
-                         & (F.col("doc_id") % 20 != 7)).select(
-        url, F.lit(999).cast("long").alias("ts"),
-        F.concat(F.col("text"), F.lit(" OLDCAP")).alias("text"))
-    new_base = d.filter(F.col("doc_id") % 17 != 5).select(
-        url, F.lit(2000).cast("long").alias("ts"),
-        F.when(F.col("doc_id") % 7 == 0,
-               F.concat(F.col("text"), F.lit(" v2")))
-         .otherwise(F.col("text")).alias("text"))
-    new_stale = d.filter((F.col("doc_id") % 13 == 6)
-                         & (F.col("doc_id") % 17 != 5)).select(
-        url, F.lit(1990).cast("long").alias("ts"),
-        F.lit("stale").alias("text"))
-    return old_base.unionByName(old_stale), new_base.unionByName(new_stale)
-
-
-def q_web_crawl_delta(spark, sf_dir):
-    """Crawl-refresh delta (crawl.crawl_delta): per-url added / removed /
-    changed / unchanged between two snapshots, latest capture per side,
-    pre-join md5 fingerprints so the full-outer join never carries page
-    bodies. The slice feeding re-extraction is refresh_targets(delta)."""
-    from .crawl import crawl_delta
-
-    old, new = _crawl_snapshots(spark, sf_dir)
-    return crawl_delta(old, new, key_col="url",
-                       content_cols=("text",), ts_col="ts")
-
-
-_SQL_CRAWL_OLD = """
-    SELECT source, doc_id, (1000 + doc_id % 3)::BIGINT AS ts, text
-    FROM documents WHERE doc_id % 20 <> 7
-    UNION ALL
-    SELECT source, doc_id, 999::BIGINT, text || ' OLDCAP'
-    FROM documents WHERE doc_id % 13 = 2 AND doc_id % 20 <> 7
-"""
-
-_SQL_CRAWL_NEW = """
-    SELECT source, doc_id, 2000::BIGINT AS ts,
-           CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END AS text
-    FROM documents WHERE doc_id % 17 <> 5
-    UNION ALL
-    SELECT source, doc_id, 1990::BIGINT, 'stale'
-    FROM documents WHERE doc_id % 13 = 6 AND doc_id % 17 <> 5
-"""
-
-_SQL_CRAWL_LATEST = """
-    SELECT url, ts, fp FROM (
-        SELECT 'https://' || source || '/d/' || doc_id AS url, ts,
-               md5('1' || length(text) || ':' || text) AS fp,
-               row_number() OVER (
-                   PARTITION BY 'https://' || source || '/d/' || doc_id
-                   ORDER BY ts DESC, md5('1' || length(text) || ':' || text) DESC) AS rn
-        FROM ({snap})
-    ) WHERE rn = 1
-"""
-
-SQL_WEB_CRAWL_DELTA = f"""
-    WITH old_latest AS ({_SQL_CRAWL_LATEST.format(snap=_SQL_CRAWL_OLD)}),
-         new_latest AS ({_SQL_CRAWL_LATEST.format(snap=_SQL_CRAWL_NEW)})
-    SELECT coalesce(o.url, n.url) AS url,
-           CASE WHEN o.url IS NULL THEN 'added'
-                WHEN n.url IS NULL THEN 'removed'
-                WHEN o.fp = n.fp THEN 'unchanged'
-                ELSE 'changed' END AS status,
-           o.fp AS old_fingerprint, n.fp AS new_fingerprint,
-           o.ts AS old_ts, n.ts AS new_ts
-    FROM old_latest o FULL OUTER JOIN new_latest n ON o.url = n.url
-"""
-
-
-_HTML_WRAP_PRE = ("<html><head><style>p{color:red}</style>"
-                  "<script>var x = 1 &amp; 2;</script></head>"
-                  "<body><h1>Doc ")
-_HTML_WRAP_MID = "</h1><p>"
-_HTML_WRAP_POST = "</p><!-- trailing comment --></body></html>"
-
-
-def q_web_html_extract(spark, sf_dir):
-    """From-raw-crawl ingest hop: wrap each document's text in realistic
-    HTML boilerplate (script/style/comment payloads), ENCODE to the input
-    contract's binary html column, then strip back to text with the pure-
-    codegen htmltext.html_to_text chain — one projection, zero UDFs."""
-    from .htmltext import html_to_text
-
-    d = _docs(spark, sf_dir)
-    html_bin = F.encode(
-        F.concat(F.lit(_HTML_WRAP_PRE), F.col("doc_id").cast("string"),
-                 F.lit(_HTML_WRAP_MID), F.col("text"),
-                 F.lit(_HTML_WRAP_POST)),
-        "UTF-8")
-    return d.select("doc_id",
-                    html_to_text(html_bin).alias("extracted"))
-
-
-def _sql_web_html_extract() -> str:
-    from .htmltext import sql_html_to_text
-
-    wrapped = (f"'{_HTML_WRAP_PRE}' || doc_id || '{_HTML_WRAP_MID}' || "
-               f"text || '{_HTML_WRAP_POST}'")
-    return (f"SELECT doc_id, {sql_html_to_text(wrapped)} AS extracted "
-            f"FROM documents")
-
-
-def q_web_link_graph(spark, sf_dir):
-    """Outlink extraction (weburl.extract_links): deterministic HTML with
-    one absolute cross-site href, one single-quoted root-relative href,
-    one protocol-relative CDN href, one mailto (dropped at resolution),
-    and one <link rel=stylesheet> (dropped by the <a>-tag scoping — a
-    bare href scan would emit it), encoded to the input contract's binary
-    html column — 3 resolved canonical edges per page, zero exchanges.
-    The injected URLs are already canonical, so canonical_url is identity
-    on them (idempotence is property-tested in test_weburl); the oracle
-    replays the tag-scoped extraction + resolution verbatim."""
-    d = _docs(spark, sf_dir)
-    site = F.pmod("doc_id", F.lit(7)).cast("string")
-    nxt = F.pmod(F.col("doc_id") + 1, F.lit(7)).cast("string")
-    cdn = F.pmod("doc_id", F.lit(3)).cast("string")
-    html = F.concat(
-        F.lit('<html><head><link rel="stylesheet" href="/style.css">'
-              '</head><body><a href="https://site-'), nxt,
-        F.lit(".example/p/"), F.pmod("doc_id", F.lit(50)).cast("string"),
-        F.lit('">x</a> <a href=\'/about\'>y</a> '),
-        F.lit('<a href="mailto:a@b.example">skip</a> '),
-        F.lit('<a href="//cdn-'), cdn, F.lit('.example/lib.js">z</a> '),
-        F.col("text"), F.lit("</body></html>"),
-    )
-    url = F.concat(F.lit("https://site-"), site, F.lit(".example/d/"),
-                   F.col("doc_id").cast("string"))
-    pages = d.select("doc_id", url.alias("url"),
-                     F.encode(html, "UTF-8").alias("html"))
-    return weburl.extract_links(pages, id_col="doc_id")
-
-
-def _sql_web_link_graph() -> str:
-    return """
-        WITH base AS (
-            SELECT doc_id,
-                   'https://site-' || (doc_id % 7) || '.example/d/'
-                     || doc_id AS src,
-                   '<html><head><link rel="stylesheet" href="/style.css">'
-                     || '</head><body><a href="https://site-'
-                     || ((doc_id + 1) % 7) || '.example/p/'
-                     || (doc_id % 50)
-                     || '">x</a> <a href=''/about''>y</a> '
-                     || '<a href="mailto:a@b.example">skip</a> '
-                     || '<a href="//cdn-' || (doc_id % 3)
-                     || '.example/lib.js">z</a> '
-                     || text || '</body></html>' AS html
-            FROM documents),
-        e AS (
-            SELECT doc_id, src,
-                   unnest(regexp_extract_all(
-                       html, '(?i)(<a\\b[^>]*>[^<]*)', 1)) AS el
-            FROM base),
-        l AS (
-            SELECT doc_id, src,
-                   CASE WHEN regexp_extract(el,
-                            '(?i)href\\s*=\\s*"([^"]*)"', 1) <> ''
-                        THEN regexp_extract(el,
-                            '(?i)href\\s*=\\s*"([^"]*)"', 1)
-                        ELSE regexp_extract(el,
-                            '(?i)href\\s*=\\s*''([^'']*)''', 1)
-                   END AS lnk
-            FROM e),
-        r AS (
-            SELECT doc_id, src,
-                   CASE WHEN lnk LIKE 'http://%'
-                             OR lnk LIKE 'https://%' THEN lnk
-                        WHEN lnk LIKE '//%' THEN 'https:' || lnk
-                        WHEN lnk LIKE '/%' THEN
-                            'https://site-' || (doc_id % 7)
-                            || '.example' || lnk
-                        ELSE NULL END AS dst
-            FROM l)
-        SELECT doc_id, src, dst FROM r WHERE dst IS NOT NULL
-    """
-
-
-def q_web_robots_filter(spark, sf_dir):
-    """Robots-compliance filter (weburl.parse_robots + robots_filter):
-    per-host robots.txt with UA-grouped Disallow rules parsed by the
-    codegen fold, then the page table filtered by host-rule prefix
-    match. Injection: even-residue sites also disallow /p/; paths cycle
-    public//p//private by doc residue. The oracle replays the PREFIX
-    FILTER semantics over the same per-host disallow sets (the parse
-    fold itself is pytest-gated on adversarial robots texts — UA groups,
-    ':' in paths, empty Disallow)."""
-    d = _docs(spark, sf_dir)
-    site = F.pmod("doc_id", F.lit(7)).cast("string")
-    path = (
-        F.when(F.col("doc_id") % 3 == 0,
-               F.concat(F.lit("/p/"), F.col("doc_id").cast("string")))
-        .when(F.col("doc_id") % 3 == 1,
-              F.concat(F.lit("/private/"), F.col("doc_id").cast("string")))
-        .otherwise(F.concat(F.lit("/d/"), F.col("doc_id").cast("string")))
-    )
-    pages = d.select(
-        "doc_id",
-        F.concat(F.lit("https://site-"), site, F.lit(".example"), path)
-        .alias("url"),
-    )
-    hosts = spark.range(0, 7).select(
-        F.concat(F.lit("site-"), F.col("id").cast("string"),
-                 F.lit(".example")).alias("host"),
-        F.concat(
-            F.lit("User-agent: googlebot\nDisallow: /\n"
-                  "User-agent: *\nDisallow: /private\n"),
-            F.when(F.col("id") % 2 == 0, F.lit("Disallow: /p/\n"))
-            .otherwise(F.lit("")),
-        ).alias("robots_txt"),
-    )
-    rules = weburl.parse_robots(hosts)
-    return weburl.robots_filter(pages, rules)
-
-
-def _sql_web_robots_filter() -> str:
-    return """
-        WITH u AS (
-            SELECT doc_id,
-                   'site-' || (doc_id % 7) || '.example' AS host,
-                   CASE WHEN doc_id % 3 = 0 THEN '/p/' || doc_id
-                        WHEN doc_id % 3 = 1 THEN '/private/' || doc_id
-                        ELSE '/d/' || doc_id END AS path
-            FROM documents),
-        r AS (
-            SELECT 'site-' || h || '.example' AS host,
-                   CASE WHEN h % 2 = 0 THEN ['/private', '/p/']
-                        ELSE ['/private'] END AS dis
-            FROM range(0, 7) t(h))
-        SELECT u.doc_id, 'https://' || u.host || u.path AS url
-        FROM u JOIN r USING (host)
-        WHERE len(list_filter(r.dis,
-                              p -> u.path LIKE p || '%')) = 0
-    """
-
-
-def q_text_tfidf_topk(spark, sf_dir):
-    """Per-doc top-5 keywords by tf-idf (textstats.tfidf_topk): corpus
-    document frequency via the distinct-then-count cascade, smoothed idf
-    with N from a 1-row crossJoin (no collect), windowed top-k with the
-    token-asc tie-break. Oracle replays tf/df/idf/rank in DuckDB."""
-    out = textstats.tfidf_topk(_docs(spark, sf_dir), k=5)
-    return out.select(
-        "doc_id", "token", "tf", "df",
-        F.round("score", 6).alias("score_r"), "rank")
-
-
-def _sql_text_tfidf_topk() -> str:
-    return """
-        WITH toks AS (
-            SELECT doc_id,
-                   unnest(list_filter(string_split(lower(text), ' '),
-                                      x -> x <> '')) AS token
-            FROM documents),
-        tf AS (SELECT doc_id, token, count(*) AS tf
-               FROM toks GROUP BY 1, 2),
-        dfr AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        n AS (SELECT count(*)::DOUBLE AS n FROM documents),
-        s AS (
-            SELECT tf.doc_id, tf.token, tf.tf, dfr.df,
-                   tf.tf * (ln((n.n + 1.0) / (dfr.df + 1.0)) + 1.0)
-                     AS score
-            FROM tf JOIN dfr USING (token), n),
-        r AS (SELECT *, row_number() OVER (
-                  PARTITION BY doc_id
-                  ORDER BY score DESC, token ASC) AS rank
-              FROM s)
-        SELECT doc_id, token, tf, df, round(score, 6) AS score_r,
-               rank::INT AS rank
-        FROM r WHERE rank <= 5
-    """
-
-
-_NEG_SPAN = (1 << 48) // 8 + 1
-
-
-def q_kg_negative_samples(spark, sf_dir):
-    """Filtered-protocol negative sampling for KG-embedding training
-    (sampling.negative_triples): nearest-hash entity lookup via
-    asof_join in 48-bit md5 space with bucket/global wrap, parity-split
-    head/tail corruption, no-op and true-edge negatives removed. The
-    oracle replays the identical hashes with DuckDB's native ASOF JOIN
-    plus the same coalesce chain and anti-join."""
-    d = _docs(spark, sf_dir)
-    edges = d.select(
-        F.concat(F.lit("E"), F.pmod("doc_id", F.lit(50)).cast("string"))
-        .alias("subj"),
-        F.concat(F.lit("r"), F.pmod("doc_id", F.lit(3)).cast("string"))
-        .alias("pred"),
-        F.concat(F.lit("E"),
-                 (F.lit(50) + F.pmod("doc_id", F.lit(40))).cast("string"))
-        .alias("obj"),
-    ).distinct()
-    out = sampling.negative_triples(edges, n_per_pos=2, n_buckets=8)
-    return out.select("subj", "pred", "obj", "side",
-                      F.col("sample_idx").cast("int").alias("sample_idx"))
-
-
-def _sql_kg_negative_samples() -> str:
-    return f"""
-        WITH edges AS (
-            SELECT DISTINCT 'E' || (doc_id % 50) AS subj,
-                   'r' || (doc_id % 3) AS pred,
-                   'E' || (50 + doc_id % 40) AS obj
-            FROM documents),
-        ents AS (
-            SELECT entity,
-                   ('0x' || substr(md5('neg-v1:e:' || entity), 1, 12))
-                     ::BIGINT AS he
-            FROM (SELECT subj AS entity FROM edges
-                  UNION SELECT obj FROM edges)),
-        entsb AS (SELECT *, he // {_NEG_SPAN} AS bucket FROM ents),
-        probes AS (
-            SELECT subj, pred, obj, j AS sample_idx,
-                   ('0x' || substr(md5('neg-v1:p' || chr(0) || subj
-                        || chr(0) || pred || chr(0) || obj || chr(0)
-                        || j), 1, 12))::BIGINT AS hp
-            FROM edges, unnest([0, 1]) t(j)),
-        probesb AS (SELECT *, hp // {_NEG_SPAN} AS bucket FROM probes),
-        m AS (
-            SELECT p.*, e.entity AS entity_asof
-            FROM probesb p ASOF LEFT JOIN entsb e
-              ON p.bucket = e.bucket AND p.hp >= e.he),
-        bmax AS (SELECT bucket, max_by(entity, he) AS bmax
-                 FROM entsb GROUP BY bucket),
-        gmax AS (SELECT max_by(entity, he) AS gmax FROM entsb),
-        c AS (
-            SELECT m.subj AS osubj, m.pred, m.obj AS oobj, m.sample_idx,
-                   coalesce(m.entity_asof, b.bmax, g.gmax) AS neg,
-                   CASE WHEN m.sample_idx % 2 = 0
-                        THEN 'tail' ELSE 'head' END AS side
-            FROM m LEFT JOIN bmax b USING (bucket), gmax g),
-        neg AS (
-            SELECT CASE WHEN side = 'head' THEN neg ELSE osubj END AS subj,
-                   pred,
-                   CASE WHEN side = 'tail' THEN neg ELSE oobj END AS obj,
-                   side, sample_idx::INT AS sample_idx
-            FROM c
-            WHERE neg <> CASE WHEN side = 'head' THEN osubj ELSE oobj END)
-        SELECT n.* FROM neg n
-        WHERE NOT EXISTS (
-            SELECT 1 FROM edges t
-            WHERE t.subj = n.subj AND t.pred = n.pred AND t.obj = n.obj)
-    """
-
-
-_QW_BUCKETS = 64
-
-
-def q_text_quality_classifier(spark, sf_dir):
-    """CCNet-style hashed linear quality classifier
-    (textstats.hashed_linear_score): fastText's architecture — sigmoid of
-    bias + mean of weights[md5-48(ngram) % D] over (1,2)-gram features —
-    as one codegen projection with the weight vector as a plan literal.
-    Deterministic demo weights stand in for an offline-trained model; the
-    oracle replays the identical hashing, weights, and mean in DuckDB.
-    Score rounded to 6 (sigma differs only in the last ulp between
-    libm implementations)."""
-    w = textstats.demo_classifier_weights(_QW_BUCKETS)
-    out = textstats.hashed_linear_score(
-        _docs(spark, sf_dir), weights=w, bias=-0.1)
-    return out.select(
-        "doc_id", "n_features", F.round("score", 6).alias("score_r"))
-
-
-def _sql_text_quality_classifier() -> str:
-    w = textstats.demo_classifier_weights(_QW_BUCKETS)
-    wlit = "[" + ", ".join(repr(x) for x in w) + "]"
-    return f"""
-        WITH base AS (
-            SELECT doc_id,
-                   list_filter(string_split(lower(text), ' '),
-                               x -> x <> '') AS toks
-            FROM documents),
-        f AS (
-            SELECT doc_id,
-                   list_concat(
-                       list_transform(toks, t ->
-                           ('0x' || substr(md5('u:' || t), 1, 12))::BIGINT
-                           % {_QW_BUCKETS}),
-                       list_transform(range(1, len(toks)), i ->
-                           ('0x' || substr(md5('b:' || toks[i] || ' '
-                                               || toks[i + 1]), 1, 12))
-                           ::BIGINT % {_QW_BUCKETS})
-                   ) AS feats
-            FROM base),
-        s AS (
-            SELECT doc_id, len(feats)::INT AS n_features,
-                   -0.1 + coalesce(
-                       list_aggregate(
-                           list_transform(feats, b -> ({wlit})[b + 1]),
-                           'sum'),
-                       0.0) / greatest(len(feats), 1) AS z
-            FROM f)
-        SELECT doc_id, n_features,
-               round(1.0 / (1.0 + exp(-z)), 6) AS score_r
-        FROM s
-    """
-
-
-def q_web_line_dedup(spark, sf_dir):
-    """Cross-document boilerplate-line strip (dedup.line_dedup,
-    RefinedWeb/CCNet-style): lines whose trimmed form recurs in >=5
-    distinct documents are removed corpus-wide and the survivors are
-    reassembled in order. The word-soup base docs are single-line, so the
-    gate injects the web shape it exists for — a per-site nav header and
-    copyright footer (shared by the ~1/7 of docs on each site, far over
-    threshold) around two unique body chunks; the oracle replays the
-    identical construction."""
-    d = _docs(spark, sf_dir)
-    site = F.pmod("doc_id", F.lit(7)).cast("string")
-    lined = d.select(
-        "doc_id",
-        F.concat_ws(
-            "\n",
-            F.concat(F.lit("(c) site-"), site,
-                     F.lit(" nav home about contact")),
-            F.substring("text", 1, 80),
-            F.substring("text", 81, 80),
-            F.concat(F.lit("all rights reserved site-"), site),
-        ).alias("text"),
-    )
-    return dedup.line_dedup(lined, min_docs=5)
-
-
-def _sql_web_line_dedup() -> str:
-    return """
-        WITH base AS (
-            SELECT doc_id,
-                   '(c) site-' || (doc_id % 7) || ' nav home about contact'
-                   || chr(10) || substr(text, 1, 80)
-                   || chr(10) || substr(text, 81, 80)
-                   || chr(10) || 'all rights reserved site-' || (doc_id % 7)
-                     AS t
-            FROM documents),
-        l AS (
-            SELECT doc_id,
-                   unnest(string_split(t, chr(10))) AS line,
-                   unnest(range(0, len(string_split(t, chr(10))))) AS pos
-            FROM base),
-        k AS (SELECT doc_id, pos, line, md5(trim(line)) AS h FROM l),
-        hot AS (
-            SELECT h FROM (
-                SELECT h, count(DISTINCT doc_id) AS c
-                FROM k WHERE trim(line) <> '' GROUP BY h)
-            WHERE c >= 5),
-        kept AS (SELECT * FROM k WHERE h NOT IN (SELECT h FROM hot)),
-        agg AS (SELECT doc_id, count(*) AS n_kept,
-                       string_agg(line, chr(10) ORDER BY pos) AS text_clean
-                FROM kept GROUP BY doc_id),
-        tot AS (SELECT doc_id, count(*) AS n_lines FROM k GROUP BY doc_id)
-        SELECT tot.doc_id, tot.n_lines::INT AS n_lines,
-               coalesce(agg.n_kept, 0)::INT AS n_kept,
-               coalesce(agg.text_clean, '') AS text_clean
-        FROM tot LEFT JOIN agg USING (doc_id)
-    """
-
-
-# Shared passage injected by the passage-dedup gate: 11 tokens -> 4 fully
-# interior 8-gram positions per doc, shared by every doc on the same
-# (doc_id % 5) "site". Spliced mid-text so duplicated spans sit BETWEEN
-# unique soup spans (interval-union actually exercised), with one doc_id
-# dimension of variation in the site token so not everything collides.
-# Rendered with {s} = the literal site expression of each engine, so the
-# Spark and DuckDB splices cannot drift apart.
-_PASSAGE_PRE = "official advisory site-"
-_PASSAGE_POST = " please wash hands avoid contact report cases promptly"
-
-
-def q_text_passage_dedup(spark, sf_dir):
-    """Cross-document duplicate-passage coverage (dedup.passage_dedup,
-    the Lee-et-al exact-substring-dedup signal): token 8-grams occurring
-    in >=2 distinct documents, reduced to per-doc duplicated-span
-    coverage via interval union. The word-soup base shares no natural
-    8-grams, so the gate splices a per-site 11-token advisory passage
-    into the middle of each doc (~100 docs/site at sf0.01 — far over
-    threshold); boundary shingles mixing soup and passage stay unique,
-    interior ones duplicate. The oracle replays the identical splice and
-    the md5-prefix hashing exactly."""
-    d = _docs(spark, sf_dir)
-    site = F.pmod("doc_id", F.lit(5)).cast("string")
-    spliced = d.select(
-        "doc_id",
-        F.concat_ws(
-            " ",
-            F.substring("text", 1, 120),
-            F.concat(F.lit(_PASSAGE_PRE), site, F.lit(_PASSAGE_POST)),
-            F.substring("text", 121, 120),
-        ).alias("text"),
-    )
-    return dedup.passage_dedup(spliced, n=8, min_docs=2)
-
-
-def _sql_text_passage_dedup(n: int = 8, min_docs: int = 2) -> str:
-    return f"""
-        WITH base AS (
-            SELECT doc_id,
-                   substr(text, 1, 120) || ' ' ||
-                   '{_PASSAGE_PRE}' || (doc_id % 5) || '{_PASSAGE_POST}'
-                   || ' ' || substr(text, 121, 120) AS t
-            FROM documents),
-        toks AS (
-            SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(t), '\\s+'),
-                               x -> x <> '') AS tk
-            FROM base),
-        sh AS (
-            SELECT doc_id, u.pos AS pos,
-                   substr(md5(array_to_string(
-                       tk[u.pos+1 : u.pos+{n}], ' ')), 1, 16) AS h
-            FROM toks, LATERAL unnest(
-                range(0, greatest(len(tk) - {n} + 1, 0))) AS u(pos)),
-        dup AS (
-            SELECT h FROM sh GROUP BY h
-            HAVING count(DISTINCT doc_id) >= {min_docs}),
-        hits AS (SELECT sh.doc_id, sh.pos FROM sh SEMI JOIN dup USING (h)),
-        cov AS (
-            SELECT doc_id, pos,
-                   coalesce(least({n}, pos - lag(pos) OVER (
-                       PARTITION BY doc_id ORDER BY pos)), {n}) AS c
-            FROM hits),
-        agg AS (
-            SELECT doc_id, count(*)::INT AS dup_positions,
-                   sum(c)::INT AS covered_tokens
-            FROM cov GROUP BY doc_id)
-        SELECT toks.doc_id,
-               len(tk)::INT AS n_tokens,
-               coalesce(agg.dup_positions, 0)::INT AS dup_positions,
-               coalesce(agg.covered_tokens, 0)::INT AS covered_tokens,
-               round(CASE WHEN len(tk) > 0
-                          THEN coalesce(agg.covered_tokens, 0)
-                               / len(tk)
-                          ELSE 0.0 END, 6) AS dup_coverage_r
-        FROM toks LEFT JOIN agg USING (doc_id)
-    """
-
-
-def q_dedup_substring_spans(spark, sf_dir):
-    """Exact-substring span CUTTING (dedup.substring_spans, the
-    actionable half of Lee-et-al ExactSubstr dedup): token 8-grams
-    occurring in >=2 distinct documents mark their intervals, overlaps
-    merge into maximal spans (gaps-and-islands), covered tokens are cut
-    and the cleaned lowercase token stream is returned per doc. Runs on
-    the RAW documents table — the synth word-soup corpus carries >1k
-    naturally repeated 8-grams at sf0.001, so real spans (including
-    multi-island docs) are exercised without any splice. The oracle
-    replays tokenization, md5-prefix hashing, island merge, and the
-    anti-join cut exactly."""
-    return dedup.substring_spans(_docs(spark, sf_dir), n=8, min_docs=2)
-
-
-def _sql_dedup_substring_spans(n: int = 8, min_docs: int = 2) -> str:
-    return f"""
-        WITH toks AS (
-            SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                               x -> x <> '') AS tk
-            FROM documents),
-        sh AS (
-            SELECT doc_id, u.pos AS pos,
-                   substr(md5(array_to_string(
-                       tk[u.pos+1 : u.pos+{n}], ' ')), 1, 16) AS h
-            FROM toks, LATERAL unnest(
-                range(0, greatest(len(tk) - {n} + 1, 0))) AS u(pos)),
-        dup AS (
-            SELECT h FROM sh GROUP BY h
-            HAVING count(DISTINCT doc_id) >= {min_docs}),
-        hits AS (SELECT sh.doc_id, sh.pos FROM sh SEMI JOIN dup USING (h)),
-        brk AS (
-            SELECT doc_id, pos,
-                   CASE WHEN pos - lag(pos) OVER (
-                            PARTITION BY doc_id ORDER BY pos) > {n}
-                        THEN 1 ELSE 0 END AS b
-            FROM hits),
-        isl AS (
-            SELECT doc_id, pos,
-                   sum(b) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-            FROM brk),
-        spans AS (
-            SELECT doc_id, min(pos)::INT AS s, (max(pos) + {n - 1})::INT AS e
-            FROM isl GROUP BY doc_id, g),
-        covered AS (
-            SELECT doc_id, s + u.j AS i
-            FROM spans, LATERAL unnest(range(e - s + 1)) AS u(j)),
-        agg AS (
-            SELECT doc_id, count(*)::INT AS n_spans,
-                   sum(e - s + 1)::INT AS cut_tokens
-            FROM spans GROUP BY doc_id),
-        positions AS (
-            SELECT doc_id, p.i AS i, tk[p.i+1] AS tok
-            FROM toks, LATERAL unnest(range(len(tk))) AS p(i)),
-        kept AS (
-            SELECT p.doc_id, string_agg(p.tok, ' ' ORDER BY p.i) AS kept_text
-            FROM positions p LEFT JOIN covered c
-              ON c.doc_id = p.doc_id AND c.i = p.i
-            WHERE c.i IS NULL
-            GROUP BY p.doc_id)
-        SELECT toks.doc_id, len(tk)::INT AS n_tokens,
-               coalesce(agg.n_spans, 0)::INT AS n_spans,
-               coalesce(agg.cut_tokens, 0)::INT AS cut_tokens,
-               coalesce(kept.kept_text, '') AS kept_text
-        FROM toks LEFT JOIN agg USING (doc_id) LEFT JOIN kept USING (doc_id)
-    """
-
-
-def q_corpus_length_profile(spark, sf_dir):
-    """Per-(lang, source) corpus length reconnaissance
-    (textstats.length_profile): doc counts, token totals, mean and EXACT
-    p10/p50/p90 token-count percentiles — the pass that picks curation
-    thresholds. The gate runs the exact-percentile mode (engine-portable:
-    Spark `percentile` and DuckDB `quantile_cont` are both linearly
-    interpolated); the mergeable percentile_approx scale path is
-    sketch-vs-exact bounded in pytest instead."""
-    return textstats.length_profile(_docs(spark, sf_dir))
-
-
-def _sql_corpus_length_profile() -> str:
-    return """
-        WITH t AS (
-            SELECT lang, source,
-                   len(list_filter(regexp_split_to_array(lower(text),
-                                                         '\\s+'),
-                                   x -> x <> ''))::INT AS nt
-            FROM documents)
-        SELECT lang, source,
-               count(*)::INT AS n_docs,
-               sum(nt)::BIGINT AS total_tokens,
-               round(avg(nt), 6) AS mean_tokens_r,
-               round(quantile_cont(nt, 0.1), 6) AS p10_r,
-               round(quantile_cont(nt, 0.5), 6) AS p50_r,
-               round(quantile_cont(nt, 0.9), 6) AS p90_r
-        FROM t GROUP BY lang, source
-    """
-
-
-# Fixed query set for the BM25 retrieval gate — soup-vocabulary phrases so
-# every term has real postings; literal VALUES on both engines.
-ENTRY_BM25_QUERIES = (
-    (1, "spark table join"),
-    (2, "window sort order"),
-    (3, "customer query filter"),
-    (4, "stream batch merge group"),
+from collections.abc import Callable
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame, SparkSession
+
+from . import entry_dedup as dd
+from . import entry_graph as graph
+from . import entry_kg as kg
+from . import entry_kg_maint as kgm
+from . import entry_sample as sample
+from . import entry_table as table
+from . import entry_text as text
+from . import entry_web as web
+from .entry_fixtures import _SQL_MENTIONS
+
+
+class Query(NamedTuple):
+    name: str
+    fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str
+    driver: bool
+    headline: bool  # timed by bench.py, bench_extra.py, scripts/dump_plans.py
+
+
+def driver(fn, oracle: str, headline: bool = False) -> Query:
+    """A row in the driver window: the driver hashes only the first 50
+    keys of all_queries(), so every driver row precedes every extra."""
+    return Query(fn.__name__.removeprefix("q_"), fn, oracle, True, headline)
+
+
+def extra(fn, oracle: str, headline: bool = False) -> Query:
+    """A row past the driver window; tests/test_entry_oracles.py runs the
+    identical oracle gate on it."""
+    return Query(fn.__name__.removeprefix("q_"), fn, oracle, False, headline)
+
+
+REGISTRY = (
+    driver(kg.q_kg_extract_text, kg.SQL_KG_EXTRACT_TEXT, headline=True),
+    driver(kg.q_kg_ner_mentions, _SQL_MENTIONS, headline=True),
+    driver(kg.q_kg_ground_names, kg.SQL_KG_GROUND_NAMES),
+    driver(kg.q_kg_tsv_node_rows, kg.ORACLE_KG_TSV_NODE_ROWS),
+    driver(kg.q_kg_query_indicators, kg.ORACLE_KG_QUERY_INDICATORS),
+    driver(kg.q_kg_direct_relations, kg.SQL_KG_DIRECT_RELATIONS),
+    driver(kgm.q_canonicalize_assignments, kgm.SQL_CANONICALIZE),
+    driver(text.q_corpus_curate, text._sql_corpus_curate(), headline=True),
+    driver(kgm.q_kg_edge_merge, kgm.SQL_KG_EDGE_MERGE, headline=True),
+    # exhaustive-probe IVF == brute force, so it shares the oracle
+    driver(dd.q_similarity_ivf_topk, dd.SQL_COSINE_TOPK),
+    driver(dd.q_similarity_neardup_lsh, dd._sql_neardup_lsh()),
+    driver(table.q_events_rollup, table.SQL_EVENTS_ROLLUP),
+    driver(table.q_events_sessionize, table.SQL_EVENTS_SESSIONIZE),
+    driver(table.q_multimodal_frame_plan, table.SQL_MULTIMODAL_FRAME_PLAN),
+    driver(table.q_multimodal_image_bytes, table.SQL_MULTIMODAL_IMAGE_BYTES),
+    driver(kg.q_kg_terms_per_doc, kg.ORACLE_KG_TERMS_PER_DOC),
+    driver(kg.q_kg_mention_pairs, kg.SQL_KG_MENTION_PAIRS, headline=True),
+    driver(kg.q_kg_interesting_pairs, kg.SQL_KG_INTERESTING_PAIRS),
+    driver(kg.q_kg_isa_closure, kg.SQL_KG_ISA_CLOSURE, headline=True),
+    driver(kg.q_kg_query_graph, kg.SQL_KG_QUERY_GRAPH, headline=True),
+    driver(kg.q_kg_predicate_rename, kg.SQL_KG_PREDICATE_RENAME),
+    driver(kg.q_kg_top_alerts, kg.SQL_KG_TOP_ALERTS),
+    driver(kg.q_kg_first_timestamp_lookup, kg.SQL_KG_FIRST_TIMESTAMP),
+    driver(kg.q_kg_realism_logsumexp, kg.SQL_KG_REALISM_LSE, headline=True),
+    driver(kg.q_kg_literature_contingency, kg.SQL_KG_LIT_CONTINGENCY),
+    driver(kg.q_kg_literature_pvalues, kg._sql_lit_pvalues()),
+    driver(kg.q_kg_autocomplete, kg.SQL_KG_AUTOCOMPLETE),
+    driver(kg.q_kg_xref_join, kg.ORACLE_KG_XREF_JOIN),
+    driver(kg.q_kg_mixed_path, kg._sql_mixed_path()),
+    driver(kg.q_kg_typed_subtree, kg.ORACLE_KG_TYPED_SUBTREE),
+    driver(kg.q_kg_pattern_triples, kg._sql_pattern_triples(), headline=True),
+    driver(table.q_join_star_topk, table.SQL_JOIN_STAR_TOPK, headline=True),
+    driver(table.q_set_ops, table.SQL_SET_OPS),
+    driver(table.q_window_first_event, table.SQL_WINDOW_FIRST, headline=True),
+    driver(table.q_year_month_map, table.SQL_YEAR_MONTH_MAP),
+    driver(text.q_stats_token_counts, text.SQL_STATS_TOKENS),
+    driver(kgm.q_eidos_context, kgm.SQL_EIDOS_CONTEXT),
+    driver(table.q_streaming_episodes, table.SQL_STREAMING_EPISODES),
+    driver(dd.q_dedup_simhash, dd._sql_simhash(16)),
+    driver(dd.q_dedup_lsh_candidates,
+           dd.SQL_DEDUP_LSH_CANDIDATES, headline=True),
+    driver(dd.q_dedup_contamination, dd.SQL_DEDUP_CONTAMINATION),
+    driver(graph.q_graph_components, graph.SQL_GRAPH_COMPONENTS),
+    driver(dd.q_ngram_jaccard, dd.SQL_NGRAM_JACCARD),
+    driver(dd.q_similarity_cosine_topk, dd.SQL_COSINE_TOPK, headline=True),
+    driver(dd.q_similarity_ann_topk, dd._sql_ann_topk()),
+    driver(text.q_text_signals, text._sql_text_signals(), headline=True),
+    driver(text.q_text_filters, text._sql_text_filters(), headline=True),
+    driver(table.q_asof_join_events, table.SQL_ASOF_JOIN_EVENTS),
+    driver(table.q_range_join_events, table.SQL_RANGE_JOIN_EVENTS),
+    driver(table.q_join_name_coalesce, table.SQL_JOIN_NAME_COALESCE),
+    extra(dd.q_dedup_exact, dd.SQL_DEDUP_EXACT),
+    extra(kg.q_kg_mention_pairs_grouped, kg.SQL_KG_MENTION_PAIRS),
+    extra(kg.q_kg_cooccur_scores, kg.SQL_KG_COOCCUR_SCORES),
+    extra(kg.q_kg_literature_candidates, kg.SQL_KG_LIT_CANDIDATES),
+    extra(kg.q_kg_coverage_metrics, kg.ORACLE_KG_COVERAGE_METRICS),
+    extra(table.q_json_extract_props, table.SQL_JSON_EXTRACT),
+    extra(dd.q_dedup_minhash_sigs, dd.SQL_DEDUP_MINHASH),
+    extra(dd.q_similarity_neardup, dd.SQL_SIM_NEARDUP),
+    extra(text.q_text_lang_id, text._sql_lang_id()),
+    extra(text.q_text_token_counts, text.SQL_TEXT_TOKEN_COUNTS),
+    extra(text.q_text_fingerprints, text.SQL_TEXT_FINGERPRINTS),
+    extra(text.q_text_quality, text._sql_text_quality()),
+    extra(sample.q_sample_split_counts, sample._sql_sample_split()),
+    extra(sample.q_sample_stratified, sample._sql_sample_stratified()),
+    extra(sample.q_sample_shards, sample._sql_sample_shards()),
+    extra(sample.q_sample_pack_offsets,
+          sample._sql_sample_pack_offsets(), headline=True),
+    extra(sample.q_sample_pack_spans, sample._sql_sample_pack_spans()),
+    extra(web.q_web_url_canonical,
+          web._sql_web_url_canonical(), headline=True),
+    extra(web.q_web_domain_mixture, web._sql_web_domain_mixture()),
+    extra(web.q_web_crawl_delta, web.SQL_WEB_CRAWL_DELTA, headline=True),
+    extra(graph.q_graph_pagerank, graph._sql_graph_pagerank()),
+    extra(web.q_web_html_extract, web._sql_web_html_extract(), headline=True),
+    extra(web.q_web_line_dedup, web._sql_web_line_dedup(), headline=True),
+    extra(text.q_text_quality_classifier,
+          text._sql_text_quality_classifier(), headline=True),
+    extra(web.q_web_link_graph, web._sql_web_link_graph(), headline=True),
+    extra(web.q_web_robots_filter, web._sql_web_robots_filter()),
+    extra(text.q_text_tfidf_topk, text._sql_text_tfidf_topk()),
+    extra(kgm.q_kg_negative_samples, kgm._sql_kg_negative_samples()),
+    extra(text.q_text_passage_dedup,
+          text._sql_text_passage_dedup(), headline=True),
+    extra(text.q_corpus_length_profile,
+          text._sql_corpus_length_profile(), headline=True),
+    extra(text.q_retrieval_bm25_topk,
+          text._sql_retrieval_bm25_topk(), headline=True),
+    extra(sample.q_sample_chunks, sample._sql_sample_chunks(), headline=True),
+    extra(sample.q_sample_temperature,
+          sample._sql_sample_temperature(), headline=True),
+    extra(graph.q_graph_triangles,
+          graph._sql_graph_triangles(), headline=True),
+    extra(text.q_corpus_cardinality, text.SQL_CORPUS_CARDINALITY),
+    extra(text.q_retrieval_rrf_fuse,
+          text._sql_retrieval_rrf_fuse(), headline=True),
+    extra(dd.q_dedup_incremental_lsh,
+          dd.SQL_DEDUP_INCREMENTAL_LSH, headline=True),
+    extra(graph.q_graph_labelprop,
+          graph._sql_graph_labelprop(), headline=True),
+    extra(graph.q_graph_kcore, graph._sql_graph_kcore(), headline=True),
+    extra(dd.q_similarity_rp_project,
+          dd._sql_similarity_rp_project(), headline=True),
+    extra(dd.q_similarity_quantized_topk,
+          dd.SQL_QUANTIZED_TOPK, headline=True),
+    extra(table.q_multimodal_audio_windows,
+          table.SQL_MULTIMODAL_AUDIO_WINDOWS, headline=True),
+    extra(kg.q_kg_triple_provenance,
+          kg._sql_triple_provenance(), headline=True),
+    extra(text.q_curate_representatives,
+          text.SQL_CURATE_REPRESENTATIVES, headline=True),
+    # not timed: its gate pins k=1 (brute-force pairs, the oracle twin); the
+    # clustered scale path is gated in tests/test_dedup_similarity.py
+    extra(dd.q_dedup_semantic, dd.SQL_DEDUP_SEMANTIC),
+    extra(sample.q_sample_dsir_topk,
+          sample._sql_sample_dsir_topk(), headline=True),
+    extra(dd.q_dedup_substring_spans,
+          dd._sql_dedup_substring_spans(), headline=True),
+    extra(sample.q_sample_ccnet_buckets,
+          sample._sql_sample_ccnet_buckets(), headline=True),
+    extra(kgm.q_kg_scd2_history, kgm._sql_kg_scd2_history(), headline=True),
+    extra(kgm.q_kg_batch_episodes,
+          kgm._sql_kg_batch_episodes(), headline=True),
+    extra(table.q_layout_zorder, table._sql_layout_zorder(), headline=True),
+    extra(graph.q_graph_walks, graph._sql_graph_walks(), headline=True),
+    extra(graph.q_graph_skipgram, graph._sql_graph_skipgram(), headline=True),
+    extra(kgm.q_kg_hierarchy_rollup,
+          kgm._sql_kg_hierarchy_rollup(), headline=True),
+    extra(web.q_web_crawl_frontier,
+          web._sql_web_crawl_frontier(), headline=True),
+    extra(kgm.q_kg_attr_asof, kgm._sql_kg_attr_asof(), headline=True),
+    extra(table.q_table_profile, table._sql_table_profile(), headline=True),
+    extra(text.q_text_c4_clean, text._sql_text_c4_clean(), headline=True),
+    extra(text.q_text_gopher_rules,
+          text._sql_text_gopher_rules(), headline=True),
+    extra(text.q_text_pii_luhn, text._sql_text_pii_luhn(), headline=True),
+    extra(table.q_events_rolling_counts,
+          table._sql_events_rolling_counts(), headline=True),
+    extra(table.q_table_histogram,
+          table._sql_table_histogram(), headline=True),
+    extra(text.q_text_collocations,
+          text._sql_text_collocations(), headline=True),
+    extra(sample.q_sample_leakage_safe,
+          sample._sql_sample_leakage_safe(), headline=True),
+    extra(text.q_text_encoding_audit,
+          text._sql_text_encoding_audit(), headline=True),
+    extra(graph.q_graph_degree_profile,
+          graph._sql_graph_degree_profile(), headline=True),
+    extra(kgm.q_kg_edge_diff, kgm._sql_kg_edge_diff(), headline=True),
+    extra(web.q_web_bloom_seen, web._sql_web_bloom_seen(), headline=True),
+    extra(web.q_web_hll_cardinality,
+          web._sql_web_hll_cardinality(), headline=True),
+    extra(web.q_web_cms_counts, web._sql_web_cms_counts(), headline=True),
+    extra(kgm.q_kg_key_skew, kgm._sql_kg_key_skew(), headline=True),
+    extra(web.q_web_kmv_overlap, web._sql_web_kmv_overlap(), headline=True),
+    extra(sample.q_sample_shard_balance,
+          sample._sql_sample_shard_balance(), headline=True),
+    extra(graph.q_graph_ppr, graph._sql_graph_ppr(), headline=True),
+    extra(table.q_agg_pricing_summary, table.SQL_AGG_PRICING, headline=True),
 )
 
 
-def q_retrieval_bm25_topk(spark, sf_dir):
-    """BM25 top-10 docs per query (retrieval.bm25_topk) over the
-    documents corpus with a fixed 4-query set — the lexical-retrieval
-    hop of RAG / attribution / decontamination pipelines. The Spark side
-    runs the two-phase (salt-bucketed) top-k; the oracle ranks globally —
-    identical output by the superset property, which is exactly the
-    claim worth gating."""
-    from outbreak_kg_spark import retrieval
+def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {q.name: q.fn for q in REGISTRY if q.driver}
 
-    q = spark.createDataFrame(
-        list(ENTRY_BM25_QUERIES), "query_id long, query_text string"
-    )
-    return retrieval.bm25_topk(_docs(spark, sf_dir), q, k=10)
 
+def all_oracle_sql() -> dict[str, str]:
+    return {q.name: q.oracle for q in REGISTRY if q.driver}
 
-def _sql_retrieval_bm25_topk(k: int = 10, k1: float = 1.2,
-                             b: float = 0.75) -> str:
-    vals = ", ".join(f"({i}, '{t}')" for i, t in ENTRY_BM25_QUERIES)
-    return f"""
-        WITH q(query_id, query_text) AS (VALUES {vals}),
-        toks AS (
-            SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                               x -> x <> '') AS t
-            FROM documents),
-        dl AS (SELECT doc_id, len(t)::DOUBLE AS dl FROM toks),
-        stats AS (SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl FROM dl),
-        qt AS (
-            SELECT query_id::BIGINT AS query_id,
-                   unnest(list_distinct(list_filter(
-                       regexp_split_to_array(lower(query_text), '\\s+'),
-                       x -> x <> ''))) AS term
-            FROM q),
-        tok AS (SELECT doc_id, unnest(t) AS term FROM toks),
-        tf AS (
-            SELECT doc_id, term, count(*)::DOUBLE AS tf
-            FROM tok WHERE term IN (SELECT term FROM qt)
-            GROUP BY 1, 2),
-        dfq AS (SELECT term, count(*)::DOUBLE AS df FROM tf GROUP BY 1),
-        scored AS (
-            SELECT qt.query_id, tf.doc_id,
-                   count(*)::INT AS n_terms_matched,
-                   round(sum(
-                       ln(1.0 + (stats.n - dfq.df + 0.5) / (dfq.df + 0.5))
-                       * tf.tf * ({k1} + 1.0)
-                       / (tf.tf + {k1} * (1.0 - {b}
-                                          + {b} * dl.dl / stats.avgdl))
-                   ), 6) AS score_r
-            FROM tf
-            JOIN qt USING (term)
-            JOIN dfq USING (term)
-            JOIN dl ON dl.doc_id = tf.doc_id, stats
-            GROUP BY 1, 2),
-        ranked AS (
-            SELECT query_id, doc_id, n_terms_matched, score_r,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY score_r DESC, doc_id ASC) AS rank
-            FROM scored)
-        SELECT query_id, doc_id, n_terms_matched, score_r, rank::INT AS rank
-        FROM ranked WHERE rank <= {k}
-    """
 
+def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {q.name: q.fn for q in REGISTRY if not q.driver}
 
-def q_sample_chunks(spark, sf_dir):
-    """Overlapping token-window chunking (sampling.chunk_tokens,
-    window=32 stride=24 so the ~50-token soup docs emit 1-3 chunks):
-    the RAG-indexing / long-doc split layout, with start/len metadata
-    derivable without materializing text."""
-    return sampling.chunk_tokens(
-        _docs(spark, sf_dir), window=32, stride=24)
 
+def extra_oracle_sql() -> dict[str, str]:
+    return {q.name: q.oracle for q in REGISTRY if not q.driver}
 
-def _sql_sample_chunks(window: int = 32, stride: int = 24) -> str:
-    return f"""
-        WITH toks AS (
-            SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                               x -> x <> '') AS t
-            FROM documents),
-        meta AS (
-            SELECT doc_id, t, len(t) AS n,
-                   CASE WHEN len(t) <= 0 THEN 0
-                        WHEN len(t) <= {window} THEN 1
-                        ELSE ceil((len(t) - {window})
-                                  / {stride}::DOUBLE)::INT + 1
-                   END AS n_chunks
-            FROM toks)
-        SELECT doc_id,
-               u.i::INT AS chunk_id,
-               (u.i * {stride})::INT AS start_pos,
-               least({window}, n - u.i * {stride})::INT AS n_tokens,
-               array_to_string(
-                   t[u.i * {stride} + 1 : u.i * {stride} + {window}],
-                   ' ') AS chunk_text
-        FROM meta, LATERAL unnest(range(0, n_chunks)) AS u(i)
-    """
 
-
-def q_sample_temperature(spark, sf_dir):
-    """Temperature-flattened language resampling
-    (sampling.temperature_resample, alpha=0.5): per-doc deterministic
-    acceptance at p_lang^(alpha-1)-proportional rates normalized so the
-    rarest language keeps everything — the multilingual-pretraining
-    mixture recipe over the documents table."""
-    out = sampling.temperature_resample(
-        _docs(spark, sf_dir), strata_col="lang", alpha=0.5, salt="temp")
-    return out.select("doc_id", "lang", "accept_rate_r")
-
-
-def _sql_sample_temperature(alpha: float = 0.5, salt: str = "temp") -> str:
-    h = sampling.sql_hash_hex("d.doc_id", salt)
-    denom = float(1 << 48)
-    return f"""
-        WITH c AS (
-            SELECT lang, count(*)::DOUBLE AS n_s FROM documents GROUP BY 1),
-        t AS (SELECT sum(n_s) AS n FROM c),
-        r0 AS (SELECT lang, pow(n_s / t.n, {alpha} - 1.0) AS w FROM c, t),
-        m AS (SELECT max(w) AS wmax FROM r0),
-        r AS (SELECT lang, w / m.wmax AS rate FROM r0, m)
-        SELECT d.doc_id, d.lang, round(r.rate, 6) AS accept_rate_r
-        FROM documents d JOIN r USING (lang)
-        WHERE ('0x' || {h})::BIGINT::DOUBLE / {denom} < r.rate
-    """
-
-
-def q_corpus_cardinality(spark, sf_dir):
-    """Exact-mode twin of textstats.cardinality_profile: distinct doc
-    texts per language (the dedup-dashboard measure). The HLL sketch
-    path shares this schema and is evidence-gated in pytest (4-sigma
-    exact-vs-sketch bound) — register layouts are engine-specific, so
-    the sketch itself cannot value-hash against DuckDB by design."""
-    return textstats.cardinality_profile(
-        _docs(spark, sf_dir), "text", by=("lang",), exact=True)
-
-
-SQL_CORPUS_CARDINALITY = """
-    SELECT lang, count(DISTINCT text)::BIGINT AS n_distinct
-    FROM documents GROUP BY lang
-"""
-
-
-def q_graph_triangles(spark, sf_dir):
-    """Per-node triangle counts + local clustering coefficient
-    (graphrank.triangle_counts, compact-forward oriented) over a
-    deterministic 3-family modular link graph on the documents table —
-    community density for link-ring / template-farm detection."""
-    from .graphrank import triangle_counts
-
-    d = _docs(spark, sf_dir, spread=False)
-    fams = [(7, 3), (13, 5), (3, 11)]
-    edges = None
-    for a, c in fams:
-        e = d.select(
-            (F.col("doc_id") % 101).alias("src"),
-            ((F.col("doc_id") * a + c) % 101).alias("dst"),
-        )
-        edges = e if edges is None else edges.unionAll(e)
-    return triangle_counts(edges)
-
-
-def _sql_graph_triangles() -> str:
-    return """
-        WITH raw AS (
-            SELECT doc_id % 101 AS src, (doc_id*7+3) % 101 AS dst
-            FROM documents
-            UNION ALL
-            SELECT doc_id % 101, (doc_id*13+5) % 101 FROM documents
-            UNION ALL
-            SELECT doc_id % 101, (doc_id*3+11) % 101 FROM documents),
-        und AS (
-            SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-            FROM raw WHERE src <> dst),
-        deg AS (
-            SELECT node, count(*) AS degree FROM (
-                SELECT u AS node FROM und
-                UNION ALL SELECT v FROM und) GROUP BY 1),
-        ed AS (
-            SELECT und.u, und.v, du.degree AS du, dv.degree AS dv
-            FROM und
-            JOIN deg du ON du.node = und.u
-            JOIN deg dv ON dv.node = und.v),
-        oriented AS (
-            SELECT CASE WHEN (du, u) < (dv, v) THEN u ELSE v END AS s,
-                   CASE WHEN (du, u) < (dv, v) THEN v ELSE u END AS t
-            FROM ed),
-        wedges AS (
-            SELECT e1.s AS x, e1.t AS y, e2.t AS z
-            FROM oriented e1
-            JOIN oriented e2 ON e1.s = e2.s AND e1.t < e2.t),
-        tri AS (SELECT x, y, z FROM wedges JOIN und ON y = u AND z = v),
-        pn AS (
-            SELECT node, count(*) AS triangles FROM (
-                SELECT x AS node FROM tri
-                UNION ALL SELECT y FROM tri
-                UNION ALL SELECT z FROM tri) GROUP BY 1)
-        SELECT deg.node,
-               deg.degree::INT AS degree,
-               coalesce(pn.triangles, 0)::INT AS triangles,
-               round(CASE WHEN deg.degree >= 2
-                          THEN 2.0 * coalesce(pn.triangles, 0)
-                               / (deg.degree * (deg.degree - 1.0))
-                          ELSE 0.0 END, 6) AS clustering_r
-        FROM deg LEFT JOIN pn USING (node)
-    """
-
-
-def q_retrieval_rrf_fuse(spark, sf_dir):
-    """Hybrid retrieval via reciprocal-rank fusion (retrieval.rrf_fuse):
-    the BM25 lexical top-10 fused with the embedding cosine top-10 over
-    the SAME id space (vec_id == doc_id on the synthetic tables), query
-    vectors = embeddings of ids 1-4 matching the fixed BM25 query ids.
-    Rank-only combination — the two systems' raw scores are never
-    compared, which is what makes the fusion exactly replayable."""
-    from outbreak_kg_spark import retrieval
-
-    bm = q_retrieval_bm25_topk(spark, sf_dir).select(
-        "query_id", "doc_id", "rank")
-    emb = _tbl(spark, sf_dir, "embeddings", spread=True)
-    qv = emb.filter(F.col("vec_id").isin([1, 2, 3, 4])).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    cos = similarity.cosine_topk(emb, qv, k=10).select(
-        "query_id", F.col("neighbor_id").alias("doc_id"), "rank")
-    return retrieval.rrf_fuse(bm, cos, k=10)
-
-
-def _sql_retrieval_rrf_fuse(k: int = 10, c: int = 60) -> str:
-    return f"""
-        WITH bm AS ({_sql_retrieval_bm25_topk()}),
-        e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        qe AS (SELECT vec_id AS query_id, v AS qv FROM e
-               WHERE vec_id IN (1, 2, 3, 4)),
-        cs AS (
-            SELECT qe.query_id, e.vec_id AS doc_id,
-                   list_dot_product(e.v, qe.qv)
-                   / (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(qe.qv, qe.qv))) AS cosine
-            FROM e CROSS JOIN qe),
-        cr AS (
-            SELECT query_id, doc_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, doc_id ASC)
-                     AS rank
-            FROM cs),
-        u AS (
-            SELECT query_id, doc_id, rank FROM bm
-            UNION ALL
-            SELECT query_id, doc_id, rank FROM cr WHERE rank <= {k}),
-        sc AS (
-            SELECT query_id, doc_id, count(*)::INT AS n_systems,
-                   round(sum(1.0 / ({c}.0 + rank)), 9) AS rrf_r
-            FROM u GROUP BY 1, 2),
-        r AS (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY rrf_r DESC, doc_id ASC)
-                        AS rank
-            FROM sc)
-        SELECT query_id, doc_id, n_systems, rrf_r, rank::INT AS rank
-        FROM r WHERE rank <= {k}
-    """
-
-
-def q_dedup_incremental_lsh(spark, sf_dir):
-    """Incremental near-dup candidates (dedup.incremental_lsh_candidates):
-    docs < 120 are the at-rest corpus (its bucket index computed once,
-    standing in for the stored table), docs 120-239 the crawl increment.
-    Candidates come out tagged new_new / new_old; only the increment is
-    ever shingled or hashed. Oracle replays both banding passes and the
-    tagged joins on the band value lists."""
-    d = _docs(spark, sf_dir)
-    old = d.filter(F.col("doc_id") < 120)
-    new = d.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 240))
-    existing = dedup.lsh_band_buckets(
-        dedup.minhash_sig_array(old, num_hashes=8, shingle_n=2), bands=8)
-    cand, _updated = dedup.incremental_lsh_candidates(
-        existing, new, shingle_n=2, num_hashes=8, bands=8)
-    return cand
-
-
-SQL_DEDUP_INCREMENTAL_LSH = """
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-        FROM documents
-        WHERE doc_id < 240),
-    sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] AS shingle
-        FROM toks, unnest(range(1, len(t))) u(i)),
-    hv AS (
-        SELECT doc_id, i AS hash_idx,
-               ('0x' || substr(md5(i || ':' || shingle), 1, 12))::BIGINT AS v
-        FROM sh, unnest(range(0, 8)) h(i)),
-    sig AS (SELECT doc_id, hash_idx, min(v) AS minhash FROM hv GROUP BY 1, 2),
-    bands AS (
-        SELECT doc_id, hash_idx % 8 AS band,
-               string_agg(minhash, ',' ORDER BY hash_idx) AS key
-        FROM sig GROUP BY 1, 2),
-    oldb AS (SELECT * FROM bands WHERE doc_id < 120),
-    newb AS (SELECT * FROM bands WHERE doc_id >= 120)
-    SELECT DISTINCT x.doc_id AS a, y.doc_id AS b, 'new_new' AS origin
-    FROM newb x JOIN newb y USING (band, key)
-    WHERE x.doc_id < y.doc_id
-    UNION
-    SELECT DISTINCT n.doc_id AS a, o.doc_id AS b, 'new_old' AS origin
-    FROM newb n JOIN oldb o USING (band, key)
-"""
-
-
-def q_graph_pagerank(spark, sf_dir):
-    """Fixed-iteration damped PageRank (graphrank.pagerank) over a
-    deterministic link graph derived from the documents table, with
-    dangling nodes present by construction (src residues divisible by 10
-    are excluded, so those nodes appear only as link targets). The webtext
-    use is crawl prioritization: rank domains by the link graph so the
-    recrawl budget (crawl.crawl_delta) lands where it matters."""
-    from .graphrank import pagerank
-
-    d = _docs(spark, sf_dir)
-    edges = d.select(
-        (F.col("doc_id") % 101).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 101).alias("dst"),
-    ).filter(F.col("src") % 10 != 0)
-    out = pagerank(edges, iterations=10)
-    return out.select("node", F.round("rank", 8).alias("rank_r"))
-
-
-def _sql_graph_pagerank(iterations: int = 10,
-                        damping: float = 0.85) -> str:
-    """The identical recurrence unrolled as chained CTEs (DuckDB's
-    recursive term may reference the working table only once, but each
-    iteration needs it twice: contribution join + dangling mass)."""
-    its = []
-    for k in range(1, iterations + 1):
-        # MATERIALIZED is load-bearing: each iteration references its
-        # predecessor twice (contribution join + dangling mass), and
-        # DuckDB's default CTE inlining then copies the whole chain per
-        # reference — 2^iterations plans (measured: 10 iters ~700 s,
-        # 7 iters 11 s). Materialization makes it linear (10 iters <1 s).
-        its.append(f"""
-        it{k} AS MATERIALIZED (
-          SELECT n.node,
-                 (1-{damping})/c.n + {damping}*(
-                     coalesce(ct.contrib, 0) + dm.mass/c.n) AS r
-          FROM nodes n
-          CROSS JOIN cnt c
-          CROSS JOIN (SELECT coalesce(sum(p.r), 0) AS mass FROM it{k-1} p
-                      WHERE p.node NOT IN (SELECT src FROM outdeg)) dm
-          LEFT JOIN (SELECT e.dst AS node, sum(p.r/od.deg) AS contrib
-                     FROM it{k-1} p JOIN edges e ON p.node = e.src
-                     JOIN outdeg od ON od.src = p.node
-                     GROUP BY e.dst) ct USING (node)
-        )""")
-    return f"""
-    WITH edges AS (
-        SELECT DISTINCT doc_id % 101 AS src, (doc_id*7 + 3) % 101 AS dst
-        FROM documents WHERE (doc_id % 101) % 10 <> 0
-    ),
-    nodes AS (SELECT DISTINCT node FROM
-              (SELECT src AS node FROM edges UNION SELECT dst FROM edges)),
-    outdeg AS (SELECT src, count(*)::DOUBLE AS deg FROM edges GROUP BY src),
-    cnt AS (SELECT count(*)::DOUBLE AS n FROM nodes),
-    it0 AS (SELECT node, 1.0/(SELECT n FROM cnt) AS r FROM nodes),
-    {",".join(its)}
-    SELECT node, round(r, 8) AS rank_r FROM it{iterations}
-    """
-
-
-def q_dedup_minhash_sigs(spark, sf_dir):
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 40)
-    return dedup.minhash_signatures(d, num_hashes=8).select(
-        "doc_id", "hash_idx", "minhash"
-    )
-
-
-SQL_DEDUP_MINHASH = """
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-        FROM documents
-        WHERE doc_id < 40),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM toks, unnest(range(1, len(t) - 1)) u(i)),
-    hv AS (
-        SELECT doc_id, i AS hash_idx,
-               ('0x' || substr(md5(i || ':' || shingle), 1, 12))::BIGINT AS v
-        FROM sh, unnest(range(0, 8)) h(i))
-    SELECT doc_id, hash_idx, min(v) AS minhash
-    FROM hv GROUP BY 1, 2
-"""
-
-
-def q_dedup_simhash(spark, sf_dir):
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 40)
-    return dedup.simhash(d, bits=16).select("doc_id", "simhash")
-
-
-def _sql_simhash(bits: int = 16) -> str:
-    bit_sums = ", ".join(
-        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
-        for b in range(bits)
-    )
-    fp = " + ".join(
-        f"(CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(bits)
-    )
-    return f"""
-        WITH t AS (
-            SELECT DISTINCT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-            FROM documents WHERE doc_id < 40),
-        h AS (SELECT doc_id,
-                     ('0x' || substr(md5(tok), 1, 12))::BIGINT AS h
-              FROM t WHERE tok <> ''),
-        s AS (SELECT doc_id, {bit_sums} FROM h GROUP BY doc_id)
-        SELECT doc_id, ({fp})::BIGINT AS simhash FROM s
-    """
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    # bigram shingles: the word-soup corpus has trigram overlap ~0 between
-    # distinct docs, which would make this check vacuously empty
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 40)
-    return (
-        dedup.jaccard_pairs(d, shingle_n=2)
-        .filter(F.col("jaccard") > 0.05)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard_r"))
-    )
-
-
-SQL_NGRAM_JACCARD = """
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-        FROM documents
-        WHERE doc_id < 40),
-    sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] AS shingle
-        FROM toks, unnest(range(1, len(t))) u(i)),
-    sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    inter AS (
-        SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS ni
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
-    SELECT i.a, i.b,
-           round(ni / (sa.n + sb.n - ni)::DOUBLE, 6) AS jaccard_r
-    FROM inter i JOIN sz sa ON i.a = sa.doc_id JOIN sz sb ON i.b = sb.doc_id
-    WHERE ni / (sa.n + sb.n - ni)::DOUBLE > 0.05
-"""
-
-
-def q_dedup_lsh_candidates(spark, sf_dir):
-    """LSH candidate generation: docs sharing any full minhash band.
-    Spark buckets by md5 of the band's (hash_idx, minhash) list; the oracle
-    joins directly on the band's value list — equal relations because bucket
-    equality <=> identical band lists (md5 collisions aside)."""
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 60)
-    siga = dedup.minhash_sig_array(d, num_hashes=8, shingle_n=2)
-    return dedup.lsh_candidate_pairs_narrow(siga, bands=8)
-
-
-SQL_DEDUP_LSH_CANDIDATES = """
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-        FROM documents
-        WHERE doc_id < 60),
-    sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] AS shingle
-        FROM toks, unnest(range(1, len(t))) u(i)),
-    hv AS (
-        SELECT doc_id, i AS hash_idx,
-               ('0x' || substr(md5(i || ':' || shingle), 1, 12))::BIGINT AS v
-        FROM sh, unnest(range(0, 8)) h(i)),
-    sig AS (SELECT doc_id, hash_idx, min(v) AS minhash FROM hv GROUP BY 1, 2),
-    bands AS (
-        SELECT doc_id, hash_idx % 8 AS band,
-               string_agg(minhash, ',' ORDER BY hash_idx) AS key
-        FROM sig GROUP BY 1, 2)
-    SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-    FROM bands x JOIN bands y USING (band, key)
-    WHERE x.doc_id < y.doc_id
-"""
-
-
-def q_graph_components(spark, sf_dir):
-    """Connected components (iterative hash-min self-join) over a derived
-    chain graph; oracle = reachability via recursive CTE + min-id."""
-    from .closure import connected_components
-
-    d = _docs(spark, sf_dir)
-    max_id = d.agg(F.max("doc_id")).first()[0]
-    edges = d.select(
-        F.col("doc_id").alias("src"), (F.col("doc_id") + 3).alias("dst")
-    ).filter((F.col("doc_id") % 7 != 4) & (F.col("doc_id") + 3 <= max_id))
-    return connected_components(edges, "src", "dst")
-
-
-SQL_GRAPH_COMPONENTS = """
-    WITH RECURSIVE e AS (
-        SELECT doc_id AS a, doc_id + 3 AS b FROM documents
-        WHERE doc_id % 7 <> 4
-          AND doc_id + 3 <= (SELECT max(doc_id) FROM documents)),
-    sym AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
-    reach(a, b) AS (
-        SELECT a, b FROM sym
-        UNION
-        SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-    nodes AS (SELECT a AS n FROM sym UNION SELECT b FROM sym)
-    SELECT n AS node, least(n, min(r.b)) AS component
-    FROM nodes LEFT JOIN reach r ON r.a = n
-    GROUP BY n
-"""
-
-
-def q_similarity_cosine_topk(spark, sf_dir):
-    emb = _tbl(spark, sf_dir, "embeddings", spread=True)
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = similarity.cosine_topk(emb, queries, k=10)
-    return out.select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine_r"), "rank"
-    )
-
-
-SQL_COSINE_TOPK = """
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 3),
-    scored AS (
-        SELECT q.query_id, e.vec_id AS neighbor_id,
-               list_dot_product(e.v, q.qv)
-               / (sqrt(list_dot_product(e.v, e.v))
-                  * sqrt(list_dot_product(q.qv, q.qv))) AS cosine
-        FROM e CROSS JOIN q),
-    ranked AS (
-        SELECT query_id, neighbor_id, cosine,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        FROM scored)
-    SELECT query_id, neighbor_id, round(cosine, 6) AS cosine_r, rank::INT AS rank
-    FROM ranked WHERE rank <= 10
-"""
-
-
-def q_similarity_neardup(spark, sf_dir):
-    """Brute-force cosine near-dup pairs (threshold tuned to the synthetic
-    embedding distribution; the LSH-bucketed variant is ann_topk below)."""
-    emb = _tbl(spark, sf_dir, "embeddings", spread=True).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    from .similarity import _dot, _norm
-
-    a = emb.select(F.col("vec_id").alias("a"), F.col("v").alias("va"))
-    b = emb.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a") < F.col("b"))
-        .select(
-            "a", "b",
-            (_dot(F.col("va"), F.col("vb"))
-             / (_norm(F.col("va")) * _norm(F.col("vb")))).alias("c"),
-        )
-        .filter(F.col("c") >= 0.35)
-        .select("a", "b", F.round("c", 6).alias("cosine_r"))
-    )
-
-
-SQL_SIM_NEARDUP = """
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-    SELECT a.vec_id AS a, b.vec_id AS b,
-           round(list_dot_product(a.v, b.v)
-                 / (sqrt(list_dot_product(a.v, a.v))
-                    * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine_r
-    FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE list_dot_product(a.v, b.v)
-          / (sqrt(list_dot_product(a.v, a.v))
-             * sqrt(list_dot_product(b.v, b.v))) >= 0.35
-"""
-
-
-def q_similarity_ann_topk(spark, sf_dir):
-    """LSH-bucketed ANN, fully oracle-gated: the hyperplanes are
-    deterministic md5-derived constants computed once in Python and inlined
-    as literals on BOTH sides, so DuckDB reproduces the exact buckets and
-    the per-bucket cosine ranking (round-1 item 8: was no_oracle)."""
-    emb = _tbl(spark, sf_dir, "embeddings", spread=True)
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = similarity.ann_topk(emb, queries, dim=64, k=5, n_planes=4)
-    return out.select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine_r"), "rank"
-    )
-
-
-def _sql_ann_topk(dim: int = 64, k: int = 5, n_planes: int = 4,
-                  seed: int = 42) -> str:
-    """DuckDB twin of similarity.ann_topk: identical inlined hyperplane
-    literals -> identical sign-pattern buckets -> identical candidates."""
-    planes = similarity._hyperplanes(dim, n_planes, seed)
-    plane_rows = ", ".join(
-        f"({p}, [{', '.join(repr(x) for x in planes[p])}]::DOUBLE[])"
-        for p in range(n_planes)
-    )
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    planes(p, w) AS (VALUES {plane_rows}),
-    bucketed AS (
-        SELECT vec_id, v,
-               sum(CASE WHEN list_dot_product(v, w) >= 0
-                        THEN (1 << p) ELSE 0 END)::INT AS bucket
-        FROM e CROSS JOIN planes GROUP BY vec_id, v),
-    q AS (SELECT vec_id AS query_id, v AS qv, bucket
-          FROM bucketed WHERE vec_id < 3),
-    scored AS (
-        SELECT q.query_id, b.vec_id AS neighbor_id,
-               list_dot_product(b.v, q.qv)
-               / (sqrt(list_dot_product(b.v, b.v))
-                  * sqrt(list_dot_product(q.qv, q.qv))) AS cosine
-        FROM bucketed b JOIN q USING (bucket)),
-    ranked AS (
-        SELECT query_id, neighbor_id, cosine,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        FROM scored)
-    SELECT query_id, neighbor_id, round(cosine, 6) AS cosine_r, rank::INT AS rank
-    FROM ranked WHERE rank <= {k}
-"""
-
-
-def q_text_lang_id(spark, sf_dir):
-    return textstats.lang_id(_docs(spark, sf_dir)).select(
-        "doc_id", "lang_pred", "lang_votes"
-    )
-
-
-def _sql_lang_id() -> str:
-    vals = ", ".join(
-        f"('{t}', '{lang}')"
-        for lang, toks in sorted(textstats.LANG_STOPWORDS.items())
-        for t in toks
-    )
-    return f"""
-        WITH toks AS (
-            SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-            FROM documents),
-        votes AS (
-            SELECT doc_id, g.lang_cand, count(*) AS votes
-            FROM toks JOIN (VALUES {vals}) g(tok, lang_cand) USING (tok)
-            GROUP BY 1, 2),
-        best AS (
-            SELECT doc_id, lang_cand, votes,
-                   row_number() OVER (PARTITION BY doc_id
-                                      ORDER BY votes DESC, lang_cand ASC) AS rn
-            FROM votes)
-        SELECT d.doc_id,
-               coalesce(b.lang_cand, 'und') AS lang_pred,
-               coalesce(b.votes, 0) AS lang_votes
-        FROM documents d LEFT JOIN (SELECT * FROM best WHERE rn = 1) b
-          ON d.doc_id = b.doc_id
-    """
-
-
-def q_text_token_counts(spark, sf_dir):
-    return textstats.token_counts(_docs(spark, sf_dir)).select(
-        "doc_id", "ws_tokens", "bpe_tokens"
-    )
-
-
-SQL_TEXT_TOKEN_COUNTS = f"""
-    SELECT doc_id,
-           len(list_filter(string_split(text, ' '), x -> x <> ''))::INT
-             AS ws_tokens,
-           len(regexp_extract_all(text, '{textstats.BPE_ISH_PATTERN}'))::INT
-             AS bpe_tokens
-    FROM documents
-"""
-
-
-def q_text_fingerprints(spark, sf_dir):
-    return textstats.fingerprints(_docs(spark, sf_dir)).select(
-        "doc_id", "fingerprint", "fingerprint60"
-    )
-
-
-SQL_TEXT_FINGERPRINTS = """
-    SELECT doc_id,
-           md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fingerprint,
-           ('0x' || substr(
-               md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')),
-               1, 15))::BIGINT AS fingerprint60
-    FROM documents
-"""
-
-
-def q_text_quality(spark, sf_dir):
-    out = textstats.quality_scores(_docs(spark, sf_dir))
-    return out.select(
-        "doc_id", "n_chars", "n_tokens",
-        F.round("punct_ratio", 6).alias("punct_ratio_r"),
-        F.round("stopword_ratio", 6).alias("stopword_ratio_r"),
-        F.round("mean_word_len", 6).alias("mean_word_len_r"),
-        "quality_score",
-    )
-
-
-def _sql_text_quality() -> str:
-    sw = ", ".join(f"'{s}'" for s in textstats.LANG_STOPWORDS["en"])
-    return f"""
-        WITH base AS (
-            SELECT doc_id,
-                   length(text) AS n_chars,
-                   list_filter(string_split(lower(text), ' '), x -> x <> '')
-                     AS toks,
-                   length(text)
-                     - length(regexp_replace(text,
-                         '[^\\p{{L}}\\p{{N}}_\\s]', '', 'g'))
-                     AS n_punct,
-                   length(regexp_replace(text,
-                         '[^\\p{{L}}\\p{{N}}_]', '', 'g'))
-                     AS word_chars
-            FROM documents),
-        feat AS (
-            SELECT doc_id,
-                   n_chars::INT AS n_chars,
-                   len(toks)::INT AS n_tokens,
-                   n_punct / greatest(n_chars, 1)::DOUBLE AS punct_ratio,
-                   len(list_filter(toks, x -> list_contains([{sw}], x)))
-                     / greatest(len(toks), 1)::DOUBLE AS stopword_ratio,
-                   word_chars / greatest(len(toks), 1)::DOUBLE
-                     AS mean_word_len
-            FROM base)
-        SELECT doc_id, n_chars, n_tokens,
-               round(punct_ratio, 6) AS punct_ratio_r,
-               round(stopword_ratio, 6) AS stopword_ratio_r,
-               round(mean_word_len, 6) AS mean_word_len_r,
-               round((CASE WHEN n_tokens BETWEEN 10 AND 100000
-                           THEN 0.4::DOUBLE ELSE 0.0::DOUBLE END)
-                     + (CASE WHEN punct_ratio <= 0.2
-                             THEN 0.3::DOUBLE ELSE 0.0::DOUBLE END)
-                     + (CASE WHEN mean_word_len BETWEEN 3.0 AND 12.0
-                             THEN 0.3::DOUBLE ELSE 0.0::DOUBLE END),
-                     2)::DOUBLE AS quality_score
-        FROM feat
-    """
-
-
-def q_text_signals(spark, sf_dir):
-    """One-pass per-doc text signals (textstats.signals): language ID,
-    token counts, fingerprints, quality features — a single projection
-    over a single scan (zero shuffle, zero Python). Consolidates the
-    former text_lang_id / text_token_counts / text_fingerprints /
-    text_quality driver gates: every column of each is still computed and
-    value-hashed here, from the same operator code paths."""
-    out = textstats.signals(_docs(spark, sf_dir))
-    return out.select(
-        "doc_id", "lang_pred", "lang_votes", "ws_tokens", "bpe_tokens",
-        "fingerprint", "fingerprint60", "n_chars", "n_tokens",
-        F.round("punct_ratio", 6).alias("punct_ratio_r"),
-        F.round("stopword_ratio", 6).alias("stopword_ratio_r"),
-        F.round("mean_word_len", 6).alias("mean_word_len_r"),
-        "quality_score",
-    )
-
-
-def _sql_text_signals() -> str:
-    return f"""
-        WITH lid AS ({_sql_lang_id()}),
-        tc AS ({SQL_TEXT_TOKEN_COUNTS}),
-        fp AS ({SQL_TEXT_FINGERPRINTS}),
-        q AS ({_sql_text_quality()})
-        SELECT lid.doc_id, lang_pred, lang_votes, ws_tokens, bpe_tokens,
-               fingerprint, fingerprint60, n_chars, n_tokens,
-               punct_ratio_r, stopword_ratio_r, mean_word_len_r,
-               quality_score
-        FROM lid
-        JOIN tc USING (doc_id)
-        JOIN fp USING (doc_id)
-        JOIN q USING (doc_id)
-    """
-
-
-def q_text_filters(spark, sf_dir):
-    """Corpus-filter signals composite: Gopher-style repetition + PII
-    scrub + unigram surprisal, joined per doc. Consolidates the former
-    text_repetition / text_pii / text_surprisal driver gates — each
-    operator's full output is still computed by its own code path and
-    value-hashed. The repetition/PII legs run on the doc_id<200 slice
-    with injected lines/PII (the word-soup base has neither); surprisal
-    keeps its corpus-wide unigram distribution and is restricted to the
-    same slice by the join."""
-    rep = q_text_repetition(spark, sf_dir)
-    pii = q_text_pii(spark, sf_dir)
-    sur = q_text_surprisal(spark, sf_dir)
-    return rep.join(pii, "doc_id").join(sur, "doc_id")
-
-
-def _sql_text_filters() -> str:
-    return f"""
-        WITH r AS ({SQL_TEXT_REPETITION}),
-        p AS ({SQL_TEXT_PII}),
-        s AS ({SQL_TEXT_SURPRISAL})
-        SELECT r.doc_id, r.n_lines, r.dup_line_ratio_r,
-               r.dup_line_char_ratio_r, r.dup_token_ratio_r,
-               r.top_bigram_ratio_r,
-               p.n_email, p.n_phone, p.n_ipv4, p.redacted_text,
-               s.n_tokens, s.mean_surprisal_r, s.max_surprisal_r
-        FROM r JOIN p USING (doc_id) JOIN s USING (doc_id)
-    """
-
-
-def q_set_ops(spark, sf_dir):
-    """U1/U2/A10/J6 set-operation composite in long form: anti-join
-    (customers with no orders), semi-join (parts with a 2000+ shipment),
-    union-distinct (error∪signup users), tagged by an `op` column.
-    Consolidates the former anti_join_customers / semi_join_parts /
-    union_distinct_users gates at full row-level evidence."""
-    a = q_anti_join_customers(spark, sf_dir).select(
-        F.lit("anti").alias("op"),
-        F.col("c_custkey").alias("key"),
-        F.col("c_name").alias("name"),
-    )
-    s = q_semi_join_parts(spark, sf_dir).select(
-        F.lit("semi").alias("op"),
-        F.col("p_partkey").alias("key"),
-        F.col("p_name").alias("name"),
-    )
-    u = q_union_distinct_users(spark, sf_dir).select(
-        F.lit("union").alias("op"),
-        F.col("user_id").alias("key"),
-        F.lit(None).cast("string").alias("name"),
-    )
-    return a.unionByName(s).unionByName(u)
-
-
-SQL_SET_OPS = f"""
-    SELECT 'anti' AS op, c_custkey AS key, c_name AS name
-    FROM ({SQL_ANTI_JOIN})
-    UNION ALL
-    SELECT 'semi' AS op, p_partkey AS key, p_name AS name
-    FROM ({SQL_SEMI_JOIN})
-    UNION ALL
-    SELECT 'union' AS op, user_id AS key, NULL::VARCHAR AS name
-    FROM ({SQL_UNION_DISTINCT})
-"""
-
-
-def q_eidos_context(spark, sf_dir):
-    """S6/P12/K4 gate: an Eidos-JSON-LD-shaped nested payload is derived
-    deterministically from the documents table (two sentences per doc:
-    one with a timex carrying an interval + a geoloc, one with an
-    empty-interval timex + a second geoloc), parsed with the explicit
-    EIDOS_SCHEMA via from_json (schema projection IS the @type/@id key
-    filter), exploded by eidos.eidos_context, and aggregated by
-    eidos.geoloc_stats / eidos.timex_stats — returned long-form with a
-    `kind` tag. Gates the same explode/projection/stats machinery that
-    read_eidos_dir feeds from real *.jsonld files."""
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 300)
-    did = F.col("doc_id").cast("string")
-    payload = F.concat(
-        F.lit('{"documents":[{"sentences":['),
-        F.lit('{"timexes":[{"text":"T'), did,
-        F.lit('","intervals":[{"start":'), did,
-        F.lit(',"end":'), (F.col("doc_id") + 5).cast("string"),
-        F.lit('}]}],"geolocs":[{"text":"G'),
-        F.pmod("doc_id", F.lit(7)).cast("string"),
-        F.lit('","geoID":"geo:'),
-        F.pmod("doc_id", F.lit(7)).cast("string"),
-        F.lit('"}]},'),
-        F.lit('{"timexes":[{"text":"E","intervals":[]}],'),
-        F.lit('"geolocs":[{"text":"G'),
-        F.pmod("doc_id", F.lit(3)).cast("string"),
-        F.lit('","geoID":"geo:'),
-        F.pmod("doc_id", F.lit(3)).cast("string"),
-        F.lit('"}]}]}]}'),
-    )
-    parsed = d.select(
-        did.alias("archive_number"),
-        F.from_json(payload, eidos.EIDOS_SCHEMA).alias("j"),
-    )
-    geolocs, timexes = eidos.eidos_context(parsed)
-    g = eidos.geoloc_stats(geolocs).select(
-        F.lit("geoloc").alias("kind"), "text",
-        F.col("geoid").alias("meta"), F.col("count").alias("n"),
-    )
-    t = eidos.timex_stats(timexes).select(
-        F.lit("timex").alias("kind"), "text",
-        F.col("intervals").alias("meta"), F.col("count").alias("n"),
-    )
-    return g.unionByName(t)
-
-
-SQL_EIDOS_CONTEXT = """
-    WITH base AS (SELECT doc_id FROM documents WHERE doc_id < 300),
-    g AS (
-        SELECT 'G' || (doc_id % 7) AS text, 'geo:' || (doc_id % 7) AS meta
-        FROM base
-        UNION ALL
-        SELECT 'G' || (doc_id % 3), 'geo:' || (doc_id % 3) FROM base),
-    t AS (
-        SELECT 'T' || doc_id AS text,
-               '[(' || doc_id || ', ' || (doc_id + 5) || ')]' AS meta
-        FROM base
-        UNION ALL
-        SELECT 'E', '' FROM base)
-    SELECT 'geoloc' AS kind, text, meta, count(*) AS n FROM g GROUP BY 2, 3
-    UNION ALL
-    SELECT 'timex' AS kind, text, meta, count(*) AS n FROM t GROUP BY 2, 3
-"""
-
-
-# ---- registry ----------------------------------------------------------------
-
-# ---- temporal alignment (asof/range joins — operators the reference lacks) --
-
-def q_asof_join_events(spark, sf_dir):
-    """As-of join: each click event picks up the latest at-or-before
-    purchase of the same user (temporal.asof_join — single-shuffle
-    union+window plan, no inequality join). Right side is unique per
-    (user_id, ts) in the events table (asserted by the oracle's ASOF
-    semantics: DuckDB errors on ambiguous matches only at runtime; the
-    generator emits unique event times per user/type)."""
-    _utc(spark)
-    from .temporal import asof_join
-
-    ev = _tbl(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "event_id", "ts"
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.round("value", 6).alias("purchase_value")
-    )
-    return asof_join(
-        clicks, purchases, ["user_id"],
-        right_value_cols=["purchase_value"],
-    ).select("user_id", "event_id", "ts", "ts_asof", "purchase_value_asof")
-
-
-SQL_ASOF_JOIN_EVENTS = """
-    SELECT l.user_id, l.event_id, l.ts, r.ts AS ts_asof,
-           round(r.value, 6) AS purchase_value_asof
-    FROM (SELECT user_id, event_id, ts FROM events
-          WHERE event_type = 'click') l
-    ASOF LEFT JOIN (SELECT user_id, ts, value FROM events
-                    WHERE event_type = 'purchase') r
-      ON l.user_id = r.user_id AND r.ts <= l.ts
-"""
-
-
-def q_range_join_events(spark, sf_dir):
-    """Bounded range join: (click, error) pairs of the same user with the
-    error 0..600s after the click (temporal.range_join — bucketed
-    equi-join on (user, time-cell), no nested loop)."""
-    from .temporal import range_join
-
-    ev = _tbl(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "event_id", "ts"
-    )
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "user_id", "event_id", "ts"
-    )
-    return range_join(
-        clicks, errors, ["user_id"], delta_seconds=600.0
-    ).select(
-        "user_id",
-        F.col("l_event_id").alias("click_id"),
-        F.col("r_event_id").alias("error_id"),
-        F.round("dt_seconds", 6).alias("dt_seconds"),
-    )
-
-
-SQL_RANGE_JOIN_EVENTS = """
-    SELECT l.user_id, l.event_id AS click_id, r.event_id AS error_id,
-           round(epoch(r.ts) - epoch(l.ts), 6) AS dt_seconds
-    FROM (SELECT user_id, event_id, ts FROM events
-          WHERE event_type = 'click') l
-    JOIN (SELECT user_id, event_id, ts FROM events
-          WHERE event_type = 'error') r
-      ON l.user_id = r.user_id
-     AND epoch(r.ts) - epoch(l.ts) BETWEEN 0 AND 600
-"""
-
-
-# ---- remaining reference-parity entries (J2/J4/J8/A15/A17/K1) ----------------
-
-NATION_NAME_FIXES = [
-    # (n_nationkey, fixed display name) — J2's name-map-with-coalesce shape
-    (0, "DZ"), (3, "CA"), (8, "IN"), (14, "KE"), (23, "GB"),
-]
-
-
-def q_join_name_coalesce(spark, sf_dir):
-    """J2: broadcast name-map join + coalesce fallback (builders'
-    geonames name-fix join, kg/build.py:373-381 shape)."""
-    nation = _tbl(spark, sf_dir, "nation")
-    region = _tbl(spark, sf_dir, "region")
-    fixes = F.broadcast(
-        spark.createDataFrame(
-            NATION_NAME_FIXES, "n_nationkey int, fixed_name string"
-        )
-    )
-    return (
-        nation.join(fixes, "n_nationkey", "left")
-        .join(F.broadcast(region),
-              nation.n_regionkey == region.r_regionkey)
-        .select(
-            "n_nationkey",
-            F.coalesce("fixed_name", "n_name").alias("display_name"),
-            F.col("r_name").alias("region_name"),
-        )
-    )
-
-
-SQL_JOIN_NAME_COALESCE = f"""
-    SELECT n.n_nationkey,
-           coalesce(f.fixed_name, n.n_name) AS display_name,
-           r.r_name AS region_name
-    FROM nation n
-    LEFT JOIN (VALUES {", ".join(f"({k}, '{v}')" for k, v in NATION_NAME_FIXES)})
-         f(n_nationkey, fixed_name) ON n.n_nationkey = f.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-"""
-
-
-ENTRY_XREF = [
-    # (mesh curie, external curie) — J4's xref shape (pathogen_disease join)
-    ("MESH:D1001", "NCBITAXON:1001"),
-    ("MESH:D1002", "NCBITAXON:1002"),
-    ("MESH:D0001", "DOID:0001"),
-]
-
-
-def q_kg_xref_join(spark, sf_dir):
-    """J4: xref broadcast join over the mention vocabulary — map each
-    mentioned curie to its external id (fallback: itself), with per-curie
-    doc counts."""
-    m = entry_mentions(spark, sf_dir)
-    xref = F.broadcast(
-        spark.createDataFrame(ENTRY_XREF, "curie string, ext_curie string")
-    )
-    return (
-        m.join(xref, "curie", "left")
-        .groupBy(
-            "curie", F.coalesce("ext_curie", "curie").alias("ext_curie")
-        )
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-    )
-
-
-SQL_KG_XREF_JOIN = f"""
-    WITH m AS ({{mentions}}),
-    x(curie, ext_curie) AS (VALUES {", ".join(
-        f"('{a}', '{b}')" for a, b in ENTRY_XREF)})
-    SELECT m.curie, coalesce(x.ext_curie, m.curie) AS ext_curie,
-           count(DISTINCT m.doc_id) AS n_docs
-    FROM m LEFT JOIN x ON m.curie = x.curie
-    GROUP BY 1, 2
-"""
-
-
-ENTRY_PHENO = [
-    # has_phenotype edges for the J8 mixed-predicate path
-    ("MESH:D0001", "MESH:D3001"),
-    ("MESH:D0002", "MESH:D3002"),
-    ("MESH:D3001", "MESH:D3000"),
-]
-
-
-def q_kg_mixed_path(spark, sf_dir):
-    """J8: `[:has_phenotype|isa*0..]` mixed-predicate closure
-    (pipeline.symptom_closure) over the entry isa edges plus embedded
-    has_phenotype edges."""
-    from .pipeline import symptom_closure
-
-    edges = spark.createDataFrame(
-        [(s, "isa", o) for s, o in ENTRY_ISA]
-        + [(s, "has_phenotype", o) for s, o in ENTRY_PHENO],
-        "subj string, pred string, obj string",
-    )
-    return symptom_closure(edges).select(
-        F.col("node").alias("node"),
-        F.col("ancestor").alias("ancestor"),
-        F.col("depth").cast("int").alias("depth"),
-    )
-
-
-def _sql_mixed_path() -> str:
-    edges = ", ".join(
-        f"('{s}', '{o}')" for s, o in list(ENTRY_ISA) + ENTRY_PHENO
-    )
-    return f"""
-        WITH RECURSIVE e(subj, obj) AS (VALUES {edges}),
-        c AS (
-            SELECT subj AS node, obj AS ancestor, 1 AS depth FROM e
-            UNION
-            SELECT c.node, e.obj, c.depth + 1
-            FROM c JOIN e ON c.ancestor = e.subj
-        ),
-        n(v) AS (SELECT DISTINCT v FROM
-                 (SELECT subj AS v FROM e UNION ALL SELECT obj AS v FROM e))
-        SELECT node, ancestor, min(depth)::INT AS depth FROM c GROUP BY 1, 2
-        UNION ALL
-        SELECT v, v, 0 FROM n
-    """
-
-
-def q_kg_coverage_metrics(spark, sf_dir):
-    """A15: per-candidate overlap coverage metrics — how many distinct
-    node types (and 'relevant' types) the query-term overlap spans
-    (kg/client.py:143-151 semantics, the ordering keys of
-    find_literature)."""
-    m = entry_mentions(spark, sf_dir)
-    cand = (
-        m.filter(F.col("curie").isin(LIT_QUERY_TERMS))
-        .groupBy("doc_id")
-        .agg(F.count_distinct("curie").alias("n_overlap"))
-        .filter(F.col("n_overlap") >= 2)
-        .select("doc_id")
-    )
-    overlap = m.join(cand, "doc_id", "left_semi").filter(
-        F.col("curie").isin(LIT_QUERY_TERMS)
-    )
-    return overlap.groupBy(F.col("doc_id").alias("pmid")).agg(
-        F.count_distinct("node_type").alias("overlap_coverage"),
-        F.count_distinct(
-            F.when(
-                F.col("node_type").isin("geoloc", "disease", "pathogen"),
-                F.col("node_type"),
-            )
-        ).alias("overlap_coverage_relevant"),
-    )
-
-
-SQL_KG_COVERAGE_METRICS = f"""
-    WITH m AS ({{mentions}}),
-    cand AS (
-        SELECT doc_id FROM m
-        WHERE curie IN ('{LIT_QUERY_TERMS[0]}', '{LIT_QUERY_TERMS[1]}',
-                        '{LIT_QUERY_TERMS[2]}')
-        GROUP BY doc_id HAVING count(DISTINCT curie) >= 2
-    )
-    SELECT m.doc_id AS pmid,
-           count(DISTINCT m.node_type) AS overlap_coverage,
-           count(DISTINCT CASE WHEN m.node_type IN
-                 ('geoloc', 'disease', 'pathogen') THEN m.node_type END)
-               AS overlap_coverage_relevant
-    FROM m JOIN cand USING (doc_id)
-    WHERE m.curie IN ('{LIT_QUERY_TERMS[0]}', '{LIT_QUERY_TERMS[1]}',
-                      '{LIT_QUERY_TERMS[2]}')
-    GROUP BY 1
-"""
-
-
-def q_kg_typed_subtree(spark, sf_dir):
-    """A17: typed vocabulary subtree — every descendant of MESH:D1000
-    (the pathogen root) with its gazetteer name/type, via the REAL
-    transitive-closure operator (builders.build_vocab_hierarchy shape,
-    kg/build.py:215-230)."""
-    edges = spark.createDataFrame(ENTRY_ISA, "subj string, obj string")
-    cl = transitive_closure(edges, "subj", "obj", include_self=False)
-    gaz = spark.createDataFrame(
-        [(c, t, ty) for c, t, ty in ENTRY_GAZ],
-        "curie string, name string, node_type string",
-    )
-    return (
-        cl.filter(F.col("ancestor") == "MESH:D1000")
-        .select(F.col("node").alias("curie"), F.col("depth").cast("int").alias("depth"))
-        .join(F.broadcast(gaz), "curie")
-        .select("curie", "name", "node_type", "depth")
-    )
-
-
-SQL_KG_TYPED_SUBTREE = f"""
-    WITH RECURSIVE e(subj, obj) AS (VALUES {{isa_edges}}),
-    c AS (
-        SELECT subj AS node, obj AS ancestor, 1 AS depth FROM e
-        UNION
-        SELECT c.node, e.obj, c.depth + 1 FROM c JOIN e ON c.ancestor = e.subj
-    ),
-    g(curie, name, node_type) AS (VALUES {{gaz}})
-    SELECT c.node AS curie, g.name, g.node_type, min(c.depth)::INT AS depth
-    FROM c JOIN g ON c.node = g.curie
-    WHERE c.ancestor = 'MESH:D1000'
-    GROUP BY 1, 2, 3
-"""
-
-
-def q_kg_tsv_node_rows(spark, sf_dir):
-    """K1: the sorted TSV node sink as a relation — one tab-joined line
-    per distinct node in the reference's neo4j-import column order, with
-    rank encoding the total sort order (the driver's compare sorts rows,
-    so the rank column is what makes the ORDER itself checkable)."""
-    m = entry_mentions(spark, sf_dir)
-    nodes = m.select(
-        "curie", "name", F.concat(F.col("node_type"), F.lit(";entity")).alias("labels")
-    ).dropDuplicates(["curie"])
-    line = F.concat_ws("\t", "curie", "name", "labels")
-    w = Window.orderBy("curie")
-    return nodes.select(
-        F.row_number().over(w).alias("rank"), line.alias("line")
-    )
-
-
-SQL_KG_TSV_NODE_ROWS = f"""
-    WITH m AS ({{mentions}}),
-    n AS (SELECT DISTINCT curie, name, node_type || ';entity' AS labels FROM m)
-    SELECT row_number() OVER (ORDER BY curie) AS rank,
-           curie || chr(9) || name || chr(9) || labels AS line
-    FROM n
-"""
-
-
-def q_events_rollup(spark, sf_dir):
-    """Hypertable-style tumbling-window rollup: per (user, 1h bucket)
-    count/sum — the batch analog of the streaming windowed agg
-    (streaming.windowed_event_counts). Map-side partial agg absorbs hot
-    users; the bucket key is derivable from the sort order so at rest this
-    rolls up partition-locally on a time-partitioned table."""
-    _utc(spark)
-    ev = _tbl(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            "user_id",
-            F.window("ts", "1 hour").start.alias("bucket"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-    )
-
-
-SQL_EVENTS_ROLLUP = """
-    SELECT user_id, time_bucket(INTERVAL 1 HOUR, ts) AS bucket,
-           count(*) AS n_events, round(sum(value), 6) AS sum_value
-    FROM events GROUP BY 1, 2
-"""
-
-
-def q_events_sessionize(spark, sf_dir):
-    """Batch sessionization: a session breaks after a >30min gap per user
-    (lag + running sum of break flags — the scalable one-shuffle
-    formulation; streaming's applyInPandasWithState twin is
-    streaming.sessionize_episodes). Output: one row per session with its
-    bounds and size."""
-    _utc(spark)
-    ev = _tbl(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.select(
-        "user_id", "ts", "event_id",
-        (
-            F.col("ts").cast("timestamp").cast("double")
-            - F.lag(F.col("ts").cast("timestamp").cast("double"), 1, None).over(w)
-            > 1800.0
-        ).cast("int").alias("_brk"),
-    ).withColumn(
-        "session_id",
-        F.sum(F.coalesce("_brk", F.lit(0))).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    return flagged.groupBy("user_id", "session_id").agg(
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-SQL_EVENTS_SESSIONIZE = """
-    WITH flagged AS (
-        SELECT user_id, ts, event_id,
-               CASE WHEN epoch(ts) - epoch(lag(ts) OVER
-                    (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-                    THEN 1 ELSE 0 END AS brk
-        FROM events
-    ), s AS (
-        SELECT user_id, ts,
-               (sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS UNBOUNDED PRECEDING))::BIGINT AS session_id
-        FROM flagged
-    )
-    SELECT user_id, session_id, min(ts) AS session_start,
-           max(ts) AS session_end, count(*) AS n_events
-    FROM s GROUP BY 1, 2
-"""
-
-
-def q_streaming_episodes(spark, sf_dir):
-    """Driver gate for the custom stateful streaming operator
-    (streaming.entity_episodes, applyInPandasWithState): batch-replay the
-    events table through a REAL Structured Streaming run and return the
-    episodes that closed.
-
-    Determinism by construction: the source is written as ONE parquet
-    file, so the single data micro-batch runs at watermark 0 (no
-    late-row drops can depend on batch boundaries), and the trailing
-    no-data micro-batch fires every event-time timeout at the final
-    watermark max(ts) - 1h — the emitted set is exactly the gap-merged
-    runs with end + gap < that watermark, which the DuckDB oracle
-    computes with window SQL. Timestamps are second-truncated before
-    streaming so the operator's millisecond state arithmetic is exact in
-    the oracle's epoch-seconds arithmetic."""
-    import atexit
-    import hashlib
-    import shutil
-    import tempfile
-
-    from .streaming import entity_episodes
-
-    _utc(spark)
-    # deterministic per-(input, process) scratch dir, cleared up front:
-    # repeated runs in one process reuse (not accumulate) the space, a
-    # stale checkpoint can never be resumed against the fresh source (an
-    # availableNow restart over an old checkpoint would emit nothing and
-    # silently fail the gate), and the pid keeps a concurrent process from
-    # rmtree-ing this one's live checkpoint/sink
-    import os
-
-    tmp = (f"{tempfile.gettempdir()}/kg_episodes_"
-           f"{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}_{os.getpid()}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    # the returned DataFrame lazily reads {tmp}/out, so the dir must
-    # outlive this call — but not the process: without this, every new
-    # process leaked one scratch copy of the events table + checkpoint
-    # until the OS pruned /tmp (round-4 advice)
-    if tmp not in _EPISODE_SCRATCH_DIRS:
-        _EPISODE_SCRATCH_DIRS.add(tmp)
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    src = (
-        # raw read, no _tbl spread: the source is deliberately written as
-        # ONE file (coalesce(1) below) so the replay is single-batch
-        # deterministic — a repartition here would only add an exchange
-        # and permute the file's row order for zero parallelism gain
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select(
-            F.concat_ws(
-                "|", F.col("event_type"), (F.col("user_id") % 10)
-            ).alias("curie"),
-            F.date_trunc("second", F.col("ts")).alias("warc_ts"),
-            F.col("user_id").cast("string").alias("doc_id"),
-        )
-    )
-    src.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/in")
-    stream = spark.readStream.schema(
-        "curie string, warc_ts timestamp, doc_id string"
-    ).parquet(f"{tmp}/in")
-    eps = entity_episodes(stream, gap="8 hours", watermark="1 hour")
-    q = (
-        eps.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", f"{tmp}/out")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    # a timeout must be an ERROR, not a partial read: proceeding while the
-    # sink is still writing (or before the no-data timeout batch ran) would
-    # hand the correctness gate a frame missing closed episodes
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(
-            "streaming_episodes: availableNow run did not terminate in 600s"
-        )
-    return spark.read.schema(
-        "curie string, episode_start timestamp, episode_end timestamp, "
-        "n_mentions long, n_docs long"
-    ).parquet(f"{tmp}/out")
-
-
-SQL_STREAMING_EPISODES = """
-    WITH m AS (
-        SELECT event_type || '|' || (user_id % 10)::VARCHAR AS curie,
-               date_trunc('second', ts) AS ts,
-               user_id::VARCHAR AS doc
-        FROM events),
-    f AS (
-        SELECT curie, ts, doc,
-               CASE WHEN epoch(ts) - epoch(lag(ts) OVER
-                    (PARTITION BY curie ORDER BY ts)) > 28800
-                    THEN 1 ELSE 0 END AS brk
-        FROM m),
-    s AS (
-        SELECT curie, ts, doc,
-               (sum(brk) OVER (PARTITION BY curie ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING))::BIGINT AS ep
-        FROM f),
-    e AS (
-        SELECT curie, ep, min(ts) AS episode_start, max(ts) AS episode_end,
-               count(*)::BIGINT AS n_mentions,
-               count(DISTINCT doc)::BIGINT AS n_docs
-        FROM s GROUP BY 1, 2),
-    wm AS (SELECT max(date_trunc('second', ts)) - INTERVAL 1 HOUR AS w
-           FROM events)
-    SELECT curie, episode_start, episode_end, n_mentions, n_docs
-    FROM e, wm WHERE episode_end + INTERVAL 8 HOUR < w
-"""
-
-
-def q_similarity_neardup_lsh(spark, sf_dir):
-    """Embedding near-dup via the LSH-bucketed SCALE path
-    (similarity.cosine_near_dup_pairs): bucket self-join replaces the cross
-    join; exact cosine verify after. Hyperplanes are md5-derived literals,
-    so DuckDB replicates the buckets exactly (same device as the ann_topk
-    oracle) — this gates that the bucketing loses only what LSH is allowed
-    to lose, deterministically."""
-    from .similarity import cosine_near_dup_pairs
-
-    emb = _tbl(spark, sf_dir, "embeddings", spread=True)
-    out = cosine_near_dup_pairs(emb, dim=64, threshold=0.35, n_planes=6)
-    return out.select("a", "b", F.round("cosine", 6).alias("cosine_r"))
-
-
-def _sql_neardup_lsh(dim: int = 64, n_planes: int = 6, seed: int = 42,
-                     threshold: float = 0.35) -> str:
-    planes = similarity._hyperplanes(dim, n_planes, seed)
-    plane_rows = ", ".join(
-        f"({p}, [{', '.join(repr(x) for x in planes[p])}]::DOUBLE[])"
-        for p in range(n_planes)
-    )
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    planes(p, w) AS (VALUES {plane_rows}),
-    bucketed AS (
-        SELECT vec_id, v,
-               sum(CASE WHEN list_dot_product(v, w) >= 0
-                        THEN (1 << p) ELSE 0 END)::INT AS bucket
-        FROM e CROSS JOIN planes GROUP BY vec_id, v)
-    SELECT a.vec_id AS a, b.vec_id AS b,
-           round(list_dot_product(a.v, b.v)
-                 / (sqrt(list_dot_product(a.v, a.v))
-                    * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine_r
-    FROM bucketed a JOIN bucketed b
-      ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-    WHERE list_dot_product(a.v, b.v)
-          / (sqrt(list_dot_product(a.v, a.v))
-             * sqrt(list_dot_product(b.v, b.v))) >= {threshold}
-"""
-
-
-def _entry_media(spark, sf_dir):
-    """Deterministic media table derived from documents: every doc yields a
-    fake image (content = utf-8 bytes of its text) and a fake video
-    (duration = n_chars * 10 ms) — the multimodal plumbing runs on real
-    binary columns without external data."""
-    from .multimodal import MEDIA
-
-    d = _docs(spark, sf_dir, spread=False)
-    imgs = d.select(
-        F.concat(F.lit("i"), F.col("doc_id").cast("string")).alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.encode("text", "UTF-8").alias("content"),
-        F.lit("image/png").alias("mime"),
-        F.lit(64).alias("width"), F.lit(64).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    vids = d.select(
-        F.concat(F.lit("v"), F.col("doc_id").cast("string")).alias("media_id"),
-        F.lit("video").alias("kind"),
-        F.lit(None).cast("binary").alias("content"),
-        F.lit("video/mp4").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        (F.col("n_chars") * 10).cast("long").alias("duration_ms"),
-    )
-    auds = d.select(
-        F.concat(F.lit("a"), F.col("doc_id").cast("string")).alias("media_id"),
-        F.lit("audio").alias("kind"),
-        F.lit(None).cast("binary").alias("content"),
-        F.lit("audio/wav").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        (F.col("n_chars") * 7).cast("long").alias("duration_ms"),
-    )
-    return imgs.unionByName(vids).unionByName(auds)
-
-
-def q_multimodal_frame_plan(spark, sf_dir):
-    """Video frame-sampling plan (multimodal.frame_sample_plan): sequence +
-    explode per video, JVM-only. The codec half of frame sampling is the
-    honest stub; THIS half — the distributed expansion a decoder would
-    consume — is fully oracle-checkable."""
-    from .multimodal import frame_sample_plan
-
-    return frame_sample_plan(_entry_media(spark, sf_dir), every_ms=1000)
-
-
-SQL_MULTIMODAL_FRAME_PLAN = """
-    SELECT 'v' || doc_id AS media_id,
-           unnest(generate_series(0, n_chars * 10, 1000)) AS frame_ts_ms
-    FROM documents
-"""
-
-
-def q_multimodal_audio_windows(spark, sf_dir):
-    """Audio analysis-window plan (multimodal.audio_window_plan): the
-    overlapping-window twin of the video frame plan — JVM-only expansion a
-    feature extractor would consume, codec honestly stubbed. Clips shorter
-    than one window emit nothing (the oracle's WHERE mirrors the gate)."""
-    from .multimodal import audio_window_plan
-
-    return audio_window_plan(_entry_media(spark, sf_dir),
-                             window_ms=2000, hop_ms=500)
-
-
-SQL_MULTIMODAL_AUDIO_WINDOWS = """
-    SELECT 'a' || doc_id AS media_id,
-           unnest(generate_series(0, n_chars * 7 - 2000, 500))
-               AS win_start_ms,
-           unnest(generate_series(0, n_chars * 7 - 2000, 500)) + 2000
-               AS win_end_ms
-    FROM documents WHERE n_chars * 7 >= 2000
-"""
-
-
-def q_multimodal_image_bytes(spark, sf_dir):
-    """image_features' mapInPandas plumbing end to end (Arrow binary
-    batches -> per-image rows), projected to the engine-independent columns
-    (byte length); the pseudo-pixel stats ride the same rows but are
-    pytest-verified (the fake decode is not SQL-expressible)."""
-    from .multimodal import image_features
-
-    feats = image_features(_entry_media(spark, sf_dir), decode="fake")
-    return feats.select("media_id", "n_bytes")
-
-
-SQL_MULTIMODAL_IMAGE_BYTES = """
-    SELECT 'i' || doc_id AS media_id, strlen(text)::BIGINT AS n_bytes
-    FROM documents
-"""
-
-
-def q_canonicalize_assignments(spark, sf_dir):
-    """N6 at scale, fully oracle-gated end to end: name canonicalization
-    (char-shingle MinHash-LSH blocking -> exact Jaccard verify -> connected
-    components -> ns-priority canonical election). Input: two namespaces
-    over the part names — GEONAMES names differ only by punctuation, which
-    normalization erases, so each (MESH:k, GEONAMES:k) pair must merge;
-    cross-key merges happen wherever TPC-H color-word names are
-    shingle-close, identically in both engines (md5 family)."""
-    from .canonicalize import canonical_assignments
-
-    part = _tbl(spark, sf_dir, "part").filter(F.col("p_partkey") < 150)
-    nodes = part.select(
-        F.concat(F.lit("MESH:"), F.col("p_partkey").cast("string")).alias("curie"),
-        F.col("p_name").alias("name"),
-        F.lit("disease").alias("node_type"),
-    ).unionByName(
-        part.select(
-            F.concat(F.lit("GEONAMES:"),
-                     F.col("p_partkey").cast("string")).alias("curie"),
-            F.regexp_replace("p_name", " ", "-").alias("name"),
-            F.lit("disease").alias("node_type"),
-        )
-    )
-    return canonical_assignments(
-        nodes, ns_priority=("MESH", "GEONAMES"), threshold=0.7,
-        num_hashes=12, bands=6,
-    )
-
-
-SQL_CANONICALIZE = """
-    WITH RECURSIVE names AS (
-        SELECT 'MESH:' || p_partkey AS curie, p_name AS name
-        FROM part WHERE p_partkey < 150
-        UNION ALL
-        SELECT 'GEONAMES:' || p_partkey, replace(p_name, ' ', '-')
-        FROM part WHERE p_partkey < 150),
-    norm AS (
-        SELECT curie,
-               ' ' || trim(regexp_replace(lower(name), '[^a-z0-9]+', ' ', 'g'))
-               || ' ' AS p
-        FROM names),
-    sh AS (
-        SELECT DISTINCT curie, substr(p, i + 1, 3) AS shingle
-        FROM norm, unnest(range(0, greatest(len(p) - 2, 0))) u(i)
-        WHERE len(p) >= 3),
-    hv AS (
-        SELECT curie, i AS hash_idx,
-               ('0x' || substr(md5(i || ':' || shingle), 1, 12))::BIGINT AS v
-        FROM sh, unnest(range(0, 12)) h(i)),
-    sig AS (SELECT curie, hash_idx, min(v) AS minhash FROM hv GROUP BY 1, 2),
-    bands AS (
-        SELECT curie, hash_idx % 6 AS band,
-               string_agg(minhash, ',' ORDER BY hash_idx) AS key
-        FROM sig GROUP BY 1, 2),
-    cand AS (
-        SELECT DISTINCT x.curie AS a, y.curie AS b
-        FROM bands x JOIN bands y USING (band, key)
-        WHERE x.curie < y.curie),
-    sz AS (SELECT curie, count(*) AS s FROM sh GROUP BY 1),
-    inter AS (
-        SELECT c.a, c.b, count(*) AS ni
-        FROM cand c
-        JOIN sh sa ON sa.curie = c.a
-        JOIN sh sb ON sb.curie = c.b AND sb.shingle = sa.shingle
-        GROUP BY 1, 2),
-    ver AS (
-        SELECT i.a, i.b FROM inter i
-        JOIN sz za ON za.curie = i.a
-        JOIN sz zb ON zb.curie = i.b
-        WHERE ni * 1.0 / (za.s + zb.s - ni) >= 0.7),
-    sym AS (SELECT a, b FROM ver UNION SELECT b, a FROM ver),
-    reach(a, b) AS (
-        SELECT a, b FROM sym
-        UNION
-        SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-    vnodes AS (SELECT a AS n FROM sym UNION SELECT b FROM sym),
-    comp AS (
-        SELECT n AS curie, least(n, min(r.b)) AS component
-        FROM vnodes LEFT JOIN reach r ON r.a = n GROUP BY n),
-    ranked AS (
-        SELECT curie, component,
-               CASE split_part(curie, ':', 1)
-                    WHEN 'MESH' THEN 0 WHEN 'GEONAMES' THEN 1 ELSE 2
-               END AS p
-        FROM comp),
-    canon AS (
-        SELECT component, curie AS canonical_curie FROM (
-            SELECT component, curie,
-                   row_number() OVER (PARTITION BY component
-                                      ORDER BY p, curie) AS rn
-            FROM ranked) WHERE rn = 1),
-    assigned AS (
-        SELECT r.curie, c.canonical_curie
-        FROM ranked r JOIN canon c USING (component))
-    SELECT n.curie,
-           coalesce(a.canonical_curie, n.curie) AS canonical_curie
-    FROM (SELECT DISTINCT curie FROM names) n
-    LEFT JOIN assigned a USING (curie)
-"""
-
-
-def q_kg_query_indicators(spark, sf_dir):
-    """The reference's second endpoint query (kg/client.py:76-116,
-    queries.query_indicators): indicators attached to the anchor
-    geolocation, its ancestors, OR its descendants (bidirectional isa*0..),
-    with name joins and the years_data map payload. Indicator edges are
-    derived from events (per-geo per-type monthly integer-cent totals — a
-    WDI-shaped table); map values stay integers so the oracle is exact.
-    The map rides through the operator and is exploded for comparison."""
-    _utc(spark)
-    from .queries import query_indicators
-
-    ev = _tbl(spark, sf_dir, "events")
-    geo = (
-        F.when(F.pmod("user_id", F.lit(3)) == 0, F.lit("MESH:D2001"))
-        .when(F.pmod("user_id", F.lit(3)) == 1, F.lit("MESH:D2002"))
-        .otherwise(F.lit("MESH:D2003"))
-    )
-    monthly = (
-        ev.select(
-            geo.alias("subj"),
-            F.concat(F.lit("WDI:"), "event_type").alias("obj"),
-            F.date_format("ts", "yyyy-MM").alias("ym"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("subj", "obj", "ym")
-        .agg(F.sum("cents").alias("v"))
-    )
-    edges = monthly.groupBy("subj", "obj").agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("ym", "v")))
-        ).alias("years_data")
-    ).select("subj", F.lit("has_indicator").alias("pred"), "obj", "years_data")
-    nodes = spark.createDataFrame(
-        [(c, t) for c, t, ty in ENTRY_GAZ], "curie string, name string"
-    ).unionByName(
-        ev.select(
-            F.concat(F.lit("WDI:"), "event_type").alias("curie"),
-            F.concat(F.lit("indicator "), "event_type").alias("name"),
-        ).dropDuplicates()
-    )
-    closure = spark.createDataFrame(
-        [{"node": n, "ancestor": a} for n, a in _entry_closure_pairs()]
-    )
-    out = query_indicators(nodes, edges, closure, "MESH:D2002")
-    return out.select(
-        "indicator_curie", "indicator_name", "geo_curie", "geo_name",
-        F.explode("years_data").alias("ym", "cents"),
-    )
-
-
-SQL_KG_QUERY_INDICATORS = f"""
-    WITH ev AS (
-        SELECT CASE user_id % 3 WHEN 0 THEN 'MESH:D2001'
-                                WHEN 1 THEN 'MESH:D2002'
-                                ELSE 'MESH:D2003' END AS geo_curie,
-               'WDI:' || event_type AS indicator_curie,
-               'indicator ' || event_type AS indicator_name,
-               strftime(ts, '%Y-%m') AS ym,
-               round(value * 100)::BIGINT AS cents
-        FROM events),
-    agg AS (
-        SELECT geo_curie, indicator_curie, indicator_name, ym,
-               sum(cents)::BIGINT AS cents
-        FROM ev GROUP BY 1, 2, 3, 4),
-    cl(node, ancestor) AS (VALUES {{closure}}),
-    related AS (
-        SELECT node AS geo_curie FROM cl WHERE ancestor = 'MESH:D2002'
-        UNION
-        SELECT ancestor FROM cl WHERE node = 'MESH:D2002'),
-    g(curie, name) AS (VALUES {{gaz}})
-    SELECT a.indicator_curie, a.indicator_name,
-           a.geo_curie, g.name AS geo_name, a.ym, a.cents
-    FROM agg a
-    JOIN related r USING (geo_curie)
-    JOIN g ON g.curie = a.geo_curie
-"""
-
-
-DIRECT_REL_CURIES = ["MESH:D0001", "MESH:D1004", "MESH:D2001"]
-
-
-def q_kg_direct_relations(spark, sf_dir):
-    """text_relations endpoint (kg/client.py:222-227,
-    queries.direct_relations): edges whose BOTH endpoints lie in the given
-    curie set, over the occurs_with edge table built from mention pairs."""
-    from .queries import direct_relations
-
-    m = entry_mentions(spark, sf_dir).select("doc_id", "curie", "name")
-    pairs = _mention_pairs(m, a_name="subj", b_name="obj")
-    edges = salted_count(
-        pairs, ["subj", "obj"], salt=16, count_col="count",
-        salt_from=F.col("doc_id"),
-    ).withColumn("pred", F.lit("occurs_with"))
-    return direct_relations(edges, DIRECT_REL_CURIES).select(
-        "subj", "pred", "obj", "count"
-    )
-
-
-SQL_KG_DIRECT_RELATIONS = f"""
-    WITH m AS ({_SQL_MENTIONS}),
-    e AS (
-        SELECT a.curie AS subj, b.curie AS obj, count(*) AS count
-        FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.name < b.name
-        GROUP BY 1, 2)
-    SELECT subj, 'occurs_with' AS pred, obj, count
-    FROM e
-    WHERE subj IN ('{DIRECT_REL_CURIES[0]}', '{DIRECT_REL_CURIES[1]}',
-                   '{DIRECT_REL_CURIES[2]}')
-      AND obj IN ('{DIRECT_REL_CURIES[0]}', '{DIRECT_REL_CURIES[1]}',
-                  '{DIRECT_REL_CURIES[2]}')
-"""
-
-
-GROUND_QUERY_NAMES = [
-    "  Slow ", "DUP", "ha-sh", "MESH:D9999", "zzz", "Join", "ta-ble",
-]
-
-
-def q_kg_ground_names(spark, sf_dir):
-    """N4 / api.get_curie endpoint (kg/client.py:367-378): name -> CURIE
-    grounding through the same compiled gazetteer as NER. Driver-side by
-    design — the query side grounds a handful of user-typed names, a
-    dimension-sized op (the reference calls gilda per name). Curie-shaped
-    inputs pass through; ungroundable names map to null."""
-    from .ground import ground_names
-
-    out = ground_names(spark, entry_gazetteer_df(spark), GROUND_QUERY_NAMES)
-    return spark.createDataFrame(
-        [(k, out[k]) for k in GROUND_QUERY_NAMES],
-        "name string, curie string",
-    )
-
-
-SQL_KG_GROUND_NAMES = f"""
-    WITH q(name) AS (VALUES {", ".join(f"('{n}')" for n in GROUND_QUERY_NAMES)}),
-    g(curie, tok) AS (VALUES {", ".join(
-        f"('{c}', '{t}')" for c, t, _ty in ENTRY_GAZ)}),
-    norm AS (
-        SELECT name,
-               trim(regexp_replace(regexp_replace(lower(name), '-', ' ', 'g'),
-                                   '\\s+', ' ', 'g')) AS n
-        FROM q)
-    SELECT norm.name,
-           CASE WHEN norm.name LIKE '%:%' THEN norm.name ELSE g.curie END
-               AS curie
-    FROM norm LEFT JOIN g ON g.tok = norm.n AND norm.name NOT LIKE '%:%'
-"""
-
-
-def _curate_corpus_df(spark, sf_dir):
-    """Deterministic curation corpus: the documents table plus injected
-    duplicates, so every curation stage demonstrably fires (the synthetic
-    corpus has no exact dups and uniform quality). doc_id+1000 = identical
-    copy (exact-dup stage); doc_id+2000 = tail-truncated copy (near-dup
-    stage). Identical construction in the DuckDB oracle."""
-    # spread=False: the curation fixture keeps only doc_id < 150 (190
-    # rows with the injected copies) — a latency-bound chain where the
-    # spread exchange and 32-way task scheduling only add fixed cost
-    d = _docs(spark, sf_dir, spread=False).filter(
-        F.col("doc_id") < 150).select("doc_id", "text")
-    exact_copies = d.filter(F.col("doc_id") < 20).select(
-        (F.col("doc_id") + 1000).alias("doc_id"), "text"
-    )
-    near_copies = (
-        d.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 40))
-        .select(
-            (F.col("doc_id") + 2000).alias("doc_id"),
-            F.expr(
-                "substring(text, 1, greatest(length(text) - 40, 1))"
-            ).alias("text"),
-        )
-    )
-    return d.unionByName(exact_copies).unionByName(near_copies)
-
-
-def q_corpus_curate(spark, sf_dir):
-    """Composite corpus curation (curate.curate_corpus): lang filter ->
-    quality filter -> exact dedup -> near-dup canonical election, one row
-    per doc with first-dropping-stage attribution."""
-    from . import curate
-
-    out = curate.curate_corpus(_curate_corpus_df(spark, sf_dir))
-    return out.select("doc_id", "lang_pred", "quality_score",
-                      "drop_stage", "keep")
-
-
-def _sql_corpus_curate() -> str:
-    vals = ", ".join(
-        f"('{t}', '{lang}')"
-        for lang, toks in sorted(textstats.LANG_STOPWORDS.items())
-        for t in toks
-    )
-    return f"""
-    WITH RECURSIVE corpus AS (
-        SELECT doc_id, text FROM documents WHERE doc_id < 150
-        UNION ALL
-        SELECT doc_id + 1000, text FROM documents WHERE doc_id < 20
-        UNION ALL
-        SELECT doc_id + 2000,
-               substr(text, 1, greatest(length(text) - 40, 1))
-        FROM documents WHERE doc_id >= 20 AND doc_id < 40),
-    ltoks AS (
-        SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-        FROM corpus),
-    votes AS (
-        SELECT doc_id, g.lang_cand, count(*) AS votes
-        FROM ltoks JOIN (VALUES {vals}) g(tok, lang_cand) USING (tok)
-        GROUP BY 1, 2),
-    bestl AS (
-        SELECT doc_id, lang_cand, votes,
-               row_number() OVER (PARTITION BY doc_id
-                                  ORDER BY votes DESC, lang_cand ASC) AS rn
-        FROM votes),
-    lang AS (
-        SELECT c.doc_id, coalesce(b.lang_cand, 'und') AS lang_pred
-        FROM corpus c LEFT JOIN (SELECT * FROM bestl WHERE rn = 1) b
-          ON c.doc_id = b.doc_id),
-    qbase AS (
-        SELECT doc_id, length(text) AS n_chars,
-               list_filter(string_split(lower(text), ' '), x -> x <> '')
-                 AS toks,
-               length(text)
-                 - length(regexp_replace(text,
-                     '[^\\p{{L}}\\p{{N}}_\\s]', '', 'g'))
-                 AS n_punct,
-               length(regexp_replace(text,
-                     '[^\\p{{L}}\\p{{N}}_]', '', 'g'))
-                 AS word_chars
-        FROM corpus),
-    qual AS (
-        SELECT doc_id,
-               round((CASE WHEN len(toks) BETWEEN 10 AND 100000
-                           THEN 0.4::DOUBLE ELSE 0.0::DOUBLE END)
-                     + (CASE WHEN n_punct / greatest(n_chars, 1)::DOUBLE
-                                  <= 0.2
-                             THEN 0.3::DOUBLE ELSE 0.0::DOUBLE END)
-                     + (CASE WHEN word_chars
-                                  / greatest(len(toks), 1)::DOUBLE
-                                  BETWEEN 3.0 AND 12.0
-                             THEN 0.3::DOUBLE ELSE 0.0::DOUBLE END),
-                     2)::DOUBLE AS quality_score
-        FROM qbase),
-    base AS (
-        SELECT c.doc_id, c.text, l.lang_pred, q.quality_score,
-               l.lang_pred IN ('en') AS lang_ok,
-               q.quality_score >= 0.7 AS qual_ok
-        FROM corpus c JOIN lang l USING (doc_id) JOIN qual q USING (doc_id)),
-    slq AS (SELECT * FROM base WHERE lang_ok AND qual_ok),
-    ex AS (
-        SELECT doc_id,
-               min(doc_id) OVER (PARTITION BY md5(text)) AS exact_canon
-        FROM slq),
-    sex AS (
-        SELECT b.doc_id, b.text FROM slq b JOIN ex USING (doc_id)
-        WHERE b.doc_id = ex.exact_canon),
-    tk AS (SELECT doc_id,
-                  list_filter(string_split(lower(text), ' '), x -> x <> '')
-                    AS t
-           FROM sex),
-    sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] AS shingle
-        FROM tk, unnest(range(1, len(t))) u(i)),
-    hv AS (
-        SELECT doc_id, i AS hash_idx,
-               ('0x' || substr(md5(i || ':' || shingle), 1, 12))::BIGINT AS v
-        FROM sh, unnest(range(0, 8)) h(i)),
-    sig AS (SELECT doc_id, hash_idx, min(v) AS minhash FROM hv GROUP BY 1, 2),
-    bandt AS (
-        SELECT doc_id, hash_idx % 4 AS band,
-               string_agg(minhash, ',' ORDER BY hash_idx) AS key
-        FROM sig GROUP BY 1, 2),
-    cand AS (
-        SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-        FROM bandt x JOIN bandt y USING (band, key)
-        WHERE x.doc_id < y.doc_id),
-    sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    inter AS (
-        SELECT c.a, c.b, count(*) AS ni
-        FROM cand c
-        JOIN sh sa ON sa.doc_id = c.a
-        JOIN sh sb ON sb.doc_id = c.b AND sb.shingle = sa.shingle
-        GROUP BY 1, 2),
-    edges AS (
-        SELECT i.a, i.b FROM inter i
-        JOIN sz za ON za.doc_id = i.a JOIN sz zb ON zb.doc_id = i.b
-        WHERE ni / (za.n + zb.n - ni)::DOUBLE >= 0.35),
-    sym AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
-    reach(a, b) AS (
-        SELECT a, b FROM sym
-        UNION
-        SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-    cnodes AS (SELECT a AS n FROM sym UNION SELECT b FROM sym),
-    comp AS (
-        SELECT n AS doc_id, least(n, min(r.b)) AS component
-        FROM cnodes LEFT JOIN reach r ON r.a = n GROUP BY n)
-    SELECT b.doc_id, b.lang_pred, b.quality_score,
-           CASE WHEN NOT b.lang_ok THEN 'lang'
-                WHEN NOT b.qual_ok THEN 'quality'
-                WHEN b.doc_id <> e.exact_canon THEN 'exact_dup'
-                WHEN c.component IS NOT NULL AND c.component <> b.doc_id
-                     THEN 'near_dup'
-                ELSE NULL END AS drop_stage,
-           (b.lang_ok AND b.qual_ok AND b.doc_id = e.exact_canon
-            AND (c.component IS NULL OR c.component = b.doc_id)) AS keep
-    FROM base b
-    LEFT JOIN (SELECT DISTINCT doc_id, exact_canon FROM ex) e USING (doc_id)
-    LEFT JOIN comp c USING (doc_id)
-    """
-
-
-def q_similarity_ivf_topk(spark, sf_dir):
-    """IVF ANN with exhaustive probing: nprobe = all centroids makes the
-    index search EXACTLY equal brute-force cosine top-k, so the whole
-    index machinery (deterministic kmeans-lite build, JVM-side
-    assignment, inverted-list probe join, candidate ranking) is checkable
-    against the brute-force oracle — the normal nprobe<k path differs
-    only in which centroid lists are admitted."""
-    emb = _tbl(spark, sf_dir, "embeddings", spread=True)
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    idx, cents = similarity.ivf_index(emb, dim=64, k=8, iters=3)
-    out = similarity.ivf_topk(idx, cents, queries, k=10, nprobe=8)
-    return out.select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine_r"),
-        "rank",
-    )
-
-
-def q_kg_edge_merge(spark, sf_dir):
-    """Incremental KG maintenance (incremental.merge_edge_counts): a
-    counted edge relation built from 2/3 of the events stream merged with
-    a delta built from the remaining 1/3 — counts add, payload columns
-    first-wins (existing beats delta)."""
-    from . import incremental
-
-    ev = _tbl(spark, sf_dir, "events")
-
-    def edgeify(d, prov):
-        return (
-            d.groupBy(
-                F.concat(F.lit("user:"),
-                         F.col("user_id").cast("string")).alias("subj"),
-                F.col("event_type").alias("pred"),
-                F.concat(F.lit("bucket:"),
-                         (F.col("user_id") % 7).cast("string")).alias("obj"),
-            )
-            .agg(F.count(F.lit(1)).alias("count"))
-            .withColumn("provenance", F.lit(prov))
-        )
-
-    base = edgeify(ev.filter(F.col("event_id") % 3 != 0), "base")
-    delta = edgeify(ev.filter(F.col("event_id") % 3 == 0), "delta")
-    out = incremental.merge_edge_counts(base, delta)
-    return out.select("subj", "pred", "obj", "count", "provenance")
-
-
-SQL_KG_EDGE_MERGE = """
-    WITH base AS (
-        SELECT 'user:' || user_id AS subj, event_type AS pred,
-               'bucket:' || (user_id % 7) AS obj,
-               count(*) AS cnt, 'base' AS provenance
-        FROM events WHERE event_id % 3 <> 0 GROUP BY 1, 2, 3),
-    delta AS (
-        SELECT 'user:' || user_id AS subj, event_type AS pred,
-               'bucket:' || (user_id % 7) AS obj,
-               count(*) AS cnt, 'delta' AS provenance
-        FROM events WHERE event_id % 3 = 0 GROUP BY 1, 2, 3),
-    u AS (
-        SELECT *, 0 AS src FROM base
-        UNION ALL
-        SELECT *, 1 AS src FROM delta)
-    SELECT subj, pred, obj, sum(cnt)::BIGINT AS "count",
-           arg_min(provenance, src) AS provenance
-    FROM u GROUP BY 1, 2, 3
-"""
-
-
-def all_queries():
-    """Exactly 50 entries — the driver tests the first 50 keys, so every
-    registered operator gets a hard CORRECTNESS row. Round-3 consolidation
-    (each removed gate's operator is still computed inside a retained green
-    entry's plan, and keeps its own pytest coverage):
-
-    - text_lang_id/text_token_counts/text_fingerprints/text_quality
-      -> text_signals (one-pass textstats.signals; all columns hashed)
-    - text_repetition/text_pii/text_surprisal -> text_filters (join)
-    - anti_join_customers/semi_join_parts/union_distinct_users
-      -> set_ops (long-form union, full row-level evidence)
-    - json_extract_props -> eidos_context (from_json with explicit nested
-      schema + explode + stats: strictly more of P12/S6/K4 than the old
-      get_json_object entry)
-    - kg_mention_pairs_grouped dropped (byte-identical oracle to
-      kg_mention_pairs; grouped path gated by tests/test_skew.py)
-    - similarity_neardup (brute) dropped (oracle twin of
-      similarity_neardup_lsh, which stays)
-    - kg_coverage_metrics dropped (contingency legs inside
-      kg_literature_contingency/pvalues; pytest keeps the metrics shape)
-    - kg_literature_candidates dropped (candidate counting is the first
-      CTE of kg_literature_contingency's plan and oracle)
-    - kg_cooccur_scores dropped (score formula recomputed inside
-      kg_realism_logsumexp's plan and oracle)
-    - dedup_minhash_sigs dropped (signatures computed in-plan by
-      dedup_lsh_candidates; sig values gated by tests/test_dedup.py)
-
-    Round-4 swap: streaming_episodes (the applyInPandasWithState stateful
-    operator, previously pytest-only) takes dedup_exact's driver slot;
-    exact dedup stays green via the md5-groupBy stage inside
-    corpus_curate's driver entry plus the identical-contract
-    extra_queries gate.
-    """
-    return {
-        # KG pipeline spine + the 13 entries the round-2 driver never
-        # reached (positions 50-62 then; first now)
-        "kg_extract_text": q_kg_extract_text,
-        "kg_ner_mentions": q_kg_ner_mentions,
-        "kg_ground_names": q_kg_ground_names,
-        "kg_tsv_node_rows": q_kg_tsv_node_rows,
-        "kg_query_indicators": q_kg_query_indicators,
-        "kg_direct_relations": q_kg_direct_relations,
-        "canonicalize_assignments": q_canonicalize_assignments,
-        "corpus_curate": q_corpus_curate,
-        "kg_edge_merge": q_kg_edge_merge,
-        "similarity_ivf_topk": q_similarity_ivf_topk,
-        "similarity_neardup_lsh": q_similarity_neardup_lsh,
-        "events_rollup": q_events_rollup,
-        "events_sessionize": q_events_sessionize,
-        "multimodal_frame_plan": q_multimodal_frame_plan,
-        "multimodal_image_bytes": q_multimodal_image_bytes,
-        # KG core
-        "kg_terms_per_doc": q_kg_terms_per_doc,
-        "kg_mention_pairs": q_kg_mention_pairs,
-        "kg_interesting_pairs": q_kg_interesting_pairs,
-        "kg_isa_closure": q_kg_isa_closure,
-        "kg_query_graph": q_kg_query_graph,
-        "kg_predicate_rename": q_kg_predicate_rename,
-        "kg_top_alerts": q_kg_top_alerts,
-        "kg_first_timestamp_lookup": q_kg_first_timestamp_lookup,
-        "kg_realism_logsumexp": q_kg_realism_logsumexp,
-        "kg_literature_contingency": q_kg_literature_contingency,
-        "kg_literature_pvalues": q_kg_literature_pvalues,
-        "kg_autocomplete": q_kg_autocomplete,
-        "kg_xref_join": q_kg_xref_join,
-        "kg_mixed_path": q_kg_mixed_path,
-        "kg_typed_subtree": q_kg_typed_subtree,
-        # pattern triple extraction (round-5 swap: takes
-        # agg_pricing_summary's slot — the A1/A7 partial+final agg shape
-        # stays green via stats_token_counts and the salted-count entries;
-        # agg_pricing_summary itself moves to the extras contract)
-        "kg_pattern_triples": q_kg_pattern_triples,
-        # relational operator families
-        "join_star_topk": q_join_star_topk,
-        "set_ops": q_set_ops,
-        "window_first_event": q_window_first_event,
-        "year_month_map": q_year_month_map,
-        "stats_token_counts": q_stats_token_counts,
-        "eidos_context": q_eidos_context,
-        # dedup / similarity / text
-        "streaming_episodes": q_streaming_episodes,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_lsh_candidates": q_dedup_lsh_candidates,
-        "dedup_contamination": q_dedup_contamination,
-        "graph_components": q_graph_components,
-        "ngram_jaccard": q_ngram_jaccard,
-        "similarity_cosine_topk": q_similarity_cosine_topk,
-        "similarity_ann_topk": q_similarity_ann_topk,
-        "text_signals": q_text_signals,
-        "text_filters": q_text_filters,
-        # temporal
-        "asof_join_events": q_asof_join_events,
-        "range_join_events": q_range_join_events,
-        "join_name_coalesce": q_join_name_coalesce,
-    }
-
-
-def all_oracle_sql():
-    return {
-        "kg_extract_text": SQL_KG_EXTRACT_TEXT,
-        "kg_ner_mentions": _SQL_MENTIONS,
-        "kg_ground_names": SQL_KG_GROUND_NAMES,
-        "kg_tsv_node_rows": SQL_KG_TSV_NODE_ROWS.format(
-            mentions=_SQL_MENTIONS
-        ),
-        "kg_query_indicators": SQL_KG_QUERY_INDICATORS.format(
-            closure=_sql_values_closure(),
-            gaz=", ".join(f"('{c}', '{t}')" for c, t, _ty in ENTRY_GAZ),
-        ),
-        "kg_direct_relations": SQL_KG_DIRECT_RELATIONS,
-        "canonicalize_assignments": SQL_CANONICALIZE,
-        "corpus_curate": _sql_corpus_curate(),
-        "kg_edge_merge": SQL_KG_EDGE_MERGE,
-        # exhaustive-probe IVF == brute force, so it shares the oracle
-        "similarity_ivf_topk": SQL_COSINE_TOPK,
-        "similarity_neardup_lsh": _sql_neardup_lsh(),
-        "events_rollup": SQL_EVENTS_ROLLUP,
-        "events_sessionize": SQL_EVENTS_SESSIONIZE,
-        "multimodal_frame_plan": SQL_MULTIMODAL_FRAME_PLAN,
-        "multimodal_image_bytes": SQL_MULTIMODAL_IMAGE_BYTES,
-        "kg_terms_per_doc": f"""
-            WITH m AS ({_SQL_MENTIONS})
-            SELECT doc_id, count(DISTINCT curie) AS n_terms FROM m GROUP BY 1
-        """,
-        "kg_mention_pairs": SQL_KG_MENTION_PAIRS,
-        "kg_interesting_pairs": SQL_KG_INTERESTING_PAIRS,
-        "kg_isa_closure": SQL_KG_ISA_CLOSURE,
-        "kg_query_graph": SQL_KG_QUERY_GRAPH,
-        "kg_predicate_rename": SQL_KG_PREDICATE_RENAME,
-        "kg_top_alerts": SQL_KG_TOP_ALERTS,
-        "kg_first_timestamp_lookup": SQL_KG_FIRST_TIMESTAMP,
-        "kg_realism_logsumexp": SQL_KG_REALISM_LSE,
-        "kg_literature_contingency": SQL_KG_LIT_CONTINGENCY,
-        "kg_literature_pvalues": _sql_lit_pvalues(),
-        "kg_autocomplete": SQL_KG_AUTOCOMPLETE,
-        "kg_xref_join": SQL_KG_XREF_JOIN.format(mentions=_SQL_MENTIONS),
-        "kg_mixed_path": _sql_mixed_path(),
-        "kg_typed_subtree": SQL_KG_TYPED_SUBTREE.format(
-            isa_edges=", ".join(f"('{s}', '{o}')" for s, o in ENTRY_ISA),
-            gaz=_sql_values_gaz(),
-        ),
-        "kg_pattern_triples": _sql_pattern_triples(),
-        "join_star_topk": SQL_JOIN_STAR_TOPK,
-        "set_ops": SQL_SET_OPS,
-        "window_first_event": SQL_WINDOW_FIRST,
-        "year_month_map": SQL_YEAR_MONTH_MAP,
-        "stats_token_counts": SQL_STATS_TOKENS,
-        "eidos_context": SQL_EIDOS_CONTEXT,
-        "streaming_episodes": SQL_STREAMING_EPISODES,
-        "dedup_simhash": _sql_simhash(16),
-        "dedup_lsh_candidates": SQL_DEDUP_LSH_CANDIDATES,
-        "dedup_contamination": SQL_DEDUP_CONTAMINATION,
-        "graph_components": SQL_GRAPH_COMPONENTS,
-        "ngram_jaccard": SQL_NGRAM_JACCARD,
-        "similarity_cosine_topk": SQL_COSINE_TOPK,
-        "similarity_ann_topk": _sql_ann_topk(),
-        "text_signals": _sql_text_signals(),
-        "text_filters": _sql_text_filters(),
-        "asof_join_events": SQL_ASOF_JOIN_EVENTS,
-        "range_join_events": SQL_RANGE_JOIN_EVENTS,
-        "join_name_coalesce": SQL_JOIN_NAME_COALESCE,
-    }
-
-
-def q_graph_labelprop(spark, sf_dir):
-    """Deterministic synchronous label propagation (graphrank.
-    label_propagation) over a planted-community link graph derived from
-    the documents table: ten six-node blocks wired densely inside each
-    block plus sparse deterministic bridges. Webtext use: grouping mirror
-    networks / template farms that are densely interlinked without being
-    fully reachable inside the round budget (one level softer than
-    graph_components); the DuckDB oracle replays the exact synchronous
-    recurrence round by round as materialized chained CTEs."""
-    from .graphrank import label_propagation
-
-    d = _docs(spark, sf_dir, spread=False)
-    base = F.col("doc_id") % 60
-    blk = base - base % 6
-    intra = d.select(
-        base.alias("src"),
-        (blk + (F.col("doc_id") * 7 + 1) % 6).alias("dst"),
-    )
-    bridge = d.filter(F.col("doc_id") % 31 == 0).select(
-        blk.alias("src"), ((blk + 6) % 60).alias("dst")
-    )
-    return label_propagation(intra.unionByName(bridge), rounds=4)
-
-
-def _sql_graph_labelprop(rounds: int = 4) -> str:
-    """The identical synchronous min-tie LPA recurrence unrolled as
-    chained CTEs. MATERIALIZED is load-bearing for the same reason as
-    _sql_graph_pagerank: every round references its predecessor twice
-    (neighbor-label count + keep-own fallback), so default inlining would
-    copy the chain 2^rounds times."""
-    its = []
-    for k in range(1, rounds + 1):
-        its.append(f"""
-        c{k} AS MATERIALIZED (
-          SELECT s.node, p.label AS nl, count(*) AS c
-          FROM sym s JOIN l{k - 1} p ON p.node = s.nbr
-          GROUP BY 1, 2),
-        l{k} AS MATERIALIZED (
-          SELECT p.node, coalesce(k{k}.nl, p.label) AS label
-          FROM l{k - 1} p
-          LEFT JOIN (
-            SELECT node, nl FROM (
-              SELECT node, nl,
-                     row_number() OVER (PARTITION BY node
-                                        ORDER BY c DESC, nl ASC) AS rn
-              FROM c{k}) WHERE rn = 1) k{k} USING (node))""")
-    return f"""
-    WITH raw AS (
-        SELECT doc_id % 60 AS src,
-               (doc_id % 60) - (doc_id % 60) % 6 + (doc_id*7 + 1) % 6 AS dst
-        FROM documents
-        UNION ALL
-        SELECT (doc_id % 60) - (doc_id % 60) % 6,
-               ((doc_id % 60) - (doc_id % 60) % 6 + 6) % 60
-        FROM documents WHERE doc_id % 31 = 0),
-    und AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-            FROM raw WHERE src <> dst),
-    sym AS (SELECT u AS node, v AS nbr FROM und
-            UNION ALL SELECT v AS node, u AS nbr FROM und),
-    l0 AS (SELECT DISTINCT node, node AS label FROM sym),
-    {",".join(its)}
-    SELECT node, label FROM l{rounds}
-    """
-
-
-def q_similarity_quantized_topk(spark, sf_dir):
-    """Int8-quantized ANN (similarity.quantized_topk): shortlist by cosine
-    over symmetric int8 codes (scale cancels out of cosine — the float
-    scale column never enters the plan), exact full-precision rerank of
-    the shortlist. The quantizer's floor(x/scale + 0.5) half-up is chosen
-    BECAUSE it evaluates identically in Spark and DuckDB (each engine's
-    round() differs on halves), making the full two-stage plan — codes,
-    shortlist ordering, rerank — exactly replayable as the oracle."""
-    emb = _tbl(spark, sf_dir, "embeddings", spread=True)
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    out = similarity.quantized_topk(emb, queries, k=10, rerank=40)
-    return out.select(
-        "query_id", "neighbor_id",
-        F.round("cosine", 6).alias("cosine_r"), "rank")
-
-
-SQL_QUANTIZED_TOPK = """
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 3),
-    c8 AS (
-        SELECT vec_id,
-               CASE WHEN scale > 0 THEN list_transform(
-                        v, x -> least(greatest(floor(x / scale + 0.5),
-                                               -127.0), 127.0))
-                    ELSE list_transform(v, x -> 0.0) END AS cv
-        FROM (SELECT vec_id, v,
-                     list_aggregate(list_transform(v, x -> abs(x)),
-                                    'max') / 127.0 AS scale
-              FROM e)),
-    short AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY list_dot_product(c.cv, q.qv)
-                                / (sqrt(list_dot_product(c.cv, c.cv))
-                                   * sqrt(list_dot_product(q.qv, q.qv)))
-                                DESC,
-                                c.vec_id ASC) AS rn
-            FROM c8 c, q) WHERE rn <= 40),
-    exact AS (
-        SELECT s.query_id, s.neighbor_id,
-               list_dot_product(e.v, q.qv)
-               / (sqrt(list_dot_product(e.v, e.v))
-                  * sqrt(list_dot_product(q.qv, q.qv))) AS cosine
-        FROM short s
-        JOIN e ON e.vec_id = s.neighbor_id
-        JOIN q USING (query_id))
-    SELECT query_id, neighbor_id, round(cosine, 6) AS cosine_r, rank
-    FROM (SELECT query_id, neighbor_id, cosine,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine DESC,
-                                             neighbor_id ASC) AS rank
-          FROM exact)
-    WHERE rank <= 10
-"""
-
-
-def q_graph_kcore(spark, sf_dir):
-    """k-core decomposition (graphrank.k_core, k=4) over a deterministic
-    documents-derived graph: blocks of ten nodes wired by three modular
-    generators (dense enough that most of each block survives k=4) plus a
-    block-end chain edge that peels. Webtext use: dense-backbone
-    extraction — spam/template link farms are high-k cores of the link
-    graph. The DuckDB oracle unrolls the peeling as materialized chained
-    CTEs (10 rounds — past the fixture's fixpoint; extra rounds are
-    no-ops once stable, and if 10 were NOT enough the value-hash gate
-    would catch the unconverged oracle)."""
-    from .graphrank import k_core
-
-    d = _docs(spark, sf_dir, spread=False)
-    i = F.col("doc_id")
-    blk = i - i % 10
-    legs = [
-        d.select(i.alias("src"),
-                 (blk + (i * j + j) % 10).alias("dst"))
-        for j in (1, 2, 3)
-    ]
-    chain = d.filter((i % 10 == 9)).select(
-        i.alias("src"), (blk + 10).alias("dst"))
-    edges = legs[0].unionByName(legs[1]).unionByName(legs[2]) \
-        .unionByName(chain)
-    return k_core(edges, k=4).select(
-        F.col("node").cast("long").alias("node"),
-        F.col("degree").cast("long").alias("degree"))
-
-
-def _sql_graph_kcore(k: int = 4, rounds: int = 10) -> str:
-    parts = ["""
-    WITH e0 AS MATERIALIZED (
-        SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-        FROM (
-            SELECT doc_id AS src,
-                   (doc_id - doc_id % 10) + (doc_id * 1 + 1) % 10 AS dst
-            FROM documents
-            UNION ALL
-            SELECT doc_id,
-                   (doc_id - doc_id % 10) + (doc_id * 2 + 2) % 10
-            FROM documents
-            UNION ALL
-            SELECT doc_id,
-                   (doc_id - doc_id % 10) + (doc_id * 3 + 3) % 10
-            FROM documents
-            UNION ALL
-            SELECT doc_id, doc_id + 1 FROM documents WHERE doc_id % 10 = 9
-        ) WHERE src <> dst)"""]
-    for r in range(1, rounds + 1):
-        parts.append(f""",
-    k{r} AS MATERIALIZED (
-        SELECT node FROM (
-            SELECT u AS node FROM e{r - 1}
-            UNION ALL SELECT v FROM e{r - 1}
-        ) GROUP BY node HAVING count(*) >= {k}),
-    e{r} AS MATERIALIZED (
-        SELECT u, v FROM e{r - 1}
-        WHERE u IN (SELECT node FROM k{r})
-          AND v IN (SELECT node FROM k{r}))""")
-    parts.append(f"""
-    SELECT node::BIGINT AS node, count(*)::BIGINT AS degree
-    FROM (SELECT u AS node FROM e{rounds} UNION ALL SELECT v FROM e{rounds})
-    GROUP BY node
-    """)
-    return "".join(parts)
-
-
-def q_similarity_rp_project(spark, sf_dir):
-    """Johnson-Lindenstrauss random projection (similarity.
-    random_projection): 64-dim embeddings compressed onto six
-    deterministic Rademacher rows, long form — the pre-ANN index
-    compression step at 10^12-vector scale (distances preserved within
-    JL distortion at dim/out_dim memory). The +/-1/sqrt(6) matrix is
-    md5-derived and inlined as PLAN LITERALS on both sides, so DuckDB
-    reproduces the projection exactly; the Spark operator is one narrow
-    whole-stage-codegen projection — zero exchanges, zero Python.
-    posexplode_OUTER + null filter per the InferFiltersFromGenerate
-    house rule for computed-array generates."""
-    emb = _tbl(spark, sf_dir, "embeddings", spread=True).filter(F.col("vec_id") < 400)
-    out = similarity.random_projection(emb, dim=64, out_dim=6)
-    return (
-        out.select(
-            "vec_id", F.posexplode_outer("proj").alias("dim_idx", "val"))
-        .filter(F.col("val").isNotNull())
-        .select("vec_id", F.col("dim_idx").cast("int").alias("dim_idx"),
-                F.round("val", 6).alias("proj_r"))
-    )
-
-
-def _sql_similarity_rp_project(out_dim: int = 6, dim: int = 64) -> str:
-    """DuckDB twin: identical inlined Rademacher rows, one
-    list_dot_product per output coordinate."""
-    rows = similarity._rademacher_matrix(dim, out_dim, seed=7)
-    row_vals = ", ".join(
-        f"({j}, [{', '.join(repr(x) for x in rows[j])}]::DOUBLE[])"
-        for j in range(out_dim)
-    )
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-               WHERE vec_id < 400),
-    r(j, w) AS (VALUES {row_vals})
-    SELECT vec_id, j::INT AS dim_idx,
-           round(list_dot_product(v, w), 6) AS proj_r
-    FROM e CROSS JOIN r
-    """
-
-
-def q_curate_representatives(spark, sf_dir):
-    """Quality-weighted canonical election (curate.elect_representatives):
-    each duplicate cluster keeps its HIGHEST-scoring member (ties to
-    smallest id) instead of connected_components' arbitrary min-id
-    canonical — the rule production curation actually wants (the cleanest
-    extraction among mirrored pages survives). Clusters here are
-    deterministic synthetic groups over the documents table (the election
-    operator is orthogonal to group provenance — real groups come from
-    minhash_dedup / curate_corpus components); scores are the real
-    whitespace token counts. Every doc with id % 11 == 3 is left unscored
-    to exercise the null-ranks-last rule."""
-    from .curate import elect_representatives
-
-    d = _docs(spark, sf_dir)
-    members = d.select("doc_id", (F.col("doc_id") % 97).alias("component"))
-    scores = (
-        textstats.token_counts(d.filter(F.col("doc_id") % 11 != 3))
-        .select("doc_id",
-                F.col("ws_tokens").cast("double").alias("quality_score"))
-    )
-    return elect_representatives(members, scores)
-
-
-SQL_CURATE_REPRESENTATIVES = """
-    WITH m AS (SELECT doc_id, doc_id % 97 AS component FROM documents),
-    s AS (SELECT doc_id,
-                 len(list_filter(string_split(text, ' '),
-                                 x -> x <> ''))::DOUBLE AS sc
-          FROM documents WHERE doc_id % 11 <> 3),
-    ms AS (SELECT m.doc_id, m.component, s.sc
-           FROM m LEFT JOIN s USING (doc_id)),
-    reps AS (
-        SELECT component, doc_id AS rep_id FROM (
-            SELECT component, doc_id,
-                   row_number() OVER (
-                       PARTITION BY component
-                       ORDER BY (sc IS NULL) ASC, sc DESC, doc_id ASC
-                   ) AS rn
-            FROM ms) WHERE rn = 1)
-    SELECT m.doc_id, m.component, r.rep_id,
-           m.doc_id = r.rep_id AS is_rep
-    FROM m JOIN reps r USING (component)
-"""
-
-
-def q_dedup_semantic(spark, sf_dir):
-    """SemDeDup (similarity.semantic_dedup; Abbas et al. 2023): k-means
-    clustering of embeddings -> intra-cluster cosine near-dup pairs ->
-    connected components -> keep the member farthest from its centroid.
-
-    Oracle device (same family as q_similarity_ivf_topk's exhaustive
-    probe): at k=1 the trained centroid is EXACTLY the global per-dim
-    mean (one Lloyd round converges regardless of seed) and the
-    intra-cluster pair graph degenerates to brute-force all-pairs, so
-    DuckDB replays the centroid, the >=threshold pair graph, the
-    components (recursive CTE) and the min-(rounded-cos, id) election
-    relationally. The k>1 clustered path reuses ivf_index /
-    _bucket_pairs / connected_components, each oracle- or
-    property-gated elsewhere; semantic_dedup's k>1 composition is
-    pytest-gated against brute-force in test_dedup_similarity."""
-    emb = _tbl(spark, sf_dir, "embeddings", spread=True)
-    out = similarity.semantic_dedup(
-        emb, dim=64, k=1, iters=2, threshold=0.35, max_cluster_size=None
-    )
-    return out.select(
-        "vec_id", "component",
-        F.round("centroid_cos", 6).alias("centroid_cos_r"), "keep",
-    )
-
-
-SQL_DEDUP_SEMANTIC = """
-    WITH RECURSIVE v AS (
-        SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    dims AS (
-        SELECT vec_id, generate_subscripts(e, 1) AS pos, unnest(e) AS val
-        FROM v),
-    cent AS (
-        SELECT list(a ORDER BY pos) AS c
-        FROM (SELECT pos, avg(val) AS a FROM dims GROUP BY pos)),
-    vc AS (
-        SELECT vec_id,
-               list_dot_product(e, c)
-               / (sqrt(list_dot_product(e, e))
-                  * sqrt(list_dot_product(c, c))) AS ccos
-        FROM v, cent),
-    dup AS (
-        SELECT a.vec_id AS a, b.vec_id AS b
-        FROM v a JOIN v b ON a.vec_id < b.vec_id
-        WHERE list_dot_product(a.e, b.e)
-              / (sqrt(list_dot_product(a.e, a.e))
-                 * sqrt(list_dot_product(b.e, b.e))) >= 0.35),
-    sym AS (SELECT a, b FROM dup UNION SELECT b, a FROM dup),
-    reach(a, b) AS (
-        SELECT a, b FROM sym
-        UNION
-        SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-    comp AS (
-        SELECT n AS vec_id, least(n, min(r.b)) AS component
-        FROM (SELECT a AS n FROM sym UNION SELECT b FROM sym) nodes
-        LEFT JOIN reach r ON r.a = n
-        GROUP BY n),
-    lab AS (
-        SELECT vc.vec_id,
-               coalesce(comp.component, vc.vec_id)::VARCHAR AS component,
-               round(vc.ccos, 6) AS centroid_cos_r
-        FROM vc LEFT JOIN comp USING (vec_id)),
-    reps AS (
-        SELECT component, vec_id AS rep_id FROM (
-            SELECT component, vec_id,
-                   row_number() OVER (
-                       PARTITION BY component
-                       ORDER BY centroid_cos_r ASC, vec_id ASC) AS rn
-            FROM lab) WHERE rn = 1)
-    SELECT lab.vec_id, lab.component, lab.centroid_cos_r,
-           lab.vec_id = reps.rep_id AS keep
-    FROM lab JOIN reps USING (component)
-"""
-
-
-_DSIR_BUCKETS = 64
-_DSIR_K = 60
-
-
-def q_sample_dsir_topk(spark, sf_dir):
-    """DSIR importance resampling (sampling.dsir_logratios / dsir_topk;
-    Xie et al. 2023, arXiv:2302.03169): hashed-(1,2)-gram bag-of-ngrams
-    models for a target subset (doc_id % 17 == 0 — a deterministic
-    stand-in for the in-domain sample) and the raw corpus, per-doc log
-    importance weight = sum of smoothed bucket log-ratios over feature
-    occurrences, then Gumbel-top-k selection (k=60) with md5-derived
-    noise. The oracle re-derives EVERYTHING relationally — counts,
-    smoothing, per-bucket round-6 log ratios, the occurrence sum, the
-    Gumbel keys, the top-k — so the hash gate covers both corpus passes.
-    Cross-engine float contract: ratios are rounded to 6 by each engine
-    independently (Python math.log vs DuckDB ln agree to ulps; a flip
-    needs a true value ~1e-15 from a rounding boundary), after which
-    both sum identical doubles in identical array order."""
-    d = _docs(spark, sf_dir)
-    # r6: stage the md5 feature hashing ONCE (persisted int arrays, no
-    # text) and feed both the count pass and the scoring pass from it —
-    # the hashing was the dominant per-row cost and ran twice before.
-    staged = sampling.dsir_staged_feats(
-        d, F.pmod("doc_id", F.lit(17)) == 0,
-        n_buckets=_DSIR_BUCKETS).persist()
-    lr = sampling.dsir_logratios(staged=staged, n_buckets=_DSIR_BUCKETS)
-    return sampling.dsir_topk(d, lr, _DSIR_K, staged=staged)
-
-
-def _sql_sample_dsir_topk() -> str:
-    b = _DSIR_BUCKETS
-    return f"""
-        WITH base AS (
-            SELECT doc_id,
-                   list_filter(string_split(lower(text), ' '),
-                               x -> x <> '') AS toks
-            FROM documents),
-        f AS (
-            SELECT doc_id,
-                   list_concat(
-                       list_transform(toks, t ->
-                           ('0x' || substr(md5('u:' || t), 1, 12))::BIGINT
-                           % {b}),
-                       list_transform(range(1, len(toks)), i ->
-                           ('0x' || substr(md5('b:' || toks[i] || ' '
-                                               || toks[i + 1]), 1, 12))
-                           ::BIGINT % {b})
-                   ) AS feats
-            FROM base),
-        x AS (
-            SELECT doc_id % 17 = 0 AS is_t, unnest(feats) AS bkt
-            FROM f),
-        cnt AS (
-            SELECT bkt, count(*)::DOUBLE AS rc,
-                   count(*) FILTER (is_t)::DOUBLE AS tc
-            FROM x GROUP BY bkt),
-        tot AS (
-            SELECT sum(rc) + {b} AS tr, sum(tc) + {b} AS tt FROM cnt),
-        lr AS (
-            SELECT g.bkt,
-                   round(ln((coalesce(c.tc, 0) + 1.0) / t.tt)
-                         - ln((coalesce(c.rc, 0) + 1.0) / t.tr), 6) AS v
-            FROM range(0, {b}) g(bkt)
-            LEFT JOIN cnt c USING (bkt), tot t),
-        lrl AS (SELECT list(v ORDER BY bkt) AS vs FROM lr),
-        s AS (
-            SELECT doc_id, len(feats)::INT AS n_features,
-                   coalesce(list_aggregate(
-                       list_transform(feats, fb -> vs[fb + 1]), 'sum'),
-                       0.0) AS lw
-            FROM f, lrl),
-        keyed AS (
-            SELECT doc_id, n_features, round(lw, 6) AS lw_r,
-                   round(lw - ln(-ln(
-                       (('0x' || substr(md5('dsir-v1:' || doc_id), 1, 12))
-                        ::BIGINT + 0.5) / 281474976710656.0)), 6) AS key_r
-            FROM s)
-        SELECT doc_id, n_features, lw_r, key_r
-        FROM keyed ORDER BY key_r DESC, doc_id LIMIT {_DSIR_K}
-    """
-
-
-def q_kg_scd2_history(spark, sf_dir):
-    """Type-2 SCD attribute history (incremental.scd2_history): the
-    events change log compressed into per-user event_type validity
-    intervals — consecutive identical values collapse, each surviving
-    change opens [effective_from, effective_to) closed by the next one,
-    latest open-ended + flagged current, per-key version numbering,
-    (ts, event_id) tie-break. One exchange: the change-detection lag,
-    the interval-closing lead, and the version row_number all ride the
-    same (key, order) window spec. The oracle replays both window
-    passes and the null-safe change filter exactly."""
-    from . import incremental
-
-    ev = _tbl(spark, sf_dir, "events")
-    return incremental.scd2_history(
-        ev, key_col="user_id", attr_col="event_type",
-        ts_col="ts", tiebreak_col="event_id")
-
-
-def _sql_kg_scd2_history() -> str:
-    return """
-        WITH ordered AS (
-            SELECT user_id, event_type, ts, event_id,
-                   lag(event_type) OVER w AS prev,
-                   row_number() OVER w AS rn
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        changed AS (
-            SELECT user_id, event_type, ts, event_id
-            FROM ordered
-            WHERE rn = 1 OR event_type IS DISTINCT FROM prev)
-        SELECT user_id,
-               event_type AS attr_value,
-               ts AS effective_from,
-               lead(ts) OVER w2 AS effective_to,
-               (row_number() OVER w2)::INT AS version,
-               lead(ts) OVER w2 IS NULL AS is_current
-        FROM changed
-        WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """
-
-
-def q_kg_batch_episodes(spark, sf_dir):
-    """Batch episode sessionization (streaming.batch_episodes — the
-    relational twin of the stateful streaming_episodes operator, same
-    episode definition): per-user maximal event runs with no gap over
-    12 hours, from the events change log. Gaps-and-islands on one
-    per-key exchange (lag + running sum share the window sort), then
-    one (key, island) agg with exact distinct-doc counts. The oracle
-    replays the integer-microsecond gap test (epoch_us vs unix_micros —
-    no float round-trip) and both window passes exactly."""
-    from . import streaming as streaming_mod
-
-    ev = _tbl(spark, sf_dir, "events")
-    return streaming_mod.batch_episodes(
-        ev, key_col="user_id", ts_col="ts", doc_col="event_id",
-        gap="12 hours")
-
-
-def _sql_kg_batch_episodes() -> str:
-    gap_us = 12 * 3600 * 1000 * 1000
-    return f"""
-        WITH brk AS (
-            SELECT user_id, ts, event_id,
-                   CASE WHEN epoch_us(ts)
-                             - epoch_us(lag(ts) OVER w) > {gap_us}
-                        THEN 1 ELSE 0 END AS b
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        isl AS (
-            SELECT user_id, ts, event_id,
-                   sum(b) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS g
-            FROM brk)
-        SELECT user_id,
-               min(ts) AS episode_start,
-               max(ts) AS episode_end,
-               count(*)::INT AS n_events,
-               count(DISTINCT event_id)::INT AS n_docs
-        FROM isl GROUP BY user_id, g
-    """
-
-
-def q_layout_zorder(spark, sf_dir):
-    """Z-order layout key (layout.zorder_key2, the OPTIMIZE ZORDER
-    primitive): Morton interleave of (o_custkey, o_orderkey) low 16
-    bits — the clustering key that makes parquet row-group min/max
-    stats tight on BOTH columns so either-key point lookups skip. The
-    key is a pure shift/and/or codegen expression; the oracle replays
-    the identical 32-term bit arithmetic. (The clustering itself —
-    repartitionByRange + sortWithinPartitions in layout.cluster_zorder
-    — is a physical layout with no row-content signature, so its
-    locality property is pytest-gated in test_layout instead.)"""
-    from . import layout
-
-    o = _tbl(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey", "o_custkey",
-        layout.zorder_key2(
-            F.col("o_custkey"), F.col("o_orderkey"), bits=16
-        ).alias("zkey"),
-    )
-
-
-def _sql_layout_zorder(bits: int = 16) -> str:
-    terms = []
-    for i in range(bits):
-        terms.append(f"(((o_custkey >> {i}) & 1) << {2 * i + 1})")
-        terms.append(f"(((o_orderkey >> {i}) & 1) << {2 * i})")
-    expr = " | ".join(terms)
-    return f"""
-        SELECT o_orderkey, o_custkey, ({expr})::BIGINT AS zkey
-        FROM orders
-    """
-
-
-def q_graph_walks(spark, sf_dir):
-    """DeepWalk random-walk corpus (graphrank.random_walks) over the
-    same deterministic doc-derived link graph the pagerank entry uses
-    (dangling targets present by construction, so truncation is
-    exercised): 2 walks per source node, up to 5 nodes each, every
-    step md5-driven into the sorted neighbor array. The oracle unrolls
-    all four steps as chained CTEs replaying the identical hash, mod,
-    and 1-based list indexing."""
-    from .graphrank import random_walks
-
-    d = _docs(spark, sf_dir, spread=False)
-    edges = d.select(
-        (F.col("doc_id") % 101).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 101).alias("dst"),
-    ).filter(F.col("src") % 10 != 0)
-    return random_walks(edges, walks_per_node=2, walk_len=5)
-
-
-def _sql_graph_walks(walks_per_node: int = 2, walk_len: int = 5,
-                     salt: str = "walk-v1") -> str:
-    steps = []
-    prev = "w"
-    for step in range(walk_len - 1):
-        h = (f"('0x' || substr(md5('{salt}:' "
-             f"|| CAST(start_node AS VARCHAR) || ':' "
-             f"|| CAST(walk_ix AS VARCHAR) || ':{step}'), 1, 12))::BIGINT")
-        steps.append(f"""
-        s{step} AS (
-            SELECT start_node, walk_ix,
-                   CASE WHEN a.nbrs IS NOT NULL
-                        THEN a.nbrs[({h} % len(a.nbrs))::INT + 1]
-                        END AS cur,
-                   CASE WHEN a.nbrs IS NOT NULL
-                        THEN {prev}.walk || ' ' || CAST(
-                            a.nbrs[({h} % len(a.nbrs))::INT + 1]
-                            AS VARCHAR)
-                        ELSE {prev}.walk END AS walk
-            FROM {prev} LEFT JOIN adj a ON a.n = {prev}.cur)""")
-        prev = f"s{step}"
-    return f"""
-        WITH edges AS (
-            SELECT doc_id % 101 AS src, (doc_id * 7 + 3) % 101 AS dst
-            FROM documents WHERE (doc_id % 101) % 10 != 0),
-        adj AS (
-            SELECT src AS n, list_sort(list(DISTINCT dst)) AS nbrs
-            FROM edges GROUP BY src),
-        w AS (
-            SELECT n AS start_node, r.walk_ix::INT AS walk_ix, n AS cur,
-                   CAST(n AS VARCHAR) AS walk
-            FROM adj, range({walks_per_node}) r(walk_ix)),
-        {",".join(steps)}
-        SELECT start_node, walk_ix, walk FROM {prev}
-    """
-
-
-def q_graph_skipgram(spark, sf_dir):
-    """Skip-gram pair extraction (graphrank.skipgram_pairs) composed
-    over the graph_walks corpus: every (center, context) pair within
-    +-2 positions of each walk, counted — the word2vec/GloVe input
-    relation. The pair expansion is ONE nested-HOF projection per walk
-    row (never a self-join); the only exchange is the count agg. The
-    oracle nests the full walks replay and expands pairs with chained
-    laterals over the same clipped window."""
-    from .graphrank import random_walks, skipgram_pairs
-
-    d = _docs(spark, sf_dir, spread=False)
-    edges = d.select(
-        (F.col("doc_id") % 101).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 101).alias("dst"),
-    ).filter(F.col("src") % 10 != 0)
-    return skipgram_pairs(
-        random_walks(edges, walks_per_node=2, walk_len=5), window=2)
-
-
-def _sql_graph_skipgram(window: int = 2) -> str:
-    return f"""
-        WITH walks AS ({_sql_graph_walks()}),
-        toks AS (SELECT string_split(walk, ' ') AS t FROM walks),
-        p AS (
-            SELECT t[u.i + 1]::BIGINT AS center,
-                   t[v.j + 1]::BIGINT AS context
-            FROM toks,
-                 LATERAL unnest(range(len(t))) u(i),
-                 LATERAL unnest(range(greatest(u.i - {window}, 0),
-                                      least(u.i + {window + 1},
-                                            len(t)))) v(j)
-            WHERE v.j != u.i)
-        SELECT center, context, count(*)::INT AS pair_count
-        FROM p GROUP BY 1, 2
-    """
-
-
-def q_kg_hierarchy_rollup(spark, sf_dir):
-    """Ontology rollup (closure.hierarchy_rollup): real NER mention
-    counts per curie aggregated up the ENTRY_ISA hierarchy — every
-    ancestor reports its subtree's distinct weighted nodes and total
-    mention mass (self included), the 'mentions per MeSH subtree'
-    analytic. The oracle rebuilds the closure recursively, adds the
-    depth-0 self rows for every hierarchy node, and replays the
-    mention-count join + rollup agg."""
-    from .closure import hierarchy_rollup
-
-    edges = spark.createDataFrame(ENTRY_ISA, "subj string, obj string")
-    w = (entry_mentions(spark, sf_dir)
-         .groupBy("curie").agg(F.count(F.lit(1)).alias("n")))
-    return hierarchy_rollup(edges, w, node_col="curie", weight_col="n")
-
-
-def _sql_kg_hierarchy_rollup() -> str:
-    vals = ", ".join(f"('{s}', '{o}')" for s, o in ENTRY_ISA)
-    return f"""
-        WITH RECURSIVE e(subj, obj) AS (VALUES {vals}),
-        c AS (
-            SELECT subj AS node, obj AS ancestor FROM e
-            UNION
-            SELECT c.node, e.obj FROM c JOIN e ON c.ancestor = e.subj),
-        cs AS (
-            -- explicit DISTINCT: inside a WITH RECURSIVE clause DuckDB
-            -- does not set-dedupe a plain UNION chain in a non-recursive
-            -- member, so self rows already discovered by c would double
-            SELECT DISTINCT node, ancestor FROM (
-                SELECT node, ancestor FROM c
-                UNION ALL SELECT subj, subj FROM e
-                UNION ALL SELECT obj, obj FROM e)),
-        m AS ({_SQL_MENTIONS}),
-        w AS (SELECT curie, count(*) AS n FROM m GROUP BY curie)
-        SELECT cs.ancestor, count(*)::INT AS n_nodes,
-               sum(w.n)::BIGINT AS total
-        FROM cs JOIN w ON cs.node = w.curie
-        GROUP BY 1
-    """
-
-
-def q_web_crawl_frontier(spark, sf_dir):
-    """Politeness-capped crawl frontier (crawl.frontier_schedule): the
-    doc-derived URL table scored with a deterministic priority, top 5
-    per host with 2 s politeness spacing, via the salted two-phase
-    per-host top-k (hot-host safe). The oracle ranks each host with a
-    single window — equality with the two-phase plan IS the exactness
-    claim of the salted decomposition."""
-    from .crawl import frontier_schedule
-
-    d = _docs(spark, sf_dir, spread=False)
-    site = F.pmod("doc_id", F.lit(11)).cast("string")
-    frontier = d.select(
-        F.concat(F.lit("site-"), site, F.lit(".example")).alias("host"),
-        F.concat(F.lit("https://site-"), site, F.lit(".example/d/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.pmod(F.col("doc_id") * 13, F.lit(97)).alias("priority"),
-    )
-    return frontier_schedule(frontier, k_per_host=5, delay_s=2)
-
-
-def _sql_web_crawl_frontier(k: int = 5, delay_s: int = 2) -> str:
-    return f"""
-        WITH f AS (
-            SELECT 'site-' || (doc_id % 11) || '.example' AS host,
-                   'https://site-' || (doc_id % 11) || '.example/d/'
-                       || doc_id AS url,
-                   (doc_id * 13) % 97 AS priority
-            FROM documents),
-        r AS (
-            SELECT host, url,
-                   row_number() OVER (PARTITION BY host
-                                      ORDER BY priority DESC, url) AS rank
-            FROM f)
-        SELECT host, url, rank::INT AS rank,
-               ((rank - 1) * {delay_s})::BIGINT AS fetch_offset_s
-        FROM r WHERE rank <= {k}
-    """
-
-
-def q_kg_attr_asof(spark, sf_dir):
-    """Point-in-time attribute lookup — the SCD-2 history table IN USE:
-    'what was each user's event_type on Jan 15 / Jan 25?' answered by
-    an as-of join (temporal.asof_join, single-shuffle union+window)
-    against incremental.scd2_history's validity intervals; probes
-    before a user's first change report null. Composes three session
-    operators (history build, asof, the tiling guarantee: greatest
-    effective_from <= t IS the valid version). The oracle nests the
-    full SCD-2 replay and resolves each probe with a max-effective_from
-    join."""
-    from . import incremental
-    from .temporal import asof_join
-
-    ev = _tbl(spark, sf_dir, "events")
-    hist = incremental.scd2_history(
-        ev, key_col="user_id", attr_col="event_type",
-        ts_col="ts", tiebreak_col="event_id")
-    probes = ev.select("user_id").distinct().crossJoin(
-        spark.createDataFrame(
-            [("2024-01-15 00:00:00",), ("2024-01-25 00:00:00",)],
-            "t string"
-        ).select(F.col("t").cast("timestamp_ntz").alias("probe_ts"))
-    )
-    out = asof_join(
-        probes,
-        hist.select("user_id", "effective_from", "attr_value"),
-        ["user_id"], left_ts="probe_ts", right_ts="effective_from",
-        right_value_cols=["attr_value"],
-    )
-    return out.select(
-        "user_id", "probe_ts",
-        F.col("attr_value_asof").alias("attr_value"),
-        F.col("effective_from_asof").alias("valid_from"),
-    )
-
-
-def _sql_kg_attr_asof() -> str:
-    return f"""
-        WITH hist AS ({_sql_kg_scd2_history()}),
-        probes AS (
-            SELECT DISTINCT user_id, t.ts AS probe_ts
-            FROM events, (VALUES (TIMESTAMP '2024-01-15'),
-                                 (TIMESTAMP '2024-01-25')) t(ts)),
-        m AS (
-            SELECT p.user_id, p.probe_ts,
-                   max(h.effective_from) AS valid_from
-            FROM probes p LEFT JOIN hist h
-              ON h.user_id = p.user_id AND h.effective_from <= p.probe_ts
-            GROUP BY 1, 2)
-        SELECT m.user_id, m.probe_ts, h.attr_value, m.valid_from
-        FROM m LEFT JOIN hist h
-          ON h.user_id = m.user_id AND h.effective_from = m.valid_from
-    """
-
-
-def q_table_profile(spark, sf_dir):
-    """Column-level data-quality profile (catalog.profile_table, the
-    dbt/DataHub-style input audit): one scan over orders, one row per
-    column with null count, exact cardinality, and a type-appropriate
-    round-6 range (numeric min/max; string LENGTH min/max — renderings
-    of raw floats/timestamps are not engine-portable, lengths are;
-    timestamp columns report range nulls). The oracle computes each
-    column's row independently and unions — same numbers, different
-    plan, which is the point of the contract."""
-    from .catalog import profile_table
-
-    return profile_table(_tbl(spark, sf_dir, "orders", spread=True))
-
-
-def _sql_table_profile() -> str:
-    def num(c):
-        return (f"SELECT '{c}' AS \"column\", count(*) AS n_rows, "
-                f"count(*) - count({c}) AS n_null, "
-                f"count(DISTINCT {c}) AS n_distinct, "
-                f"round(min({c})::DOUBLE, 6) AS min_d, "
-                f"round(max({c})::DOUBLE, 6) AS max_d FROM orders")
-
-    def strl(c):
-        return (f"SELECT '{c}', count(*), count(*) - count({c}), "
-                f"count(DISTINCT {c}), "
-                f"round(min(length({c}))::DOUBLE, 6), "
-                f"round(max(length({c}))::DOUBLE, 6) FROM orders")
-
-    def other(c):
-        return (f"SELECT '{c}', count(*), count(*) - count({c}), "
-                f"count(DISTINCT {c}), NULL::DOUBLE, NULL::DOUBLE "
-                f"FROM orders")
-
-    return " UNION ALL ".join([
-        num("o_orderkey"), num("o_custkey"), strl("o_orderstatus"),
-        num("o_totalprice"), other("o_orderdate"),
-        strl("o_orderpriority"),
-    ])
-
-
-def q_text_c4_clean(spark, sf_dir):
-    """C4 cleaning recipe (textstats.c4_clean; Raffel et al. 2020): the
-    word-soup corpus is page-ified into three lines — first chunk with a
-    terminal '.', middle chunk with NO terminal punctuation (always
-    dropped), third chunk terminal '!' only on even docs — plus a
-    'lorem ipsum' line on doc_id%17==0 and a '{' code line on
-    doc_id%13==0, so every line rule and both page rules fire. The
-    oracle replays the splice, the terminal-punct regex, the 5-word
-    minimum, and the page gates exactly."""
-    d = _docs(spark, sf_dir)
-    text2 = F.concat(
-        F.concat_ws(
-            "\n",
-            F.concat(F.substring("text", 1, 80), F.lit(".")),
-            F.substring("text", 81, 40),
-            F.concat(
-                F.substring("text", 121, 80),
-                F.when(F.col("doc_id") % 2 == 0, F.lit("!"))
-                .otherwise(F.lit("")),
-            ),
-        ),
-        F.when(F.col("doc_id") % 17 == 0,
-               F.lit("\nlorem ipsum dolor sit amet consectetur."))
-        .otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 13 == 0,
-               F.lit("\nfunction f() { return 1; } end of code."))
-        .otherwise(F.lit("")),
-    )
-    return textstats.c4_clean(
-        d.select("doc_id", text2.alias("text")), min_sentences=2)
-
-
-def _sql_text_c4_clean(min_words: int = 5, min_sentences: int = 2) -> str:
-    return f"""
-        WITH p AS (
-            SELECT doc_id,
-                   substr(text, 1, 80) || '.' || chr(10) ||
-                   substr(text, 81, 40) || chr(10) ||
-                   substr(text, 121, 80) ||
-                   CASE WHEN doc_id % 2 = 0 THEN '!' ELSE '' END ||
-                   CASE WHEN doc_id % 17 = 0 THEN chr(10) ||
-                        'lorem ipsum dolor sit amet consectetur.'
-                        ELSE '' END ||
-                   CASE WHEN doc_id % 13 = 0 THEN chr(10) ||
-                        'function f() {{ return 1; }} end of code.'
-                        ELSE '' END AS t
-            FROM documents),
-        s AS (
-            SELECT doc_id, t, string_split(t, chr(10)) AS lines,
-                   list_filter(string_split(t, chr(10)), ln ->
-                       regexp_matches(ln, '[.!?]["'']?\\s*$')
-                       AND len(list_filter(
-                           regexp_split_to_array(ln, '\\s+'),
-                           w -> w <> '')) >= {min_words}
-                       AND position('{{' IN ln) = 0
-                       AND NOT contains(lower(ln), 'lorem ipsum')
-                   ) AS kept
-            FROM p),
-        c AS (
-            SELECT doc_id, t, lines, kept,
-                   array_to_string(kept, chr(10)) AS text_clean
-            FROM s)
-        SELECT doc_id,
-               len(lines)::INT AS n_lines,
-               len(kept)::INT AS n_kept,
-               len(regexp_extract_all(text_clean, '[.!?]'))::INT
-                   AS n_sentences,
-               (len(regexp_extract_all(text_clean, '[.!?]'))
-                    >= {min_sentences}
-                AND position('{{' IN t) = 0
-                AND NOT contains(lower(t), 'lorem ipsum')) AS keep_page,
-               text_clean
-        FROM c
-    """
-
-
-def q_text_gopher_rules(spark, sf_dir):
-    """Gopher quality rules (textstats.gopher_rules; Rae et al. 2021
-    A1) over the raw documents table with sandbox-scaled thresholds
-    (min 30 words, >= 1 stop hit — the soup corpus carries 'the' in
-    ~78% of docs and 23-90-word lengths, so the word-count and
-    stop-word gates BOTH fire differentially; ~⅓ of docs drop). The
-    oracle replays every metric with identical integer/double
-    arithmetic and the same unrounded threshold comparisons."""
-    return textstats.gopher_rules(
-        _docs(spark, sf_dir), min_words=30, min_stop_hits=1)
-
-
-def _sql_text_gopher_rules(min_words: int = 30,
-                           min_stop_hits: int = 1) -> str:
-    sw = ", ".join(f"'{s}'" for s in textstats.GOPHER_STOPWORDS)
-    return f"""
-        WITH base AS (
-            SELECT doc_id, text,
-                   list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                               x -> x <> '') AS toks,
-                   string_split(text, chr(10)) AS lines,
-                   length(regexp_replace(text,
-                       '[^\\p{{L}}\\p{{N}}_]', '', 'g')) AS word_chars
-            FROM documents),
-        m AS (
-            SELECT doc_id,
-                   len(toks) AS n_words,
-                   word_chars / greatest(len(toks), 1)::DOUBLE AS mean_wl,
-                   (len(string_split(text, '#')) - 1
-                    + len(string_split(text, '...')) - 1)
-                       / greatest(len(toks), 1)::DOUBLE AS sym_r,
-                   len(list_filter(lines, ln ->
-                       regexp_matches(ln, '^\\s*[-*•]')))
-                       / greatest(len(lines), 1)::DOUBLE AS bullet_r,
-                   len(list_filter(lines, ln ->
-                       regexp_matches(ln, '\\.\\.\\.\\s*$')))
-                       / greatest(len(lines), 1)::DOUBLE AS ellipsis_r,
-                   len(list_filter(toks, w ->
-                       regexp_matches(w, '[a-zA-Z]')))
-                       / greatest(len(toks), 1)::DOUBLE AS alpha_r,
-                   len(list_filter([{sw}], s -> list_contains(toks, s)))
-                       AS stop_hits
-            FROM base)
-        SELECT doc_id,
-               n_words::INT AS n_words,
-               round(mean_wl, 6) AS mean_word_len,
-               round(sym_r, 6) AS symbol_ratio,
-               round(bullet_r, 6) AS bullet_ratio,
-               round(ellipsis_r, 6) AS ellipsis_ratio,
-               round(alpha_r, 6) AS alpha_word_ratio,
-               stop_hits::INT AS stop_hits,
-               (n_words BETWEEN {min_words} AND 100000
-                AND mean_wl BETWEEN 3.0 AND 10.0
-                AND sym_r <= 0.1 AND bullet_r <= 0.9
-                AND ellipsis_r <= 0.3 AND alpha_r >= 0.8
-                AND stop_hits >= {min_stop_hits}) AS keep
-        FROM m
-    """
-
-
-def q_text_pii_luhn(spark, sf_dir):
-    """Checksum-verified credit-card audit (textstats.pii_luhn_hits):
-    docs get residue-keyed injections — a Luhn-VALID card (doc_id%5==0,
-    spaced groups), a Luhn-INVALID same-shape number (doc_id%7==0,
-    dashed groups), and a 13-digit bare run (doc_id%11==0, valid) — so
-    candidate extraction, separator stripping, the length band, the
-    checksum fold, and last-4 retention all fire differentially. The
-    oracle replays the maximal-run regex (RE2-safe, no lookarounds)
-    and the indexed Luhn fold with DuckDB's 1-based lambdas."""
-    d = _docs(spark, sf_dir)
-    text2 = F.concat(
-        F.col("text"),
-        F.when(F.col("doc_id") % 5 == 0,
-               F.lit(" card 4111 1111 1111 1111 ok")).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 7 == 0,
-               F.lit(" ref 4111-1111-1111-1112 bad")).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 11 == 0,
-               F.lit(" acct 4222222222222 end")).otherwise(F.lit("")),
-    )
-    return textstats.pii_luhn_hits(d.select("doc_id", text2.alias("text")))
-
-
-def _sql_text_pii_luhn() -> str:
-    return r"""
-        WITH p AS (
-            SELECT doc_id,
-                   text ||
-                   CASE WHEN doc_id % 5 = 0
-                        THEN ' card 4111 1111 1111 1111 ok' ELSE '' END ||
-                   CASE WHEN doc_id % 7 = 0
-                        THEN ' ref 4111-1111-1111-1112 bad' ELSE '' END ||
-                   CASE WHEN doc_id % 11 = 0
-                        THEN ' acct 4222222222222 end' ELSE '' END AS t
-            FROM documents),
-        c AS (
-            SELECT doc_id,
-                   list_filter(
-                       list_transform(
-                           regexp_extract_all(t, '\d(?:[ -]?\d)*'),
-                           x -> regexp_replace(x, '[ -]', '', 'g')),
-                       x -> len(x) BETWEEN 13 AND 19) AS cands
-            FROM p),
-        v AS (
-            SELECT doc_id, cands,
-                   list_filter(cands, x ->
-                       list_aggregate(
-                           list_transform(
-                               string_split(reverse(x), ''),
-                               (d, i) -> CASE WHEN i % 2 = 0
-                                   THEN d::INT * 2 - CASE WHEN d::INT * 2 > 9
-                                                          THEN 9 ELSE 0 END
-                                   ELSE d::INT END),
-                           'sum') % 10 = 0) AS valid
-            FROM c)
-        SELECT doc_id,
-               len(cands)::INT AS n_candidates,
-               len(valid)::INT AS n_valid,
-               coalesce(array_to_string(
-                   list_sort(list_distinct(
-                       list_transform(valid, x -> x[-4:]))), ','), '')
-                   AS last4s
-        FROM v
-    """
-
-
-def q_events_rolling_counts(spark, sf_dir):
-    """Trailing-window rate features (temporal.rolling_counts): per
-    user, events and value mass in the trailing 6 hours inclusive —
-    burst detection over the at-rest log, the batch twin of the
-    streaming tumbling rates. RANGE frame over integer epoch seconds,
-    so equal timestamps are full peers and the result is independent
-    of within-timestamp order; DuckDB replays the identical frame."""
-    from .temporal import rolling_counts
-
-    ev = _tbl(spark, sf_dir, "events")
-    return rolling_counts(ev, "user_id", "ts", 6 * 3600, "value").select(
-        "event_id", "user_id", "ts", "n_window", "sum_window")
-
-
-def _sql_events_rolling_counts(window_s: int = 6 * 3600) -> str:
-    return f"""
-        SELECT event_id, user_id, ts,
-               (count(*) OVER w)::INT AS n_window,
-               round(sum(value) OVER w, 6) AS sum_window
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY epoch(ts)::BIGINT
-                     RANGE BETWEEN {window_s} PRECEDING AND CURRENT ROW)
-    """
-
-
-def q_table_histogram(spark, sf_dir):
-    """Equi-width histogram (catalog.column_histogram) of
-    orders.o_totalprice in 8 bins — the profiler's shape drill-down:
-    observed-range width, right-closed last bin, nulls excluded, empty
-    bins absent. The oracle replays the two-scan recipe (global
-    min/max, then floor-binning) with identical IEEE division."""
-    from .catalog import column_histogram
-
-    return column_histogram(
-        _tbl(spark, sf_dir, "orders"),
-        "o_totalprice", bins=8)
-
-
-def _sql_table_histogram(bins: int = 8) -> str:
-    return f"""
-        WITH v AS (
-            SELECT o_totalprice::DOUBLE AS v FROM orders
-            WHERE o_totalprice IS NOT NULL),
-        mm AS (SELECT min(v) AS lo, max(v) AS hi FROM v),
-        b AS (
-            SELECT CASE WHEN mm.hi = mm.lo THEN 0
-                        ELSE least(floor((v.v - mm.lo)
-                                         / ((mm.hi - mm.lo) / {bins})),
-                                   {bins} - 1) END::INT AS bin,
-                   mm.lo AS lo0, mm.hi AS hi0
-            FROM v, mm)
-        SELECT bin,
-               round(lo0 + bin * ((hi0 - lo0) / {bins}), 6) AS lo,
-               round(lo0 + (bin + 1) * ((hi0 - lo0) / {bins}), 6) AS hi,
-               count(*)::BIGINT AS n
-        FROM b GROUP BY bin, lo0, hi0
-    """
-
-
-def q_text_collocations(spark, sf_dir):
-    """PMI collocations (textstats.collocations; Church & Hanks 1990):
-    top-50 bigrams by round-6 pointwise mutual information with a
-    min-count-3 floor over the raw documents — phrase-mining for
-    tokenizer vocab / entity-name candidates. The Spark plan feeds both
-    count tables from ONE union-encoded explode; the oracle counts
-    unigrams and bigrams separately — same numbers from a different
-    plan, deterministic (pmi desc, w1, w2) tie-break on both sides."""
-    return textstats.collocations(
-        _docs(spark, sf_dir), k=50, min_count=3)
-
-
-def _sql_text_collocations(k: int = 50, min_count: int = 3) -> str:
-    return f"""
-        WITH toks AS (
-            SELECT list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                               x -> x <> '') AS tk
-            FROM documents),
-        uni AS (
-            SELECT u.t AS w, count(*) AS cu
-            FROM toks, unnest(tk) u(t) GROUP BY 1),
-        big AS (
-            SELECT tk[r.i + 1] AS w1, tk[r.i + 2] AS w2, count(*) AS cb
-            FROM toks, unnest(range(len(tk) - 1)) r(i)
-            GROUP BY 1, 2),
-        n AS (SELECT sum(cu)::DOUBLE AS n FROM uni),
-        m AS (SELECT sum(cb)::DOUBLE AS m FROM big)
-        SELECT b.w1, b.w2, b.cb::INT AS n_pair,
-               round(log2((b.cb / m.m)
-                          / ((u1.cu / n.n) * (u2.cu / n.n))), 6) AS pmi_r
-        FROM big b
-        JOIN uni u1 ON u1.w = b.w1
-        JOIN uni u2 ON u2.w = b.w2, n, m
-        WHERE b.cb >= {min_count}
-        ORDER BY pmi_r DESC, b.w1, b.w2 LIMIT {k}
-    """
-
-
-def q_sample_leakage_safe(spark, sf_dir):
-    """Contamination-free split (sampling.leakage_safe_split composed
-    over dedup.exact_dedup): docs with residue < 2 get a shared
-    per-(doc_id%50) text so real duplicate groups exist; the split then
-    hashes the CANONICAL id, putting every group member in the same
-    split by construction (memorization can't leak into held-out
-    metrics). 90/5/5 weights so val/test are populated at gate scale.
-    The oracle replays the text override, the md5-group min-id dedup,
-    and the byte-identical hash-threshold CASE."""
-    d = _docs(spark, sf_dir, spread=False)
-    text2 = F.when(
-        F.col("doc_id") % 10 < 2,
-        F.concat(F.lit("shared boilerplate text number "),
-                 F.pmod("doc_id", F.lit(50)).cast("string")),
-    ).otherwise(F.col("text"))
-    base = d.select("doc_id", text2.alias("text"))
-    groups = dedup.exact_dedup(base)
-    w = {"train": 0.9, "val": 0.05, "test": 0.05}
-    return sampling.leakage_safe_split(
-        groups, "canonical_id", "doc_id", weights=w
-    ).select("doc_id", "canonical_id", "split")
-
-
-def _sql_sample_leakage_safe() -> str:
-    w = {"train": 0.9, "val": 0.05, "test": 0.05}
-    case = sampling.sql_hash_split("canonical_id", weights=w)
-    return f"""
-        WITH base AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % 10 < 2
-                        THEN 'shared boilerplate text number '
-                             || (doc_id % 50)
-                        ELSE text END AS text
-            FROM documents),
-        g AS (SELECT doc_id, md5(text) AS h FROM base),
-        rep AS (SELECT h, min(doc_id) AS canonical_id FROM g GROUP BY h)
-        SELECT g.doc_id, rep.canonical_id, {case} AS split
-        FROM g JOIN rep USING (h)
-    """
-
-
-def q_text_encoding_audit(spark, sf_dir):
-    """Encoding-damage audit (textstats.encoding_audit): the pure-ASCII
-    soup corpus gets residue-keyed damage — two U+FFFD replacement
-    chars on doc_id%19==0, an accented ' café' on %23==0 (non-ASCII
-    but LEGIT: stays ok), a C0 control char on %29==0 — so the three
-    counters and the ok-flag boundary all fire differentially. The
-    oracle injects via chr() codepoints and replays the char-class
-    regex deltas exactly."""
-    d = _docs(spark, sf_dir)
-    text2 = F.concat(
-        F.col("text"),
-        F.when(F.col("doc_id") % 19 == 0,
-               F.lit("��")).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 23 == 0,
-               F.lit(" café")).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 29 == 0,
-               F.lit(chr(1))).otherwise(F.lit("")),
-    )
-    return textstats.encoding_audit(d.select("doc_id", text2.alias("text")))
-
-
-def _sql_text_encoding_audit(max_nonascii_r: float = 0.5,
-                             max_bad: int = 0) -> str:
-    return f"""
-        WITH p AS (
-            SELECT doc_id,
-                   text ||
-                   CASE WHEN doc_id % 19 = 0
-                        THEN chr(65533) || chr(65533) ELSE '' END ||
-                   CASE WHEN doc_id % 23 = 0
-                        THEN ' caf' || chr(233) ELSE '' END ||
-                   CASE WHEN doc_id % 29 = 0
-                        THEN chr(1) ELSE '' END AS t
-            FROM p0),
-        m AS (
-            SELECT doc_id, length(t) AS n,
-                   length(t) - length(regexp_replace(
-                       t, '[^\\x01-\\x7F]', '', 'g')) AS nonascii,
-                   length(t) - length(regexp_replace(
-                       t, '[\\x01-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]',
-                       '', 'g')) AS ctrl,
-                   length(t) - length(replace(t, chr(65533), ''))
-                       AS repl
-            FROM p)
-        SELECT doc_id, n::INT AS n_chars,
-               round(nonascii / greatest(n, 1)::DOUBLE, 6) AS nonascii_r,
-               ctrl::INT AS n_control,
-               repl::INT AS n_replacement,
-               (ctrl + repl <= {max_bad}
-                AND nonascii / greatest(n, 1)::DOUBLE
-                    <= {max_nonascii_r}) AS ok
-        FROM m
-    """.replace("FROM p0", "FROM documents")
-
-
-def q_graph_degree_profile(spark, sf_dir):
-    """Degree-distribution audit (graphrank.degree_profile) over a
-    doc-derived multigraph (two generator rules per doc so out-degrees
-    spread): per-degree node counts + the log-log least-squares slope
-    carried on every row — the power-law sanity read a KG build checks
-    before trusting its extractor. The oracle replays the two-level
-    agg and the closed-form slope with identical double arithmetic."""
-    from .graphrank import degree_profile
-
-    d = _docs(spark, sf_dir, spread=False)
-    edges = d.select(
-        (F.col("doc_id") % 97).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 101).alias("dst"),
-    ).union(d.filter(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") % 31).alias("src"),
-        ((F.col("doc_id") * 11 + 5) % 101).alias("dst"),
-    ))
-    return degree_profile(edges)
-
-
-def _sql_graph_degree_profile() -> str:
-    return """
-        WITH e AS (
-            SELECT doc_id % 97 AS src, (doc_id * 7 + 3) % 101 AS dst
-            FROM documents
-            UNION ALL
-            SELECT doc_id % 31 AS src, (doc_id * 11 + 5) % 101 AS dst
-            FROM documents WHERE doc_id % 3 = 0),
-        deg AS (SELECT src, count(*) AS degree FROM e GROUP BY src),
-        hist AS (
-            SELECT degree, count(*)::BIGINT AS n_nodes
-            FROM deg GROUP BY degree),
-        pts AS (
-            SELECT degree, n_nodes,
-                   log2(degree::DOUBLE) AS x,
-                   log2(n_nodes::DOUBLE) AS y
-            FROM hist),
-        s AS (
-            SELECT count(*)::DOUBLE AS n, sum(x) AS sx, sum(y) AS sy,
-                   sum(x * y) AS sxy, sum(x * x) AS sxx
-            FROM pts)
-        SELECT pts.degree::INT AS degree, pts.n_nodes,
-               round(CASE WHEN s.n * s.sxx - s.sx * s.sx != 0
-                          THEN (s.n * s.sxy - s.sx * s.sy)
-                               / (s.n * s.sxx - s.sx * s.sx)
-                          ELSE 0.0 END, 6) AS slope_r
-        FROM pts, s
-    """
-
-
-def q_kg_edge_diff(spark, sf_dir):
-    """Edge snapshot diff (incremental.edge_diff): two counted edge
-    relations derived from the documents table under DIFFERENT residue
-    exclusions (%17 vs %13 — so some edges lose all support on one
-    side, some change count, some hold), classified
-    added/removed/changed/unchanged per (subj, pred, obj) — what a
-    recurring KG build audits between compaction versions. The oracle
-    replays both snapshot aggs and the presence-flag full-outer CASE."""
-    from .incremental import edge_diff
-
-    d = _docs(spark, sf_dir, spread=False)
-
-    def snap(excl):
-        return (
-            d.filter(F.col("doc_id") % excl != 0)
-            .select(
-                F.pmod("doc_id", F.lit(41)).cast("string").alias("subj"),
-                F.lit("occurs_with").alias("pred"),
-                F.pmod(F.col("doc_id") * 3, F.lit(43)).cast("string")
-                .alias("obj"),
-            )
-            .groupBy("subj", "pred", "obj")
-            .agg(F.count(F.lit(1)).alias("count"))
-        )
-
-    return edge_diff(snap(17), snap(13))
-
-
-def _sql_kg_edge_diff() -> str:
-    def snap(excl):
-        return f"""
-            SELECT (doc_id % 41)::VARCHAR AS subj,
-                   'occurs_with' AS pred,
-                   ((doc_id * 3) % 43)::VARCHAR AS obj,
-                   count(*) AS cnt
-            FROM documents WHERE doc_id % {excl} != 0
-            GROUP BY 1, 2, 3"""
-
-    return f"""
-        WITH o AS ({snap(17)}), n AS ({snap(13)}),
-        j AS (
-            SELECT coalesce(o.subj, n.subj) AS subj,
-                   coalesce(o.pred, n.pred) AS pred,
-                   coalesce(o.obj, n.obj) AS obj,
-                   o.cnt AS old_count, n.cnt AS new_count,
-                   o.subj IS NOT NULL AS in_old,
-                   n.subj IS NOT NULL AS in_new
-            FROM o FULL OUTER JOIN n
-              ON o.subj = n.subj AND o.pred = n.pred AND o.obj = n.obj)
-        SELECT subj, pred, obj, old_count, new_count,
-               CASE WHEN NOT in_old THEN 'added'
-                    WHEN NOT in_new THEN 'removed'
-                    WHEN old_count IS DISTINCT FROM new_count
-                         THEN 'changed'
-                    ELSE 'unchanged' END AS status
-        FROM j
-    """
-
-
-def q_web_bloom_seen(spark, sf_dir):
-    """Bloom seen-set (crawl.bloom_build + bloom_probe): the %3!=0 doc
-    urls build the filter (m=2^16, k=4), then ALL doc urls probe it —
-    seen urls must flag (no false negatives), unseen flag only at the
-    design fp rate, so the output differs from plain membership by at
-    most a handful of engine-identical false positives. The oracle
-    rebuilds every bit (md5-48 mod m, 1<<pos, bit_or per word) and
-    replays the all-k-bits-set probe."""
-    from .crawl import bloom_build, bloom_probe
-
-    d = _docs(spark, sf_dir, spread=False)
-    urls = d.select(
-        F.concat(F.lit("https://site-"),
-                 F.pmod("doc_id", F.lit(7)).cast("string"),
-                 F.lit(".example/d/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        "doc_id",
-    )
-    seen = urls.filter(F.col("doc_id") % 3 != 0)
-    bloom = bloom_build(seen, m_bits=1 << 16, k_hashes=4)
-    return bloom_probe(urls, bloom, m_bits=1 << 16, k_hashes=4).select(
-        "doc_id", "url", "maybe_seen")
-
-
-def _sql_web_bloom_seen(m_bits: int = 1 << 16, k: int = 4,
-                        salt: str = "bloom-v1") -> str:
-    return f"""
-        WITH u AS (
-            SELECT doc_id,
-                   'https://site-' || (doc_id % 7) || '.example/d/'
-                       || doc_id AS url
-            FROM documents),
-        probes AS (
-            SELECT u.doc_id, u.url, i.i,
-                   ('0x' || substr(md5('{salt}:' || i.i || ':' || u.url),
-                                   1, 12))::BIGINT % {m_bits} AS h
-            FROM u, range({k}) i(i)),
-        bloom AS (
-            SELECT h // 32 AS word_idx,
-                   bit_or(CAST(1 AS BIGINT) << (h % 32)::INT) AS bits
-            FROM probes WHERE doc_id % 3 != 0
-            GROUP BY 1),
-        hit AS (
-            SELECT p.doc_id, p.url,
-                   min(CASE WHEN coalesce(b.bits, 0)
-                                 & (CAST(1 AS BIGINT) << (p.h % 32)::INT)
-                                 != 0
-                            THEN 1 ELSE 0 END) = 1 AS maybe_seen
-            FROM probes p LEFT JOIN bloom b ON b.word_idx = p.h // 32
-            GROUP BY 1, 2)
-        SELECT doc_id, url, maybe_seen FROM hit
-    """
-
-
-def q_web_hll_cardinality(spark, sf_dir):
-    """HyperLogLog cardinality (crawl.hll_registers + hll_estimate)
-    over per-doc urls replicated x3 with residue-keyed dups (so exact
-    distinct < row count and the sketch has real work): one row with
-    register usage, the corrected estimate, and the exact distinct for
-    the error read. The oracle rebuilds every register (top-p bucket,
-    floor-log2 rho) and replays the harmonic estimate + small-range
-    correction with identical doubles."""
-    from .crawl import hll_estimate, hll_registers
-
-    d = _docs(spark, sf_dir, spread=False)
-    reps = spark.range(3).select(F.col("id").alias("rep"))
-    urls = d.crossJoin(F.broadcast(reps)).select(
-        F.concat(F.lit("https://h.example/"),
-                 F.pmod(F.col("doc_id") * 7 + F.col("rep") * 131,
-                        F.lit(1201)).cast("string")).alias("url"))
-    est = hll_estimate(hll_registers(urls))
-    exact = urls.agg(F.count_distinct("url").alias("exact_distinct"))
-    return est.crossJoin(exact)
-
-
-def _sql_web_hll_cardinality(p: int = 12, salt: str = "hll-v1") -> str:
-    m = 1 << p
-    sb = 48 - p
-    alpha = 0.7213 / (1 + 1.079 / m)
-    return f"""
-        WITH u AS (
-            SELECT 'https://h.example/' ||
-                   ((doc_id * 7 + r.rep * 131) % 1201) AS url
-            FROM documents, range(3) r(rep)),
-        hsh AS (
-            SELECT ('0x' || substr(md5('{salt}:' || url), 1, 12))::BIGINT
-                   AS h
-            FROM u),
-        reg AS (
-            SELECT (h // {1 << sb})::INT AS bucket,
-                   max(CASE WHEN h % {1 << sb} = 0 THEN {sb + 1}
-                            ELSE {sb} - floor(log2((h % {1 << sb})
-                                                   ::DOUBLE))::INT
-                       END) AS max_rho
-            FROM hsh GROUP BY 1),
-        agg AS (
-            SELECT count(*) AS used,
-                   sum(pow(2.0, -max_rho)) AS s
-            FROM reg),
-        est AS (
-            SELECT used, {m} - used AS empty,
-                   {alpha!r}::DOUBLE * {m} * {m}
-                       / (s + ({m} - used)) AS raw
-            FROM agg)
-        SELECT used::INT AS n_buckets_used,
-               empty::INT AS n_empty,
-               round(CASE WHEN raw <= 2.5 * {m} AND empty > 0
-                          THEN {float(m)!r} * ln({float(m)!r} / empty)
-                          ELSE raw END, 4) AS estimate_r,
-               (SELECT count(DISTINCT url) FROM u) AS exact_distinct
-        FROM est
-    """
-
-
-def q_web_cms_counts(spark, sf_dir):
-    """Count-Min frequency sketch (crawl.cms_build + cms_query): doc
-    urls folded to 701 distinct keys with skewed multiplicity (residue
-    square map), sketched at width 2^14 x depth 4, then every distinct
-    key point-queried with its true count alongside — est >= true
-    always (never undercounts), equal in the collision-free regime.
-    The oracle rebuilds all counters and replays the min-over-depth
-    query."""
-    from .crawl import cms_build, cms_query
-
-    d = _docs(spark, sf_dir, spread=False)
-    urls = d.select(
-        F.concat(F.lit("https://c.example/"),
-                 F.pmod(F.col("doc_id") * F.col("doc_id"), F.lit(701))
-                 .cast("string")).alias("url"))
-    cms = cms_build(urls)
-    truth = urls.groupBy("url").agg(
-        F.count(F.lit(1)).cast("long").alias("true_count"))
-    return cms_query(truth, cms)
-
-
-def _sql_web_cms_counts(width: int = 1 << 14, depth: int = 4,
-                        salt: str = "cms-v1") -> str:
-    return f"""
-        WITH u AS (
-            SELECT 'https://c.example/' || ((doc_id * doc_id) % 701)
-                   AS url
-            FROM documents),
-        probes AS (
-            SELECT url, i.i AS row_idx,
-                   ('0x' || substr(md5('{salt}:' || i.i || ':' || url),
-                                   1, 12))::BIGINT % {width} AS bucket
-            FROM u, range({depth}) i(i)),
-        cms AS (
-            SELECT row_idx, bucket, count(*)::BIGINT AS n
-            FROM probes GROUP BY 1, 2),
-        truth AS (
-            SELECT url, count(*)::BIGINT AS true_count
-            FROM u GROUP BY 1),
-        est AS (
-            SELECT p.url, min(coalesce(c.n, 0))::BIGINT AS est_count
-            FROM (SELECT DISTINCT * FROM probes) p
-            LEFT JOIN cms c USING (row_idx, bucket)
-            GROUP BY 1)
-        SELECT t.url, t.true_count, e.est_count
-        FROM truth t LEFT JOIN est e USING (url)
-    """
-
-
-def q_kg_key_skew(spark, sf_dir):
-    """Join-key skew advisor (skew.key_skew_profile): the real NER
-    mention stream profiled on its curie key — top-10 heaviest
-    entities with row share and the salt flag at n_partitions=32 (the
-    'Disease'-at-80k-mentions read the salted operators in skew.py
-    exist for, taken BEFORE the job instead of after the straggler).
-    The oracle replays the count, share, threshold, and (count desc,
-    key) rank."""
-    from .skew import key_skew_profile
-
-    m = entry_mentions(spark, sf_dir)
-    return key_skew_profile(m, ["curie"], top_k=10, n_partitions=32)
-
-
-def _sql_kg_key_skew(top_k: int = 10, n_partitions: int = 32) -> str:
-    return f"""
-        WITH m AS ({_SQL_MENTIONS}),
-        c AS (SELECT curie, count(*)::BIGINT AS n_rows
-              FROM m GROUP BY 1),
-        t AS (SELECT sum(n_rows)::DOUBLE AS t FROM c),
-        r AS (
-            SELECT row_number() OVER (ORDER BY n_rows DESC, curie)::INT
-                       AS rank,
-                   curie, n_rows,
-                   round(n_rows / t.t, 6) AS share_r,
-                   n_rows / t.t > 1.0 / {n_partitions}
-                       AS salt_recommended
-            FROM c, t)
-        SELECT rank, curie, n_rows, share_r, salt_recommended
-        FROM r WHERE rank <= {top_k}
-    """
-
-
-def q_web_kmv_overlap(spark, sf_dir):
-    """KMV overlap estimation (crawl.kmv_sketch + kmv_estimate): two
-    doc-derived URL sets with an engineered overlap window (residues
-    [0,700) vs [350,1050) of a 1201-cycle) sketched at k=256, the
-    union/Jaccard/intersection estimates returned with the exact values
-    alongside for the error read. The oracle rebuilds both bottom-k
-    sketches from the same md5-48 space and replays all three
-    estimators."""
-    from .crawl import kmv_estimate, kmv_sketch
-
-    d = _docs(spark, sf_dir, spread=False)
-    key = F.pmod(F.col("doc_id") * 7, F.lit(1201))
-
-    def side(lo, hi):
-        return d.filter((key >= lo) & (key < hi)).select(
-            F.concat(F.lit("https://k.example/"),
-                     key.cast("string")).alias("url"))
-
-    a, b = side(0, 700), side(350, 1050)
-    est = kmv_estimate(kmv_sketch(a), kmv_sketch(b))
-    exact = (
-        a.select("url").withColumn("_a", F.lit(1))
-        .join(b.select("url").withColumn("_b", F.lit(1)), "url",
-              "full_outer")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("exact_union"),
-            F.sum((F.col("_a").isNotNull()
-                   & F.col("_b").isNotNull()).cast("long"))
-            .alias("exact_intersect"),
-        )
-    )
-    return est.crossJoin(exact)
-
-
-def _sql_web_kmv_overlap(k: int = 256, salt: str = "kmv-v1") -> str:
-    space = float(1 << 48)
-
-    def sk(lo, hi, name):
-        return f"""
-        {name} AS (
-            SELECT DISTINCT ('0x' || substr(md5('{salt}:' ||
-                'https://k.example/' || r), 1, 12))::BIGINT AS hv
-            FROM (SELECT DISTINCT (doc_id * 7) % 1201 AS r
-                  FROM documents
-                  WHERE (doc_id * 7) % 1201 >= {lo}
-                    AND (doc_id * 7) % 1201 < {hi})
-            ORDER BY hv LIMIT {k})"""
-
-    return f"""
-        WITH {sk(0, 700, "a")}, {sk(350, 1050, "b")},
-        merged AS (
-            SELECT hv FROM (SELECT hv FROM a UNION SELECT hv FROM b)
-            ORDER BY hv LIMIT {k}),
-        agg AS (
-            SELECT max(hv) AS kth, count(*) AS n FROM merged),
-        sh AS (
-            SELECT count(*) AS s FROM merged
-            WHERE hv IN (SELECT hv FROM a)
-              AND hv IN (SELECT hv FROM b)),
-        ue AS (
-            SELECT CASE WHEN agg.n < {k} THEN agg.n::DOUBLE
-                        ELSE {space!r} * ({k} - 1) / agg.kth END AS u,
-                   agg.n AS n, sh.s AS s
-            FROM agg, sh),
-        ex AS (
-            SELECT count(*)::BIGINT AS exact_union,
-                   sum((a2.r IS NOT NULL AND b2.r IS NOT NULL)::INT)
-                       ::BIGINT AS exact_intersect
-            FROM (SELECT DISTINCT (doc_id * 7) % 1201 AS r
-                  FROM documents WHERE (doc_id * 7) % 1201 < 700) a2
-            FULL OUTER JOIN
-                 (SELECT DISTINCT (doc_id * 7) % 1201 AS r
-                  FROM documents WHERE (doc_id * 7) % 1201 >= 350
-                    AND (doc_id * 7) % 1201 < 1050) b2
-              ON a2.r = b2.r)
-        SELECT round(ue.u, 4) AS union_est_r,
-               round(ue.s / ue.n::DOUBLE, 6) AS jaccard_r,
-               round(ue.s / ue.n::DOUBLE * ue.u, 4) AS intersect_est_r,
-               ex.exact_union, ex.exact_intersect
-        FROM ue, ex
-    """
-
-
-def q_sample_shard_balance(spark, sf_dir):
-    """Shard-balance audit (sampling.shard_balance) of the
-    deterministic shard assignment the pack/shuffle writers use: docs
-    hashed into 16 range shards, per-shard counts + share + the Gini
-    of the size distribution on every row (hash sharding should read
-    near 0; a drifting Gini is the layout regression tripwire). The
-    oracle replays the count agg, the sorted-cumulative Gini closed
-    form, and the share arithmetic."""
-    from .sampling import hash_hex, shard_balance, _range_shard
-
-    d = _docs(spark, sf_dir, spread=False)
-    sharded = d.select(
-        _range_shard(hash_hex("doc_id", "shard-v1"), 16).alias("shard"))
-    return shard_balance(sharded)
-
-
-def _sql_sample_shard_balance(n_shards: int = 16) -> str:
-    thrs = sampling.shard_thresholds(n_shards)
-    h = sampling.sql_hash_hex("doc_id", "shard-v1")
-    case = "CASE " + " ".join(
-        f"WHEN {h} < '{t}' THEN {i}" for i, t in enumerate(thrs)
-    ) + f" ELSE {n_shards - 1} END"
-    return f"""
-        WITH s AS (SELECT {case} AS shard FROM documents),
-        sizes AS (SELECT shard, count(*)::BIGINT AS n_rows
-                  FROM s GROUP BY 1),
-        ranked AS (
-            SELECT shard, n_rows,
-                   row_number() OVER (ORDER BY n_rows, shard) AS i
-            FROM sizes),
-        g AS (
-            SELECT count(*)::DOUBLE AS n, sum(n_rows)::DOUBLE AS t,
-                   sum(i * n_rows)::DOUBLE AS iw
-            FROM ranked)
-        SELECT sizes.shard, sizes.n_rows,
-               round(sizes.n_rows / g.t, 6) AS share_r,
-               round(2.0 * g.iw / (g.n * g.t) - (g.n + 1) / g.n, 6)
-                   AS gini_r
-        FROM sizes, g
-    """
-
-
-def q_graph_ppr(spark, sf_dir):
-    """Personalized PageRank (graphrank.personalized_pagerank;
-    Haveliwala 2002) over the shared pagerank link graph with seed set
-    {1, 2, 3}: ranks measure relatedness to the seeds (global hubs no
-    longer dominate), dangling mass returns to the seeds. 6 iterations
-    at damping 0.85; the oracle unrolls the identical recurrence as
-    MATERIALIZED CTEs (the same 2^k-inlining trap the pagerank oracle
-    documents)."""
-    from .graphrank import personalized_pagerank
-
-    d = _docs(spark, sf_dir, spread=False)
-    edges = d.select(
-        (F.col("doc_id") % 101).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 101).alias("dst"),
-    ).filter(F.col("src") % 10 != 0)
-    seeds = spark.createDataFrame([(1,), (2,), (3,)], "node long")
-    out = personalized_pagerank(edges, seeds, iterations=6)
-    return out.select("node", F.round("rank", 8).alias("rank_r"))
-
-
-def _sql_graph_ppr(iterations: int = 6, damping: float = 0.85) -> str:
-    its = []
-    for k in range(1, iterations + 1):
-        its.append(f"""
-        it{k} AS MATERIALIZED (
-          SELECT n.node,
-                 (1-{damping}) * n.tele + {damping}*(
-                     coalesce(ct.contrib, 0) + dm.mass * n.tele) AS r
-          FROM nodes n
-          CROSS JOIN (SELECT coalesce(sum(p.r), 0) AS mass FROM it{k-1} p
-                      WHERE p.node NOT IN (SELECT src FROM edges)) dm
-          LEFT JOIN (SELECT e.dst AS node, sum(p.r/od.deg) AS contrib
-                     FROM it{k-1} p JOIN edges e ON p.node = e.src
-                     JOIN outdeg od ON od.src = p.node
-                     GROUP BY e.dst) ct USING (node)
-        )""")
-    return f"""
-    WITH edges AS (
-        SELECT DISTINCT doc_id % 101 AS src, (doc_id*7 + 3) % 101 AS dst
-        FROM documents WHERE (doc_id % 101) % 10 <> 0
-    ),
-    nodes AS (
-        SELECT node,
-               CASE WHEN node IN (1, 2, 3) THEN 1.0/3 ELSE 0.0 END
-                   AS tele
-        FROM (SELECT DISTINCT node FROM
-              (SELECT src AS node FROM edges
-               UNION SELECT dst FROM edges))),
-    outdeg AS (SELECT src, count(*)::DOUBLE AS deg FROM edges GROUP BY src),
-    it0 AS (SELECT node, tele AS r FROM nodes),
-    {",".join(its)}
-    SELECT node, round(r, 8) AS rank_r FROM it{iterations}
-    """
-
-
-def q_sample_ccnet_buckets(spark, sf_dir):
-    """CCNet head/middle/tail partitioning (sampling.perplexity_buckets;
-    Wenzek et al. 2020, arXiv:1911.00359): per-language thirds by the
-    unigram-surprisal perplexity proxy — histogram-quantile thresholds
-    (dimension-sized agg + broadcast-back comparison), never a
-    per-language sort, so the 'en is most of the web' stratum skew costs
-    nothing. The oracle replays the surprisal model, the round-2 score,
-    the per-lang cumulative histogram, the two thresholds, and the
-    tie-inclusive assignment exactly; the 1/3 and 1/3+1/3 fraction
-    literals are spelled identically on both sides so the IEEE doubles
-    agree bit-for-bit."""
-    d = _docs(spark, sf_dir)
-    surp = textstats.unigram_surprisal(d)
-    scored = surp.join(d.select("doc_id", "lang"), "doc_id")
-    return sampling.perplexity_buckets(
-        scored, "mean_surprisal", "lang",
-        head_frac=1.0 / 3, middle_frac=1.0 / 3, round_dp=2)
-
-
-def _sql_sample_ccnet_buckets() -> str:
-    return """
-        WITH toks AS (
-            SELECT doc_id,
-                   unnest(list_filter(string_split(lower(text), ' '),
-                                      x -> x <> '')) AS token
-            FROM documents),
-        freq AS (SELECT token, count(*) AS tf FROM toks GROUP BY 1),
-        tot AS (SELECT sum(tf) AS t FROM freq),
-        surp AS (
-            SELECT doc_id,
-                   round(avg(-log2(tf / (SELECT t FROM tot))), 2) AS score_r
-            FROM toks JOIN freq USING (token)
-            GROUP BY doc_id),
-        scored AS (
-            SELECT s.doc_id, d.lang, s.score_r
-            FROM surp s JOIN documents d USING (doc_id)),
-        hist AS (
-            SELECT lang, score_r, count(*) AS n
-            FROM scored GROUP BY 1, 2),
-        cum AS (
-            SELECT lang, score_r,
-                   sum(n) OVER (PARTITION BY lang ORDER BY score_r) AS c,
-                   sum(n) OVER (PARTITION BY lang) AS t
-            FROM hist),
-        thr AS (
-            SELECT lang,
-                   min(CASE WHEN c >= (1.0/3) * t
-                            THEN score_r END) AS th,
-                   min(CASE WHEN c >= (1.0/3 + 1.0/3) * t
-                            THEN score_r END) AS tm
-            FROM cum GROUP BY lang)
-        SELECT s.doc_id, s.lang, s.score_r,
-               CASE WHEN s.score_r <= thr.th THEN 'head'
-                    WHEN s.score_r <= thr.tm THEN 'middle'
-                    ELSE 'tail' END AS bucket
-        FROM scored s JOIN thr USING (lang)
-    """
-
-
-def extra_queries():
-    """Oracle-gated entries BEYOND the driver's 50-entry window.
-
-    The round-3 registry consolidation moved these out of all_queries()
-    (the driver hashes only its first 50 keys); each remains a live,
-    independently-verified operator gate — tests/test_entry_oracles.py
-    parametrizes over all_queries() ∪ extra_queries() and runs the
-    IDENTICAL Spark-vs-DuckDB contract on both. Kept separate so the
-    driver window stays exactly the 50 consolidated families while the
-    finer-grained twins (per-signal text entries, the brute-force oracle
-    twins of the LSH/IVF scale paths, the coverage/candidate legs) retain
-    hard correctness evidence rather than rotting as dead code."""
-    return {
-        "dedup_exact": q_dedup_exact,
-        "kg_mention_pairs_grouped": q_kg_mention_pairs_grouped,
-        "kg_cooccur_scores": q_kg_cooccur_scores,
-        "kg_literature_candidates": q_kg_literature_candidates,
-        "kg_coverage_metrics": q_kg_coverage_metrics,
-        "json_extract_props": q_json_extract_props,
-        "dedup_minhash_sigs": q_dedup_minhash_sigs,
-        "similarity_neardup": q_similarity_neardup,
-        "text_lang_id": q_text_lang_id,
-        "text_token_counts": q_text_token_counts,
-        "text_fingerprints": q_text_fingerprints,
-        "text_quality": q_text_quality,
-        "sample_split_counts": q_sample_split_counts,
-        "sample_stratified": q_sample_stratified,
-        "sample_shards": q_sample_shards,
-        "sample_pack_offsets": q_sample_pack_offsets,
-        "sample_pack_spans": q_sample_pack_spans,
-        "web_url_canonical": q_web_url_canonical,
-        "web_domain_mixture": q_web_domain_mixture,
-        "web_crawl_delta": q_web_crawl_delta,
-        "graph_pagerank": q_graph_pagerank,
-        "web_html_extract": q_web_html_extract,
-        "web_line_dedup": q_web_line_dedup,
-        "text_quality_classifier": q_text_quality_classifier,
-        "web_link_graph": q_web_link_graph,
-        "web_robots_filter": q_web_robots_filter,
-        "text_tfidf_topk": q_text_tfidf_topk,
-        "kg_negative_samples": q_kg_negative_samples,
-        "text_passage_dedup": q_text_passage_dedup,
-        "corpus_length_profile": q_corpus_length_profile,
-        "retrieval_bm25_topk": q_retrieval_bm25_topk,
-        "sample_chunks": q_sample_chunks,
-        "sample_temperature": q_sample_temperature,
-        "graph_triangles": q_graph_triangles,
-        "corpus_cardinality": q_corpus_cardinality,
-        "retrieval_rrf_fuse": q_retrieval_rrf_fuse,
-        "dedup_incremental_lsh": q_dedup_incremental_lsh,
-        "graph_labelprop": q_graph_labelprop,
-        "graph_kcore": q_graph_kcore,
-        "similarity_rp_project": q_similarity_rp_project,
-        "similarity_quantized_topk": q_similarity_quantized_topk,
-        "multimodal_audio_windows": q_multimodal_audio_windows,
-        "kg_triple_provenance": q_kg_triple_provenance,
-        "curate_representatives": q_curate_representatives,
-        "dedup_semantic": q_dedup_semantic,
-        "sample_dsir_topk": q_sample_dsir_topk,
-        "dedup_substring_spans": q_dedup_substring_spans,
-        "sample_ccnet_buckets": q_sample_ccnet_buckets,
-        "kg_scd2_history": q_kg_scd2_history,
-        "kg_batch_episodes": q_kg_batch_episodes,
-        "layout_zorder": q_layout_zorder,
-        "graph_walks": q_graph_walks,
-        "graph_skipgram": q_graph_skipgram,
-        "kg_hierarchy_rollup": q_kg_hierarchy_rollup,
-        "web_crawl_frontier": q_web_crawl_frontier,
-        "kg_attr_asof": q_kg_attr_asof,
-        "table_profile": q_table_profile,
-        "text_c4_clean": q_text_c4_clean,
-        "text_gopher_rules": q_text_gopher_rules,
-        "text_pii_luhn": q_text_pii_luhn,
-        "events_rolling_counts": q_events_rolling_counts,
-        "table_histogram": q_table_histogram,
-        "text_collocations": q_text_collocations,
-        "sample_leakage_safe": q_sample_leakage_safe,
-        "text_encoding_audit": q_text_encoding_audit,
-        "graph_degree_profile": q_graph_degree_profile,
-        "kg_edge_diff": q_kg_edge_diff,
-        "web_bloom_seen": q_web_bloom_seen,
-        "web_hll_cardinality": q_web_hll_cardinality,
-        "web_cms_counts": q_web_cms_counts,
-        "kg_key_skew": q_kg_key_skew,
-        "web_kmv_overlap": q_web_kmv_overlap,
-        "sample_shard_balance": q_sample_shard_balance,
-        "graph_ppr": q_graph_ppr,
-        # round-5 demotion from the driver window (slot given to
-        # kg_pattern_triples); identical contract here
-        "agg_pricing_summary": q_agg_pricing_summary,
-    }
-
-
-def extra_oracle_sql():
-    return {
-        "dedup_exact": SQL_DEDUP_EXACT,
-        "kg_mention_pairs_grouped": SQL_KG_MENTION_PAIRS,
-        "kg_cooccur_scores": SQL_KG_COOCCUR_SCORES,
-        "kg_literature_candidates": SQL_KG_LIT_CANDIDATES,
-        "kg_coverage_metrics": SQL_KG_COVERAGE_METRICS.format(
-            mentions=_SQL_MENTIONS
-        ),
-        "json_extract_props": SQL_JSON_EXTRACT,
-        "dedup_minhash_sigs": SQL_DEDUP_MINHASH,
-        "similarity_neardup": SQL_SIM_NEARDUP,
-        "text_lang_id": _sql_lang_id(),
-        "text_token_counts": SQL_TEXT_TOKEN_COUNTS,
-        "text_fingerprints": SQL_TEXT_FINGERPRINTS,
-        "text_quality": _sql_text_quality(),
-        "sample_split_counts": _sql_sample_split(),
-        "sample_stratified": _sql_sample_stratified(),
-        "sample_shards": _sql_sample_shards(),
-        "sample_pack_offsets": _sql_sample_pack_offsets(),
-        "sample_pack_spans": _sql_sample_pack_spans(),
-        "web_url_canonical": _sql_web_url_canonical(),
-        "web_domain_mixture": _sql_web_domain_mixture(),
-        "web_crawl_delta": SQL_WEB_CRAWL_DELTA,
-        "graph_pagerank": _sql_graph_pagerank(),
-        "web_html_extract": _sql_web_html_extract(),
-        "web_line_dedup": _sql_web_line_dedup(),
-        "text_quality_classifier": _sql_text_quality_classifier(),
-        "web_link_graph": _sql_web_link_graph(),
-        "web_robots_filter": _sql_web_robots_filter(),
-        "text_tfidf_topk": _sql_text_tfidf_topk(),
-        "kg_negative_samples": _sql_kg_negative_samples(),
-        "text_passage_dedup": _sql_text_passage_dedup(),
-        "corpus_length_profile": _sql_corpus_length_profile(),
-        "retrieval_bm25_topk": _sql_retrieval_bm25_topk(),
-        "sample_chunks": _sql_sample_chunks(),
-        "sample_temperature": _sql_sample_temperature(),
-        "graph_triangles": _sql_graph_triangles(),
-        "corpus_cardinality": SQL_CORPUS_CARDINALITY,
-        "retrieval_rrf_fuse": _sql_retrieval_rrf_fuse(),
-        "dedup_incremental_lsh": SQL_DEDUP_INCREMENTAL_LSH,
-        "graph_labelprop": _sql_graph_labelprop(),
-        "graph_kcore": _sql_graph_kcore(),
-        "similarity_rp_project": _sql_similarity_rp_project(),
-        "similarity_quantized_topk": SQL_QUANTIZED_TOPK,
-        "multimodal_audio_windows": SQL_MULTIMODAL_AUDIO_WINDOWS,
-        "kg_triple_provenance": _sql_triple_provenance(),
-        "curate_representatives": SQL_CURATE_REPRESENTATIVES,
-        "dedup_semantic": SQL_DEDUP_SEMANTIC,
-        "sample_dsir_topk": _sql_sample_dsir_topk(),
-        "dedup_substring_spans": _sql_dedup_substring_spans(),
-        "sample_ccnet_buckets": _sql_sample_ccnet_buckets(),
-        "kg_scd2_history": _sql_kg_scd2_history(),
-        "kg_batch_episodes": _sql_kg_batch_episodes(),
-        "layout_zorder": _sql_layout_zorder(),
-        "graph_walks": _sql_graph_walks(),
-        "graph_skipgram": _sql_graph_skipgram(),
-        "kg_hierarchy_rollup": _sql_kg_hierarchy_rollup(),
-        "web_crawl_frontier": _sql_web_crawl_frontier(),
-        "kg_attr_asof": _sql_kg_attr_asof(),
-        "table_profile": _sql_table_profile(),
-        "text_c4_clean": _sql_text_c4_clean(),
-        "text_gopher_rules": _sql_text_gopher_rules(),
-        "text_pii_luhn": _sql_text_pii_luhn(),
-        "events_rolling_counts": _sql_events_rolling_counts(),
-        "table_histogram": _sql_table_histogram(),
-        "text_collocations": _sql_text_collocations(),
-        "sample_leakage_safe": _sql_sample_leakage_safe(),
-        "text_encoding_audit": _sql_text_encoding_audit(),
-        "graph_degree_profile": _sql_graph_degree_profile(),
-        "kg_edge_diff": _sql_kg_edge_diff(),
-        "web_bloom_seen": _sql_web_bloom_seen(),
-        "web_hll_cardinality": _sql_web_hll_cardinality(),
-        "web_cms_counts": _sql_web_cms_counts(),
-        "kg_key_skew": _sql_kg_key_skew(),
-        "web_kmv_overlap": _sql_web_kmv_overlap(),
-        "sample_shard_balance": _sql_sample_shard_balance(),
-        "graph_ppr": _sql_graph_ppr(),
-        "agg_pricing_summary": SQL_AGG_PRICING,
-    }
+def headline() -> list[str]:
+    return [q.name for q in REGISTRY if q.headline]

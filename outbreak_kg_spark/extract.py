@@ -91,10 +91,6 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     )
 
 
-def valid_alerts(extracted: DataFrame) -> DataFrame:
-    return extracted.filter(F.col("valid"))
-
-
 def dedup_alerts(extracted: DataFrame) -> DataFrame:
     """First-wins dedup of repeated archive numbers by crawl time.
 

@@ -43,7 +43,11 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     ``edges`` is a directed edge list; parallel duplicate edges count
     once (they are collapsed) so the rank depends on the graph, not on
-    upstream emission multiplicity. Node set = src ∪ dst."""
+    upstream emission multiplicity. Node set = src ∪ dst.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    the ranks) and truncates lineage: lost executor blocks fail later jobs
+    instead of recomputing."""
     e = edges.select(F.col(src).alias("src"),
                      F.col(dst).alias("dst")).distinct()
     nodes = (e.select(F.col("src").alias("node"))
@@ -119,7 +123,11 @@ def triangle_counts(edges: DataFrame, src: str = "src",
     attribute each triangle to its corners exactly once. Three shuffles
     total (degree agg, wedge join, closing join) — the textbook
     distributed-triangle plan; everything engine-portable for the
-    DuckDB oracle."""
+    DuckDB oracle.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    the edge sets) and truncates lineage: lost executor blocks fail later
+    jobs instead of recomputing."""
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
@@ -213,7 +221,11 @@ def label_propagation(edges: DataFrame, src: str = "src", dst: str = "dst",
     (count desc, label asc) argmax — min is combinable, so even a
     10^6-degree hub's per-label rows collapse before the exchange. Each
     round is eagerly localCheckpoint-ed: lineage stays O(1) in rounds,
-    the transitive_closure / pagerank regime."""
+    the transitive_closure / pagerank regime.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    each round) and truncates lineage: lost executor blocks fail later jobs
+    instead of recomputing."""
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
@@ -282,6 +294,10 @@ def k_core(edges: DataFrame, k: int, src: str = "src",
     the peeling depth of the graph, not |V|: every round removes EVERY
     currently-under-k node at once, so a chain peels from both ends and
     a bushy web graph converges in a handful of rounds.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    each round) and truncates lineage: lost executor blocks fail later jobs
+    instead of recomputing.
     """
     cur = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -507,7 +523,11 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     + 1-row dangling frame; eager localCheckpoint keeps the plan
     O(1)-deep); the only addition is a broadcast seed-membership join
     baked into the node frame before the loop. Returns (node, rank);
-    non-seed nodes unreachable from any seed report rank 0."""
+    non-seed nodes unreachable from any seed report rank 0.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    the ranks) and truncates lineage: lost executor blocks fail later jobs
+    instead of recomputing."""
     e = edges.select(F.col(src).alias("src"),
                      F.col(dst).alias("dst")).distinct()
     nodes = (e.select(F.col("src").alias("node"))

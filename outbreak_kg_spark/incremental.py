@@ -99,7 +99,11 @@ def upsert_edges(
     summed count reaches zero or below is dropped from the rewritten
     partition, exactly as a rebuild over the new corpus would never emit
     it. Relation-only edges (null count on every side) are NOT counted
-    edges and always survive the drop."""
+    edges and always survive the drop.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    the merged partitions) and truncates lineage: lost executor blocks fail
+    later jobs instead of recomputing."""
     from .lineage import _hadoop
 
     def _drop_nonpositive(df: DataFrame) -> DataFrame:

@@ -46,7 +46,11 @@ def bm25_topk(docs: DataFrame, queries: DataFrame,
     1-row broadcast crossJoin (no collect). Document length rides the
     filtered posting rows into the tf agg (no separate dl relation or
     doc_id join — r6). Scores are rounded to 6 BEFORE ranking so
-    rank boundaries are identical cross-engine."""
+    rank boundaries are identical cross-engine.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    the filtered tf postings) and truncates lineage: lost executor blocks
+    fail later jobs instead of recomputing."""
     base = docs.select(
         F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("_toks")
     )

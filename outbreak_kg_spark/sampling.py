@@ -732,6 +732,10 @@ def perplexity_buckets(df: DataFrame, score_col: str, strata_col: str,
     beyond the rounded score itself).
 
     Output: (id, stratum, score_r, bucket) — one row per input row.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    the scored rows) and truncates lineage: lost executor blocks fail later
+    jobs instead of recomputing.
     """
     from pyspark.sql import Window
 

@@ -42,10 +42,6 @@ def _cosine(dot, na, nb):
     return F.when((na > 0) & (nb > 0), dot / (na * nb))
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("_norm", _norm(F.col(vec_col).cast("array<double>")))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -472,6 +472,10 @@ def unigram_surprisal(df: DataFrame, text_col: str = "text",
     boundedness is UNKNOWN, pass vocab_fits_broadcast=None: the join is
     left unhinted and Catalyst's size estimate + AQE skew splitting decide
     (degrades to a live shuffle instead of a dead driver).
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    the token frequencies) and truncates lineage: lost executor blocks fail
+    later jobs instead of recomputing.
     """
     toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"),
                     lambda t: t != "")
@@ -980,6 +984,10 @@ def collocations(df: DataFrame, text_col: str = "text",
 
     Output: (w1, w2, n_pair, pmi_r) — round-6 PMI, ties broken by
     (w1, w2) for determinism.
+
+    Trade-off: runs a Spark job at call time (eager ``localCheckpoint`` of
+    the n-gram counts) and truncates lineage: lost executor blocks fail
+    later jobs instead of recomputing.
     """
     pre = df.select(tokens_col(text_col).alias("_toks"))
     toks = F.col("_toks")

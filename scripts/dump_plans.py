@@ -24,17 +24,19 @@ def main() -> None:
     qlist = _arg("--queries", None)
     os.makedirs(out_dir, exist_ok=True)
 
-    from bench import HEADLINE
-
     from outbreak_kg_spark.session import get_spark
 
     spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from outbreak_kg_spark.entry_queries import all_queries, extra_queries
+    from outbreak_kg_spark.entry_queries import (
+        all_queries,
+        extra_queries,
+        headline,
+    )
 
     qs = {**all_queries(), **extra_queries()}
-    names = qlist.split(",") if qlist else list(HEADLINE)
+    names = qlist.split(",") if qlist else headline()
     for name in names:
         try:
             df = qs[name](spark, sf_dir)

@@ -48,7 +48,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
     from outbreak_kg_spark import fused
-    from outbreak_kg_spark.entry_queries import entry_gazetteer_df
+    from outbreak_kg_spark.entry_fixtures import entry_gazetteer_df
 
     gaz = entry_gazetteer_df(spark)
     fudf = fused.make_fused_udf(spark, gaz)

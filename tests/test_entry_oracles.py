@@ -81,8 +81,8 @@ def _dtype_class(dtype) -> str:
 
 from outbreak_kg_spark import entry_queries as _eq
 
-# driver window (first 50 = all of queries()) PLUS the finer-grained
-# entries consolidated out of it in round 3 — identical contract for both
+# driver window (first 50 = all of queries()) PLUS the extras — identical
+# contract for both
 _ALL_Q = {**entry_mod.queries(), **_eq.extra_queries()}
 _ALL_SQL = {**entry_mod.oracle_sql(), **_eq.extra_oracle_sql()}
 NAMES = sorted(_ALL_Q.keys())
@@ -93,11 +93,7 @@ def test_query_matches_oracle(spark, ddb, name):
     q = _ALL_Q[name]
     sdf = q(spark, SF_DIR)
     spdf = sdf.toPandas()
-    oracle = _ALL_SQL.get(name)
-    if oracle is None:
-        assert len(spdf) >= 0  # rows-only contract
-        return
-    odf = ddb.sql(oracle).df()
+    odf = ddb.sql(_ALL_SQL[name]).df()
     assert sorted(spdf.columns) == sorted(odf.columns), (
         f"{name}: column mismatch"
     )
@@ -128,17 +124,7 @@ def test_entry_smoke(spark):
     ]
 
 
-# keys whose rows-only contract is INTENTIONAL (genuinely non-SQL ops);
-# currently none — every entry has an exact oracle
-ROWS_ONLY_OK: set = set()
-
-
 def test_every_entry_has_an_oracle():
-    """Drift guard: _ALL_SQL.get(name) silently downgrades a query to the
-    rows-only contract, so a forgotten oracle entry would pass the suite
-    while weakening the gate. Any intentional rows-only op must be listed
-    in ROWS_ONLY_OK."""
-    missing = set(_ALL_Q) - set(_ALL_SQL) - ROWS_ONLY_OK
-    assert not missing, f"entries without oracle SQL: {sorted(missing)}"
-    stale = set(_ALL_SQL) - set(_ALL_Q)
-    assert not stale, f"oracle SQL without a query: {sorted(stale)}"
+    """The registry gives every row an oracle; this pins that the driver
+    surface (__spark_entry__) serves one for exactly the queries it serves."""
+    assert list(entry_mod.oracle_sql()) == list(entry_mod.queries())

@@ -19,7 +19,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_star_join_broadcasts_dims_and_prunes_columns(spark):
-    from outbreak_kg_spark.entry_queries import q_join_star_topk
+    from outbreak_kg_spark.entry_table import q_join_star_topk
 
     plan = _plan(q_join_star_topk(spark, SF))
     # appears once in the tree and once per detail section -> 2 joins = 4
@@ -35,14 +35,14 @@ def test_star_join_broadcasts_dims_and_prunes_columns(spark):
 
 
 def test_filter_pushdown_to_parquet(spark):
-    from outbreak_kg_spark.entry_queries import q_semi_join_parts
+    from outbreak_kg_spark.entry_table import q_semi_join_parts
 
     plan = _plan(q_semi_join_parts(spark, SF))
     assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate" in plan
 
 
 def test_partial_final_aggregation(spark):
-    from outbreak_kg_spark.entry_queries import q_agg_pricing_summary
+    from outbreak_kg_spark.entry_table import q_agg_pricing_summary
 
     df = q_agg_pricing_summary(spark, SF)
     plan = _plan(df)
@@ -86,7 +86,7 @@ def test_edges_partition_pruning_by_pred(spark, tmp_path):
 def test_mentions_pipeline_has_no_python_row_udfs(spark):
     """Input-hint guard: only Arrow-evaluated Python (ArrowEvalPython /
     mapInPandas), never row-at-a-time BatchEvalPython."""
-    from outbreak_kg_spark.entry_queries import _entry_mentions_plan
+    from outbreak_kg_spark.entry_fixtures import _entry_mentions_plan
 
     plan = _plan(_entry_mentions_plan(spark, SF))
     assert "BatchEvalPython" not in plan
@@ -142,7 +142,7 @@ def test_literature_pvalues_fisher_stage_adds_no_exchange(spark):
     it must ride mapInPandas directly over the per-PMID aggregate — a
     groupBy(spark_partition_id()).applyInPandas spelling would pay one
     artificial shuffle over the 339M-row-scale candidate relation."""
-    from outbreak_kg_spark.entry_queries import q_kg_literature_pvalues
+    from outbreak_kg_spark.entry_kg import q_kg_literature_pvalues
 
     df = q_kg_literature_pvalues(spark, SF)
     simple = df._sc._jvm.PythonSQLUtils.explainString(

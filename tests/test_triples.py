@@ -261,7 +261,7 @@ def test_grouped_plan_hot_sentence_bounded(spark, tdim):
 def test_entry_runs_ner_once(spark):
     # the grouped entry plan needs no persist: exactly ONE Arrow NER eval
     import re
-    from outbreak_kg_spark.entry_queries import q_kg_pattern_triples
+    from outbreak_kg_spark.entry_kg import q_kg_pattern_triples
 
     df = q_kg_pattern_triples(spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
