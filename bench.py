@@ -111,67 +111,35 @@ def replicated_pages(spark, sf_dir: str, repl: int):
     return pages, n * repl
 
 
-def pipeline_outputs(spark, pages, modular: bool = False):
+def pipeline_outputs(spark, pages):
     """The benchmark pipeline as relations: pages -> (sets, terms, counted).
 
-    Default path is the FUSED operator (fused.make_fused_udf): pages ->
-    per-doc distinct term sets in ONE Arrow round trip, no exploded
-    section intermediate and — because the UDF already emits the per-doc
-    set — no groupBy(doc_id) shuffle either. The modular path
-    (extract -> explode sections -> annotate -> collect_group_sets) ships
-    section text through Arrow twice and pays one extra exchange; it is
-    kept for comparison and for pipelines that checkpoint the intermediate
-    artifacts. Path equivalence is pytest-asserted
-    (tests/test_bench_paths.py) on top of the operator-level equivalence
-    in tests/test_fused.py.
+    The extraction + NER operator (ground.make_extract_ner_udf, pages +
+    terms) turns each page into its distinct term set in ONE Arrow round
+    trip, no exploded section intermediate and — because the UDF already
+    emits the per-doc set — no groupBy(doc_id) shuffle either. The sets
+    are re-sorted by (entry_name, curie), the canonical pair orientation,
+    and persisted as the stage boundary both outputs read.
     """
-    from outbreak_kg_spark import extract, fused, ground
+    from outbreak_kg_spark import ground
     from outbreak_kg_spark.entry_fixtures import entry_gazetteer_df
-    from outbreak_kg_spark.skew import (
-        collect_group_sets,
-        expand_pairs,
-        salted_count,
-    )
+    from outbreak_kg_spark.skew import expand_pairs, salted_count
 
-    gaz = entry_gazetteer_df(spark)
-    if modular:
-        udf = ground.make_annotate_udf(spark, gaz)
-        ex = extract.extract_pages(pages).filter("valid")
-        sections = extract.explode_section_texts(
-            ex.select(F.col("url").alias("archive_number"), "sections")
-        )
-        mentions = ground.annotate_sections(sections, udf)
-        # ONE shuffle produces both outputs: the per-doc distinct term sets
-        # feed the terms table (explode) and the pair counts (JVM-side
-        # expansion). The persisted sets are the checkpointed stage boundary
-        # (in the real pipeline this is lineage.run_stage writing parquet).
-        sets = collect_group_sets(
-            mentions.select(
-                "doc_id",
-                F.col("entry_name").alias("entry_name"),
-                F.concat_ws(":", "ns", "id").alias("curie"),
-            ),
-            "doc_id", ["entry_name", "curie"],
-        ).persist()
-    else:
-        fudf = fused.make_fused_udf(spark, gaz)
-        x = pages.select(
-            "url", fudf(F.col("text")).alias("x")
-        ).filter(F.col("x.valid"))
-        # the UDF output IS the per-doc distinct set — re-sort by
-        # (entry_name, curie) so pair orientation matches the modular
-        # collect_group_sets path (sort_array on structs is field-order
-        # lexicographic), then persist as the stage boundary
-        sets = x.select(
-            F.col("url").alias("doc_id"),
-            F.sort_array(
-                F.expr(
-                    "transform(x.terms, t -> struct("
-                    "t.entry_name as entry_name, "
-                    "concat(t.ns, ':', t.id) as curie))"
-                )
-            ).alias("_arr"),
-        ).persist()
+    udf = ground.make_extract_ner_udf(
+        spark, entry_gazetteer_df(spark), pages=True, terms=True)
+    x = pages.select("url", udf(F.col("text")).alias("x")) \
+        .filter(F.col("x.valid"))
+    # sort_array on structs is field-order lexicographic
+    sets = x.select(
+        F.col("url").alias("doc_id"),
+        F.sort_array(
+            F.expr(
+                "transform(x.terms, t -> struct("
+                "t.entry_name as entry_name, "
+                "concat(t.ns, ':', t.id) as curie))"
+            )
+        ).alias("_arr"),
+    ).persist()
     terms = sets.select(
         "doc_id", F.explode("_arr").alias("t")
     ).select("doc_id", "t.entry_name", "t.curie")
@@ -183,13 +151,12 @@ def pipeline_outputs(spark, pages, modular: bool = False):
     return sets, terms, counted
 
 
-def e2e_pages_to_triples(spark, sf_dir: str, repl: int,
-                         modular: bool = False) -> tuple[float, int]:
+def e2e_pages_to_triples(spark, sf_dir: str, repl: int) -> tuple[float, int]:
     """Full pipeline wall time: extract -> NER -> mentions + salted
     co-occurrence counts, fully materialized."""
     pages, n_docs = replicated_pages(spark, sf_dir, repl)
     t0 = time.monotonic()
-    sets, terms, counted = pipeline_outputs(spark, pages, modular=modular)
+    sets, terms, counted = pipeline_outputs(spark, pages)
     _force(terms)
     _force(counted)
     wall = time.monotonic() - t0
@@ -198,28 +165,20 @@ def e2e_pages_to_triples(spark, sf_dir: str, repl: int,
 
 
 def e2e_pages_to_cue_triples(spark, sf_dir: str, repl: int) -> tuple[float, int]:
-    """North-rule literal: pages -> extract -> NER (offset mentions) ->
+    """North-rule literal: pages -> extract -> NER sentence groups ->
     sentence-scoped cue-rule triples (located_in / causes / case_count_of /
-    occurred_on), fully materialized. Uses the modular chain (the fused
-    UDF emits term sets without offsets, and the cue layer needs offsets
-    for sentence placement); the sentence-mention relation is persisted so
-    the four cue legs share one annotation pass."""
+    occurred_on), fully materialized — the plan pipeline.build_kg(
+    cue_triples=True) runs, without its stage writes."""
     from outbreak_kg_spark import extract, ground, triples
     from outbreak_kg_spark.entry_fixtures import entry_gazetteer_df
 
     gaz = entry_gazetteer_df(spark)
     pages, n_docs = replicated_pages(spark, sf_dir, repl)
     t0 = time.monotonic()
-    udf = ground.make_annotate_udf(spark, gaz)
-    alerts = extract.dedup_alerts(extract.extract_pages(pages))
-    # fresh-annotation composition: sentence placement happens in the same
-    # projection as the NER explode (section_sentence_mentions), so there
-    # is no mentions<->sections join and sections are scanned once —
-    # the at-rest variant (mentions_to_sentences over the checkpointed
-    # mentions stage) is what pipeline.build_kg(cue_triples=True) runs
-    sections = extract.explode_section_texts(alerts)
-    sm = triples.section_sentence_mentions(sections, udf, ground.type_dim(gaz))
-    _force(triples.pattern_triples_grouped(sm))
+    udf = ground.make_extract_ner_udf(spark, gaz, pages=True, groups=True)
+    alerts = extract.dedup_alerts(extract.extract_pages(pages, udf))
+    _force(triples.triples_from_sentence_groups(triples.explode_groups(
+        alerts.select(F.col("archive_number").alias("doc_id"), "groups"))))
     wall = time.monotonic() - t0
     return wall, n_docs
 
@@ -236,7 +195,6 @@ def main() -> None:
     repl = int(_arg("--repl", os.environ.get("SPARK_GRAFT_BENCH_REPL", "300")))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     e2e_only = "--e2e-only" in args
-    modular = "--modular" in args
     # 3 = plain bracketed best-of-3 (no retry sleeps — run_scaling drives
     # its own spaced re-passes); the default 6 lets a standalone/driver
     # invocation ride out one multi-minute degraded host window
@@ -301,8 +259,7 @@ def main() -> None:
     # in the warm JVM — this host's wall times are bimodal (single samples
     # swing +/-30%, with occasional 3-7x-slower windows at ~80% system
     # time), so the min of three is the stable steady-state reading
-    e2e_pages_to_triples(spark, sf_dir, repl=max(1, repl // 10),
-                         modular=modular)
+    e2e_pages_to_triples(spark, sf_dir, repl=max(1, repl // 10))
     # probe-BRACKETED samples: the host's degraded windows last multiple
     # minutes, so a single window can swallow all three samples while the
     # run-level before/after probes (taken outside it) still read healthy
@@ -320,7 +277,7 @@ def main() -> None:
     post = host_calibration(probe_workers)
     for attempt in range(max_e2e_samples):
         pre = post
-        s = e2e_pages_to_triples(spark, sf_dir, repl=repl, modular=modular)
+        s = e2e_pages_to_triples(spark, sf_dir, repl=repl)
         post = host_calibration(probe_workers)
         samples.append((s, pre, post))
         probes.append((pre, post))
@@ -372,7 +329,6 @@ def main() -> None:
         "e2e_sample_probes": [[p, q] for p, q in probes],
         "e2e_probe_workers": probe_workers,
         "e2e_window_healthy": e2e_window_healthy,
-        "path": "modular" if modular else "fused",
     }
     if cue is not None:
         out["e2e_cue_triples"] = cue

@@ -145,9 +145,10 @@ def build_alert_nodes_and_mentions(
 ) -> tuple[DataFrame, DataFrame]:
     """Alert nodes + mentions edges (kg/build.py:159-186).
 
-    terms: (doc_id, ns, id, entry_name) distinct per doc (ground.terms_by_alert).
-    alert_ids: one doc_id per valid alert — the reference emits a node for
-    EVERY alert in terms_by_alert, including alerts with zero extractions
+    terms: (doc_id, ns, id, entry_name) distinct per doc (build_kg's terms
+    stage). alert_ids: one doc_id per valid alert — the reference emits a
+    node for EVERY alert in terms_by_alert, including alerts with zero
+    extractions
     (:164-172); defaults to the doc ids present in terms.
     Alert timestamp = first matching outbreak row's datePublished else ''
     (:165-170; we use min() for determinism). Mentions kept only for MESH

@@ -219,17 +219,17 @@ def mentions_from_docs(spark: SparkSession, docs: DataFrame) -> DataFrame:
     (BENCH/run_hotkey.py) can feed transformed corpora (e.g. an injected
     hot entity) without touching the test data on disk.
 
-    Precondition: ``doc_id`` is unique in ``docs``. The distinct-terms
-    UDF (ground.make_distinct_terms_udf) emits each row's distinct
-    (ns, id, entry_name) set, so the output is a distinct
+    Precondition: ``doc_id`` is unique in ``docs``. The extraction + NER
+    operator (ground.make_extract_ner_udf, ``terms`` only) emits each
+    row's distinct (ns, id, entry_name) set, so the output is a distinct
     (doc_id, curie) relation only when no doc_id repeats; two rows with
     one doc_id yield duplicate mention rows. Not asserted here: a check
     would cost one more job on every call.
     """
-    from .ground import make_distinct_terms_udf
+    from .ground import make_extract_ner_udf
 
-    udf = make_distinct_terms_udf(spark, entry_gazetteer_df(spark))
-    m = docs.select("doc_id", F.explode(udf(F.col("text"))).alias("a"))
+    udf = make_extract_ner_udf(spark, entry_gazetteer_df(spark), terms=True)
+    m = docs.select("doc_id", F.explode(udf(F.col("text")).terms).alias("a"))
     return (
         m.select(
             "doc_id",

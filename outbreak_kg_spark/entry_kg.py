@@ -668,11 +668,8 @@ def q_kg_pattern_triples(spark, sf_dir):
     predicates fire; the original text (dot-free, cue-free) forms sentence
     0 and contributes mentions but no triples — cue gating, not bare
     co-occurrence, is what the oracle checks."""
-    from .triples import (
-        make_sentence_groups_udf,
-        sentence_mention_groups,
-        triples_from_sentence_groups,
-    )
+    from .ground import make_extract_ner_udf
+    from .triples import explode_groups, triples_from_sentence_groups
 
     d = _docs(spark, sf_dir)
     i = F.col("doc_id")
@@ -691,16 +688,12 @@ def q_kg_pattern_triples(spark, sf_dir):
         F.lit(" ."),
     )
     docs = d.select("doc_id", F.concat("text", tail).alias("text"))
-    # r6: ONE fused Arrow pass builds the per-(doc, sentence) mention
-    # groups directly (make_sentence_groups_udf) — replacing the
-    # per-mention substr/regexp_replace/split sentence math and the
-    # collect_list groupBy exchange of the declarative chain; the cue
-    # rules then run unchanged over the grouped relation. Equality with
-    # the declarative chain is pytest-asserted in test_triples.
-    gudf = make_sentence_groups_udf(
-        spark, entry_gazetteer_df(spark),
-        {c: ty for c, _t, ty in ENTRY_GAZ})
-    return triples_from_sentence_groups(sentence_mention_groups(docs, gudf))
+    # ONE Arrow pass builds the per-(doc, sentence) mention groups
+    # directly (the operator's groups field): no per-mention sentence
+    # math and no grouping exchange; the cue rules run over the groups
+    udf = make_extract_ner_udf(spark, entry_gazetteer_df(spark), groups=True)
+    return triples_from_sentence_groups(explode_groups(
+        docs.select("doc_id", udf(F.col("text")).groups.alias("groups"))))
 
 
 def _sql_pattern_triples() -> str:

@@ -2,35 +2,41 @@
 §2.3).
 
 A token-level trie is compiled once on the driver from the vocabulary
-DataFrame, broadcast to executors, and scanned inside an Arrow-batched pandas
-UDF (north rule: "broadcast tries inside pandas/Arrow UDFs"). Matching
-semantics: case-insensitive, word-boundary, greedy longest match, scanning
-left to right, non-overlapping — the standard gazetteer-annotator contract
+DataFrame, broadcast to executors, and scanned inside the one Arrow UDF
+that extracts and grounds text (make_extract_ner_udf; north rule:
+"broadcast tries inside pandas/Arrow UDFs"). Matching semantics:
+case-insensitive, word-boundary, greedy longest match, scanning left to
+right, non-overlapping — the standard gazetteer-annotator contract
 (reference delegates this to gilda.annotate, promed_ner.py:49-50).
-
-Everything downstream of the UDF is declarative: namespace-priority
-resolution is a window (or argmin inside the trie lookup — we do it at
-lookup time, matching promed_ner.py:162-176 which walks GILDA_NS in priority
-order per annotation), per-doc term dedup is dropDuplicates on the exploded
-form, blocklists are broadcast isin-filters.
+Namespace-priority resolution happens at trie compile time, matching
+promed_ner.py:162-176, which walks GILDA_NS in priority order per
+annotation.
 """
 
 from __future__ import annotations
 
 import re
+from bisect import bisect_left
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
     IntegerType,
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
+
+from .schemas import SECTIONS
+from .textproc import extract_alert
 
 # Namespace priority order (promed_ner.py:18 uses ['MESH']; the commented
 # broader list :17 motivates keeping this configurable).
@@ -48,13 +54,13 @@ NER_EXCLUDE_TOKENS = {"J", "one", "news", "large", "go", "cut", "white", "Kelly"
 
 _TOKEN_RE = re.compile(r"\w+", re.UNICODE)
 
-# Per-task memo budget of the Arrow UDFs, in approximate bytes of cached
+# Per-task memo budget of the Arrow UDF, in approximate bytes of cached
 # text keys (len(text)): past it the memo is dropped and refills.
 MEMO_MAX_BYTES = 64 << 20
 
 
 class TextMemo:
-    """Per-task text -> result memo for the Arrow UDFs, capped by the
+    """Per-task text -> result memo for the Arrow UDF, capped by the
     approximate bytes of its keys (len(text)), not by entry count, which
     bounds nothing when texts are long. Past MEMO_MAX_BYTES it is cleared
     and refills; a text longer than the whole budget is computed but not
@@ -318,8 +324,8 @@ def _tokens_lower(text: str) -> list[str]:
     ASCII fast path: lowering ASCII is 1:1 per character and maps word
     chars to word chars, so ``findall(text.lower())`` yields exactly the
     per-token lowering — one C-level pass instead of a Python listcomp
-    with len(toks) .lower() calls (the listcomp was ~45% of the fused
-    NER scan's wall). Non-ASCII keeps tokenize-THEN-lowercase: lowering
+    with len(toks) .lower() calls (the listcomp was ~45% of the
+    distinct-terms scan's wall). Non-ASCII keeps tokenize-THEN-lowercase: lowering
     whole text first changes the token stream when a character's
     lowercase form expands (e.g. 'İ' -> 'i' + combining dot splits
     under \\w+)."""
@@ -344,8 +350,8 @@ def scan_distinct_terms(text: str, trie: dict, mheads: frozenset) -> set:
     """The DISTINCT grounding set of a text: exactly
     ``set(scan_terms(text, trie))`` (property-tested in test_ground),
     for consumers that discard per-occurrence multiplicity and offsets —
-    the fused extract+NER operator unions term sets per doc
-    (fused.py), so the occurrence list was pure overhead.
+    make_extract_ner_udf's terms-only ask unions term sets per doc, so
+    the occurrence list would be pure overhead.
 
     Fast path: when the doc's token set is disjoint from ``mheads``
     (computed by multi_token_heads; pass frozenset() to force the slow
@@ -378,9 +384,9 @@ def scan_terms(text: str, trie: dict) -> list[tuple]:
     semantics as scan_text, but returns only the grounding tuples
     (ns, id, entry_name). Skipping the per-token (surface, start, end)
     tuple construction and the finditer Match objects cuts the per-doc scan
-    cost several-fold — this is the hot path of the fused extract+NER
-    operator, where surfaces/offsets are discarded anyway. Identical term
-    sets to scan_text are property-tested (test_fused)."""
+    cost several-fold — scan_distinct_terms' fallback for docs holding a
+    multi-token head, where surfaces/offsets are discarded anyway.
+    Identical term sets to scan_text are property-tested (test_fused)."""
     if not text:
         return []
     toks = _tokens_lower(text)
@@ -419,135 +425,201 @@ def scan_terms(text: str, trie: dict) -> list[tuple]:
     return out
 
 
-_MATCH_ARR = ArrayType(
-    StructType(
-        [
-            StructField("text", StringType()),
-            StructField("start", IntegerType()),
-            StructField("end", IntegerType()),
-            StructField("ns", StringType()),
-            StructField("id", StringType()),
-            StructField("entry_name", StringType()),
-        ]
-    )
-)
-
-
 def _gaz_rows(gazetteer: DataFrame) -> list[dict]:
     """Collect the driver-side vocabulary rows, carrying the optional
-    ``prior`` column (entry frequency weight) when the frame has one."""
+    ``prior`` (entry frequency weight) and ``node_type`` columns when the
+    frame has them."""
     cols = ["ns", "id", "entry_name", "synonym"]
-    if "prior" in gazetteer.columns:
-        cols.append("prior")
+    cols += [c for c in ("prior", "node_type") if c in gazetteer.columns]
     return [r.asDict() for r in gazetteer.select(*cols).collect()]
 
 
-def make_annotate_udf(spark: SparkSession, gazetteer: DataFrame,
-                      ns_priority=DEFAULT_NS_PRIORITY,
-                      context: bool = False):
-    """Build the broadcast trie from a gazetteer DataFrame and return a
-    pandas UDF text -> array<struct matches>. The gazetteer is collected on
-    the driver (dimension-sized: 32k MeSH + 54k geonames in the reference —
-    BASELINE.md) and broadcast once; executors scan against the shared copy.
-
-    An optional ``prior`` column on the gazetteer feeds the scored
-    ambiguity resolution (compile_gazetteer); context=True additionally
-    disambiguates ambiguous surfaces by per-document cue overlap.
-    """
-    rows = _gaz_rows(gazetteer)
-    trie = compile_gazetteer(rows, ns_priority, context=context)
-    bc = spark.sparkContext.broadcast(trie)
-
-    @pandas_udf(_MATCH_ARR)
-    def annotate(texts: pd.Series) -> pd.Series:
-        t = bc.value
-        return texts.map(lambda x: scan_text(x, t) if x is not None else [])
-
-    return annotate
+def _arr(*fields) -> ArrayType:
+    return ArrayType(StructType([StructField(n, t) for n, t in fields]))
 
 
-_TERM_ARR = ArrayType(
-    StructType(
-        [
-            StructField("ns", StringType()),
-            StructField("id", StringType()),
-            StructField("entry_name", StringType()),
-        ]
-    )
-)
+_S, _I = StringType(), IntegerType()
+_PAGE_FIELDS = [
+    StructField("archive_number", _S),
+    StructField("subject", _S),
+    StructField("published_ts", TimestampType()),
+    StructField("sections", SECTIONS),
+    StructField("extracted_text", _S),
+    StructField("valid", BooleanType(), False),
+]
+_TERM = (("ns", _S), ("id", _S), ("entry_name", _S))
+_MATCH = (("text", _S), ("start", _I), ("end", _I)) + _TERM
+_GROUP = (("sent_idx", _I), ("sentence", _S),
+          ("ms", _arr(("curie", _S), ("node_type", _S),
+                      ("surfaces", ArrayType(_S)))))
+_UNIT = (("section_idx", _I), ("field", _S))
 
 
-def make_distinct_terms_udf(spark: SparkSession, gazetteer: DataFrame,
-                            ns_priority=DEFAULT_NS_PRIORITY,
-                            context: bool = False):
-    """Distinct-terms NER UDF: text -> sorted array<struct ns,id,entry_name>
-    of the DISTINCT groundings, deduplicated on (ns, id) per doc.
-
-    The offset-free twin of make_annotate_udf for consumers that discard
-    surfaces/offsets and per-doc multiplicity (the mentions relation —
-    kg_ner_mentions and everything riding entry_mentions). Two wins over
-    annotate+explode+dropDuplicates (guide §4): the Python side runs the
-    multi-token-head-gated set scan (scan_distinct_terms — no Match
-    objects, no per-occurrence tuples), and the Arrow channel carries a
-    few distinct groundings per doc instead of every occurrence with its
-    surface and offsets. Equal term sets are property-tested against
-    scan_text (test_ground)."""
-    rows = _gaz_rows(gazetteer)
-    trie = compile_gazetteer(rows, ns_priority, context=context)
-    bc = spark.sparkContext.broadcast((trie, multi_token_heads(trie)))
-
-    @pandas_udf(_TERM_ARR)
-    def distinct_terms(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        t, mheads = bc.value
-        # per-TASK memo of text -> sorted distinct groundings (guide §4.5):
-        # duplicate section texts (boilerplate, re-crawls, replicated
-        # corpora) pay the tokenize+scan once per task instead of per row.
-        # Iterator scope — nothing survives the task. Byte-capped.
-        def _terms(text):
-            best: dict = {}
-            for ns, id_, name in scan_distinct_terms(text, t, mheads):
-                k = (ns, id_)
-                if k not in best or name < best[k]:
-                    best[k] = name
-            return sorted((ns, id_, nm) for (ns, id_), nm in best.items())
-
-        memo = TextMemo(_terms)
-
-        def _distinct(text):
-            return [] if text is None else memo(text)
-
-        for texts in batches:
-            yield texts.map(_distinct)
-
-    return distinct_terms
+def _distinct_terms(groundings) -> list[tuple]:
+    """(ns, id, entry_name) groundings -> sorted, one per (ns, id) (the
+    smallest entry_name wins when a vocabulary names one id twice)."""
+    best: dict = {}
+    for ns, id_, name in groundings:
+        k = (ns, id_)
+        if k not in best or name < best[k]:
+            best[k] = name
+    return sorted((ns, id_, nm) for (ns, id_), nm in best.items())
 
 
-def annotate_sections(section_texts: DataFrame, annotate_udf) -> DataFrame:
-    """(doc_id, section_idx, field, text) -> exploded MENTIONS rows."""
-    m = section_texts.select(
-        "doc_id",
-        "section_idx",
-        "field",
-        F.explode(annotate_udf(F.col("text"))).alias("a"),
-    )
-    return m.select(
-        "doc_id", "section_idx", "field",
-        "a.text", "a.start", "a.end", "a.ns", "a.id", "a.entry_name",
-    )
+def make_extract_ner_udf(spark: SparkSession,
+                         gazetteer: DataFrame | None = None, *,
+                         pages: bool = False, terms: bool = False,
+                         offsets: bool = False, groups: bool = False,
+                         exclude_tokens=frozenset(), boundary: str = "."):
+    """The extraction + NER operator: ONE Arrow UDF, text -> struct, that
+    every consumer (build_kg, extract_pages, the kg_* registry entries,
+    streaming, bench) builds its relation from. The struct carries only the
+    fields asked for:
 
+    - ``pages=True``: the input is a raw page; the struct starts with the
+      extract_alert fields (archive_number, subject, published_ts,
+      sections, extracted_text, valid) and the NER units are each valid
+      page's section titles and contents, scanned separately (the
+      reference annotates them one by one, promed_ner.py:145-150).
+      Otherwise the input text is the one NER unit.
+    - ``terms``: sorted distinct (ns, id, entry_name) groundings, one per
+      (ns, id), over all units; a match whose surface is in
+      ``exclude_tokens`` does not count.
+    - ``offsets`` -> ``mentions``: every match (text, start, end, ns, id,
+      entry_name), offsets into its unit.
+    - ``groups``: per-sentence mention groups (sent_idx, sentence, ms:
+      array<curie, node_type, surfaces>), the rows
+      triples.triples_from_sentence_groups reads. Sentences split on any
+      char of ``boundary``; a curie without a gazetteer ``node_type`` is
+      dropped; surfaces are sorted distinct, ms sorted by curie.
 
-def terms_by_alert(mentions: DataFrame,
-                   exclude_tokens: set = NER_EXCLUDE_TOKENS) -> DataFrame:
-    """Distinct grounded terms per document (operator N3; promed_ner.py:
-    156-177 builds a set of (db, id, entry_name) per alert). Kept exploded —
-    one row per (doc_id, ns, id) — so no collection-typed shuffle exists;
-    downstream groupBys are plain hash aggs."""
-    out = mentions
-    if exclude_tokens:
-        out = out.filter(~F.col("text").isin(list(exclude_tokens)))
-    return out.select("doc_id", "ns", "id", "entry_name").dropDuplicates(
-        ["doc_id", "ns", "id"]
-    )
+    Under ``pages=True``, ``mentions`` and ``groups`` elements also carry
+    their unit's (section_idx, field). Exclusion applies to ``terms`` only.
+
+    The gazetteer is collected once and compiled into one broadcast trie
+    (plus the curie -> node_type map when ``groups``). Each task keeps a
+    byte-capped TextMemo of unit text -> NER result, so repeated section
+    text (boilerplate, re-crawls) is scanned once; units under 64 chars
+    skip it (cheaper to scan, and often unique). ``published_ts`` is the
+    header's wall-clock time in the session time zone read here, as the
+    pandas conversion would store it.
+
+    The UDF is marked nondeterministic: consumers filter on the struct
+    (``x.valid``), and filter pushdown would otherwise clone the whole
+    evaluation into a second ArrowEvalPython. The function is pure; the
+    flag only stops the optimizer from cloning or reordering it."""
+    ner = terms or offsets or groups
+    if not (pages or ner):
+        raise ValueError("make_extract_ner_udf: no output field requested")
+    if ner and gazetteer is None:
+        raise ValueError("make_extract_ner_udf: NER fields need a gazetteer")
+    unit = _UNIT if pages else ()
+    fields = list(_PAGE_FIELDS) if pages else []
+    if terms:
+        fields.append(StructField("terms", _arr(*_TERM)))
+    if offsets:
+        fields.append(StructField("mentions", _arr(*unit, *_MATCH)))
+    if groups:
+        fields.append(StructField("groups", _arr(*unit, *_GROUP)))
+    schema = StructType(fields)
+    arrow_fields = list(to_arrow_type(schema))
+    names = [f.name for f in fields]
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    trie = tmap = None
+    if ner:
+        rows = _gaz_rows(gazetteer)
+        if groups and not any(r.get("node_type") for r in rows):
+            raise ValueError("groups need a gazetteer node_type column")
+        trie = compile_gazetteer(rows)
+        tmap = {}
+        for r in rows if groups else ():
+            c, nt = r["ns"] + ":" + r["id"], r.get("node_type")
+            if nt is not None and (c not in tmap or nt < tmap[c]):
+                tmap[c] = nt
+    bc = spark.sparkContext.broadcast(
+        (trie, multi_token_heads(trie) if trie else None, tmap,
+         frozenset(exclude_tokens)))
+    bre = re.compile("[" + re.escape(boundary) + "]")
+    # the distinct-set fast scan serves a terms-only, exclusion-free ask;
+    # everything else needs the offset scan
+    need_matches = offsets or groups or bool(exclude_tokens)
+
+    @arrow_udf(schema)
+    def extract_ner(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        trie, mheads, tmap, excl = bc.value
+
+        def sentence_groups(text, matches):
+            bpos = [m.start() for m in bre.finditer(text)]
+            by_sent: dict = {}
+            for surf, start, _end, ns, id_, _name in matches:
+                curie = ns + ":" + id_
+                nt = tmap.get(curie)
+                if nt is not None:
+                    by_sent.setdefault(bisect_left(bpos, start), {}) \
+                        .setdefault(curie, (nt, set()))[1].add(surf)
+            if not by_sent:
+                return []
+            sents = bre.split(text)
+            return [(si, sents[si],
+                     [(c, nt, sorted(s)) for c, (nt, s) in sorted(g.items())])
+                    for si, g in sorted(by_sent.items())]
+
+        def scan_unit(text):
+            if not need_matches:
+                return frozenset(scan_distinct_terms(text, trie, mheads)), (), ()
+            matches = scan_text(text, trie)
+            found = frozenset((ns, id_, name)
+                              for surf, _a, _b, ns, id_, name in matches
+                              if surf not in excl)
+            return (found, matches if offsets else (),
+                    sentence_groups(text, matches) if groups else ())
+
+        memo = TextMemo(scan_unit)
+
+        def unit_ner(text):
+            return scan_unit(text) if len(text) < 64 else memo(text)
+
+        for arr in batches:
+            cols = {n: [] for n in names}
+            for x in arr.to_pylist():
+                units = ()
+                if pages:
+                    ex = extract_alert(x if x is not None else "")
+                    secs = ex["sections"]
+                    ex["sections"] = [(s["title"], s["content"]) for s in secs]
+                    for f in _PAGE_FIELDS:
+                        cols[f.name].append(ex[f.name])
+                    if ner:
+                        units = [((i, f), s[f]) for i, s in enumerate(secs)
+                                 for f in ("title", "content") if s[f]]
+                elif x:
+                    units = [((), x)]
+                if not ner:
+                    continue
+                found, ments, grps = set(), [], []
+                for key, text in units:
+                    t, m, g = unit_ner(text)
+                    found |= t
+                    ments += [key + r for r in m]
+                    grps += [key + r for r in g]
+                if terms:
+                    cols["terms"].append(_distinct_terms(found))
+                if offsets:
+                    cols["mentions"].append(ments)
+                if groups:
+                    cols["groups"].append(grps)
+            out = []
+            for n, af in zip(names, arrow_fields):
+                if n == "published_ts":
+                    a = pa.array(cols[n], pa.timestamp("us"))
+                    if tz != "UTC":
+                        a = pc.assume_timezone(a, tz, ambiguous="latest")
+                    out.append(a.cast(af.type))
+                else:
+                    out.append(pa.array(cols[n], af.type))
+            yield pa.StructArray.from_arrays(out, fields=arrow_fields)
+
+    return extract_ner.asNondeterministic()
 
 
 def type_dim(gazetteer: DataFrame) -> DataFrame:

@@ -2,12 +2,14 @@
 
 Stage graph (SURVEY.md §3.1 Spark lifecycle):
 
-  pages ──> extracted ──> alerts(dedup) ──> section_texts ──> mentions
+  pages ──> extracted ──> alerts(dedup) ──┬─> terms
+     │  (ONE Arrow pass: extraction, NER  └─> pattern_triples (cue_triples)
+     │   terms and sentence mention groups)
      └─(lineage row per part-file at every boundary; each stage resumable)
-  mentions ──> terms ──┬─> alert_nodes + mention_edges
-                       ├─> cooccurrence nodes/edges (salted)
-  vocab ───> closure   ├─> hierarchy nodes/edges
-  side inputs ─────────┴─> pathogen/phenotype/indicator/geoname builders
+  terms ──┬─> alert_nodes + mention_edges
+          ├─> cooccurrence nodes/edges (salted)
+  vocab ──┼─> closure, hierarchy nodes/edges
+  side inputs ─> pathogen/phenotype/indicator/geoname builders
   all ──> finalize (dedup nodes, drop dangling edges) ──> nodes/, edges/
 
 Edges are written partitioned by ``pred`` (partition pruning for the query
@@ -19,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import builders, closure as closure_mod, extract, ground
+from . import builders, closure as closure_mod, extract, ground, triples
 from .lineage import run_stage
 from .wdi_constants import wb_location_map_df
 
@@ -41,84 +43,55 @@ def build_kg(
     geoname_grounding: DataFrame | None = None,
     location_map: DataFrame | None = None,
     force: bool = False,
-    fused: bool = False,
     edge_buckets: int | None = 8,
-    mention_buckets: int | None = 8,
     cue_triples: bool = False,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full pipeline; returns the at-rest DataFrames.
 
-    fused=True runs extraction+NER in ONE Arrow pass (fused.fused_page_terms)
-    and skips the extracted/alerts/mentions checkpoints — half the Python
-    round trips and no corpus-text shuffle, for runs that only need the graph
-    (equivalence vs the modular stage chain is pytest-asserted in
-    tests/test_pipeline_resume.py). The modular default materializes every
-    intermediate, which is what you want when canonical text or mention spans
-    are downstream products in their own right.
+    Extraction and NER run ONCE, in the ``extracted`` stage: one Arrow
+    pass (ground.make_extract_ner_udf) adds each page's distinct terms
+    (after NER_EXCLUDE_TOKENS) and its per-sentence mention groups to the
+    extracted columns. ``terms`` explodes the deduplicated ``alerts`` and
+    ``pattern_triples`` (cue_triples=True) runs the cue rules over their
+    groups — no mentions stage, no second Arrow hop, no text join. The
+    groups are always written, so a resume may turn cue_triples on over a
+    committed ``extracted`` stage. ``out["mentions"]`` is None.
 
-    edge_buckets / mention_buckets: the at-rest edges (and the modular
-    path's mentions) are persisted hash-BUCKETED by their recurring join
-    key — edges by subj (every query-layer constraint join and co-mention
-    self-join keys on the alert id), mentions by doc_id — so those joins
-    read pre-distributed data and plan with ZERO exchange on the scan side
-    (round-2 verdict Next #4; plan-asserted in tests/test_pipeline_resume
-    .py). Pred partitioning is kept on top for predicate pruning. At 100 TB
-    this converts the dominant recurring exchange of every downstream job
-    into a one-time cost paid at write; size buckets so one bucket ≈ one
-    task's memory (e.g. 4096 on a 1000-executor cluster). None = plain
-    parquet (the round-2 layout).
+    edge_buckets: the at-rest edges are persisted hash-BUCKETED by subj
+    (every query-layer constraint join and co-mention self-join keys on the
+    alert id), so those joins read pre-distributed data and plan with ZERO
+    exchange on the scan side (plan-asserted in tests/test_pipeline_resume
+    .py). Pred partitioning is kept on top for predicate pruning. Size
+    buckets so one bucket ≈ one task's memory (e.g. 4096 on a
+    1000-executor cluster). None = plain parquet.
     """
     tdim = ground.type_dim(gazetteer)
 
-    if fused:
-        from . import fused as fused_mod
-
-        extracted = mentions = None
+    extracted = run_stage(
+        spark, root, "extracted",
         # the UDF build (driver-side gazetteer collect + trie compile) is
         # inside the stage lambda so a resume over a committed stage never
         # pays it — run_stage only calls the builder on a cache miss
-        page_terms = run_stage(
-            spark, root, "page_terms",
-            lambda: fused_mod.fused_page_terms(
-                pages,
-                fused_mod.make_fused_udf(
-                    spark, gazetteer,
-                    exclude_tokens=ground.NER_EXCLUDE_TOKENS,
-                ),
-            ),
-            force=force,
-        )
-        alerts = page_terms.select(
-            F.col("doc_id").alias("archive_number")
-        )
-        terms = run_stage(
-            spark, root, "terms",
-            lambda: fused_mod.page_terms_to_alert_terms(page_terms),
-            force=force,
-        )
-    else:
-        extracted = run_stage(
-            spark, root, "extracted",
-            lambda: extract.extract_pages(pages), force=force,
-        )
-        alerts = run_stage(
-            spark, root, "alerts",
-            lambda: extract.dedup_alerts(extracted), force=force,
-        )
-        mentions = run_stage(
-            spark, root, "mentions",
-            # UDF build deferred into the lambda — see the fused branch note
-            lambda: ground.annotate_sections(
-                extract.explode_section_texts(alerts),
-                ground.make_annotate_udf(spark, gazetteer),
-            ),
-            force=force,
-            bucket_by=("doc_id", mention_buckets) if mention_buckets else None,
-        )
-        terms = run_stage(
-            spark, root, "terms",
-            lambda: ground.terms_by_alert(mentions), force=force,
-        )
+        lambda: extract.extract_pages(pages, ground.make_extract_ner_udf(
+            spark, gazetteer, pages=True, terms=True, groups=True,
+            exclude_tokens=ground.NER_EXCLUDE_TOKENS)),
+        force=force,
+    )
+    alerts = run_stage(
+        spark, root, "alerts",
+        lambda: extract.dedup_alerts(extracted), force=force,
+    )
+    doc_alerts = alerts.select(
+        F.col("archive_number").alias("doc_id"), "terms", "groups")
+    terms = run_stage(
+        spark, root, "terms",
+        # distinct per doc already: the UDF dedups each page's terms and
+        # alerts holds one row per archive number
+        lambda: doc_alerts.select(
+            "doc_id", F.explode("terms").alias("t")
+        ).select("doc_id", "t.ns", "t.id", "t.entry_name"),
+        force=force,
+    )
     closure = run_stage(
         spark, root, "closure",
         # closure_with_roots, NOT bare transitive_closure: most vocabulary
@@ -204,37 +177,23 @@ def build_kg(
 
     pattern = None
     if cue_triples:
-        if mentions is None:
-            raise ValueError(
-                "cue_triples needs the modular path: the cue layer reuses "
-                "the materialized mentions stage (fused=True never "
-                "produces one)")
-        from . import triples as triples_mod
-
         pattern = run_stage(
             spark, root, "pattern_triples",
-            # grouped one-pass plan: reads the sentence-mention relation
-            # once, so no persist boundary is needed here — mentions and
-            # alerts are themselves committed stages read from parquet
-            lambda: triples_mod.pattern_triples_grouped(
-                triples_mod.mentions_to_sentences(
-                    mentions, extract.explode_section_texts(alerts), tdim)
-            ),
+            lambda: triples.triples_from_sentence_groups(
+                triples.explode_groups(doc_alerts)),
             force=force,
         )
 
     return {
         "extracted": extracted,
         "alerts": alerts,
-        "mentions": mentions,
+        "mentions": None,
         "terms": terms,
         "closure": closure,
         "nodes": nodes,
         "edges": edges,
         "pattern_triples": pattern,
     }
-
-
 
 
 def symptom_closure(edges: DataFrame,
@@ -252,42 +211,4 @@ def symptom_closure(edges: DataFrame,
         return closure_mod.transitive_closure(rel, "subj", "obj")
     return closure_mod.closure_with_roots(
         rel, nodes.select("curie"), child_col="subj", parent_col="obj"
-    )
-
-
-def anchor_entity_edges(pages: DataFrame, annotate_udf,
-                        html_col: str = "html",
-                        url_col: str = "url") -> DataFrame:
-    """Entity -> page edges mined from anchor texts: pages whose inbound
-    anchors ground to a gazetteer entity ("<a href=p>Ebola virus</a>")
-    get an (ns, id, entry_name) edge to p — the classic web-KG
-    entity-linking signal (the text OTHER pages use to link to p
-    describes p better than p's own boilerplate). Output: one row per
-    (entity, dst page) — (ns, id, entry_name, dst, n_anchors), where
-    n_anchors counts supporting anchor occurrences. The reference has no
-    web layer; this composes the round-5 web-graph hop
-    (weburl.extract_links) with the grounding trie (N1).
-
-    Scale shape: links explode narrowly (no exchange); the Python NER
-    UDF runs once per DISTINCT anchor string — at crawl scale anchors
-    repeat enormously ("Home", entity names), so the anchor vocabulary
-    is orders of magnitude smaller than anchor occurrences and the
-    distinct is the step that keeps the only Python in the job off the
-    hot path. The join back fans each anchor out to its matches (a few
-    per anchor, never |corpus|); the final (entity, dst) count is a
-    partial-combined agg."""
-    from . import weburl
-
-    links = weburl.extract_links(
-        pages, html_col=html_col, url_col=url_col, with_anchor_text=True
-    ).filter(F.col("anchor") != "")
-    ann = (
-        links.select("anchor").distinct()
-        .select("anchor", F.explode(annotate_udf(F.col("anchor"))).alias("a"))
-        .select("anchor", "a.ns", "a.id", "a.entry_name")
-    )
-    return (
-        links.join(ann, "anchor")
-        .groupBy("ns", "id", "entry_name", "dst")
-        .agg(F.count(F.lit(1)).alias("n_anchors"))
     )

@@ -5,12 +5,12 @@ carried as data); its checkpoint/resume requirement is stage-level batch
 restart (lineage.py). This module is the forward-looking streaming face of
 the same pipeline: a pages stream (e.g. a WARC drop directory / Kafka topic
 in prod; a file source here) flows through the *identical* extraction and
-NER UDFs, with event-time watermarking for late crawls and an idempotent
-foreachBatch KG append.
+NER operator (ground.make_extract_ner_udf), with event-time watermarking
+for late crawls and an idempotent foreachBatch KG append.
 
 Everything stateful is expressed with built-in streaming operators
-(watermark + window aggregation + dropDuplicatesWithinWatermark); the UDFs
-are the same Arrow-batched ones the batch path uses — no separate codepath
+(watermark + window aggregation + dropDuplicatesWithinWatermark); the UDF
+is the same Arrow-batched one the batch path uses — no separate codepath
 to keep correct.
 """
 
@@ -34,9 +34,22 @@ def read_pages_stream(spark: SparkSession, path: str,
     )
 
 
-def streaming_mentions(pages_stream: DataFrame, annotate_udf,
+def _grounded_pages(pages_stream: DataFrame, gazetteer: DataFrame,
+                    watermark: str, **fields) -> DataFrame:
+    """pages stream -> valid extracted pages carrying the requested NER
+    ``fields`` (make_extract_ner_udf flags), re-crawls of one archive
+    number within the watermark dropped."""
+    udf = ground.make_extract_ner_udf(
+        pages_stream.sparkSession, gazetteer, pages=True, **fields)
+    ex = extract.extract_pages(pages_stream, udf).filter(F.col("valid"))
+    return ex.withWatermark("warc_ts", watermark) \
+        .dropDuplicatesWithinWatermark(["archive_number"])
+
+
+def streaming_mentions(pages_stream: DataFrame, gazetteer: DataFrame,
                        watermark: str = "1 hour") -> DataFrame:
-    """pages stream -> exploded mention rows, with late-crawl dedup.
+    """pages stream -> exploded mention rows (doc_id, section_idx, field,
+    text, start, end, ns, id, entry_name), with late-crawl dedup.
 
     Duplicate archive numbers within the watermark are dropped with
     streaming state (dropDuplicatesWithinWatermark). NOTE the semantic
@@ -49,44 +62,25 @@ def streaming_mentions(pages_stream: DataFrame, annotate_udf,
     don't. Re-crawls older than the watermark are handled by the
     idempotent batch sink (MERGE semantics in Iceberg / dropDuplicates on
     append here)."""
-    ex = extract.extract_pages(pages_stream).filter(F.col("valid"))
-    ex = ex.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
-        ["archive_number"]
-    )
-    sections = extract.explode_section_texts(ex)
-    return ground.annotate_sections(sections, annotate_udf)
+    ex = _grounded_pages(pages_stream, gazetteer, watermark, offsets=True)
+    return ex.select(
+        F.col("archive_number").alias("doc_id"),
+        F.explode("mentions").alias("m"),
+    ).select("doc_id", "m.*")
 
 
-def mention_rate(pages_stream: DataFrame, annotate_udf,
+def mention_rate(pages_stream: DataFrame, gazetteer: DataFrame,
                  window: str = "10 minutes",
                  watermark: str = "1 hour") -> DataFrame:
     """Windowed per-entity mention counts with late-data handling — the
     streaming counterpart of the count-ordered stats artifacts
-    (promed_ner.py:183-189)."""
-    ex = extract.extract_pages(pages_stream).filter(F.col("valid"))
-    # same re-crawl dedup as streaming_mentions: without it a page crawled
-    # 3x within a window counts its mentions 3x, where the batch stats
-    # artifact (promed_ner.py:183-189) counts each alert once
-    sections = (
-        ex.withWatermark("warc_ts", watermark)
-        .dropDuplicatesWithinWatermark(["archive_number"])
-        .select(
-            F.col("archive_number").alias("doc_id"),
-            "warc_ts",
-            F.explode_outer("sections").alias("sec"),
-        )
-    )
-    # title and content are annotated as SEPARATE rows, exactly like the
-    # batch path (extract.explode_section_texts / promed_ner.py:145-150):
-    # concatenating them would let the trie match phrases spanning the
-    # title/content boundary — mentions the batch artifact cannot contain
-    texts = sections.select(
-        "doc_id", "warc_ts",
-        F.explode(F.array("sec.title", "sec.content")).alias("text"),
-    ).filter(F.col("text").isNotNull())
-    m = texts.select(
-        "warc_ts", F.explode(annotate_udf(F.col("text"))).alias("a")
-    )
+    (promed_ner.py:183-189). Same re-crawl dedup as streaming_mentions:
+    without it a page crawled 3x within a window counts its mentions 3x,
+    where the batch stats artifact counts each alert once. Title and
+    content are scanned as separate units, exactly like the batch path
+    (promed_ner.py:145-150)."""
+    ex = _grounded_pages(pages_stream, gazetteer, watermark, offsets=True)
+    m = ex.select("warc_ts", F.explode("mentions").alias("a"))
     return (
         m.groupBy(
             F.window("warc_ts", window).alias("w"),
@@ -373,17 +367,18 @@ def start_kg_append(mentions_stream: DataFrame, out_dir: str,
 
 
 def start_triple_deltas(pages_stream: DataFrame, delta_dir: str,
-                        checkpoint_dir: str, annotate_udf,
-                        type_dim: DataFrame, watermark: str = "1 hour",
+                        checkpoint_dir: str, gazetteer: DataFrame,
+                        watermark: str = "1 hour",
                         trigger_available_now: bool = True):
     """Streaming cue-triple maintenance, the exactly-once way: each
-    micro-batch of pages runs the full extract -> offset NER -> sentence
-    cue-rule chain (triples.section_sentence_mentions +
-    pattern_triples_grouped) and lands its PER-DOC triples as an immutable
-    delta at ``delta_dir/batch_id=K`` with mode('overwrite') — the same
-    replay-safe contract as start_kg_append (a crash between parquet write
-    and checkpoint commit replays the batch; the overwrite replaces the
-    partial output instead of duplicating beside it).
+    micro-batch of pages carries its per-sentence mention groups out of
+    the extraction + NER operator, runs the cue rules
+    (triples.triples_from_sentence_groups) and lands its PER-DOC triples
+    as an immutable delta at ``delta_dir/batch_id=K`` with
+    mode('overwrite') — the same replay-safe contract as start_kg_append
+    (a crash between parquet write and checkpoint commit replays the
+    batch; the overwrite replaces the partial output instead of
+    duplicating beside it).
 
     The at-rest triple table is then advanced OUT-OF-BAND by
     incremental.compact_edge_deltas: it folds batches newer than the live
@@ -397,17 +392,13 @@ def start_triple_deltas(pages_stream: DataFrame, delta_dir: str,
     (triples.pattern_triple_delta + upsert_edges)."""
     from . import triples as triples_mod
 
-    ex = extract.extract_pages(pages_stream).filter(F.col("valid"))
-    ex = ex.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
-        ["archive_number"]
-    )
+    ex = _grounded_pages(pages_stream, gazetteer, watermark, groups=True)
 
     def write_batch(batch_df: DataFrame, batch_id: int):
-        sections = extract.explode_section_texts(batch_df)
-        sm = triples_mod.section_sentence_mentions(
-            sections, annotate_udf, type_dim)
+        groups = triples_mod.explode_groups(batch_df.select(
+            F.col("archive_number").alias("doc_id"), "groups"))
         (
-            triples_mod.pattern_triples_grouped(sm)
+            triples_mod.triples_from_sentence_groups(groups)
             .write.mode("overwrite")
             .parquet(f"{delta_dir}/batch_id={batch_id}")
         )

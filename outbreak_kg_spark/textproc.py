@@ -131,20 +131,13 @@ def split_page_text(page_text: str) -> tuple[str, str]:
     return page_text[:idx] + "\n", page_text[idx + 2 :]
 
 
-def extract_alert(page_text: str, with_canonical: bool = True) -> dict:
+def extract_alert(page_text: str) -> dict:
     """Full per-page extraction: header fields + sections + canonical text.
 
     Returns a dict with keys (archive_number, subject, published_ts,
     sections, extracted_text, valid). ``valid`` is False when the reference
     would skip the record: empty header (promed_ner.py:124-125), unparseable
     date, or missing archive number (:128-129).
-
-    with_canonical=False skips rendering ``extracted_text`` (returned as
-    None): the fused extract+NER operator scans section title/content
-    directly and discards the canonical rendering, so building the joined
-    string per page was pure allocation. The byte-identity surface is the
-    default path; only callers that provably never read extracted_text
-    may pass False.
     """
     header, body = split_page_text(page_text)
     if header.strip() == "":
@@ -161,8 +154,7 @@ def extract_alert(page_text: str, with_canonical: bool = True) -> dict:
         "subject": fields["subject"],
         "published_ts": fields["date"],
         "sections": sections,
-        "extracted_text": (canonical_text(fields["subject"], sections)
-                           if with_canonical else None),
+        "extracted_text": canonical_text(fields["subject"], sections),
         "valid": True,
     }
 

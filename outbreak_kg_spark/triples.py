@@ -6,34 +6,29 @@ typed rules (kg/build.py:70-97); its north-star form is *pattern* triple
 extraction: relations asserted only when an explicit lexical cue connects
 two grounded mentions inside one sentence ("120 cases of cholera", "X
 causes Y", "cholera in Nairobi", "on 2024-03-01"). This module adds that
-layer over the existing broadcast-trie annotator (ground.make_annotate_udf),
-emitting the four outbreak predicates the rule names: ``located_in``,
-``causes``, ``case_count_of``, ``occurred_on``.
+layer over the per-sentence mention groups of the extraction + NER
+operator (ground.make_extract_ner_udf with ``groups=True``), emitting the
+four outbreak predicates the rule names: ``located_in``, ``causes``,
+``case_count_of``, ``occurred_on``.
 
 Scale shape (the whole point of doing this sentence-scoped):
 
 - The ONLY Python in the plan is the NER UDF the pipeline already pays
-  for. Sentence assignment is pure codegen: a mention's sentence index is
-  the count of boundary chars before its start offset (length minus
-  length-after-replace over a substr), and the sentence text is one
-  element_at over the split array — no second scan, no window, no UDF.
+  for: it places each mention in its sentence (bisect over the boundary
+  offsets) and groups the sentence's mentions in the same pass, so there
+  is no per-mention sentence math, no join back to the text and no
+  grouping exchange.
 - Cue checks are case-folded `contains` via higher-order `exists` over the
-  per-mention surface array, plus static-pattern `regexp_extract` — all
-  Column expressions, never per-row Python.
-- The pair-forming join keys on (doc_id, sent_idx): a near-unique
-  composite, so a hot entity ("COVID-19" in 10^9 docs) does NOT make a
-  hot join key — the skew story is structurally different from the
-  doc-level co-mention join (skew.py), which is why that one salts and
-  this one doesn't need to. Per-sentence mention counts are bounded by
-  sentence length, so the within-key pair expansion is O(len^2) on a
-  ~40-token string, not O(corpus).
-- Type filters (disease/pathogen/geoloc legs) are pushed below the join;
-  the final distinct is the single wide exchange.
+  per-mention surface arrays, plus static-pattern `regexp_extract` — all
+  Column expressions inside the sentence row, never per-row Python.
+- A sentence group is bounded by sentence length, so the within-group pair
+  expansion is O(len^2) on a ~40-token string, not O(corpus), and a hot
+  entity ("COVID-19" in 10^9 docs) makes no hot key: the final distinct
+  is the single wide exchange.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -42,286 +37,11 @@ CASES_RE = "([0-9]+) cases of "
 DATE_RE = " on ([0-9]{4}-[0-9]{2}-[0-9]{2})"
 
 
-def _boundary_class(boundary: str) -> str:
-    """Regex char class splitting sentences on ANY of the boundary chars
-    ('.' default; pass '.!?' for prose). Still a STRING pattern — Catalyst
-    folds it once."""
-    import re as _re
-
-    return "[" + _re.escape(boundary) + "]"
-
-
-def _boundary_count(prefix_col, boundary: str):
-    """#boundary chars in the prefix = the mention's sentence index —
-    strip every non-boundary char and measure (one regexp_replace; for a
-    single-char boundary this is equivalent to the replace-diff trick but
-    uniform across class sizes)."""
-    import re as _re
-
-    return F.length(
-        F.regexp_replace(prefix_col, "[^" + _re.escape(boundary) + "]", ""))
-
-
-def sentence_mentions(
-    docs: DataFrame,
-    annotate_udf,
-    type_dim: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    boundary: str = ".",
-) -> DataFrame:
-    """Annotate ``docs`` and place every mention in its sentence.
-
-    Returns (id_col, sent_idx, sentence, curie, name, surfaces, node_type),
-    one row per (doc, sentence, curie), where ``surfaces`` is the sorted
-    distinct set of matched surface strings — the cue rules test SURFACES,
-    not entry names, because a mention grounded through a synonym ("ebola"
-    -> "Ebolavirus Disease") appears in the sentence as the synonym.
-    ``type_dim`` is a (curie, node_type) dimension (ground.type_dim)
-    broadcast into the typed join.
-
-    The sentence index is derived from the mention's char offset with no
-    re-scan: idx = #boundary chars strictly before start. This stays
-    correct because the tokenizer never matches across a boundary char
-    (boundary is non-word), so a mention cannot straddle two sentences.
-    """
-    a = docs.select(id_col, text_col, F.explode(annotate_udf(F.col(text_col))).alias("a"))
-    pre = F.col(text_col).substr(F.lit(1), F.col("a.start"))
-    sent_idx = _boundary_count(pre, boundary).cast("int")
-    sent_arr = F.split(F.col(text_col), _boundary_class(boundary), -1)
-    rows = a.select(
-        id_col,
-        sent_idx.alias("sent_idx"),
-        F.element_at(sent_arr, sent_idx + F.lit(1)).alias("sentence"),
-        F.concat_ws(":", "a.ns", "a.id").alias("curie"),
-        F.col("a.entry_name").alias("name"),
-        F.col("a.text").alias("surface"),
-    )
-    return _group_surfaces(rows, id_col).join(
-        F.broadcast(type_dim), "curie"
-    ).select(id_col, "sent_idx", "sentence", "curie", "name", "surfaces",
-             "node_type")
-
-
-def _group_surfaces(rows: DataFrame, id_col: str) -> DataFrame:
-    """(.., surface) mention rows -> one row per (doc, sentence, curie)
-    with the sorted distinct surface set. A partial+final agg (collect_set
-    combines map-side); sentence/name are functionally determined by the
-    keys, carried with max() so the output is deterministic — a
-    dropDuplicates here would keep an ARBITRARY surface and make cue
-    results run-dependent when one curie matches via several synonyms."""
-    return (
-        rows.groupBy(id_col, "sent_idx", "curie")
-        .agg(
-            F.max("sentence").alias("sentence"),
-            F.max("name").alias("name"),
-            F.sort_array(F.collect_set("surface")).alias("surfaces"),
-        )
-    )
-
-
-def pattern_triples(
-    sm: DataFrame,
-    id_col: str = "doc_id",
-    cases_re: str = CASES_RE,
-    date_re: str = DATE_RE,
-) -> DataFrame:
-    """Cue-rule triples over sentence mentions (from sentence_mentions).
-
-    Emits (id_col, subj, pred, obj, n_cases) distinct, with four rules:
-
-    - located_in:  disease a + geoloc b co-sentential AND the sentence
-      contains the literal cue ``" in <b surface>"`` -> (a, located_in, b)
-    - causes:      pathogen a + disease b co-sentential AND the sentence
-      contains ``"<a surface> causes <b surface>"`` -> (a, causes, b)
-    - case_count_of: disease mention whose sentence contains
-      ``" cases of <surface>"``; n_cases = the count captured by cases_re
-      -> (disease, case_count_of, doc:<id>)
-    - occurred_on: disease mention co-sentential with a date matched by
-      date_re -> (disease, occurred_on, <date>)
-
-    Cue gates are case-folded ``contains`` over the mention's matched
-    SURFACE set (``exists`` over the surfaces array — a synonym-grounded
-    mention appears in text as the synonym, never as its entry name);
-    still whole-stage codegen — higher-order exists over an array column,
-    no Python. Count/date capture are static-pattern regexp_extract.
-    n_cases is NULL off the case_count_of leg.
-
-    The four legs re-read ``sm``; callers materializing the result should
-    pass a persisted frame (Catalyst does not share common subplans, so
-    an unpersisted sm re-runs its NER UDF once per leg — four corpus
-    annotation passes at scale).
-    """
-    a = sm.alias("a")
-    # the b side never reads the sentence (cues test a's copy — same
-    # string by construction): dropping it halves the pair-join exchange
-    # width, which is what the exchange mostly carries at web scale
-    b = sm.drop("sentence").alias("b")
-    on = [F.col(f"a.{id_col}") == F.col(f"b.{id_col}"),
-          F.col("a.sent_idx") == F.col("b.sent_idx")]
-    null_cases = F.lit(None).cast("long").alias("n_cases")
-
-    def _any_surface(sentence, surfaces, prefix, suffix=""):
-        # exists over the (short) surface array — codegen, case-folded
-        return F.exists(
-            surfaces,
-            lambda s: F.contains(
-                F.lower(sentence),
-                F.concat(F.lit(prefix), F.lower(s), F.lit(suffix))),
-        )
-
-    located = (
-        a.filter(F.col("node_type") == "disease")
-        .join(b.filter(F.col("node_type") == "geoloc"), on)
-        .filter(_any_surface(F.col("a.sentence"), F.col("b.surfaces"), " in "))
-        .select(F.col(f"a.{id_col}").alias(id_col),
-                F.col("a.curie").alias("subj"),
-                F.lit("located_in").alias("pred"),
-                F.col("b.curie").alias("obj"),
-                null_cases)
-    )
-    causes = (
-        a.filter(F.col("node_type") == "pathogen")
-        .join(b.filter(F.col("node_type") == "disease"), on)
-        .filter(F.exists(
-            F.col("a.surfaces"),
-            lambda sa: F.exists(
-                F.col("b.surfaces"),
-                lambda sb: F.contains(
-                    F.lower(F.col("a.sentence")),
-                    F.concat(F.lower(sa), F.lit(" causes "), F.lower(sb)))),
-        ))
-        .select(F.col(f"a.{id_col}").alias(id_col),
-                F.col("a.curie").alias("subj"),
-                F.lit("causes").alias("pred"),
-                F.col("b.curie").alias("obj"),
-                null_cases)
-    )
-    case_count = (
-        sm.filter(
-            (F.col("node_type") == "disease")
-            & _any_surface(F.col("sentence"), F.col("surfaces"), " cases of ")
-            # a digitless cue ("no new cases of cholera") asserts NO count
-            & (F.regexp_extract("sentence", cases_re, 1) != "")
-        )
-        .select(id_col,
-                F.col("curie").alias("subj"),
-                F.lit("case_count_of").alias("pred"),
-                F.concat(F.lit("doc:"), F.col(id_col).cast("string")).alias("obj"),
-                F.regexp_extract("sentence", cases_re, 1).cast("long").alias("n_cases"))
-    )
-    occurred = (
-        sm.select(id_col, "curie", "node_type",
-                  F.regexp_extract("sentence", date_re, 1).alias("_d"))
-        .filter((F.col("node_type") == "disease") & (F.col("_d") != ""))
-        .select(id_col,
-                F.col("curie").alias("subj"),
-                F.lit("occurred_on").alias("pred"),
-                F.col("_d").alias("obj"),
-                null_cases)
-    )
-    return (
-        located.unionByName(causes).unionByName(case_count).unionByName(occurred)
-        .dropDuplicates([id_col, "subj", "pred", "obj"])
-    )
-
-
-def mentions_to_sentences(
-    mentions: DataFrame,
-    section_texts: DataFrame,
-    type_dim: DataFrame,
-    keys: tuple = ("doc_id", "section_idx", "field"),
-    text_col: str = "text",
-    boundary: str = ".",
-) -> DataFrame:
-    """Sentence-place ALREADY-MATERIALIZED mentions (ground.
-    annotate_sections output, carrying start offsets) by joining them back
-    to their section texts — the production composition: the pipeline's
-    NER stage runs ONCE and is checkpointed at rest; the cue-rule layer
-    then reuses it instead of re-annotating (sentence_mentions pays a
-    fresh annotation pass, right for one-shot queries, wrong when the
-    mentions table already exists).
-
-    Returns the pattern_triples input shape keyed by a composite doc id:
-    (doc_id, sent_idx, sentence, curie, name, surfaces, node_type) where
-    sent_idx is
-    offset WITHIN (doc, section, field) — sentences never span sections,
-    so cue rules stay correct, and the synthetic doc key for pair joins is
-    (doc_id, section_idx, field, sent_idx), which this encodes by folding
-    section_idx/field into sent_idx via dense struct keys downstream.
-
-    Scale shape: one equi-join of the mention table onto section texts on
-    the composite key — both sides are at-rest stage outputs bucketed by
-    doc_id (pipeline.build_kg), so the join plans with zero scan-side
-    exchange; sentence math is the same pure-codegen offset arithmetic as
-    sentence_mentions. The mention side carries only offsets (~40 B/row);
-    section text rides the build side of each matched key once.
-    """
-    kcols = list(keys)
-    m = mentions.select(
-        *kcols,
-        F.col("start"),
-        F.concat_ws(":", "ns", "id").alias("curie"),
-        F.col("entry_name").alias("name"),
-        F.col("text").alias("surface"),
-    )
-    st = section_texts.select(
-        *kcols, F.col(text_col).alias("_sectext"))
-    j = m.join(st, kcols)
-    pre = F.col("_sectext").substr(F.lit(1), F.col("start"))
-    within = _boundary_count(pre, boundary).cast("int")
-    sent_arr = F.split(F.col("_sectext"), _boundary_class(boundary), -1)
-    id_col = kcols[0]
-    # fold the section coordinates into the sentence index: pattern_triples
-    # joins on (id, sent_idx), and (section_idx, field, within) must never
-    # collide across sections
-    sent_key = F.concat_ws(
-        "#",
-        F.col(kcols[1]).cast("string") if len(kcols) > 1 else F.lit("0"),
-        F.col(kcols[2]).cast("string") if len(kcols) > 2 else F.lit("0"),
-        within.cast("string"),
-    )
-    rows = j.select(
-        F.col(id_col).alias("doc_id"),
-        sent_key.alias("sent_idx"),
-        F.element_at(sent_arr, within + F.lit(1)).alias("sentence"),
-        "curie",
-        "name",
-        "surface",
-    )
-    return _group_surfaces(rows, "doc_id").join(
-        F.broadcast(type_dim), "curie"
-    ).select("doc_id", "sent_idx", "sentence", "curie", "name", "surfaces",
-             "node_type")
-
-
-def pattern_triples_grouped(
-    sm: DataFrame,
-    id_col: str = "doc_id",
-    cases_re: str = CASES_RE,
-    date_re: str = DATE_RE,
-) -> DataFrame:
-    """pattern_triples' one-pass physical plan: SAME relation (pytest
-    asserts equality), different shape — the per-sentence mention groups
-    are tiny (bounded by sentence length), so instead of four self-join
-    legs the mentions collapse to ONE row per (doc, sentence) and every
-    cue rule runs as higher-order array expressions inside that row.
-
-    Exchanges: one (doc, sent_idx) collect_list agg + the final distinct —
-    versus the relational plan's four join exchanges + distinct. This is
-    the skew.grouped_pair_counts lesson reapplied: when the group is small
-    and the rules are local to it, ship the group once and expand JVM-side.
-    The relational pattern_triples stays as the semantic reference (and is
-    the shape you want if sentences could be adversarially huge)."""
-    g = (
-        sm.groupBy(id_col, "sent_idx")
-        .agg(
-            F.max("sentence").alias("sentence"),
-            F.collect_list(
-                F.struct("curie", "node_type", "surfaces")).alias("ms"),
-        )
-    )
-    return triples_from_sentence_groups(g, id_col, cases_re, date_re)
+def explode_groups(df: DataFrame) -> DataFrame:
+    """(doc_id, groups: the ground.make_extract_ner_udf field) -> one row
+    per sentence group, the triples_from_sentence_groups input."""
+    return df.select("doc_id", F.explode("groups").alias("g")).select(
+        "doc_id", "g.*")
 
 
 def triples_from_sentence_groups(
@@ -330,11 +50,27 @@ def triples_from_sentence_groups(
     cases_re: str = CASES_RE,
     date_re: str = DATE_RE,
 ) -> DataFrame:
-    """The cue-rule stage of pattern_triples_grouped over an already
-    per-(doc, sentence) grouped relation ``g`` with columns (id_col,
-    sent_idx, sentence, ms: array<struct curie, node_type, surfaces>) —
-    factored out so the fused sentence-group UDF (sentence_mention_groups)
-    can feed it without paying the collect_list exchange."""
+    """Cue-rule triples over a per-(doc, sentence) grouped relation ``g``
+    with columns (id_col, sentence, ms: array<struct curie, node_type,
+    surfaces>) — explode_groups of the operator's ``groups`` field.
+
+    Emits (id_col, subj, pred, obj, n_cases) distinct, with four rules:
+
+    - located_in:  disease a + geoloc b co-sentential AND the sentence
+      contains the literal cue ``" in <b surface>"`` -> (a, located_in, b)
+    - causes:      pathogen a + disease b co-sentential AND the sentence
+      contains ``"<a surface> causes <b surface>"`` -> (a, causes, b)
+    - case_count_of: disease mention whose sentence contains
+      ``" cases of <surface>"`` and a count captured by cases_re
+      -> (disease, case_count_of, doc:<id>), n_cases = that count
+    - occurred_on: disease mention co-sentential with a date matched by
+      date_re -> (disease, occurred_on, <date>)
+
+    Cue gates test the matched SURFACES, case-folded (a synonym-grounded
+    mention appears in text as the synonym, never as its entry name).
+    n_cases is NULL off the case_count_of leg. Every rule runs as
+    higher-order array expressions inside the sentence row; the final
+    distinct is the one exchange."""
     low = F.lower(F.col("sentence"))
 
     def typed(t):
@@ -402,159 +138,9 @@ def triples_from_sentence_groups(
     )
 
 
-def make_sentence_groups_udf(spark, gazetteer, type_map: dict,
-                             ns_priority=None, boundary: str = "."):
-    """Fused per-doc NER + sentence placement + per-sentence grouping in
-    ONE Arrow pass: text -> array<struct(sent_idx, sentence, ms)> where
-    ``ms`` is the per-sentence mention group (curie, node_type, surfaces)
-    that pattern_triples_grouped's collect_list agg would build.
-
-    Motivation (guide §2.4/§4): the declarative chain pays, per MENTION
-    row, a substr + regexp_replace over the doc prefix (sentence index)
-    and a full-text split (sentence lookup), then one groupBy exchange to
-    form the (doc, sentence) groups. All of that is per-doc-local work —
-    the scan already sees the whole doc — so the fused UDF computes it
-    in Python where it is O(doc length) once: boundary positions found
-    once, mention index via bisect, sentences split once, groups built
-    in a dict. The downstream cue rules then run on the SAME grouped
-    relation shape with zero pre-distinct exchanges.
-
-    ``type_map`` is the (curie -> node_type) dimension as a plain dict
-    (vocabulary-sized — same broadcast budget as the trie itself);
-    mentions with no type entry are dropped, mirroring the inner type
-    join of sentence_mentions. Group surfaces are the sorted distinct
-    surface sets; ms is sorted by curie (deterministic where
-    collect_list order was arbitrary — downstream triples are
-    order-insensitive). Equality with the declarative chain is
-    pytest-asserted (test_triples)."""
-    import re as _re
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from .ground import (
-        DEFAULT_NS_PRIORITY,
-        _gaz_rows,
-        compile_gazetteer,
-        scan_text,
-    )
-
-    schema = ArrayType(StructType([
-        StructField("sent_idx", IntegerType()),
-        StructField("sentence", StringType()),
-        StructField("ms", ArrayType(StructType([
-            StructField("curie", StringType()),
-            StructField("node_type", StringType()),
-            StructField("surfaces", ArrayType(StringType())),
-        ]))),
-    ]))
-    rows = _gaz_rows(gazetteer)
-    trie = compile_gazetteer(rows, ns_priority or DEFAULT_NS_PRIORITY)
-    bc = spark.sparkContext.broadcast((trie, dict(type_map), boundary))
-
-    @pandas_udf(schema)
-    def sentence_groups(texts: pd.Series) -> pd.Series:
-        from bisect import bisect_left
-
-        t, tmap, bnd = bc.value
-        bre = _re.compile("[" + _re.escape(bnd) + "]")
-
-        def per_doc(text):
-            if not text:
-                return []
-            matches = scan_text(text, t)
-            if not matches:
-                return []
-            bpos = [m.start() for m in bre.finditer(text)]
-            sents = bre.split(text)
-            groups: dict = {}
-            for surf, start, _end, ns, id_, name in matches:
-                curie = ns + ":" + id_
-                nt = tmap.get(curie)
-                if nt is None:
-                    continue
-                si = bisect_left(bpos, start)
-                grp = groups.setdefault(si, {})
-                cur = grp.get(curie)
-                if cur is None:
-                    grp[curie] = [name, nt, {surf}]
-                else:
-                    if name > cur[0]:  # F.max("name") parity
-                        cur[0] = name
-                    cur[2].add(surf)
-            return [
-                (si, sents[si],
-                 [(c, v[1], sorted(v[2]))
-                  for c, v in sorted(grp.items())])
-                for si, grp in sorted(groups.items())
-            ]
-
-        return texts.map(per_doc)
-
-    return sentence_groups
-
-
-def sentence_mention_groups(docs: DataFrame, groups_udf,
-                            id_col: str = "doc_id",
-                            text_col: str = "text") -> DataFrame:
-    """docs -> the (id, sent_idx, sentence, ms) grouped relation of
-    pattern_triples_grouped, built by the fused UDF with no exchange."""
-    return docs.select(
-        id_col, F.explode(groups_udf(F.col(text_col))).alias("g")
-    ).select(id_col, "g.sent_idx", "g.sentence", "g.ms")
-
-
-def section_sentence_mentions(
-    section_texts: DataFrame,
-    annotate_udf,
-    type_dim: DataFrame,
-    keys: tuple = ("doc_id", "section_idx", "field"),
-    text_col: str = "text",
-    boundary: str = ".",
-) -> DataFrame:
-    """sentence_mentions over (doc, section, field) section texts — the
-    one-shot composition for a FRESH annotation pass: the section text is
-    still in scope in the same projection as the NER explode, so sentence
-    placement costs zero joins (vs mentions_to_sentences, which exists for
-    mentions already materialized at rest and must join the text back).
-    Same output shape and sent_idx encoding as mentions_to_sentences
-    (equality pytest-asserted), so pattern_triples* consume either."""
-    kcols = list(keys)
-    a = section_texts.select(
-        *kcols, text_col,
-        F.explode(annotate_udf(F.col(text_col))).alias("a"))
-    pre = F.col(text_col).substr(F.lit(1), F.col("a.start"))
-    within = _boundary_count(pre, boundary).cast("int")
-    sent_arr = F.split(F.col(text_col), _boundary_class(boundary), -1)
-    sent_key = F.concat_ws(
-        "#",
-        F.col(kcols[1]).cast("string") if len(kcols) > 1 else F.lit("0"),
-        F.col(kcols[2]).cast("string") if len(kcols) > 2 else F.lit("0"),
-        within.cast("string"),
-    )
-    rows = a.select(
-        F.col(kcols[0]).alias("doc_id"),
-        sent_key.alias("sent_idx"),
-        F.element_at(sent_arr, within + F.lit(1)).alias("sentence"),
-        F.concat_ws(":", "a.ns", "a.id").alias("curie"),
-        F.col("a.entry_name").alias("name"),
-        F.col("a.text").alias("surface"),
-    )
-    return _group_surfaces(rows, "doc_id").join(
-        F.broadcast(type_dim), "curie"
-    ).select("doc_id", "sent_idx", "sentence", "curie", "name", "surfaces",
-             "node_type")
-
-
 def triples_to_edges(pt: DataFrame) -> DataFrame:
     """Per-doc cue triples -> the at-rest edge form: (subj, pred, obj,
-    count) with count = number of supporting documents (pattern_triples*
+    count) with count = number of supporting documents (the cue triples
     output is distinct per doc-triple, so a plain count aggregates doc
     support). One partial+final agg; hot triples combine map-side."""
     return pt.groupBy("subj", "pred", "obj").agg(

@@ -2,7 +2,7 @@
 
 Measurement-only (bench.py stays frozen): times each leg of the e2e
 pages->terms+counted pipeline separately with noop sinks so the wall can
-be attributed: page construction, fused UDF pass, sets persist
+be attributed: page construction, extraction + NER UDF pass, sets persist
 materialization + terms explode, and the pair-expansion count read from
 the warm persist.
 
@@ -47,11 +47,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from pyspark.sql import functions as F
-    from outbreak_kg_spark import fused
+    from outbreak_kg_spark import ground
     from outbreak_kg_spark.entry_fixtures import entry_gazetteer_df
 
-    gaz = entry_gazetteer_df(spark)
-    fudf = fused.make_fused_udf(spark, gaz)
+    udf = ground.make_extract_ner_udf(
+        spark, entry_gazetteer_df(spark), pages=True, terms=True)
 
     pages, n_docs = replicated_pages(spark, sf_dir, repl)
     out = {"n_docs": n_docs, "host_pre": pre, "legs": {}}
@@ -76,13 +76,14 @@ def main() -> None:
     spark.sparkContext.setJobDescription("leg: pages only")
     leg("pages_only", lambda: _force(pages))
 
-    # leg 2: pages -> fused UDF -> x struct, no persist/no downstream
-    x = pages.select("url", fudf(F.col("text")).alias("x")).filter(
+    # leg 2: pages -> extraction + NER UDF -> x struct, no persist/no
+    # downstream
+    x = pages.select("url", udf(F.col("text")).alias("x")).filter(
         F.col("x.valid"))
-    spark.sparkContext.setJobDescription("leg: fused udf")
-    leg("fused_udf", lambda: _force(x))
+    spark.sparkContext.setJobDescription("leg: extract+ner udf")
+    leg("extract_ner_udf", lambda: _force(x))
 
-    # leg 2b: fused UDF + the sort_array transform projection (bench's sets
+    # leg 2b: the UDF + the sort_array transform projection (bench's sets
     # shape, but NOT persisted)
     sets_shape = x.select(
         F.col("url").alias("doc_id"),

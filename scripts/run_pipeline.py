@@ -87,7 +87,7 @@ def main() -> None:
         "nodes": out["nodes"].count(),
         "edges": out["edges"].count(),
         "alerts": out["alerts"].count(),
-        "mentions": out["mentions"].count(),
+        "terms": out["terms"].count(),
         "wall_sec": round(time.monotonic() - t0, 2),
     }
     if out["pattern_triples"] is not None:

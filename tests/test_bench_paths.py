@@ -1,35 +1,47 @@
-"""The bench e2e fused path must produce exactly the relations the modular
-path produces — same per-doc term sets, same terms table, same pair counts
-with the same canonical pair orientation (the fused UDF emits sets sorted by
-(ns, id, entry_name); the bench wiring re-sorts by (entry_name, curie) to
-match collect_group_sets' struct-field-order sort)."""
+"""bench.py's e2e relations equal the declarative oracle chain: the same
+per-doc term sets and pair counts, pairs in the canonical (entry_name,
+curie) orientation."""
 
 import sys
+from collections import Counter
+from itertools import combinations
 from pathlib import Path
+
+from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bench import pipeline_outputs, replicated_pages  # noqa: E402
+from outbreak_kg_spark import extract  # noqa: E402
+from outbreak_kg_spark.entry_fixtures import entry_gazetteer_df  # noqa: E402
+from tests.oracle import chain  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def test_fused_bench_path_matches_modular(spark):
-    pages, n = replicated_pages(spark, SF, repl=2)
-    sets_f, terms_f, counted_f = pipeline_outputs(spark, pages, modular=False)
-    sets_m, terms_m, counted_m = pipeline_outputs(spark, pages, modular=True)
+def test_bench_path_matches_oracle(spark):
+    pages, _n = replicated_pages(spark, SF, repl=2)
+    sets, terms, counted = pipeline_outputs(spark, pages)
     try:
-        assert _rows(terms_f) == _rows(terms_m)
-        cf, cm = _rows(counted_f), _rows(counted_m)
-        assert cf == cm
-        assert len(cf) > 0
-        # canonical orientation: every pair ordered by (entry_name, curie)
-        assert all((a_en, a_c) < (b_en, b_c)
-                   for a_en, a_c, b_en, b_c, _n in cf)
+        got_terms = sorted(tuple(r) for r in terms.collect())
+        got_pairs = sorted(tuple(r) for r in counted.collect())
     finally:
-        sets_f.unpersist()
-        sets_m.unpersist()
+        sets.unpersist()
+
+    valid = extract.extract_pages(pages).filter("valid").select(
+        F.col("url").alias("archive_number"), "sections")
+    want_df = chain.terms_by_alert(chain.annotate_sections(
+        chain.explode_section_texts(valid),
+        chain.make_annotate_udf(spark, entry_gazetteer_df(spark))),
+        exclude_tokens=set())
+    per_doc: dict = {}
+    for r in want_df.collect():
+        per_doc.setdefault(r.doc_id, set()).add(
+            (r.entry_name, f"{r.ns}:{r.id}"))
+    want_terms = sorted((d, en, c) for d, ts in per_doc.items()
+                        for en, c in ts)
+    pairs = Counter(a + b for ts in per_doc.values()
+                    for a, b in combinations(sorted(ts), 2))
+    want_pairs = sorted(k + (n,) for k, n in pairs.items())
+    assert got_terms == want_terms
+    assert got_pairs == want_pairs and len(want_pairs) > 0

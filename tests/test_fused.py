@@ -1,29 +1,6 @@
-"""Fused extract+NER operator == modular path, on the synthetic corpus."""
-
-from pyspark.sql import functions as F
-
-from outbreak_kg_spark import extract, fused, ground, synth
-from outbreak_kg_spark.ground import NER_EXCLUDE_TOKENS
-
-
-def test_fused_equals_modular(spark):
-    pages = synth.pages_df(spark, 120)
-    gaz = synth.gazetteer_df(spark)
-
-    # modular: extract -> dedup -> sections -> annotate -> terms
-    alerts = extract.dedup_alerts(extract.extract_pages(pages))
-    udf = ground.make_annotate_udf(spark, gaz)
-    modular = ground.terms_by_alert(
-        ground.annotate_sections(extract.explode_section_texts(alerts), udf)
-    )
-    want = {(r.doc_id, r.ns, r.id) for r in modular.collect()}
-
-    # fused: single UDF pass over the RAW pages — fused_terms applies the
-    # same first-wins archive dedup internally (no pre-filter needed)
-    fudf = fused.make_fused_udf(spark, gaz, exclude_tokens=NER_EXCLUDE_TOKENS)
-    got_df = fused.fused_terms(pages, fudf)
-    got = {(r.doc_id, r.ns, r.id) for r in got_df.collect()}
-    assert got == want
+"""Scan-level parity of the offset-free trie scan that the extraction +
+NER operator's terms-only ask falls back to (ground.scan_terms) with the
+offset-carrying reference scan (ground.scan_text)."""
 
 
 def test_scan_terms_matches_scan_text():

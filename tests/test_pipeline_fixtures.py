@@ -20,12 +20,17 @@ def corpus():
 
 @pytest.fixture(scope="module")
 def spark_terms(spark, corpus):
+    from pyspark.sql import functions as F
+
     pages = synth.pages_df(spark, N_DOCS)
-    alerts = extract.dedup_alerts(extract.extract_pages(pages))
-    udf = ground.make_annotate_udf(spark, synth.gazetteer_df(spark))
-    mentions = ground.annotate_sections(extract.explode_section_texts(alerts), udf)
-    terms = ground.terms_by_alert(mentions).cache()
-    return alerts.cache(), terms
+    udf = ground.make_extract_ner_udf(
+        spark, synth.gazetteer_df(spark), pages=True, terms=True,
+        exclude_tokens=NER_EXCLUDE_TOKENS)
+    alerts = extract.dedup_alerts(extract.extract_pages(pages, udf)).cache()
+    terms = alerts.select(
+        F.col("archive_number").alias("doc_id"), F.explode("terms").alias("t")
+    ).select("doc_id", "t.*").cache()
+    return alerts, terms
 
 
 @pytest.fixture(scope="module")
@@ -120,24 +125,3 @@ def test_alert_nodes_timestamps(spark, spark_terms, oracle_state):
             assert ts in clean[k]
         else:
             assert ts == ""
-
-
-def test_anchor_entity_edges(spark):
-    """Anchor texts ground against the gazetteer and attach to the link
-    TARGET; ungrounded anchors ('Home') contribute nothing; repeated
-    anchors count occurrences, with the NER UDF run once per distinct
-    anchor string."""
-    from outbreak_kg_spark import ground, pipeline, synth
-
-    html = ('<a href="https://t.example/ebola">Virus Diseases</a>'
-            '<a href="https://t.example/home">Home</a>'
-            '<a href="https://t.example/ebola">viral disease</a>')
-    pages = spark.createDataFrame(
-        [(f"https://s{i}.example/p", html) for i in range(3)],
-        ["url", "html"])
-    udf = ground.make_annotate_udf(spark, synth.gazetteer_df(spark))
-    got = pipeline.anchor_entity_edges(pages, udf).collect()
-    assert {(r.ns, r.id, r.dst) for r in got} == {
-        ("MESH", "D0101", "https://t.example/ebola")}
-    # 3 pages x 2 grounding anchors ('Virus Diseases' + synonym)
-    assert got[0].n_anchors == 6

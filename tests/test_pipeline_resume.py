@@ -4,10 +4,11 @@ import os
 
 from pyspark.sql import functions as F
 
-from outbreak_kg_spark import synth
+from outbreak_kg_spark import extract, ground, synth
 from outbreak_kg_spark.lineage import read_lineage, run_stage, stage_done
 from outbreak_kg_spark.pipeline import build_kg, symptom_closure
 from outbreak_kg_spark.queries import query_graph
+from tests.oracle import chain
 
 
 def test_run_stage_skips_committed(spark, tmp_path):
@@ -128,11 +129,28 @@ def test_partial_failure_rebuilds_only_broken_stage(spark, tmp_path):
     assert df_a.count() == 5 and df_b.count() == 7
 
 
-def test_build_kg_fused_matches_modular(spark, tmp_path):
-    """build_kg(fused=True) — ONE Arrow pass, no extracted/alerts/mentions
-    checkpoints — must emit the same terms and the same graph as the modular
-    stage chain, including the first-wins archive dedup: a duplicate page
-    with a LATER warc_ts and different text must lose in both modes."""
+def _oracle_kg(spark, pages, gazetteer):
+    """build_kg's terms and cue triples from the declarative chain."""
+    alerts = extract.dedup_alerts(extract.extract_pages(pages))
+    sections = chain.explode_section_texts(alerts)
+    udf = chain.make_annotate_udf(spark, gazetteer)
+    terms = chain.terms_by_alert(chain.annotate_sections(sections, udf))
+    pt = chain.pattern_triples(chain.mentions_to_sentences(
+        chain.annotate_sections(sections, udf), sections,
+        ground.type_dim(gazetteer)))
+    return _rows(terms), _rows(pt)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_build_kg_matches_oracle_chain(spark, tmp_path):
+    """build_kg(cue_triples=True) — ONE Arrow pass in the extracted stage,
+    no mentions stage — emits the terms, mention/co-occurrence edges and
+    pattern triples of the declarative oracle chain, including the
+    first-wins archive dedup: a duplicate page with a LATER warc_ts and
+    different text must lose."""
     import datetime
 
     pages = synth.pages_df(spark, 50)
@@ -152,28 +170,38 @@ def test_build_kg_fused_matches_modular(spark, tmp_path):
         pages.schema,
     )
     pages = pages.unionByName(intruder)
-    kw = dict(
-        pages=pages,
-        gazetteer=synth.gazetteer_df(spark),
-        vocab_isa=synth.vocab_isa_df(spark),
-        outbreaks=synth.outbreaks_df(spark, 50),
-    )
-    out_m = build_kg(spark, str(tmp_path / "modular"), **kw)
-    out_f = build_kg(spark, str(tmp_path / "fused"), **kw, fused=True)
+    gaz = synth.gazetteer_df(spark)
+    root = str(tmp_path / "kg")
+    out = build_kg(spark, root, pages=pages, gazetteer=gaz,
+                   vocab_isa=synth.vocab_isa_df(spark),
+                   outbreaks=synth.outbreaks_df(spark, 50), cue_triples=True)
+    assert out["mentions"] is None
+    assert not os.path.exists(os.path.join(root, "mentions"))
 
-    t_m = sorted(tuple(r) for r in out_m["terms"].collect())
-    t_f = sorted(tuple(r) for r in out_f["terms"].collect())
-    assert t_m == t_f and len(t_m) > 0
+    want_terms, want_pt = _oracle_kg(spark, pages, gaz)
+    assert _rows(out["terms"]) == want_terms and want_terms
+    assert _rows(out["pattern_triples"]) == want_pt and want_pt
 
-    e_m = sorted((r.subj, r.pred, r.obj)
-                 for r in out_m["edges"].collect())
-    e_f = sorted((r.subj, r.pred, r.obj)
-                 for r in out_f["edges"].collect())
-    assert e_m == e_f
+    # mention and co-occurrence edges from the oracle's terms
+    from outbreak_kg_spark import builders
 
-    n_m = sorted(r.curie for r in out_m["nodes"].collect())
-    n_f = sorted(r.curie for r in out_f["nodes"].collect())
-    assert n_m == n_f
+    tdim = ground.type_dim(gaz)
+    oterms = spark.createDataFrame(
+        want_terms, "doc_id string, ns string, id string, entry_name string")
+    _n, me = builders.build_alert_nodes_and_mentions(
+        oterms, synth.outbreaks_df(spark, 50), tdim)
+    _n, co = builders.build_cooccurrence(oterms, tdim)
+    want_edges = sorted(
+        (r.subj, r.pred, r.obj, r["count"]) for r in
+        me.select("subj", "pred", "obj", F.lit(None).cast("long")
+                  .alias("count"))
+        .unionByName(co.select("subj", "pred", "obj", "count")).collect())
+    got_edges = sorted(
+        (r.subj, r.pred, r.obj,
+         r["count"] if r.pred == "occurs_with" else None)
+        for r in out["edges"].filter(
+            F.col("pred").isin("mentions", "occurs_with")).collect())
+    assert got_edges == want_edges and want_edges
 
 
 def test_bucketed_stages_join_without_scan_exchange(spark, tmp_path):
@@ -364,8 +392,9 @@ def test_plain_partitioned_dynamic_overwrite_drops_stale_marker(spark, tmp_path)
 
 def test_build_kg_cue_triples_stage_and_resume(spark, tmp_path):
     """cue_triples=True adds the pattern_triples stage: cue-gated
-    sentence-level outbreak relations derived from the MATERIALIZED
-    mentions stage (no second NER pass), checkpointed and resumable."""
+    sentence-level outbreak relations built from the sentence groups the
+    extracted stage already carries (no second NER pass), checkpointed
+    and resumable."""
     import datetime
 
     root = str(tmp_path / "kg")
@@ -413,7 +442,7 @@ def test_build_kg_cue_triples_stage_and_resume(spark, tmp_path):
             .select("run_id").distinct().count())
     assert runs == 1
 
-    # the fused path has no mentions stage to reuse
-    import pytest
-    with pytest.raises(ValueError):
-        build_kg(spark, str(tmp_path / "kg2"), **{**kw, "fused": True})
+    # the same terms and triples as the declarative oracle chain
+    want_terms, want_pt = _oracle_kg(spark, pages, kw["gazetteer"])
+    assert _rows(out2["terms"]) == want_terms and want_terms
+    assert _rows(out2["pattern_triples"]) == want_pt

@@ -83,14 +83,48 @@ def test_edges_partition_pruning_by_pred(spark, tmp_path):
     assert df.count() == 2
 
 
-def test_mentions_pipeline_has_no_python_row_udfs(spark):
-    """Input-hint guard: only Arrow-evaluated Python (ArrowEvalPython /
-    mapInPandas), never row-at-a-time BatchEvalPython."""
+def _simple(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple")
+
+
+def test_mentions_pipeline_has_no_python_row_udfs(spark, tmp_path,
+                                                  monkeypatch):
+    """Input-hint and run-once guard: the extraction + NER operator is
+    Arrow-evaluated (never row-at-a-time BatchEvalPython) and appears as
+    EXACTLY ONE ArrowEvalPython — filter pushdown on its output
+    (``x.valid``) must not clone it. In build_kg it lives in the
+    extracted stage only; every later stage reads committed parquet."""
+    from outbreak_kg_spark import entry_kg, pipeline, synth
     from outbreak_kg_spark.entry_fixtures import _entry_mentions_plan
 
-    plan = _plan(_entry_mentions_plan(spark, SF))
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" in plan
+    for df in (_entry_mentions_plan(spark, SF),
+               entry_kg.q_kg_extract_text(spark, SF),
+               entry_kg.q_kg_pattern_triples(spark, SF)):
+        plan = _simple(df)
+        assert "BatchEvalPython" not in plan
+        assert plan.count("ArrowEvalPython") == 1, plan
+
+    plans = {}
+    run_stage = pipeline.run_stage
+
+    def spy(spark_, root, name, build, **kw):
+        def build_and_plan():
+            df = build()
+            plans[name] = _simple(df)
+            return df
+        return run_stage(spark_, root, name, build_and_plan, **kw)
+
+    monkeypatch.setattr(pipeline, "run_stage", spy)
+    pipeline.build_kg(
+        spark, str(tmp_path / "kg"), synth.pages_df(spark, 20),
+        synth.gazetteer_df(spark), synth.vocab_isa_df(spark),
+        synth.outbreaks_df(spark, 20), cue_triples=True)
+    assert {"extracted", "alerts", "terms", "closure", "nodes", "edges",
+            "pattern_triples"} <= set(plans)
+    for name, plan in plans.items():
+        assert "BatchEvalPython" not in plan, name
+        assert plan.count("ArrowEvalPython") == (name == "extracted"), name
 
 
 def test_textstats_and_curation_prefilters_are_narrow(spark):

@@ -64,7 +64,7 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     assert stats["nodes"] > 0
     assert stats["edges"] > 0
     assert stats["alerts"] > 0
-    assert stats["mentions"] > 0
+    assert stats["terms"] > 0
 
     import duckdb
 
@@ -80,7 +80,7 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     # second submit over the same --out: every stage is already committed,
     # so the run resumes from checkpoints and reproduces identical counts
     resumed = _submit(zip_path, out_dir, str(neutral))
-    for k in ("nodes", "edges", "alerts", "mentions"):
+    for k in ("nodes", "edges", "alerts", "terms"):
         assert resumed[k] == stats[k]
     # resume must actually skip the build work, not redo it: run 2 appended
     # zero lineage rows (no stage re-ran), byte-for-byte identical history

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from outbreak_kg_spark import ground, streaming, synth
+from tests.oracle import chain
 
 
 @pytest.fixture(scope="module")
@@ -21,10 +22,10 @@ def staged(spark, tmp_path_factory):
 
 def test_streaming_mentions_match_batch(spark, staged):
     root, pages = staged
-    udf = ground.make_annotate_udf(spark, synth.gazetteer_df(spark))
+    gaz = synth.gazetteer_df(spark)
     stream = streaming.read_pages_stream(spark, str(root / "in" / "d1"),
                                          max_files_per_trigger=1)
-    mstream = streaming.streaming_mentions(stream, udf)
+    mstream = streaming.streaming_mentions(stream, gaz)
     q = streaming.start_kg_append(
         mstream, str(root / "out"), str(root / "ckpt")
     )
@@ -33,13 +34,14 @@ def test_streaming_mentions_match_batch(spark, staged):
         (r.subj, r.obj)
         for r in spark.read.parquet(str(root / "out")).collect()
     }
-    # batch reference: same pipeline, batch API
+    # batch reference: the declarative oracle chain over the same pages
     from outbreak_kg_spark import extract
 
     alerts = extract.dedup_alerts(
         extract.extract_pages(spark.read.parquet(str(root / "in" / "d1")))
     )
-    m = ground.annotate_sections(extract.explode_section_texts(alerts), udf)
+    m = chain.annotate_sections(chain.explode_section_texts(alerts),
+                                chain.make_annotate_udf(spark, gaz))
     want = {
         (f"promed:{r.doc_id}", f"{r.ns}:{r.id}")
         for r in m.collect()
@@ -49,12 +51,12 @@ def test_streaming_mentions_match_batch(spark, staged):
 
 def test_streaming_restart_is_idempotent(spark, staged):
     root, _ = staged
-    udf = ground.make_annotate_udf(spark, synth.gazetteer_df(spark))
+    gaz = synth.gazetteer_df(spark)
     before = spark.read.parquet(str(root / "out")).count()
     # restart with the same checkpoint: no new input -> no duplicate output
     stream = streaming.read_pages_stream(spark, str(root / "in" / "d1"))
     q = streaming.start_kg_append(
-        streaming.streaming_mentions(stream, udf),
+        streaming.streaming_mentions(stream, gaz),
         str(root / "out"), str(root / "ckpt"),
     )
     q.awaitTermination(120)
@@ -77,7 +79,7 @@ def test_streaming_crash_replay_is_exactly_once(spark, staged):
     while spark.streams.active and time.time() < deadline:
         time.sleep(0.5)
     assert not spark.streams.active
-    udf = ground.make_annotate_udf(spark, synth.gazetteer_df(spark))
+    gaz = synth.gazetteer_df(spark)
     before = spark.read.parquet(str(root / "out")).count()
     # truncate the checkpoint so the newest DATA batch has its offsets entry
     # but no commit marker — exactly the crash window. Replay must then
@@ -97,7 +99,7 @@ def test_streaming_crash_replay_is_exactly_once(spark, staged):
                 crc.unlink()
     stream = streaming.read_pages_stream(spark, str(root / "in" / "d1"))
     q = streaming.start_kg_append(
-        streaming.streaming_mentions(stream, udf),
+        streaming.streaming_mentions(stream, gaz),
         str(root / "out"), str(root / "ckpt"),
     )
     q.awaitTermination(120)
@@ -107,9 +109,9 @@ def test_streaming_crash_replay_is_exactly_once(spark, staged):
 
 def test_mention_rate_window(spark, staged):
     root, _ = staged
-    udf = ground.make_annotate_udf(spark, synth.gazetteer_df(spark))
     stream = streaming.read_pages_stream(spark, str(root / "in" / "d1"))
-    rate = streaming.mention_rate(stream, udf, window="1 hour")
+    rate = streaming.mention_rate(stream, synth.gazetteer_df(spark),
+                                  window="1 hour")
     q = (
         rate.writeStream.outputMode("append")
         .format("parquet")
@@ -328,13 +330,12 @@ def test_streaming_triples_compact_to_batch_parity(spark, tmp_path):
     pages.filter("url like '%/2' or url like '%/3'").coalesce(1) \
         .write.mode("append").parquet(in_dir)
 
-    udf = ground.make_annotate_udf(spark, synth.gazetteer_df(spark))
-    tdim = ground.type_dim(synth.gazetteer_df(spark))
+    gaz = synth.gazetteer_df(spark)
     stream = streaming.read_pages_stream(spark, in_dir,
                                          max_files_per_trigger=1)
     delta_dir = str(tmp_path / "deltas")
     q = streaming.start_triple_deltas(
-        stream, delta_dir, str(tmp_path / "ckpt"), udf, tdim)
+        stream, delta_dir, str(tmp_path / "ckpt"), gaz)
     q.awaitTermination(120)
 
     base = str(tmp_path / "at_rest")
@@ -344,14 +345,15 @@ def test_streaming_triples_compact_to_batch_parity(spark, tmp_path):
            for r in read_current_edges(spark, base)
            .select("subj", "pred", "obj", "count").collect()}
 
-    # batch reference over the same pages
+    # batch reference: the declarative oracle chain over the same pages
     alerts = extract.dedup_alerts(
         extract.extract_pages(spark.read.parquet(in_dir)))
-    sm = triples.section_sentence_mentions(
-        extract.explode_section_texts(alerts), udf, tdim)
+    sm = chain.section_sentence_mentions(
+        chain.explode_section_texts(alerts),
+        chain.make_annotate_udf(spark, gaz), ground.type_dim(gaz))
     want = {(r.subj, r.pred, r.obj, r["count"])
             for r in triples.triples_to_edges(
-                triples.pattern_triples_grouped(sm)).collect()}
+                chain.pattern_triples(sm)).collect()}
     assert got == want and len(want) >= 5
     # re-compaction with no new batches is a no-op at the same version
     info2 = compact_edge_deltas(spark, delta_dir, base)

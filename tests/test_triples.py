@@ -1,12 +1,13 @@
-"""triples.sentence_mentions / pattern_triples: sentence assignment from
-char offsets, the four outbreak cue rules, and composition through the
-real broadcast-trie annotator."""
+"""Sentence-scoped cue triples: sentence placement of the extraction + NER
+operator's mention groups, the four outbreak cue rules over them, and the
+declarative oracle chain (tests/oracle/chain.py) they must equal."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from outbreak_kg_spark import triples
-from outbreak_kg_spark.ground import make_annotate_udf, type_dim
+from outbreak_kg_spark.ground import make_extract_ner_udf, type_dim
+from tests.oracle import chain
 
 
 GAZ_ROWS = [
@@ -26,7 +27,12 @@ def gaz(spark):
 
 @pytest.fixture(scope="module")
 def udf(spark, gaz):
-    return make_annotate_udf(spark, gaz)
+    return chain.make_annotate_udf(spark, gaz)
+
+
+@pytest.fixture(scope="module")
+def op(spark, gaz):
+    return make_extract_ner_udf(spark, gaz, groups=True)
 
 
 @pytest.fixture(scope="module")
@@ -36,15 +42,46 @@ def tdim(gaz):
 
 def _sm(spark, udf, tdim, rows):
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    return triples.sentence_mentions(docs, udf, tdim)
+    return chain.sentence_mentions(docs, udf, tdim)
 
 
-def test_sentence_assignment_by_offset(spark, udf, tdim):
+def _groups(spark, op, rows):
+    """The operator's sentence groups of (doc_id, text) rows, exploded."""
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    return triples.explode_groups(
+        docs.select("doc_id", op(F.col("text")).groups.alias("groups")))
+
+
+def _group_rows(df):
+    """Group rows -> (doc_id, sent_idx, sentence, curie, surfaces,
+    node_type), the oracle's sentence-mention shape less the name."""
+    return {(r["doc_id"], r["sent_idx"], r["sentence"], m["curie"],
+             tuple(m["surfaces"]), m["node_type"])
+            for r in df.collect() for m in r["ms"]}
+
+
+def _pt(spark, op, rows):
+    """Cue triples of (doc_id, text) rows through the operator's groups —
+    the library path."""
+    return triples.triples_from_sentence_groups(_groups(spark, op, rows))
+
+
+def _triples(spark, op, udf, tdim, rows, boundary="."):
+    """_pt, after checking it equal to the relational oracle over the same
+    rows."""
+    got = _pt(spark, op, rows)
+    want = chain.pattern_triples(chain.sentence_mentions(
+        spark.createDataFrame(rows, ["doc_id", "text"]), udf, tdim,
+        boundary=boundary))
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, want.collect()))
+    return got
+
+
+def test_sentence_assignment_by_offset(spark, op):
     text = "cholera here . now measles . and vibrio in nairobi"
-    out = {
-        (r["curie"], r["sent_idx"])
-        for r in _sm(spark, udf, tdim, [(1, text)]).collect()
-    }
+    out = {(c, si) for _d, si, _s, c, _f, _t
+           in _group_rows(_groups(spark, op, [(1, text)]))}
     assert out == {
         ("MESH:D01", 0),
         ("MESH:D02", 1),
@@ -53,46 +90,44 @@ def test_sentence_assignment_by_offset(spark, udf, tdim):
     }
 
 
-def test_sentence_text_matches_index(spark, udf, tdim):
+def test_sentence_text_matches_index(spark, op):
     text = "a cholera b . c measles d"
-    got = {
-        r["curie"]: r["sentence"]
-        for r in _sm(spark, udf, tdim, [(1, text)]).collect()
-    }
+    got = {c: sent for _d, _si, sent, c, _f, _t
+           in _group_rows(_groups(spark, op, [(1, text)]))}
     assert got["MESH:D01"] == "a cholera b "
     assert got["MESH:D02"] == " c measles d"
 
 
-def test_located_in_requires_cue_and_same_sentence(spark, udf, tdim):
+def test_located_in_requires_cue_and_same_sentence(spark, op, udf, tdim):
     rows = [
         (1, "cholera spreading in nairobi today"),          # cue present
         (2, "cholera spreading . meanwhile in nairobi"),    # cross-sentence
         (3, "cholera and nairobi mentioned with no cue"),   # no " in <geo>"
     ]
-    out = triples.pattern_triples(_sm(spark, udf, tdim, rows))
+    out = _triples(spark, op, udf, tdim, rows)
     got = {(r["doc_id"], r["subj"], r["pred"], r["obj"])
            for r in out.filter("pred = 'located_in'").collect()}
     assert got == {(1, "MESH:D01", "located_in", "geonames:G01")}
 
 
-def test_causes_directional_cue(spark, udf, tdim):
+def test_causes_directional_cue(spark, op, udf, tdim):
     rows = [
         (1, "vibrio causes cholera"),
         (2, "cholera causes vibrio"),   # wrong direction: disease causes pathogen
         (3, "vibrio and cholera"),      # no cue
     ]
-    out = triples.pattern_triples(_sm(spark, udf, tdim, rows))
+    out = _triples(spark, op, udf, tdim, rows)
     got = {(r["doc_id"], r["subj"], r["obj"])
            for r in out.filter("pred = 'causes'").collect()}
     assert got == {(1, "MESH:P01", "MESH:D01")}
 
 
-def test_case_count_and_occurred_on(spark, udf, tdim):
+def test_case_count_and_occurred_on(spark, op, udf, tdim):
     rows = [
         (1, "saw 120 cases of cholera in nairobi on 2024-03-05 today"),
         (2, "no counts of measles here on some day"),
     ]
-    out = triples.pattern_triples(_sm(spark, udf, tdim, rows))
+    out = _triples(spark, op, udf, tdim, rows)
     cc = {(r["doc_id"], r["subj"], r["obj"], r["n_cases"])
           for r in out.filter("pred = 'case_count_of'").collect()}
     oo = {(r["doc_id"], r["subj"], r["obj"])
@@ -105,27 +140,27 @@ def test_case_count_and_occurred_on(spark, udf, tdim):
     assert li == {("MESH:D01", "geonames:G01")}
 
 
-def test_n_cases_null_off_leg_and_distinct(spark, udf, tdim):
+def test_n_cases_null_off_leg_and_distinct(spark, op, udf, tdim):
     # the same triple asserted in two sentences of one doc collapses to one
     rows = [(1, "vibrio causes cholera . again vibrio causes cholera")]
-    out = triples.pattern_triples(_sm(spark, udf, tdim, rows)).collect()
+    out = _triples(spark, op, udf, tdim, rows).collect()
     assert len(out) == 1
     assert out[0]["pred"] == "causes" and out[0]["n_cases"] is None
 
 
-def test_no_python_udf_below_pair_join(spark, udf, tdim):
-    # everything above the NER explode is codegen: the pair join, cue
-    # filters, and distinct must not add Python evals
-    sm = _sm(spark, udf, tdim, [(1, "vibrio causes cholera in nairobi")])
-    plan = triples.pattern_triples(sm)._jdf.queryExecution().executedPlan().toString()
-    # exactly the NER UDF evals (one per union leg re-read), nothing else
+def test_no_python_udf_below_pair_join(spark, op):
+    # everything above the NER UDF is codegen: the cue rules and the
+    # distinct add no Python eval, and the UDF runs once
     import re
-    ops = re.findall(r"(\w*PythonUDF|ArrowEval\w*|BatchEval\w*)", plan)
-    assert all("Arrow" in o or "PythonUDF" in o for o in ops)
+
+    pt = _pt(spark, op, [(1, "vibrio causes cholera in nairobi")])
+    plan = pt._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"ArrowEvalPython", plan)) == 1
+    assert "BatchEvalPython" not in plan
     assert "FlatMapGroupsInPandas" not in plan
 
 
-def test_synonym_surface_fires_cue(spark, tdim):
+def test_synonym_surface_fires_cue(spark):
     # mention grounded through a SYNONYM: the sentence contains "ebola",
     # the entry name is "Ebolavirus Disease" — the cue must test the
     # matched surface, not the entry name, and case-fold
@@ -135,13 +170,12 @@ def test_synonym_surface_fires_cue(spark, tdim):
           "disease"),
          ("geonames", "G01", "Nairobi", "Nairobi", "geoloc")],
         ["ns", "id", "entry_name", "synonym", "node_type"])
-    from outbreak_kg_spark.ground import make_annotate_udf, type_dim as td
-    u = make_annotate_udf(spark, gaz)
-    docs = spark.createDataFrame(
-        [(1, "an ebola outbreak in Nairobi today")], ["doc_id", "text"])
-    sm = triples.sentence_mentions(docs, u, td(gaz))
     out = {(r["subj"], r["pred"], r["obj"])
-           for r in triples.pattern_triples(sm).collect()}
+           for r in _triples(spark, make_extract_ner_udf(spark, gaz, groups=True),
+                             chain.make_annotate_udf(spark, gaz),
+                             type_dim(gaz),
+                             [(1, "an ebola outbreak in Nairobi today")])
+           .collect()}
     assert ("MESH:D03", "located_in", "geonames:G01") in out
 
 
@@ -149,20 +183,18 @@ def test_mentions_to_sentences_matches_direct_path(spark, udf, tdim, gaz):
     # the production composition (materialized mentions joined back to
     # section texts) computes the same relation as the one-shot path on
     # single-section docs
-    from outbreak_kg_spark.ground import annotate_sections
-
     rows = [
         (1, "cholera spreading in nairobi . vibrio causes cholera"),
         (2, "saw 9 cases of measles in lagos on 2024-05-05 ."),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    direct = triples.sentence_mentions(docs, udf, tdim)
+    direct = chain.sentence_mentions(docs, udf, tdim)
 
     sections = docs.select(
         "doc_id", F.lit(0).alias("section_idx"),
         F.lit("content").alias("field"), "text")
-    m = annotate_sections(sections, udf)
-    composed = triples.mentions_to_sentences(m, sections, tdim)
+    m = chain.annotate_sections(sections, udf)
+    composed = chain.mentions_to_sentences(m, sections, tdim)
 
     def norm(df, strip_section):
         out = set()
@@ -177,9 +209,9 @@ def test_mentions_to_sentences_matches_direct_path(spark, udf, tdim, gaz):
     assert norm(direct, False) == norm(composed, True)
     # and the triples agree end-to-end
     t_direct = {(r["doc_id"], r["subj"], r["pred"], r["obj"], r["n_cases"])
-                for r in triples.pattern_triples(direct).collect()}
+                for r in chain.pattern_triples(direct).collect()}
     t_comp = {(r["doc_id"], r["subj"], r["pred"], r["obj"], r["n_cases"])
-              for r in triples.pattern_triples(composed).collect()}
+              for r in chain.pattern_triples(composed).collect()}
     assert t_direct == t_comp and len(t_direct) >= 4
 
 
@@ -194,34 +226,31 @@ def test_grouped_plan_equals_relational(spark, udf, tdim):
         (5, "nothing relevant here"),
     ]
     sm = _sm(spark, udf, tdim, rows).persist()
-    rel = {tuple(r) for r in triples.pattern_triples(sm).collect()}
-    grp = {tuple(r) for r in triples.pattern_triples_grouped(sm).collect()}
+    rel = {tuple(r) for r in chain.pattern_triples(sm).collect()}
+    grp = {tuple(r) for r in chain.pattern_triples_grouped(sm).collect()}
     sm.unpersist()
     assert rel == grp and len(rel) >= 6
 
 
-def test_grouped_plan_has_no_join(spark, udf, tdim):
-    sm = _sm(spark, udf, tdim, [(1, "vibrio causes cholera in nairobi")])
-    plan = triples.pattern_triples_grouped(sm)._jdf.queryExecution() \
-        .executedPlan().toString()
-    # the only join anywhere is sentence_mentions' broadcast type-dim;
-    # the rule layer itself adds none (vs the relational plan's four)
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+def test_grouped_plan_has_no_join(spark, op):
+    pt = _pt(spark, op, [(1, "vibrio causes cholera in nairobi")])
+    plan = pt._jdf.queryExecution().executedPlan().toString()
+    # the operator types and groups mentions itself: no join anywhere
+    # (the oracle's relational plan pays four plus a type-dim join)
+    assert "Join" not in plan
 
 
 def test_section_path_equals_join_path(spark, udf, tdim):
     # the fresh-annotation no-join composition computes the same relation
     # as annotate-then-join-back
-    from outbreak_kg_spark.ground import annotate_sections
-
     rows = [(1, "cholera spreading in nairobi . vibrio causes cholera"),
             (2, "saw 9 cases of measles in lagos on 2024-05-05 .")]
     sections = spark.createDataFrame(rows, ["doc_id", "text"]).select(
         "doc_id", F.lit(0).alias("section_idx"),
         F.lit("content").alias("field"), "text")
-    direct = triples.section_sentence_mentions(sections, udf, tdim)
-    joined = triples.mentions_to_sentences(
-        annotate_sections(sections, udf), sections, tdim)
+    direct = chain.section_sentence_mentions(sections, udf, tdim)
+    joined = chain.mentions_to_sentences(
+        chain.annotate_sections(sections, udf), sections, tdim)
 
     def rows_of(df):
         return {(r["doc_id"], r["sent_idx"], r["sentence"], r["curie"],
@@ -243,14 +272,12 @@ def test_grouped_plan_hot_sentence_bounded(spark, tdim):
            for i in range(n)])
     gaz = spark.createDataFrame(
         gaz_rows, ["ns", "id", "entry_name", "synonym", "node_type"])
-    from outbreak_kg_spark.ground import make_annotate_udf, type_dim as td
-    u = make_annotate_udf(spark, gaz)
+    u = make_extract_ner_udf(spark, gaz, groups=True)
     # every disease co-sentential with every geoloc, cue " in geoK" for all
     text = " ".join(f"dis{i}" for i in range(n)) + " all seen in " + \
         " in ".join(f"geo{i}" for i in range(n))
-    docs = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    sm = triples.sentence_mentions(docs, u, td(gaz))
-    out = triples.pattern_triples_grouped(sm).filter("pred = 'located_in'")
+    out = triples.triples_from_sentence_groups(
+        _groups(spark, u, [(1, text)])).filter("pred = 'located_in'")
     # every geoloc except geo0 (no " in geo0" — it follows "in " only via
     # the joined separator) is cued; all diseases pair with each
     rows = out.collect()
@@ -268,13 +295,13 @@ def test_entry_runs_ner_once(spark):
     assert len(re.findall(r"ArrowEvalPython", plan)) == 1
 
 
-def test_triple_refresh_matches_rebuild(spark, udf, tdim, tmp_path):
+def test_triple_refresh_matches_rebuild(spark, op, tmp_path):
     # crawl-refresh composition: apply a signed cue-triple delta onto the
     # at-rest edge table and land exactly where a full rebuild lands
     from outbreak_kg_spark.incremental import upsert_edges
 
     def triples_of(rows):
-        return triples.pattern_triples_grouped(_sm(spark, udf, tdim, rows))
+        return _pt(spark, op, rows)
 
     v1 = [
         (1, "12 cases of cholera in nairobi on 2024-01-01"),
@@ -304,36 +331,35 @@ def test_triple_refresh_matches_rebuild(spark, udf, tdim, tmp_path):
     assert all(c > 0 for *_e, c in refreshed)
 
 
-def test_multichar_boundary_class(spark, udf, tdim):
+def test_multichar_boundary_class(spark, gaz, udf, tdim):
     # '.!?' boundary class: each punctuation splits; rules stay sentence-
     # scoped across all three
     text = "cholera here ! now in nairobi ? cholera in lagos . end"
-    docs = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    sm = triples.sentence_mentions(docs, udf, tdim, boundary=".!?")
-    idx = {(r["curie"], r["sent_idx"]) for r in sm.collect()}
+    op = make_extract_ner_udf(spark, gaz, groups=True, boundary=".!?")
+    idx = {(c, si) for _d, si, _s, c, _f, _t
+           in _group_rows(_groups(spark, op, [(1, text)]))}
     assert idx == {("MESH:D01", 0), ("geonames:G01", 1),
                    ("MESH:D01", 2), ("geonames:G02", 2)}
     out = {(r["subj"], r["pred"], r["obj"])
-           for r in triples.pattern_triples_grouped(sm).collect()}
+           for r in _triples(spark, op, udf, tdim, [(1, text)],
+                             boundary=".!?").collect()}
     assert out == {("MESH:D01", "located_in", "geonames:G02")}
 
 
-def test_digitless_case_cue_asserts_nothing(spark, udf, tdim):
+def test_digitless_case_cue_asserts_nothing(spark, op, udf, tdim):
     # "no new cases of cholera" must NOT emit a case_count_of triple
     rows = [(1, "no new cases of cholera were reported"),
             (2, "exactly 0 cases of cholera were reported")]
-    sm = _sm(spark, udf, tdim, rows).persist()
-    for plan in (triples.pattern_triples, triples.pattern_triples_grouped):
-        cc = {(r["doc_id"], r["n_cases"])
-              for r in plan(sm).filter("pred = 'case_count_of'").collect()}
-        assert cc == {(2, 0)}, plan.__name__
-    sm.unpersist()
+    cc = {(r["doc_id"], r["n_cases"])
+          for r in _triples(spark, op, udf, tdim, rows)
+          .filter("pred = 'case_count_of'").collect()}
+    assert cc == {(2, 0)}
 
 
-def test_sentence_placement_fuzz_python_reference(spark, udf, tdim):
-    # random texts with random boundary placement: Spark's offset
-    # arithmetic (substr/length/element_at) must agree with a pure-Python
-    # recomputation from the same scan_text offsets
+def test_sentence_placement_fuzz_python_reference(spark, op, udf, tdim):
+    # random texts with random boundary placement: the operator's groups
+    # and the oracle's offset arithmetic (substr/length/element_at) must
+    # both agree with a pure-Python recomputation from scan_text offsets
     import random
 
     from outbreak_kg_spark.ground import compile_gazetteer, scan_text
@@ -341,6 +367,7 @@ def test_sentence_placement_fuzz_python_reference(spark, udf, tdim):
     trie = compile_gazetteer(
         [{"ns": ns, "id": i, "entry_name": en, "synonym": syn}
          for ns, i, en, syn, _t in GAZ_ROWS])
+    types = {f"{ns}:{i}": t for ns, i, _en, _syn, t in GAZ_ROWS}
     vocab = ["cholera", "measles", "vibrio", "nairobi", "lagos",
              "and", "the", "x", ".", ". .", "!"]
     rng = random.Random(11)
@@ -363,17 +390,20 @@ def test_sentence_placement_fuzz_python_reference(spark, udf, tdim):
     got = {
         (r["doc_id"], r["sent_idx"], r["sentence"], r["curie"], r["name"],
          tuple(r["surfaces"]))
-        for r in triples.sentence_mentions(
+        for r in chain.sentence_mentions(
             spark.createDataFrame(rows, ["doc_id", "text"]), udf, tdim
         ).collect()
     }
     assert got == want
+    assert _group_rows(_groups(spark, op, rows)) == {
+        (d, si, sent, c, surfs, types[c])
+        for d, si, sent, c, _en, surfs in want}
 
 
-def test_triple_provenance(spark, udf, tdim):
+def test_triple_provenance(spark, op):
     rows = [(i, "vibrio causes cholera") for i in range(1, 9)] + \
            [(9, "cholera in nairobi")]
-    pt = triples.pattern_triples_grouped(_sm(spark, udf, tdim, rows))
+    pt = _pt(spark, op, rows)
     got = {(r.subj, r.pred, r.obj): (r.n_docs, r.sample_docs)
            for r in triples.triple_provenance(pt, max_docs=5).collect()}
     causes = got[("MESH:P01", "causes", "MESH:D01")]
@@ -381,11 +411,11 @@ def test_triple_provenance(spark, udf, tdim):
     assert got[("MESH:D01", "located_in", "geonames:G01")] == (1, [9])
 
 
-def test_fused_sentence_groups_equals_declarative(spark, udf, tdim, gaz):
-    """r6 fused path: make_sentence_groups_udf + triples_from_sentence_groups
-    computes the SAME triple relation as sentence_mentions ->
-    pattern_triples_grouped, over all four rules, multi-sentence docs,
-    synonym surfaces and negatives."""
+def test_fused_sentence_groups_equals_declarative(spark, op, udf, tdim):
+    """The operator's groups field, one Arrow pass, equals the oracle's
+    sentence mentions (offset arithmetic + grouping + type join) row for
+    row, and the cue triples over it equal the grouped oracle plan, over
+    all four rules, multi-sentence docs and negatives."""
     rows = [
         (1, "saw 120 cases of cholera in nairobi on 2024-03-05 today"),
         (2, "vibrio causes cholera . again vibrio causes cholera"),
@@ -395,14 +425,11 @@ def test_fused_sentence_groups_equals_declarative(spark, udf, tdim, gaz):
         (6, "9 cases of cholera . cholera in lagos on 2024-01-02 ."),
         (7, ""),
     ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    sm = triples.sentence_mentions(docs, udf, tdim)
-    want = {tuple(r) for r in triples.pattern_triples_grouped(sm).collect()}
-    tmap = {f"{ns}:{i}": ty for ns, i, _e, _s, ty in
-            [(r[0], r[1], r[2], r[3], r[4]) for r in
-             gaz.select("ns", "id", "entry_name", "synonym",
-                        "node_type").collect()]}
-    gudf = triples.make_sentence_groups_udf(spark, gaz, tmap)
+    sm = _sm(spark, udf, tdim, rows)
+    assert _group_rows(_groups(spark, op, rows)) == {
+        (r["doc_id"], r["sent_idx"], r["sentence"], r["curie"],
+         tuple(r["surfaces"]), r["node_type"]) for r in sm.collect()}
+    want = {tuple(r) for r in chain.pattern_triples_grouped(sm).collect()}
     got = {tuple(r) for r in triples.triples_from_sentence_groups(
-        triples.sentence_mention_groups(docs, gudf)).collect()}
+        _groups(spark, op, rows)).collect()}
     assert got == want and len(want) >= 6
