@@ -39,6 +39,7 @@ sys.path.insert(0, REPO)
 import pyspark  # noqa: E402
 
 from bench import host_calibration  # noqa: E402
+from outbreak_kg_spark.session import driver_memory  # noqa: E402
 
 SPARK_SUBMIT = os.path.join(os.path.dirname(pyspark.__file__),
                             "bin", "spark-submit")
@@ -63,7 +64,7 @@ def _submit_once(zip_path: str, cpus: int, sf_dir: str, repl: int) -> dict:
         "--master", f"local[{cpus}]",
         # match the in-process session's heap (session.py): spark-submit's
         # 1g local-mode default OOMs the 1.5M-doc corpus at 16 threads
-        "--driver-memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        "--driver-memory", driver_memory(),
         "--conf", f"spark.sql.shuffle.partitions={cpus}",
         "--conf", "spark.ui.enabled=false",
         "--py-files", f"{zip_path},{os.path.join(REPO, 'bench.py')}",

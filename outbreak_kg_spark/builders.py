@@ -543,19 +543,17 @@ def build_geonames(
     return nodes, edges
 
 
-def finalize_graph(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Graph-wide integrity pass replacing neo4j-admin import flags
-    (kg/Dockerfile:100-114): --skip-duplicate-nodes == dropDuplicates(curie);
-    --skip-bad-relationships == semi-join both edge endpoints against the
-    node set."""
-    n = nodes.dropDuplicates(["curie"])
-    key = n.select("curie")
-    e = (
+def finalize_graph(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """Drop every edge whose subj or obj is not a node curie: the
+    reference's neo4j-admin import --skip-bad-relationships
+    (kg/Dockerfile:100-114). ``nodes`` is build_kg's committed nodes stage,
+    already unique by curie."""
+    key = nodes.select("curie")
+    return (
         edges.join(key.withColumnRenamed("curie", "subj"), "subj", "left_semi")
         .join(key.withColumnRenamed("curie", "obj"), "obj", "left_semi")
         .select("subj", "pred", "obj", "count", "years_data", "provenance")
     )
-    return n, e
 
 
 def edges_to_tsv_rows(edges: DataFrame) -> DataFrame:

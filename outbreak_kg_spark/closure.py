@@ -21,19 +21,15 @@ def transitive_closure(
     parent_col: str = "obj",
     max_iters: int = 50,
     include_self: bool = True,
-    method: str = "doubling",
 ) -> DataFrame:
     """edges(child, parent) -> closure(node, ancestor, depth=min hops).
 
-    method='doubling' (default): min-plus path doubling —
-    acc_{k+1} = min(acc_k, acc_k (x) acc_k) — reaches diameter D in
-    ceil(log2 D) rounds instead of D, which matters because each Spark round
-    costs a full job (a 15-deep hierarchy is 4 rounds, not 15).
-    method='bfs': frontier expansion with an anti-join against known pairs —
-    fewer intermediate rows per round; better when the closure is huge but
-    shallow growth per round is cheap.
+    Min-plus path doubling — acc_{k+1} = min(acc_k, acc_k (x) acc_k) —
+    reaches diameter D in ceil(log2 D) rounds instead of D, which matters
+    because each Spark round costs a full job (a 15-deep hierarchy is 4
+    rounds, not 15).
 
-    Both checkpoint per round (flat plans) and converge by reachability, so
+    Checkpoints per round (flat plans) and converges by reachability, so
     diamond-shaped DAGs terminate. include_self adds (node, node, 0) rows so
     `isa*0..` (kg/client.py:140 — the anchor matches itself) is one equi-join,
     for BOTH endpoint sets.
@@ -62,79 +58,55 @@ def transitive_closure(
     )
     base = base.localCheckpoint(eager=True)
     acc = base.withColumn("depth", F.lit(1)).localCheckpoint(eager=True)
-    if method == "doubling":
-        n_prev = acc.count()
-        for rnd in range(1, max_iters + 1):
-            # Filtered doubling: a NEW shortest path this round has length
-            # L in (2^(rnd-1), 2^rnd]; it splits at position 2^(rnd-1) into
-            # a prefix of length exactly 2^(rnd-1) — which lies in
-            # (2^(rnd-2), 2^(rnd-1)], i.e. the pairs discovered LAST round
-            # (the frontier) — and a suffix of length <= 2^(rnd-1) (in acc).
-            # So frontier x acc reaches everything acc x acc would, at a
-            # fraction of the join's left side.
-            frontier = acc.filter(F.col("depth") > (1 << (rnd - 1)) // 2)
-            stepped = (
-                frontier.withColumnRenamed("ancestor", "mid")
-                .withColumnRenamed("depth", "d1")
-                .join(
-                    acc.select(
-                        F.col("node").alias("mid"),
-                        F.col("ancestor").alias("anc2"),
-                        F.col("depth").alias("d2"),
-                    ),
-                    "mid",
-                )
-                .select(
-                    "node",
-                    F.col("anc2").alias("ancestor"),
-                    (F.col("d1") + F.col("d2")).alias("depth"),
-                )
+    n_prev = acc.count()
+    for rnd in range(1, max_iters + 1):
+        # Filtered doubling: a NEW shortest path this round has length
+        # L in (2^(rnd-1), 2^rnd]; it splits at position 2^(rnd-1) into
+        # a prefix of length exactly 2^(rnd-1) — which lies in
+        # (2^(rnd-2), 2^(rnd-1)], i.e. the pairs discovered LAST round
+        # (the frontier) — and a suffix of length <= 2^(rnd-1) (in acc).
+        # So frontier x acc reaches everything acc x acc would, at a
+        # fraction of the join's left side.
+        frontier = acc.filter(F.col("depth") > (1 << (rnd - 1)) // 2)
+        stepped = (
+            frontier.withColumnRenamed("ancestor", "mid")
+            .withColumnRenamed("depth", "d1")
+            .join(
+                acc.select(
+                    F.col("node").alias("mid"),
+                    F.col("ancestor").alias("anc2"),
+                    F.col("depth").alias("d2"),
+                ),
+                "mid",
             )
-            acc = (
-                acc.union(stepped)
-                .groupBy("node", "ancestor")
-                .agg(F.min("depth").alias("depth"))
-                .localCheckpoint(eager=True)
+            .select(
+                "node",
+                F.col("anc2").alias("ancestor"),
+                (F.col("d1") + F.col("d2")).alias("depth"),
             )
-            stats = acc.agg(
-                F.count(F.lit(1)).alias("n"), F.max("depth").alias("md")
-            ).first()
-            # After round k every min-depth <= 2^k is final. If the deepest
-            # pair found is < 2^k, no pair of depth exactly 2^k exists; a
-            # pair deeper than 2^k would contain a shortest SUBpath of depth
-            # exactly 2^k (unit weights), so none exists either — the
-            # closure is complete WITHOUT paying the fixpoint-confirming
-            # extra round the count-equality test needs (that last round is
-            # the full closure x closure join, the most expensive of all).
-            # md is NULL (None) on an empty closure — empty edge input
-            # must terminate cleanly, not TypeError on None < int
-            if (stats["md"] is None or stats["md"] < (1 << rnd)
-                    or stats["n"] == n_prev):
-                break
-            n_prev = stats["n"]
-    else:
-        hop = base.select(
-            F.col("node").alias("mid"), F.col("ancestor").alias("hop_ancestor")
         )
-        frontier = acc
-        for _ in range(max_iters):
-            nxt = (
-                frontier.withColumnRenamed("ancestor", "mid")
-                .join(hop, "mid")
-                .select(
-                    "node",
-                    F.col("hop_ancestor").alias("ancestor"),
-                    (F.col("depth") + 1).alias("depth"),
-                )
-                .join(acc.select("node", "ancestor"),
-                      ["node", "ancestor"], "left_anti")
-                .dropDuplicates(["node", "ancestor"])
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            acc = acc.union(nxt).localCheckpoint(eager=True)
-            frontier = nxt
+        acc = (
+            acc.union(stepped)
+            .groupBy("node", "ancestor")
+            .agg(F.min("depth").alias("depth"))
+            .localCheckpoint(eager=True)
+        )
+        stats = acc.agg(
+            F.count(F.lit(1)).alias("n"), F.max("depth").alias("md")
+        ).first()
+        # After round k every min-depth <= 2^k is final. If the deepest
+        # pair found is < 2^k, no pair of depth exactly 2^k exists; a
+        # pair deeper than 2^k would contain a shortest SUBpath of depth
+        # exactly 2^k (unit weights), so none exists either — the
+        # closure is complete WITHOUT paying the fixpoint-confirming
+        # extra round the count-equality test needs (that last round is
+        # the full closure x closure join, the most expensive of all).
+        # md is NULL (None) on an empty closure — empty edge input
+        # must terminate cleanly, not TypeError on None < int
+        if (stats["md"] is None or stats["md"] < (1 << rnd)
+                or stats["n"] == n_prev):
+            break
+        n_prev = stats["n"]
     if include_self:
         selfs = (
             base.select("node")

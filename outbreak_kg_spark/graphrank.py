@@ -37,8 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
-             damping: float = 0.85, iterations: int = 10,
-             checkpoint_every: int = 1) -> DataFrame:
+             damping: float = 0.85, iterations: int = 10) -> DataFrame:
     """Fixed-iteration damped PageRank; returns (node, rank).
 
     ``edges`` is a directed edge list; parallel duplicate edges count
@@ -89,10 +88,9 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                       * (F.coalesce(F.col("_contrib"), F.lit(0.0))
                          + F.col("_mass") / F.lit(float(n_nodes)))
                       ).alias("rank")))
-        if (i + 1) % checkpoint_every == 0 or i + 1 == iterations:
-            # eager: truncates lineage AND executes the round, keeping
-            # the plan O(1)-deep across arbitrary iteration counts
-            ranks = ranks.localCheckpoint(eager=True)
+        # eager: truncates lineage AND executes the round, keeping the
+        # plan O(1)-deep across arbitrary iteration counts
+        ranks = ranks.localCheckpoint(eager=True)
     e_deg.unpersist()
     nodes.unpersist()
     src_nodes.unpersist()

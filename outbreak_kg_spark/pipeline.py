@@ -10,13 +10,17 @@ Stage graph (SURVEY.md §3.1 Spark lifecycle):
           ├─> cooccurrence nodes/edges (salted)
   vocab ──┼─> closure, hierarchy nodes/edges
   side inputs ─> pathogen/phenotype/indicator/geoname builders
-  all ──> finalize (dedup nodes, drop dangling edges) ──> nodes/, edges/
+  node parts ──> dedup by curie ──> nodes/
+  edge parts ──> drop edges with an endpoint not in the committed nodes/
+                 ──> edges/
 
 Edges are written partitioned by ``pred`` (partition pruning for the query
 layer, which always filters on predicate first) — SURVEY.md §4.4.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,8 +69,6 @@ def build_kg(
     buckets so one bucket ≈ one task's memory (e.g. 4096 on a
     1000-executor cluster). None = plain parquet.
     """
-    tdim = ground.type_dim(gazetteer)
-
     extracted = run_stage(
         spark, root, "extracted",
         # the UDF build (driver-side gazetteer collect + trie compile) is
@@ -110,70 +112,74 @@ def build_kg(
         force=force,
     )
 
-    node_parts: list[DataFrame] = []
-    edge_parts: list[DataFrame] = []
+    parts: dict[str, list[DataFrame]] = {}
 
-    def add(n_e):
-        n, e = n_e
-        node_parts.append(n)
-        edge_parts.append(e)
+    def graph_parts() -> dict[str, list[DataFrame]]:
+        # built on first use inside the nodes/edges stage lambdas, at most
+        # once: the builders start no job, but constructing their plans
+        # takes seconds of analysis (1.4-1.9 s on 4 cores for perfbench's
+        # 200-page corpus), which a resume over both committed stages skips
+        if parts:
+            return parts
+        tdim = ground.type_dim(gazetteer)
+        node_parts: list[DataFrame] = []
+        edge_parts: list[DataFrame] = []
 
-    add(builders.build_outbreaks(outbreaks))
-    add(builders.build_alert_nodes_and_mentions(
-        terms, outbreaks, tdim,
-        alert_ids=alerts.select(F.col("archive_number").alias("doc_id")),
-    ))
-    add(builders.build_cooccurrence(terms, tdim))
-    # built ONCE: the hierarchy nodes also serve the indicator and geoname
-    # builders below (rebuilding re-runs the gazetteer/type-dim joins)
-    vocab_nodes, vocab_edges = builders.build_vocab_hierarchy(
-        gazetteer, vocab_isa, tdim
-    )
-    add((vocab_nodes, vocab_edges))
-    if pathogen_rels is not None and xref is not None:
-        edge_parts.append(builders.build_pathogen_disease(pathogen_rels, xref))
-    if phenotype_rels is not None:
-        edge_parts.append(builders.build_disease_phenotype(phenotype_rels))
-    if indicators_dev is not None and indicators_health is not None:
-        add(builders.build_indicators(
-            indicators_dev, indicators_health, vocab_nodes,
-            location_map if location_map is not None
-            else wb_location_map_df(spark),
+        def add(n_e):
+            n, e = n_e
+            node_parts.append(n)
+            edge_parts.append(e)
+
+        add(builders.build_outbreaks(outbreaks))
+        add(builders.build_alert_nodes_and_mentions(
+            terms, outbreaks, tdim,
+            alert_ids=alerts.select(F.col("archive_number").alias("doc_id")),
         ))
-    if geoname_terms is not None and geoname_partof is not None \
-            and geoname_grounding is not None:
-        add(builders.build_geonames(
-            geoname_terms, geoname_partof, vocab_nodes, geoname_grounding,
-        ))
+        add(builders.build_cooccurrence(terms, tdim))
+        # built ONCE: the hierarchy nodes also serve the indicator and
+        # geoname builders below (rebuilding re-runs the gazetteer/type-dim
+        # joins)
+        vocab_nodes, vocab_edges = builders.build_vocab_hierarchy(
+            gazetteer, vocab_isa, tdim
+        )
+        add((vocab_nodes, vocab_edges))
+        if pathogen_rels is not None and xref is not None:
+            edge_parts.append(
+                builders.build_pathogen_disease(pathogen_rels, xref))
+        if phenotype_rels is not None:
+            edge_parts.append(builders.build_disease_phenotype(phenotype_rels))
+        if indicators_dev is not None and indicators_health is not None:
+            add(builders.build_indicators(
+                indicators_dev, indicators_health, vocab_nodes,
+                location_map if location_map is not None
+                else wb_location_map_df(spark),
+            ))
+        if geoname_terms is not None and geoname_partof is not None \
+                and geoname_grounding is not None:
+            add(builders.build_geonames(
+                geoname_terms, geoname_partof, vocab_nodes,
+                geoname_grounding,
+            ))
+        parts.update(nodes=node_parts, edges=edge_parts)
+        return parts
 
-    def _finalize():
-        nodes = node_parts[0]
-        for p in node_parts[1:]:
-            nodes = nodes.unionByName(p)
-        edges = edge_parts[0]
-        for p in edge_parts[1:]:
-            edges = edges.unionByName(p)
-        n, e = builders.finalize_graph(nodes, edges)
-        return n, e
-
-    # persist the finalized nodes: the edges stage's dangling-edge drop
-    # semi-joins against this same relation, so caching it stops the
-    # second stage write from re-executing every upstream builder join
-    # (the co-occurrence count included — previously both stage writes
-    # re-ran the whole DAG). persist() is lazy: on a resume where both
-    # stages are committed, neither build closure runs and nothing is
-    # materialized.
-    fin_nodes, fin_edges = _finalize()
-    fin_nodes = fin_nodes.persist()
     nodes = run_stage(
-        spark, root, "nodes", lambda: fin_nodes, force=force,
+        spark, root, "nodes",
+        # --skip-duplicate-nodes of the reference's neo4j-admin import
+        # (kg/Dockerfile:100-114)
+        lambda: _union(graph_parts()["nodes"]).dropDuplicates(["curie"]),
+        force=force,
     )
     edges = run_stage(
-        spark, root, "edges", lambda: fin_edges,
+        spark, root, "edges",
+        # semi-joins the committed nodes stage, so the edges agree with
+        # the nodes table on disk, also on a resume that rebuilds only
+        # the edges
+        lambda: builders.finalize_graph(
+            _union(graph_parts()["edges"]), nodes),
         partition_by=["pred"], force=force,
         bucket_by=("subj", edge_buckets) if edge_buckets else None,
     )
-    fin_nodes.unpersist()
 
     pattern = None
     if cue_triples:
@@ -194,6 +200,10 @@ def build_kg(
         "edges": edges,
         "pattern_triples": pattern,
     }
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def symptom_closure(edges: DataFrame,

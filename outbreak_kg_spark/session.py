@@ -10,6 +10,8 @@ run on ``local[N]``. Rationale per key:
   a pandas/Arrow UDF (no per-row Python anywhere).
 - shuffle partitions default 32 locally; at cluster scale this is set to
   ~2-3x total cores via spark-submit conf, and AQE coalesces.
+- driver heap sized from the host (driver_memory): a heap larger than the
+  machine lets GC put off collection until the kernel OOM-kills the JVM.
 """
 
 from __future__ import annotations
@@ -17,6 +19,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half the host's physical memory
+    in whole GiB, at least 1g and at most 24g."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24, max(1, (phys // 2) >> 30))}g"
 
 
 def get_spark(
@@ -40,7 +52,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

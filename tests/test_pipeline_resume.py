@@ -4,7 +4,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from outbreak_kg_spark import extract, ground, synth
+from outbreak_kg_spark import builders, extract, ground, synth
 from outbreak_kg_spark.lineage import read_lineage, run_stage, stage_done
 from outbreak_kg_spark.pipeline import build_kg, symptom_closure
 from outbreak_kg_spark.queries import query_graph
@@ -127,6 +127,40 @@ def test_partial_failure_rebuilds_only_broken_stage(spark, tmp_path):
     df_b = run_stage(spark, root, "b", mk("b", 7))
     assert built == ["b"]  # only the broken stage re-ran
     assert df_a.count() == 5 and df_b.count() == 7
+
+
+def test_build_kg_drops_edges_to_unknown_nodes(spark, tmp_path):
+    """An edge whose endpoint is in no node part is dropped (the
+    reference's neo4j-admin --skip-bad-relationships); every other edge
+    survives, also when only the edges stage is rebuilt over the
+    committed nodes."""
+    def triples(df):
+        return {(r.subj, r.pred, r.obj) for r in df.collect()}
+
+    root = str(tmp_path / "kg")
+    rels = synth.PHENOTYPE_RELS + [("mesh:d0103", "mesh:d9999")]
+    kw = dict(
+        pages=synth.pages_df(spark, 20),
+        gazetteer=synth.gazetteer_df(spark),
+        vocab_isa=synth.vocab_isa_df(spark),
+        outbreaks=synth.outbreaks_df(spark, 20),
+        phenotype_rels=spark.createDataFrame(
+            rels, "start_id string, end_id string"),
+    )
+    dangling = ("MESH:D0103", "has_phenotype", "MESH:D9999")
+    assert dangling in triples(
+        builders.build_disease_phenotype(kw["phenotype_rels"]))
+    out = build_kg(spark, root, **kw)
+    got = triples(out["edges"])
+    assert dangling not in got
+    assert ("MESH:D0103", "has_phenotype", "MESH:D0111") in got
+    assert {c for t in got for c in (t[0], t[2])} <= {
+        r.curie for r in out["nodes"].collect()}
+
+    # the same build without the bad row, rebuilding only the edges stage
+    os.remove(os.path.join(root, "edges", "_SUCCESS"))
+    kw["phenotype_rels"] = synth.phenotype_rels_df(spark)
+    assert triples(build_kg(spark, root, **kw)["edges"]) == got
 
 
 def _oracle_kg(spark, pages, gazetteer):

@@ -105,19 +105,21 @@ def test_mentions_pipeline_has_no_python_row_udfs(spark, tmp_path,
         assert "BatchEvalPython" not in plan
         assert plan.count("ArrowEvalPython") == 1, plan
 
-    plans = {}
+    plans, inputs = {}, {}
     run_stage = pipeline.run_stage
 
     def spy(spark_, root, name, build, **kw):
         def build_and_plan():
             df = build()
             plans[name] = _simple(df)
+            inputs[name] = df.inputFiles()
             return df
         return run_stage(spark_, root, name, build_and_plan, **kw)
 
     monkeypatch.setattr(pipeline, "run_stage", spy)
+    root = str(tmp_path / "kg")
     pipeline.build_kg(
-        spark, str(tmp_path / "kg"), synth.pages_df(spark, 20),
+        spark, root, synth.pages_df(spark, 20),
         synth.gazetteer_df(spark), synth.vocab_isa_df(spark),
         synth.outbreaks_df(spark, 20), cue_triples=True)
     assert {"extracted", "alerts", "terms", "closure", "nodes", "edges",
@@ -125,6 +127,11 @@ def test_mentions_pipeline_has_no_python_row_udfs(spark, tmp_path,
     for name, plan in plans.items():
         assert "BatchEvalPython" not in plan, name
         assert plan.count("ArrowEvalPython") == (name == "extracted"), name
+    # the edges stage drops dangling edges against the COMMITTED nodes
+    # stage; semi-joining a second copy of the node DAG instead made this
+    # plan 2,013 lines long
+    assert any(f"{root}/nodes/" in f for f in inputs["edges"])
+    assert len(plans["edges"].splitlines()) <= 2013 // 10
 
 
 def test_textstats_and_curation_prefilters_are_narrow(spark):
