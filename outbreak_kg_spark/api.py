@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import ground, queries
-from .pipeline import symptom_closure
 
 
 def get_pubmed_meta(results: list[dict], limit: int = 10,
@@ -48,6 +47,26 @@ def get_pubmed_meta(results: list[dict], limit: int = 10,
 AUTOCOMPLETE_CAP = 100
 # labels whose node filter is not `node_type == label` (queries.autocomplete)
 _GEOLOC_LABELS = ("geoloc_alerts", "geoloc_indicators")
+# search constraints in queries.query_graph's order: (argument, node type,
+# output column prefix); the symptom anchor reaches through the
+# isa|has_phenotype edges instead of the closure stage
+_CONSTRAINTS = (("disease", "disease", "disease"),
+                ("geolocation", "geoloc", "geolocation"),
+                ("pathogen", "pathogen", "pathogen"),
+                ("symptom", "disease", "symptom"))
+
+
+def _walk(children: dict[str, set], anchor: str) -> set[str]:
+    """The anchor and every node with a child-to-parent path to it: the
+    `isa*0..` reach of queries.query_graph's closure join, walked over a
+    child adjacency (parent -> {child}) instead of a closure table."""
+    seen, todo = {anchor}, [anchor]
+    while todo:
+        for child in children.get(todo.pop(), ()):
+            if child not in seen:
+                seen.add(child)
+                todo.append(child)
+    return seen
 
 
 def _index_labels(node_type: str, curie: str) -> list[str]:
@@ -117,8 +136,18 @@ class KgApi:
       _prefix_index  per-label sorted autocomplete rows (prefix_index):
                      one row per (node, distinct lower-cased surface) over
                      the non-alert nodes, the same size class as _trie
-    The corpus-sized tables (alert nodes, edges, pair scores) stay
-    DataFrames and are queried in-plan per request."""
+      _types, _names curie -> {node_type} / {name} of the same nodes
+                     (curies are not assumed unique)
+      _desc, _anc    the closure stage as ancestor -> {node} and
+                     node -> {ancestor} (search, get_indicators)
+      _sym_children  parent -> {child} over the isa|has_phenotype edges,
+                     walked per symptom anchor (_walk)
+    The closure maps and the adjacency are vocabulary x depth, the same
+    size class as _trie. Each is read once here, by a collect; opening
+    KgApi runs no closure job. Requests push these sets into the at-rest
+    edge scan as literal IN lists. The corpus-sized tables (alert nodes,
+    edges, pair scores) stay DataFrames and are queried in-plan per
+    request."""
 
     def __init__(self, spark: SparkSession, nodes: DataFrame, edges: DataFrame,
                  closure: DataFrame, gazetteer: DataFrame,
@@ -131,18 +160,17 @@ class KgApi:
         self.gazetteer = gazetteer
         self.extracted = extracted
         self.pattern_triples = pattern_triples
-        self._symptom_closure = symptom_closure(edges, nodes)
         # materialized pair-score table (kg/realism_score.py builds this as
         # a driver dict at import — a driver OOM at corpus scale, where the
         # observed co-mention pair table is millions-to-billions of rows).
-        # Kept as a DataFrame: text_relations broadcast-joins each query's
-        # <= (45 choose 2) pairs against it in-plan and never collects the
-        # table. In production this is a catalog table written once by the
-        # build; here it is the same plan, persisted for request reuse.
+        # Kept as a DataFrame: text_relations filters it by each query's
+        # MeSH ids in-plan and never collects the table. In production
+        # this is a catalog table written once by the build; here it is
+        # the same plan, persisted for request reuse.
         self._pair_score_df = queries.pair_score_table(edges).persist()
-        # one collect feeds _mesh_types and the prefix index: the
-        # vocabulary nodes, plus any MESH node typed 'alert' (_mesh_types
-        # covers every MESH node)
+        # one collect feeds _mesh_types, the node maps and the prefix
+        # index: the vocabulary nodes, plus any MESH node typed 'alert'
+        # (_mesh_types covers every MESH node)
         node_rows = nodes.filter(
             ~F.col("node_type").eqNullSafe("alert")
             | F.col("curie").startswith("MESH:")
@@ -152,6 +180,22 @@ class KgApi:
             r.curie[5:]: r.node_type
             for r in node_rows if r.curie.startswith("MESH:")
         }
+        self._types: dict[str, set] = {}
+        self._names: dict[str, set] = {}
+        for r in node_rows:
+            self._types.setdefault(r.curie, set()).add(r.node_type)
+            self._names.setdefault(r.curie, set()).add(r.name)
+        self._desc: dict[str, set] = {}
+        self._anc: dict[str, set] = {}
+        for node, anc in closure.select("node", "ancestor").collect():
+            self._desc.setdefault(anc, set()).add(node)
+            self._anc.setdefault(node, set()).add(anc)
+        self._sym_children: dict[str, set] = {}
+        for child, parent in edges.filter(
+            F.col("pred").isin("isa", "has_phenotype")
+            & F.col("subj").isNotNull() & F.col("obj").isNotNull()
+        ).select("subj", "obj").collect():
+            self._sym_children.setdefault(parent, set()).add(child)
         rows = [r.asDict() for r in gazetteer.select(
             "ns", "id", "entry_name", "synonym",
             F.lower("synonym").alias("synonym_lower")).collect()]
@@ -176,40 +220,96 @@ class KgApi:
     # -- /v1/alerts -----------------------------------------------------------
     def search(self, disease=None, geolocation=None, pathogen=None,
                timestamp=None, symptom=None, limit=None) -> list[dict]:
-        params = {}
-        for key, val in [("disease_curie", disease),
-                         ("geolocation_curie", geolocation),
-                         ("pathogen_curie", pathogen),
-                         ("symptom_curie", symptom)]:
-            if val is not None:
-                curie = self.get_curie(val)
-                if curie is None:
-                    return []  # ungroundable name (kg/client.py:136-137)
-                params[key] = curie
-        res = queries.query_graph(
-            self.nodes, self.edges, self.closure,
-            symptom_closure=self._symptom_closure,
-            timestamp=timestamp,
-            limit=int(limit) if limit is not None and limit != "" else None,
-            **params,
+        """queries.query_graph's rows (same columns, same order), with each
+        constraint's `-[:mentions]->(x:TYPE)-[:isa*0..]->(anchor)` set
+        resolved on the driver: reach(anchor) from the closure maps (the
+        isa|has_phenotype walk for a symptom) intersected with the curies
+        of that node type. One aggregate over the subj-bucketed mentions
+        then keeps the alerts that mention a member of every set. A
+        constraint whose set is empty answers [] without a Spark job;
+        calls without a typed constraint run queries.query_graph."""
+        limit = int(limit) if limit is not None and limit != "" else None
+        if limit is not None and limit < 0:
+            raise ValueError(f"limit must be >= 0, got {limit}")
+        args = {"disease": disease, "geolocation": geolocation,
+                "pathogen": pathogen, "symptom": symptom}
+        cons = []  # (output prefix, anchor curie, allowed curies)
+        for arg, ntype, prefix in _CONSTRAINTS:
+            if args[arg] is None:
+                continue
+            curie = self.get_curie(args[arg])
+            if curie is None:
+                return []  # ungroundable name (kg/client.py:136-137)
+            reach = (_walk(self._sym_children, curie) if arg == "symptom"
+                     else self._desc.get(curie, ()))
+            allowed = sorted(c for c in reach
+                             if ntype in self._types.get(c, ()))
+            if not allowed:
+                return []  # the inner join of queries.query_graph is empty
+            cons.append((prefix, curie, allowed))
+        if not cons:
+            res = queries.query_graph(self.nodes, self.edges, self.closure,
+                                      timestamp=timestamp, limit=limit)
+            return [r.asDict() for r in res.collect()]
+        obj = F.col("obj")
+        per_alert = (
+            self.edges.filter((F.col("pred") == "mentions")
+                              & obj.isin(sorted({c for _p, _a, allowed in cons
+                                                 for c in allowed})))
+            .groupBy(F.col("subj").alias("alert_curie"))
+            .agg(*(F.collect_set(F.when(obj.isin(allowed), obj)).alias(prefix)
+                   for prefix, _a, allowed in cons))
         )
+        cols = []
+        for prefix, anchor, _s in cons:  # an empty set explodes to no row
+            per_alert = per_alert.withColumn(prefix, F.explode(prefix))
+            cols += [prefix, F.lit(anchor).alias(f"{prefix}_isa")]
+        alerts = self.nodes.filter(F.col("node_type") == "alert").select(
+            F.col("curie").alias("alert_curie"),
+            F.col("name").alias("alert_name"),
+            F.col("timestamp").alias("alert_timestamp"),
+        )
+        if timestamp is not None:
+            alerts = alerts.filter(F.col("alert_timestamp") == timestamp)
+        res = alerts.join(per_alert, "alert_curie").select(
+            "alert_curie", "alert_name", "alert_timestamp", *cols
+        ).dropDuplicates()
+        if limit is not None:
+            res = res.limit(limit)
         return [r.asDict() for r in res.collect()]
 
     # -- /v1/indicators -------------------------------------------------------
     def get_indicators(self, geolocation: str,
                        indicator_filter: str = "") -> list[dict]:
+        """queries.query_indicators' rows: the anchor's closure neighbours
+        (descendants and ancestors) and the names come from the driver
+        maps (has_indicator links geoloc and indicator nodes, which the
+        vocabulary collect holds), so one has_indicator scan with
+        `subj IN related` is the only Spark job; the (indicator, geo)
+        dedup and the name filter run on the collected rows."""
         curie = self.get_curie(geolocation)
         if curie is None:
             return []
-        res = queries.query_indicators(
-            self.nodes, self.edges, self.closure, curie,
-            indicator_filter or "",
-        )
-        return [
-            {**r.asDict(),
-             "years_data": dict(r.years_data) if r.years_data else {}}
-            for r in res.collect()
-        ]
+        related = self._desc.get(curie, set()) | self._anc.get(curie, set())
+        if not related:
+            return []
+        rows = self.edges.filter(
+            (F.col("pred") == "has_indicator")
+            & F.col("subj").isin(sorted(related))
+        ).select("subj", "obj", "years_data").collect()
+        out = {}
+        for geo, ind, years in rows:
+            for ind_name in self._names.get(ind, ()):
+                if indicator_filter and (ind_name is None
+                                         or indicator_filter not in ind_name):
+                    continue
+                for geo_name in self._names.get(geo, ()):
+                    out.setdefault((ind, geo), {
+                        "indicator_curie": ind, "indicator_name": ind_name,
+                        "geo_curie": geo, "geo_name": geo_name,
+                        "years_data": dict(years) if years else {},
+                    })
+        return list(out.values())
 
     # -- /v1/text_relations (kg/client.py:195-283) ----------------------------
     def text_relations(self, text: str, top_n: int = 500) -> dict:

@@ -322,7 +322,7 @@ def pair_score_table(edges: DataFrame) -> DataFrame:
     """Materialized co-occurrence log-prob table (kg/realism_score.py:55-74):
     for each unordered pair of MeSH ids mentioned in the same alert,
     score = log(#alerts with both) - log(#alerts). Built once from the
-    mentions edges; queries probe it with a broadcast join."""
+    mentions edges; queries filter it by their MeSH id sets."""
     m = (
         edges.filter(
             (F.col("pred") == "mentions") & F.col("obj").startswith("MESH:")
@@ -391,16 +391,18 @@ def cooccurrence_scores_df(
     mesh_ids: list[str],
     exclude: set = QUERY_EXCLUDE_MESH,
 ) -> tuple[dict, float, str]:
-    """In-plan variant of cooccurrence_scores: the query's <= (45 choose 2)
-    pairs are broadcast-joined against the MATERIALIZED pair-score table —
-    the table itself is never collected (at web scale the observed
-    co-mention pair table is millions-to-billions of rows; the reference
-    collects it into a dict at import, kg/realism_score.py:98-99, which is
-    a driver OOM at corpus scale). The only collect is the join result,
-    bounded by the query's own pair count — which is the response payload
-    anyway. score_sum over those <= 990 floats uses the same stable
-    logsumexp as the distributed logsumexp_agg (A6); a query-sized driver
-    fold of an already-query-sized frame, not a table-sized job."""
+    """In-plan variant of cooccurrence_scores: the materialized pair-score
+    table is filtered to the pairs whose both ids are in the query's
+    scored id set F (m1 IN F AND m2 IN F) — exactly its sorted pairs,
+    since the table holds each unordered pair once as m1 < m2. The table
+    itself is never collected (at web scale the observed co-mention pair
+    table is millions-to-billions of rows; the reference collects it into
+    a dict at import, kg/realism_score.py:98-99, which is a driver OOM at
+    corpus scale). The only collect is the filter result, bounded by the
+    query's own pair count — which is the response payload anyway.
+    score_sum over those <= 990 floats uses the same stable logsumexp as
+    the distributed logsumexp_agg (A6); a query-sized driver fold of an
+    already-query-sized frame, not a table-sized job."""
     from itertools import combinations
 
     keys = []
@@ -412,11 +414,11 @@ def cooccurrence_scores_df(
         keys.append(tuple(sorted((t1, t2))))
     if not keys:
         return {}, float("-inf"), "low"
-    spark = pair_score_df.sparkSession
-    q = spark.createDataFrame(keys, "m1 string, m2 string")
+    ids = sorted({t for k in keys for t in k})
     found = {
         (r.m1, r.m2): r.score
-        for r in pair_score_df.join(broadcast(q), ["m1", "m2"])
+        for r in pair_score_df.filter(
+            F.col("m1").isin(ids) & F.col("m2").isin(ids))
         .select("m1", "m2", "score").collect()
     }
     scores = {k: found.get(k, float("-inf")) for k in keys}

@@ -1,12 +1,16 @@
 """End-to-end API-surface tests: build the KG from the synthetic corpus,
 then drive every endpoint-shaped method (kg/api.py parity)."""
 
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
 from pyspark.sql import functions as F
 
 from outbreak_kg_spark import extract, ground, queries, synth
 from outbreak_kg_spark.api import KgApi
-from outbreak_kg_spark.pipeline import build_kg
+from outbreak_kg_spark.pipeline import build_kg, symptom_closure
+
+_TEXT = "ebola cases reported in Guinea and Bulgaria"
 
 
 @pytest.fixture(scope="module")
@@ -58,7 +62,7 @@ def test_indicators_endpoint(app):
 
 
 def test_text_relations_endpoint(app):
-    res = app.text_relations("ebola cases reported in Guinea and Bulgaria")
+    res = app.text_relations(_TEXT)
     curies = {a["curie"] for a in res["annotations"]}
     assert "MESH:D0103" in curies and "MESH:D0303" in curies
     assert res["realism_score"]["classification"] in {"high", "medium", "low"}
@@ -84,8 +88,6 @@ def _assert_index_matches_spark(api, nodes, gaz, labels, prefixes, top_ns):
     same Spark call: each (label, prefix.lower(), top_n) is asked of Spark
     once (four at a time — each is a small, latency-bound job), and every
     variant of it is asked of the index."""
-    from concurrent.futures import ThreadPoolExecutor
-
     cases = [(label, prefix, top_n) for label in labels
              for prefix in prefixes(label) for top_n in top_ns]
     keys = sorted({(lab, p.lower(), n) for lab, p, n in cases})
@@ -147,6 +149,35 @@ def test_autocomplete_index_matches_spark_operator(app):
     gaz.unpersist()
 
 
+# a hand-built vocabulary of non-ASCII and case-colliding surfaces
+_UNICODE_NODES = [
+    ("MESH:G1", "Côte d'Ivoire", ["geoloc"], "geoloc", None),
+    ("MESH:G2", "İstanbul", ["geoloc"], "geoloc", None),
+    ("geonames:3", "Istanbul", ["geoloc"], "geoloc", None),
+    ("geonames:4", "Zürich", ["geoloc"], "geoloc", None),
+    ("MESH:D1", "ΣΕΙΣΜΟΣ", ["disease"], "disease", None),
+    ("MESH:D2", "Influenza", ["disease"], "disease", None),
+    ("MESH:D3", "INFLUENZA", ["disease"], "disease", None),
+    ("MESH:D4", "Straße Fever", ["disease"], "disease", None),
+    ("MESH:D5", None, ["disease"], "disease", None),
+    ("MESH:D6", "\ua7cb Fever", ["disease"], "disease", None),
+    ("promed:1", "Cote report", ["alert"], "alert", "2020-01-01"),
+]
+_UNICODE_GAZ = [
+    ("MESH", "G1", "Côte d'Ivoire", "COTE D'IVOIRE", "geoloc"),
+    ("MESH", "G1", "Côte d'Ivoire", "Ivory Coast", "geoloc"),
+    ("geonames", "4", "Zürich", "Zurich", "geoloc"),
+    ("geonames", "4", "Zürich", "zürich", "geoloc"),
+    ("MESH", "D1", "ΣΕΙΣΜΟΣ", "σεισμός", "disease"),
+    ("MESH", "D2", "Influenza", "influenza", "disease"),
+    ("MESH", "D2", "Influenza", "FLU", "disease"),
+    ("MESH", "D2", "Influenza", "flu", "disease"),
+    ("MESH", "D3", "INFLUENZA", "Influenza", "disease"),
+    ("MESH", "D5", "Nameless", "Ghost Fever", "disease"),
+    ("MESH", "D9", "Not In Graph", "Influenza B", "disease"),
+]
+
+
 def test_autocomplete_index_unicode_case_and_order(spark):
     """Non-ASCII and case-colliding surfaces: the index must agree with
     Spark's lower() and UTF-8 binary sort, not with Python's idea of
@@ -156,32 +187,8 @@ def test_autocomplete_index_unicode_case_and_order(spark):
     mapping lowers to U+0264 while Python 3.11's str.lower keeps it."""
     from outbreak_kg_spark.schemas import CLOSURE, EDGES, GAZETTEER, NODES
 
-    nodes = spark.createDataFrame([
-        ("MESH:G1", "Côte d'Ivoire", ["geoloc"], "geoloc", None),
-        ("MESH:G2", "İstanbul", ["geoloc"], "geoloc", None),
-        ("geonames:3", "Istanbul", ["geoloc"], "geoloc", None),
-        ("geonames:4", "Zürich", ["geoloc"], "geoloc", None),
-        ("MESH:D1", "ΣΕΙΣΜΟΣ", ["disease"], "disease", None),
-        ("MESH:D2", "Influenza", ["disease"], "disease", None),
-        ("MESH:D3", "INFLUENZA", ["disease"], "disease", None),
-        ("MESH:D4", "Straße Fever", ["disease"], "disease", None),
-        ("MESH:D5", None, ["disease"], "disease", None),
-        ("MESH:D6", "\ua7cb Fever", ["disease"], "disease", None),
-        ("promed:1", "Cote report", ["alert"], "alert", "2020-01-01"),
-    ], NODES)
-    gaz = spark.createDataFrame([
-        ("MESH", "G1", "Côte d'Ivoire", "COTE D'IVOIRE", "geoloc"),
-        ("MESH", "G1", "Côte d'Ivoire", "Ivory Coast", "geoloc"),
-        ("geonames", "4", "Zürich", "Zurich", "geoloc"),
-        ("geonames", "4", "Zürich", "zürich", "geoloc"),
-        ("MESH", "D1", "ΣΕΙΣΜΟΣ", "σεισμός", "disease"),
-        ("MESH", "D2", "Influenza", "influenza", "disease"),
-        ("MESH", "D2", "Influenza", "FLU", "disease"),
-        ("MESH", "D2", "Influenza", "flu", "disease"),
-        ("MESH", "D3", "INFLUENZA", "Influenza", "disease"),
-        ("MESH", "D5", "Nameless", "Ghost Fever", "disease"),
-        ("MESH", "D9", "Not In Graph", "Influenza B", "disease"),
-    ], GAZETTEER)
+    nodes = spark.createDataFrame(_UNICODE_NODES, NODES)
+    gaz = spark.createDataFrame(_UNICODE_GAZ, GAZETTEER)
     nodes, gaz = nodes.persist(), gaz.persist()
     api = KgApi(spark, nodes, spark.createDataFrame([], EDGES),
                 spark.createDataFrame([], CLOSURE), gaz)
@@ -223,15 +230,13 @@ def _job_ids(sc, group, fn):
     return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_vocabulary_autocomplete_runs_no_spark_job(app, spark):
+def test_vocabulary_autocomplete_runs_no_spark_job(app, spark, monkeypatch):
     """Vocabulary-label autocomplete is served on the driver: no Spark job
     runs. The alert label (corpus-sized) does run one — the positive
     control that the job-group probe sees jobs at all. Building KgApi
-    runs no more jobs than its state costs without the index: the
-    symptom closure plus one collect each for the MESH node types and
-    the gazetteer."""
-    from outbreak_kg_spark.pipeline import symptom_closure
-
+    runs only its collects (nodes, closure, isa|has_phenotype edges,
+    gazetteer): at most four jobs and no closure computation, i.e. no
+    localCheckpoint."""
     sc = spark.sparkContext
 
     def vocab_requests():
@@ -244,19 +249,267 @@ def test_vocabulary_autocomplete_runs_no_spark_job(app, spark):
     assert _job_ids(sc, "autocomplete-alert",
                     lambda: app.autocomplete("alert", "p", 5))
 
+    checkpoints = []
+    orig = _dataframe_class().localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpoints.append(self)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(_dataframe_class(), "localCheckpoint", spy)
+
     def construct():
         KgApi(spark, app.nodes, app.edges, app.closure, app.gazetteer,
               extracted=app.extracted, pattern_triples=app.pattern_triples)
 
-    def construct_without_index():
-        symptom_closure(app.edges, app.nodes)
-        queries.pair_score_table(app.edges).persist()
-        app.nodes.filter(F.col("curie").startswith("MESH:")).select(
-            "curie", "node_type").collect()
-        app.gazetteer.select("ns", "id", "entry_name", "synonym").collect()
+    assert len(_job_ids(sc, "kgapi-init", construct)) <= 4
+    assert checkpoints == []
 
-    assert len(_job_ids(sc, "kgapi-init", construct)) <= len(
-        _job_ids(sc, "kgapi-init-without-index", construct_without_index))
+
+def _dataframe_class():
+    """The class whose collect/localCheckpoint actually run — PySpark 4
+    splits the API class from the concrete (classic) one."""
+    try:
+        import pyspark.sql.classic.dataframe as dfmod
+    except ImportError:  # pyspark < 4
+        import pyspark.sql.dataframe as dfmod
+    return dfmod.DataFrame
+
+
+def test_requests_run_one_edge_scan(app, spark):
+    """The vocabulary side of each request is resolved on the driver:
+    search is one aggregate over the mentions plus the alert-node
+    broadcast (<= 2 jobs for 1-3 constraints, none when a constraint's
+    set is empty), get_indicators one has_indicator scan, and
+    text_relations (pair table already cached) at most three jobs."""
+    sc = spark.sparkContext
+    out = {}
+
+    def run(name, fn):
+        ids = _job_ids(sc, name, lambda: out.__setitem__(name, fn()))
+        return len(ids), out[name]
+
+    for kw in ({"disease": "Virus Diseases"},
+               {"disease": "Virus Diseases", "geolocation": "Africa"},
+               {"disease": "Virus Diseases", "geolocation": "Africa",
+                "pathogen": "MESH:D0201"},
+               {"symptom": "Virus Diseases"}):
+        n, rows = run(f"search-{sorted(kw)}", lambda: app.search(**kw))
+        assert rows and n <= 2, (kw, n)
+    # MESH:D0302 is a geolocation: no disease reaches it
+    assert run("search-empty-set",
+               lambda: app.search(disease="MESH:D0302")) == (0, [])
+    n, rows = run("indicators", lambda: app.get_indicators("Guinea"))
+    assert rows and n == 1
+    app.text_relations(_TEXT)  # the first request fills the pair-table cache
+    n, res = run("text-relations", lambda: app.text_relations(_TEXT))
+    assert res["alerts"] and n <= 3
+
+
+def test_search_limit_is_validated(app):
+    """A negative limit raises ValueError on every search path — a name
+    that does not ground, a constraint whose set is empty, a non-empty
+    constraint, and no constraint — as autocomplete does for top_n;
+    limit=0 answers no rows."""
+    for kw in ({"disease": "zzz unknown"}, {"disease": "MESH:D0302"},
+               {"disease": "Virus Diseases"}, {}):
+        with pytest.raises(ValueError, match="limit"):
+            app.search(limit=-1, **kw)
+    assert app.search(disease="MESH:D0302") == []
+    assert app.search(disease="Virus Diseases", limit=0) == []
+    assert app.search(disease="Virus Diseases", limit="")
+
+
+_SEARCH_ARGS = {"disease": "disease_curie", "geolocation": "geolocation_curie",
+                "pathogen": "pathogen_curie", "symptom": "symptom_curie"}
+
+
+def _rowset(rows):
+    """Order-free comparable form of dict rows (map values included)."""
+    return sorted(repr([(k, sorted(v.items()) if isinstance(v, dict) else v)
+                        for k, v in sorted(r.items())]) for r in rows)
+
+
+def _search_oracle(api, sym, kw):
+    df = queries.query_graph(
+        api.nodes, api.edges, api.closure, symptom_closure=sym,
+        timestamp=kw.get("timestamp"),
+        **{col: kw[arg] for arg, col in _SEARCH_ARGS.items() if arg in kw})
+    return df.columns, [r.asDict() for r in df.collect()]
+
+
+def _assert_search_matches(api, sym, cases):
+    """KgApi.search == queries.query_graph (columns, column order, row
+    set) for each case of curie anchors; ``sym`` is the oracle's
+    pipeline.symptom_closure. With a limit the answer is that many rows of
+    the unlimited set (which ones is arbitrary on both sides). Returns
+    the oracle rows."""
+    with ThreadPoolExecutor(4) as pool:
+        want = list(pool.map(lambda kw: _search_oracle(api, sym, kw), cases))
+        gots = list(pool.map(lambda kw: api.search(**kw), cases))
+    for kw, (cols, rows), got in zip(cases, want, gots):
+        assert all(list(r) == cols for r in got), kw
+        if kw.get("limit") is None:
+            assert _rowset(got) == _rowset(rows), kw
+        else:
+            assert len(got) == min(kw["limit"], len(rows)), kw
+            assert set(_rowset(got)) <= set(_rowset(rows)), kw
+    return [rows for _cols, rows in want]
+
+
+def _assert_search_equivalence(api, vocab):
+    """Every curie as each kind of anchor, then 2- and 3-constraint
+    combinations of the anchors that answer rows, timestamp filters and
+    limits."""
+    sym = symptom_closure(api.edges, api.nodes).persist()
+    singles = [{arg: c} for arg in _SEARCH_ARGS for c in vocab]
+    hits = {arg: [] for arg in _SEARCH_ARGS}
+    stamps = set()
+    for kw, rows in zip(singles, _assert_search_matches(api, sym, singles)):
+        if rows:
+            (arg, curie), = kw.items()
+            hits[arg].append(curie)
+            stamps |= {r["alert_timestamp"] for r in rows}
+    assert all(hits.values()), hits
+    d, g, p, s = (hits[a][:3] for a in _SEARCH_ARGS)
+    combos = ([{"disease": x, "geolocation": y} for x in d for y in g]
+              + [{"geolocation": y, "pathogen": z} for y in g for z in p]
+              + [{"disease": x, "symptom": w} for x in d for w in s]
+              + [{"disease": x, "geolocation": y, "pathogen": z}
+                 for x in d[:2] for y in g[:2] for z in p[:2]])
+    rows = _assert_search_matches(api, sym, combos)
+    assert sum(map(bool, rows)) >= 3, "too few combinations answer rows"
+    stamps = sorted(t for t in stamps if t is not None)[:3] + ["no-such-ts"]
+    _assert_search_matches(api, sym, [
+        {"timestamp": t, **kw} for t in stamps
+        for kw in ({}, {"disease": d[0]},
+                   {"disease": d[0], "geolocation": g[0]})])
+    _assert_search_matches(api, sym, [
+        {"limit": n, **kw} for n in (0, 1, 3)
+        for kw in ({}, {"disease": d[0]},
+                   {"disease": d[0], "geolocation": g[0]})])
+    sym.unpersist()
+
+
+def _assert_indicators_match(api, geos, filters):
+    """KgApi.get_indicators == queries.query_indicators per geo x filter."""
+    cases = [(g, f) for g in geos for f in filters]
+
+    def oracle(case):
+        return [{**r.asDict(),
+                 "years_data": dict(r.years_data) if r.years_data else {}}
+                for r in queries.query_indicators(
+                    api.nodes, api.edges, api.closure, *case).collect()]
+
+    with ThreadPoolExecutor(4) as pool:
+        want = list(pool.map(oracle, cases))
+        gots = list(pool.map(lambda case: api.get_indicators(*case), cases))
+    for case, rows, got in zip(cases, want, gots):
+        assert _rowset(got) == _rowset(rows), case
+    return want
+
+
+def _assert_realism_matches(api, id_lists, texts):
+    """cooccurrence_scores_df (and text_relations' realism_score) ==
+    queries.cooccurrence_scores over the collected pair table."""
+    table = {(r.m1, r.m2): r.score for r in api._pair_score_df.collect()}
+    for ids in id_lists:
+        assert queries.cooccurrence_scores_df(
+            api._pair_score_df, api._mesh_types, ids) == \
+            queries.cooccurrence_scores(table, api._mesh_types, ids), ids
+    for text in texts:
+        res = api.text_relations(text)
+        ids = sorted({a["curie"][5:] for a in res["annotations"]
+                      if a["curie"].startswith("MESH:")})
+        scores, score_sum, cls = queries.cooccurrence_scores(
+            table, api._mesh_types, ids)
+        assert res["realism_score"] == {
+            "scores": [[a, b, v] for (a, b), v in scores.items()],
+            "score_sum": score_sum, "classification": cls}, text
+
+
+def test_endpoints_match_query_oracles(app):
+    """search, get_indicators and the realism score on the driver-resolved
+    path equal their distributed oracles on the synthetic KG."""
+    vocab = sorted(r.curie for r in app.nodes.filter(
+        F.col("node_type") != "alert").select("curie").distinct().collect())
+    _assert_search_equivalence(app, vocab + ["MESH:D9999"])
+    geos = sorted(r.curie for r in app.nodes.filter(
+        F.col("node_type") == "geoloc").select("curie").distinct().collect())
+    want = _assert_indicators_match(app, geos + ["MESH:D9999"],
+                                    ("", "HIV", "zzq"))
+    assert sum(map(bool, want)) >= 4
+    mesh = sorted(app._mesh_types)
+    _assert_realism_matches(app, [
+        mesh, mesh[:5], mesh[::3], ["D0103", "D0303", "D0306"],
+        ["D0103", "D0103", "D0303"], ["D0103", "D003142", "D9999"],
+        ["D0103"], []], [_TEXT, "ebola", "Influenza in Guinea, ebola"])
+
+
+def _unicode_kg(spark):
+    """The unicode vocabulary plus a small graph over it: isa and
+    has_phenotype edges, mentions from alerts (one alert row duplicated,
+    one curie with two names, one subject that is no node), has_indicator
+    edges to non-ASCII indicators, a curie typed both geoloc and
+    pathogen, and the closure with depth-0 roots."""
+    from outbreak_kg_spark.closure import closure_with_roots
+    from outbreak_kg_spark.schemas import EDGES, GAZETTEER, NODES
+
+    nodes = spark.createDataFrame(_UNICODE_NODES + [
+        ("geonames:4", "Zürich", ["pathogen"], "pathogen", None),
+        ("MESH:G0", "Afrique de l'Ouest", ["geoloc"], "geoloc", None),
+        ("MESH:S1", "Fièvre", ["disease"], "disease", None),
+        ("ind:é1", "Espérance de vie", ["indicator"], "indicator", None),
+        ("ind:ß2", "Straßen-Index HIV", ["indicator"], "indicator", None),
+        ("promed:1", "Cote report", ["alert"], "alert", "2020-01-01"),
+        ("promed:2", "Σεισμός report", ["alert"], "alert", "2020-02-02"),
+        ("promed:2", "Σεισμός rapport", ["alert"], "alert", "2020-02-02"),
+        ("promed:3", "Zürich", ["alert"], "alert", None),
+    ], NODES)
+    edge = [("MESH:G1", "isa", "MESH:G0"), ("MESH:D2", "isa", "MESH:D1"),
+            ("MESH:D3", "isa", "MESH:D2"), ("MESH:D6", "isa", "MESH:D2"),
+            ("MESH:D4", "has_phenotype", "MESH:S1"),
+            ("MESH:D2", "has_phenotype", "MESH:S1")]
+    edge += [(a, "mentions", o) for a, objs in (
+        ("promed:1", ("MESH:G1", "MESH:D3", "geonames:4")),
+        ("promed:2", ("MESH:D1", "MESH:D4", "MESH:G2", "geonames:4",
+                      "MESH:G1")),
+        ("promed:3", ("geonames:3", "MESH:D6", "MESH:D3", "MESH:S1")),
+        ("promed:9", ("MESH:D1", "MESH:G1"))) for o in objs]
+    edges = spark.createDataFrame(
+        [(s, p, o, None, None, None) for s, p, o in edge] + [
+            ("MESH:G1", "has_indicator", "ind:é1", None, {"2019": 1.5}, None),
+            ("MESH:G0", "has_indicator", "ind:ß2", None, {"2020": 2.0}, None),
+            ("geonames:4", "has_indicator", "ind:é1", None, None, None)],
+        EDGES)
+    gaz = spark.createDataFrame(_UNICODE_GAZ, GAZETTEER)
+    isa = edges.filter(F.col("pred") == "isa")
+    closure = closure_with_roots(
+        isa, nodes.filter(F.col("node_type") != "alert"),
+        child_col="subj", parent_col="obj").persist()
+    nodes, edges, gaz = nodes.persist(), edges.persist(), gaz.persist()
+    return KgApi(spark, nodes, edges, closure, gaz), [
+        nodes, edges, closure, gaz]
+
+
+def test_unicode_kg_endpoints_match_query_oracles(spark):
+    """The same equivalences on the hand-built non-ASCII KG, whose nodes
+    are not curie-unique."""
+    api, frames = _unicode_kg(spark)
+    vocab = sorted({r[0] for r in _UNICODE_NODES} | {
+        "MESH:G0", "MESH:S1", "ind:é1", "ind:ß2", "MESH:D9"})
+    _assert_search_equivalence(api, vocab)
+    # names ground through the trie, as on the HTTP surface
+    assert api.search(geolocation="Ivory Coast") == api.search(
+        geolocation="MESH:G1")
+    geos = ["MESH:G0", "MESH:G1", "MESH:G2", "geonames:3", "geonames:4"]
+    want = _assert_indicators_match(api, geos, ("", "é", "ß", "HIV", "zzq"))
+    assert sum(map(bool, want)) >= 5
+    mesh = sorted(api._mesh_types)
+    _assert_realism_matches(api, [mesh, ["G1", "D1", "D4"], ["G1", "G1"]],
+                            ["Côte d'Ivoire Influenza ΣΕΙΣΜΟΣ", "flu"])
+    for df in frames:
+        df.unpersist()
 
 
 def test_alert_text_endpoint(app, spark):
@@ -327,38 +580,35 @@ def test_text_relations_scoring_is_in_plan(app, monkeypatch):
     billions of rows. Every driver collect during a text_relations request
     must be bounded by the request itself (<= (45 choose 2) = 990 pairs,
     plus the annotation/direct/alert payloads, all top-n-capped), and the
-    scoring join must broadcast the query side, not the table side."""
-    # PySpark 4 splits the API class from the concrete one — patch the
-    # class whose collect actually runs (classic, not the abstract base)
-    try:
-        import pyspark.sql.classic.dataframe as dfmod
-    except ImportError:  # pyspark < 4
-        import pyspark.sql.dataframe as dfmod
+    scoring frame the endpoint runs filters the materialized table by the
+    query's MeSH ids (m1 IN ids AND m2 IN ids) with no list-built
+    (ExistingRDD) query side and no broadcast."""
+    import re
 
-    sizes = []
-    orig = dfmod.DataFrame.collect
+    cls = _dataframe_class()
+    sizes, scoring = [], []
+    orig = cls.collect
 
     def spy(self):
         rows = orig(self)
         sizes.append(len(rows))
+        if self.columns == ["m1", "m2", "score"]:
+            scoring.append(self._jdf.queryExecution().executedPlan()
+                           .toString())
         return rows
 
-    monkeypatch.setattr(dfmod.DataFrame, "collect", spy)
-    res = app.text_relations("ebola cases reported in Guinea and Bulgaria")
+    monkeypatch.setattr(cls, "collect", spy)
+    res = app.text_relations(_TEXT)
     assert res["realism_score"]["classification"] in {"high", "medium", "low"}
     assert sizes and max(sizes) <= 990 + 500  # pair bound + top_n alerts
-
-    # plan probe: the query pairs (tiny) are the broadcast side of the
-    # scoring join against the materialized table
-    from pyspark.sql import functions as FF
-
-    from outbreak_kg_spark.queries import broadcast as q_broadcast
-    q = app.spark.createDataFrame([("D0103", "D0303")], "m1 string, m2 string")
-    plan = (
-        app._pair_score_df.join(q_broadcast(q), ["m1", "m2"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan
+    plan, = scoring
+    assert "ExistingRDD" not in plan
+    # the request's own operators sit above the cached table's plan
+    own = plan.split("InMemoryRelation")[0]
+    assert "BroadcastExchange" not in own
+    for col in ("m1", "m2"):
+        assert re.search(rf"InMemoryTableScan .*\b{col}#\d+ (IN \(|INSET )",
+                         own), plan
 
 
 def _get(app_wsgi, path, query=""):
